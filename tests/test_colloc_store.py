@@ -125,6 +125,31 @@ def test_store_build_idempotent_and_meta_guard(spark, store_index):
         serve_sketch_cached(s, "table", cat, colloc_attr="xpos")
 
 
+def test_store_without_format_rebuilds(spark, store_index):
+    """A store whose meta has no ``format`` key predates the trinary
+    ``<id>/<value>`` relation keys: it must not serve, and a build
+    call must rebuild it instead of keeping it."""
+    import json
+    from pathlib import Path
+
+    from word_sketch_lucene_spark.index.colloc_store import (
+        STORE_FORMAT,
+        build_collocation_store,
+        store_can_serve,
+        store_meta,
+    )
+
+    s, cat = store_index
+    p = Path(s.root) / "colloc_store" / "_store_meta.json"
+    meta = json.loads(p.read_text())
+    assert meta.pop("format") == STORE_FORMAT
+    p.write_text(json.dumps(meta, sort_keys=True))
+    assert not store_can_serve(s, cat)
+    build_collocation_store(s, cat)
+    assert store_meta(s)["format"] == STORE_FORMAT
+    assert store_can_serve(s, cat)
+
+
 def test_store_detects_index_content_change(spark, store_index):
     """The store's meta fingerprints the forward store — after a delta
     ingest changes index contents, auto-serve must fall back to the

@@ -1,0 +1,191 @@
+"""On-disk layout: every datum is stored once, and each array a reader
+derives (doc tokens from stored text, case-folded CoNLL-U layers from
+the case-preserved ones) equals the stored copy it replaced."""
+
+from __future__ import annotations
+
+import json
+
+import pytest
+
+from word_sketch_lucene_spark.functions.tokenize import tokens_expr
+from word_sketch_lucene_spark.index.build import (
+    INDEX_FORMAT,
+    STATS_FILE,
+    build_conllu_index,
+)
+from word_sketch_lucene_spark.index.merge import merge_indexes
+from word_sketch_lucene_spark.query.concordance import (
+    index_pattern_concordance,
+    index_relation_concordance,
+)
+from word_sketch_lucene_spark.query.engine import IndexSearcher
+from word_sketch_lucene_spark.sources.conllu import layer_tokens, read_conllu
+
+# mixed-case words and lemmas, so the derived lower() is exercised
+CONLLU = {
+    "a.conllu": (
+        "1\tThe\tthe\tDET\tDT\t_\t2\tdet\n"
+        "2\tCat\tcat\tNOUN\tNN\t_\t3\tnsubj\n"
+        "3\tsleeps\tsleep\tVERB\tVBZ\t_\t0\troot\n"
+        "4\tin\tin\tADP\tIN\t_\t5\tcase\n"
+        "5\tParis\tParis\tPROPN\tNNP\t_\t3\tobl\n"
+        "\n"
+        "1\tDogs\tdog\tNOUN\tNNS\t_\t2\tnsubj\n"
+        "2\tBARK\tBark\tVERB\tVBP\t_\t0\troot\n"),
+    "b.conllu": (
+        "1\tA\ta\tDET\tDT\t_\t2\tdet\n"
+        "2\tcat\tcat\tNOUN\tNN\t_\t3\tnsubj\n"
+        "3\tbarks\tbark\tVERB\tVBZ\t_\t0\troot\n"
+        "4\tat\tat\tADP\tIN\t_\t6\tcase\n"
+        "5\tthe\tthe\tDET\tDT\t_\t6\tdet\n"
+        "6\tCat\tcat\tNOUN\tNN\t_\t3\tobl\n"),
+}
+
+
+@pytest.fixture(scope="module")
+def conllu_root(spark, tmp_path_factory):
+    corpus = tmp_path_factory.mktemp("layout_corpus")
+    for name, text in CONLLU.items():
+        (corpus / name).write_text(text)
+    parsed = read_conllu(spark, str(corpus)).localCheckpoint()
+    root = tmp_path_factory.mktemp("layout_cidx")
+    build_conllu_index(spark, parsed, root, doc_salt=1, n_partitions=2)
+    return root, parsed
+
+
+def _stored_conllu_arrays(spark, root, parsed) -> dict:
+    """doc_id → (term, lemma) arrays as the previous layout stored them
+    (``forward_layers.term``/``.lemma``; the docstore's ``tokens`` were
+    the same term array): ``layer_tokens`` over the dense-id table."""
+    names = spark.read.parquet(str(root / "doc_names"))
+    lt = layer_tokens(parsed.withColumnRenamed("doc_id", "doc_name")
+                      .join(names, "doc_name").drop("doc_name"))
+    out: dict = {}
+    for r in lt.orderBy("doc_id", "pos").collect():
+        t, lm = out.setdefault(r["doc_id"], ([], []))
+        t.append(r["term"])
+        lm.append(r["lemma"])
+    return out
+
+
+def _kwic(tokens: dict, spans, context: int, page_size: int) -> list:
+    """Reference KWIC page from doc → token list: rank by (doc, start,
+    width), keyword = the span, ``context`` tokens each side."""
+    rows = []
+    for rank, (d, a, b) in enumerate(sorted(set(spans)), start=1):
+        toks = tokens[d]
+        rows.append((rank, d, a, " ".join(toks[max(0, a - context):a]),
+                     " ".join(toks[a:b + 1]),
+                     " ".join(toks[b + 1:b + 1 + context])))
+    return rows[:page_size]
+
+
+def test_pages_layout_and_token_identity(spark, index_small, docs_small):
+    """The pages docstore holds (doc_id, text) only; the accessor's
+    tokens equal the ``tokens_expr(text)`` column it used to store, on
+    every read path (arrays, per-doc forward layer, token table)."""
+    assert set(spark.read.parquet(str(index_small / "docstore")).columns) \
+        == {"doc_id", "text"}
+    s = IndexSearcher(spark, index_small)
+    assert s.stats["format"] == INDEX_FORMAT
+    want = {r["doc_id"]: r["t"] for r in docs_small.select(
+        "doc_id", tokens_expr("text").alias("t")).collect()}
+    fw = s.forward_arrays()
+    assert fw.columns == ["doc_id", "term"]
+    assert {r["doc_id"]: r["term"] for r in fw.collect()} == want
+    ids = sorted(want)[::20]
+    assert s.forward_layer(ids, "term") == {d: want[d] for d in ids}
+    got = sorted(tuple(r) for r in s.forward_token_table({"term"}).collect())
+    assert got == sorted((d, p, t) for d, ts in want.items()
+                         for p, t in enumerate(ts or []))
+    with pytest.raises(NotImplementedError, match="forward_layers"):
+        s.forward_layer(ids, "lemma")
+
+
+def test_conllu_layout_and_derived_layers(spark, conllu_root):
+    """A CoNLL-U root has no docstore and no term/lemma forward arrays;
+    the accessor derives both from word_cs/lemma_cs and they equal
+    what the previous layout stored."""
+    root, parsed = conllu_root
+    assert not (root / "docstore").exists()
+    stored = set(spark.read.parquet(str(root / "forward_layers")).columns)
+    assert not stored & {"term", "lemma"}
+    assert {"word_cs", "lemma_cs"} <= stored
+    s = IndexSearcher(spark, root)
+    want = _stored_conllu_arrays(spark, root, parsed)
+    fw = s.forward_arrays({"term", "lemma", "word_cs"})
+    assert fw.columns == ["doc_id", "term", "lemma", "word_cs"]
+    rows = fw.collect()
+    assert {r["doc_id"]: (r["term"], r["lemma"]) for r in rows} == want
+    # the case fold really ran (the corpus has upper-case words)
+    assert any(r["term"] != r["word_cs"] for r in rows)
+    ids = sorted(want)
+    assert s.forward_layer(ids, "term") == {d: want[d][0] for d in ids}
+    assert s.forward_layer(ids, "lemma") == {d: want[d][1] for d in ids}
+    tok = s.forward_token_table({"term", "lemma", "upos"})
+    assert sorted((r["doc_id"], r["pos"], r["term"], r["lemma"])
+                  for r in tok.collect()) == sorted(
+        (d, p, t, lm) for d, (ts, lms) in want.items()
+        for p, (t, lm) in enumerate(zip(ts, lms)))
+    with pytest.raises(ValueError, match="not stored"):
+        s.forward_layer(ids, "nope")
+
+
+def test_concordance_pages_unchanged(spark, index_small, docs_small,
+                                     conllu_root):
+    """KWIC pages read their context through the accessor and equal a
+    page cut from the tokens the previous layout stored, on a pages
+    index (pattern concordance) and a CoNLL-U index (both entry
+    points)."""
+    s = IndexSearcher(spark, index_small)
+    toks = {r["doc_id"]: r["t"] for r in docs_small.select(
+        "doc_id", tokens_expr("text").alias("t")).collect()}
+    pat = '[word="spark"] []{0,1} [word="join"]'
+    spans = [tuple(r) for r in s.pattern_spans_df(pat).collect()]
+    got = [tuple(r) for r in index_pattern_concordance(
+        s, pat, page_size=8, context=3).collect()]
+    assert got == _kwic(toks, spans, 3, 8) and got
+
+    root, parsed = conllu_root
+    c = IndexSearcher(spark, root)
+    ctoks = {d: t for d, (t, _) in
+             _stored_conllu_arrays(spark, root, parsed).items()}
+    pat = '[lemma="cat"] []{0,1} [lemma="bark"]'
+    spans = [tuple(r) for r in c.pattern_spans_df(pat).collect()]
+    got = [tuple(r) for r in index_pattern_concordance(
+        c, pat, page_size=5, context=2).collect()]
+    assert got == _kwic(ctoks, spans, 2, 5) and len(got) == 1
+    q = '[lemma="bark"] -nsubj-> _'
+    spans = [(d, min(g, p), max(g, p)) for d, g, p in c.relation_matches(q)]
+    got = [tuple(r) for r in index_relation_concordance(
+        c, q, page_size=5, context=2).collect()]
+    assert got == _kwic(ctoks, spans, 2, 5) and len(got) == 2
+
+
+def test_old_format_rejected(spark, index_small, tmp_path):
+    """An index written in the previous layout (no ``format`` in
+    stats.json) is refused with a rebuild message by the searcher and
+    by merge_indexes — there is no second read path."""
+    old = tmp_path / "old"
+    old.mkdir()
+    stats = json.loads((index_small / STATS_FILE).read_text())
+    stats.pop("format")
+    (old / STATS_FILE).write_text(json.dumps(stats))
+    with pytest.raises(ValueError, match="format 1.*rebuild"):
+        IndexSearcher(spark, old)
+    with pytest.raises(ValueError, match="format 1.*rebuild"):
+        merge_indexes(spark, [index_small, old], tmp_path / "merged")
+    assert not (tmp_path / "merged" / "segments").exists()
+
+
+def test_forward_arrays_absent_without_forward_store(spark, docs_small,
+                                                     tmp_path):
+    from word_sketch_lucene_spark.index.build import build_index
+
+    root = tmp_path / "nods"
+    build_index(spark, docs_small.select("doc_id", "text").limit(20), root,
+                doc_salt=1, n_partitions=2, store_docstore=False)
+    s = IndexSearcher(spark, root)
+    assert s.forward_arrays() is None
+    assert s.forward_token_table() is None

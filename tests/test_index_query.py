@@ -269,8 +269,8 @@ def test_pure_negative_pattern_still_dataframe_only(spark, index_small):
 
 def test_build_conllu_index_end_to_end(spark, tmp_path):
     """CoNLL-U files → dense-id multi-layer index: BM25 search works,
-    layer patterns serve index-side, docstore text reassembled from the
-    token stream, name↔id mapping written."""
+    layer patterns serve index-side, doc tokens read back from the
+    forward store, name↔id mapping written."""
     from word_sketch_lucene_spark.index.build import build_conllu_index
     from word_sketch_lucene_spark.sources.conllu import read_conllu
 
@@ -299,9 +299,9 @@ def test_build_conllu_index_end_to_end(spark, tmp_path):
     assert len(spans) == 2  # "Dogs bark" and "cat barks"
     # xpos regex through the layer dictionary
     assert set(s.expand_layer_terms("xpos", "VB.*")) == {"VBZ", "VBP"}
-    # docstore reassembled from tokens, in position order
-    ds = {r["doc_id"]: r["text"] for r in
-          spark.read.parquet(str(root / "docstore")).collect()}
+    # doc tokens from the forward store, in position order
+    ds = {r["doc_id"]: " ".join(r["term"]) for r in
+          s.forward_arrays({"term"}).collect()}
     assert set(ds.values()) == {"the cat sleeps dogs bark", "a cat barks"}
     names = {r["doc_name"]: r["doc_id"] for r in
              spark.read.parquet(str(root / "doc_names")).collect()}

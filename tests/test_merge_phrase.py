@@ -87,6 +87,40 @@ def test_add_documents_incremental(spark, split_corpus, tmp_path):
     assert [d for d, _ in got] == [d for d, _ in expected]
 
 
+def test_filtered_search_on_merged_root(spark, split_corpus, tmp_path):
+    """add_documents keeps the doc_meta store: a root that served
+    search(doc_filter=…) still serves it after a delta merge, over the
+    metadata of base and delta docs alike."""
+    pages, a, b, oracle = split_corpus
+    base = tmp_path / "base"
+    build_index(spark, a, base, doc_salt=2, n_partitions=4)
+    merged = add_documents(spark, base, b, tmp_path / "staging",
+                           doc_salt=2, n_partitions=4)
+    flt = "lang = 'de' OR lang = 'fr'"
+    allowed = {r["doc_id"] for r in
+               pages.filter(flt).select("doc_id").collect()}
+    assert allowed & {r["doc_id"] for r in b.select("doc_id").collect()}
+    q = ["t0", "t5"]
+    hits, _ = IndexSearcher(spark, merged).search(q, k=10, doc_filter=flt)
+    expected = [d for d, _ in oracle.topk(q, k=oracle.n_docs)
+                if d in allowed][:10]
+    assert [d for d, _ in hits] == expected and expected
+
+
+def test_add_documents_rejects_colliding_ids(spark, split_corpus, tmp_path):
+    """A delta whose doc ids collide with the base would silently yield
+    duplicate postings and a wrong n_docs: add_documents must refuse
+    it before building anything."""
+    _, a, b, _ = split_corpus
+    base = tmp_path / "base"
+    build_index(spark, a, base, doc_salt=2, n_partitions=4)
+    clash = b.unionByName(a.filter(F.col("doc_id").isin(7, 42)))
+    with pytest.raises(ValueError, match=r"doc ids .*\[7, 42\]"):
+        add_documents(spark, base, clash, tmp_path / "staging",
+                      doc_salt=2, n_partitions=4)
+    assert not (tmp_path / "staging").exists()
+
+
 def test_compact_policy(spark, split_corpus, tmp_path):
     pages, a, b, _ = split_corpus
     roots = []

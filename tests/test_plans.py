@@ -238,7 +238,8 @@ def test_sketch_fanout_branch_joins_broadcast(spark, docs_small):
 def test_extended_fold_identity_with_compile_branches(spark, docs_small,
                                                       monkeypatch):
     """r6 extended window fold (quantified fillers, fixed mid tokens,
-    cross-attr alts, inter-slot constraints, trinary 3: slots) must be
+    cross-attr alts on mid and end slots, inter-slot constraints,
+    trinary 3: slots) must be
     ROW-IDENTICAL to the per-relation compile_cql branches it
     replaced — same fan-out, same counting unit, same scores."""
     from word_sketch_lucene_spark.caching import release_all
@@ -271,8 +272,16 @@ def test_extended_fold_identity_with_compile_branches(spark, docs_small,
 =fixed mid
 *UNIMAP xmid
 \t1:"NN.*" [word="of"] 2:"NN.*"
+
+=end-slot alternation
+*UNIMAP xalt
+\t2:[tag="JJ"|word="very"] [tag="DT"]{0,1} 1:[tag="NN.*"]
 """
     cat = parse_wsdef(grammar)
+    # a cross-attr `|` on an END slot folds too: its CASE arm must
+    # apply the alternation exactly as compile_cql does
+    alt = next(r for r in cat.relations if r.id == "xalt")
+    assert R._extended_fold_shape(alt) is not None
     toks = explode_tokens(docs_small).select(
         "doc_id", "pos", "term", F.col("term").alias("lemma"),
         F.when(F.col("term").isin("table", "row", "data", "key"), "NN")

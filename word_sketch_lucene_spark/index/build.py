@@ -27,8 +27,10 @@ segments). Stage map:
    ``Σsum_tf = cf`` per term), the collocation-style grouped aggregate
    (``CollocateQueryHelper.java:102-136``) over block rows instead of
    a second full pass over 10^12 tokens.
-5. **docstore** — the forward index (``BlackLabQueryExecutor.java:159``
-   FORWARD_INDEX concordances): ``(doc_id, text, tokens)``.
+5. **docstore** — the stored documents (``BlackLabQueryExecutor.java:159``
+   FORWARD_INDEX concordances): ``(doc_id, text)`` only. Readers
+   derive the token array with the build's own ``tokens_expr``
+   (``IndexSearcher.forward_arrays``), so each datum is stored once.
 
 Every stage commits a :class:`~.manifest.StageManifest`; re-running
 ``build_index`` with identical inputs+config skips completed stages
@@ -46,11 +48,26 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.scoring import B, K1
-from ..functions.tokenize import explode_tokens, tokens_expr
+from ..functions.tokenize import explode_tokens
 from .manifest import StageManifest, config_fingerprint, input_fingerprint
 from .segments import BLOCK_SIZE, SEGMENT_SCHEMA, TOKEN_INPUT_COLUMNS, make_segment_writer
 
 STATS_FILE = "stats.json"
+# on-disk layout version, recorded in stats.json. 2: each datum stored
+# once — docstore ``(doc_id, text)``, no CoNLL-U docstore, no
+# case-folded ``term``/``lemma`` forward arrays
+INDEX_FORMAT = 2
+
+
+def check_format(stats: dict, root: str | Path) -> None:
+    """Reject an index written in another on-disk layout: there is one
+    read path, so an old index must be rebuilt, not half-served."""
+    fmt = stats.get("format", 1)
+    if fmt != INDEX_FORMAT:
+        raise ValueError(
+            f"index at {root} has on-disk format {fmt}, this library "
+            f"reads format {INDEX_FORMAT} — rebuild it with build_index "
+            f"/ build_conllu_index")
 
 
 def _cluster_width(spark: SparkSession) -> int:
@@ -235,6 +252,10 @@ def build_conllu_index(
     index's ids, see ``merge.add_conllu_documents``); the name↔id
     mapping is written to ``<root>/doc_names``.
 
+    ``store_docstore``: keep the ``forward_layers`` store — the
+    root's only doc store (no separate ``docstore`` is written; doc
+    tokens read back through ``IndexSearcher.forward_arrays``).
+
     ``colloc_catalog``: a ``GrammarCatalog`` — when given, the build
     additionally materializes the collocation store for it
     (``index.colloc_store.build_collocation_store``, the reference's
@@ -270,8 +291,7 @@ def build_conllu_index(
             spark, None, out_dir,
             pre_tokenized=lt.select("doc_id", "pos", "term"),
             doc_salt=doc_salt, n_partitions=n_partitions,
-            block_size=block_size, store_docstore=store_docstore,
-            input_paths=input_paths)
+            block_size=block_size, input_paths=input_paths)
         build_layer_postings(
             spark, lt, out_dir, layers=layers, doc_salt=doc_salt,
             n_partitions=n_partitions, block_size=block_size,
@@ -293,11 +313,13 @@ def build_conllu_index(
             # sent_no/token_id/head are STRUCTURAL forward columns:
             # sentence-bounded span matching (reference <s> spans,
             # conllu-sentences.blf.yaml:16) and dependency-relation
-            # queries ("X" -deprel-> _) read them per candidate doc
-            fw_cols = [c for c in ("term", "lemma", "upos", "xpos",
-                                   "deprel", "feats", "word_cs",
-                                   "lemma_cs", "sent_no", "token_id",
-                                   "head")
+            # queries ("X" -deprel-> _) read them per candidate doc.
+            # term/lemma are not stored: the reader lowers word_cs/
+            # lemma_cs (FOLDED_LAYERS), and this store is also the
+            # index's only docstore
+            fw_cols = [c for c in ("upos", "xpos", "deprel", "feats",
+                                   "word_cs", "lemma_cs", "sent_no",
+                                   "token_id", "head")
                        if c in lt.columns]
             (
                 lt.groupBy("doc_id").agg(*[_arr(c) for c in fw_cols])
@@ -360,8 +382,9 @@ def build_index(
     ``pre_tokenized`` replaces the tokenize stage with an existing
     ``(doc_id, pos, term[, dl])`` token table — the CoNLL-U ingestion
     path (the reference's primary workflow indexes tagger output, not
-    raw text). ``pages`` may then be None; the docstore (when kept) is
-    reassembled from the token stream.
+    raw text). ``pages`` may then be None, and no docstore is written:
+    the caller's forward store (``build_conllu_index``) holds the
+    documents.
     """
     paths = IndexPaths(out_dir)
     paths.root.mkdir(parents=True, exist_ok=True)
@@ -371,6 +394,7 @@ def build_index(
         "k1": k1, "b": b, "use_pandas_udf": use_pandas_udf,
         "tokenizer": ("pre-tokenized" if pre_tokenized is not None
                       else "lower-split-[^a-z0-9]+"),
+        "format": INDEX_FORMAT,
     }
     cfg_fp = config_fingerprint(config)
     inputs_fp = input_fingerprint(input_paths) if input_paths else "unspecified"
@@ -468,6 +492,7 @@ def build_index(
             "avgdl": float(row["avgdl"]),
             "total_tokens": int(row["total_tokens"]),
             "k1": k1, "b": b, "block_size": block_size, "doc_salt": doc_salt,
+            "format": INDEX_FORMAT,
         }
         tmp = paths.stats.with_suffix(".tmp")
         tmp.write_text(json.dumps(s, indent=1, sort_keys=True))
@@ -494,29 +519,14 @@ def build_index(
         st_ts.commit(inputs_fp, cfg_fp,
                      lineage={"derived_from": str(paths.segments)})
 
-    # ---- stage: docstore (forward index) ------------------------------
+    # ---- stage: docstore (stored text) --------------------------------
     def _stage_docstore() -> None:
         st_ds = StageManifest(paths.docstore, "docstore")
         if st_ds.is_complete(inputs_fp, cfg_fp):
             return
-        if pre_tokenized is not None or pages is None:
-            # reassemble the forward index from the token stream
-            # (pos-ordered collect per doc — one co-keyed shuffle)
-            ds = tokens.groupBy("doc_id").agg(
-                F.transform(
-                    F.array_sort(F.collect_list(
-                        F.struct("pos", "term"))),
-                    lambda s: s["term"]).alias("tokens"))
-            ds = ds.select("doc_id",
-                           F.concat_ws(" ", "tokens").alias("text"),
-                           "tokens")
-        else:
-            ds = pages.select(
-                F.col(doc_id_col).alias("doc_id"),
-                F.col(text_col).alias("text"),
-                tokens_expr(text_col).alias("tokens"),
-            )
-        ds.write.mode("overwrite").parquet(str(paths.docstore))
+        (pages.select(F.col(doc_id_col).alias("doc_id"),
+                      F.col(text_col).alias("text"))
+         .write.mode("overwrite").parquet(str(paths.docstore)))
         st_ds.commit(inputs_fp, cfg_fp, lineage={"inputs": input_paths or []})
 
     # ---- stage: doc_meta (stored metadata fields) ---------------------
@@ -545,7 +555,7 @@ def build_index(
     # scheduler back-fills executor idle time (guide §2.6) — per-build
     # fixed cost is paid once, not once per serial stage
     jobs = [_stage_segments_then_term_stats, _stage_doc_lens]
-    if store_docstore:
+    if store_docstore and pages is not None:
         jobs.append(_stage_docstore)
     if meta_cols:
         jobs.append(_stage_doc_meta)

@@ -43,6 +43,9 @@ from ..plans.relations import (
 
 STORE_DIR = "colloc_store"
 META_NAME = "_store_meta.json"
+# store layout version, recorded in the meta. 2: trinary relations keyed
+# ``<id>/<value>`` — a store without it predates that and must rebuild
+STORE_FORMAT = 2
 
 
 def _store_rels(catalog: GrammarCatalog,
@@ -91,6 +94,7 @@ def build_collocation_store(
     if not rels:
         raise ValueError("no pattern relations to materialize")
     meta = {
+        "format": STORE_FORMAT,
         "relations": sorted(
             (r.id, r.pattern, r.type, r.head_position, r.colloc_position,
              bool(r.dual), r.default_slop) for r in rels),
@@ -288,6 +292,7 @@ def store_can_serve(searcher, catalog: GrammarCatalog,
     back to the live fan-out, never serve stale counts)."""
     meta = store_meta(searcher)
     if (meta is None
+            or meta.get("format") != STORE_FORMAT
             or meta["subst_attr"] != subst_attr
             or meta["colloc_attr"] != colloc_attr
             or bool(meta["within_sentence"]) != bool(within_sentence)):

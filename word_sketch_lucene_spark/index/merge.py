@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.codec import decode_positions, vbyte_decode
-from .build import STATS_FILE, IndexPaths, build_index
+from .build import STATS_FILE, IndexPaths, build_index, check_format
 from .manifest import StageManifest, config_fingerprint, input_fingerprint
 from .segments import BLOCK_SIZE, SEGMENT_SCHEMA, TOKEN_INPUT_COLUMNS, make_segment_writer
 
@@ -81,8 +81,9 @@ def merge_indexes(
     n_partitions: int | None = None,
     block_size: int = BLOCK_SIZE,
 ) -> dict:
-    """Merge N built indexes into one compacted index (docstores and
-    stats folded too). Resumable via the output manifest."""
+    """Merge N built indexes into one compacted index (stats and the
+    per-doc stores folded too). Inputs must share the on-disk format
+    and k1/b/block_size. Resumable via the output manifest."""
     paths = IndexPaths(out_root)
     paths.root.mkdir(parents=True, exist_ok=True)
     nparts = n_partitions or spark.sparkContext.defaultParallelism
@@ -95,6 +96,20 @@ def merge_indexes(
     st = StageManifest(paths.root, "merge")
     if st.is_complete(inputs_fp, cfg_fp):
         return json.loads(paths.stats.read_text())
+
+    # every input must be in this library's on-disk layout, and scoring/
+    # codec params must agree — a delta built with different k1/b would
+    # make the merged stats misreport what the searcher will score with
+    all_stats = [json.loads((Path(r) / STATS_FILE).read_text())
+                 for r in in_roots]
+    for r, s in zip(in_roots, all_stats):
+        check_format(s, r)
+    for param in ("k1", "b", "block_size"):
+        vals = {s.get(param) for s in all_stats}
+        if len(vals) > 1:
+            raise ValueError(
+                f"merge_indexes: inputs disagree on {param!r}: {sorted(vals)} "
+                f"(rebuild the outlier or merge compatible indexes only)")
 
     # union of decoded token streams — the LSM merge input
     tokens = None
@@ -113,7 +128,7 @@ def merge_indexes(
         .write.mode("overwrite").parquet(str(paths.segments))
     )
 
-    # fold per-index doc_lens / stats / term_stats / docstore
+    # fold per-index doc_lens / stats / term_stats
     dl = None
     for r in in_roots:
         d = spark.read.parquet(str(Path(r) / "doc_lens"))
@@ -122,35 +137,14 @@ def merge_indexes(
     row = spark.read.parquet(str(paths.doc_lens)).agg(
         F.count("*").alias("n"), F.avg("dl").alias("avgdl"),
         F.sum("dl").alias("tt")).collect()[0]
-    all_stats = [json.loads((Path(r) / STATS_FILE).read_text())
-                 for r in in_roots]
-    base = all_stats[0]
-    # scoring/codec params must agree across inputs — a delta built with
-    # different k1/b would make the merged stats misreport what the
-    # searcher will score with
-    for param in ("k1", "b", "block_size"):
-        vals = {s.get(param) for s in all_stats}
-        if len(vals) > 1:
-            raise ValueError(
-                f"merge_indexes: inputs disagree on {param!r}: {sorted(vals)} "
-                f"(rebuild the outlier or merge compatible indexes only)")
-    stats = {**base, "n_docs": int(row["n"]), "avgdl": float(row["avgdl"]),
-             "total_tokens": int(row["tt"])}
+    stats = {**all_stats[0], "n_docs": int(row["n"]),
+             "avgdl": float(row["avgdl"]), "total_tokens": int(row["tt"])}
     paths.stats.write_text(json.dumps(stats, indent=1, sort_keys=True))
 
     seg = spark.read.parquet(str(paths.segments))
     seg.groupBy("term").agg(
         F.sum("n").alias("df"), F.sum("sum_tf").alias("cf")
     ).write.mode("overwrite").parquet(str(paths.term_stats))
-
-    stores = [str(Path(r) / "docstore") for r in in_roots
-              if (Path(r) / "docstore").exists()]
-    if stores:
-        ds = None
-        for s in stores:
-            d = spark.read.parquet(s)
-            ds = d if ds is None else ds.unionByName(d)
-        ds.write.mode("overwrite").parquet(str(paths.docstore))
 
     # annotation-layer postings merge the same way as the term segments
     # (the prefixed key IS the term for the writer kernel); layer_stats
@@ -175,9 +169,9 @@ def merge_indexes(
         )
         write_layer_stats(spark, paths.layers, paths.layer_stats)
 
-    # per-doc auxiliary stores fold by disjoint union (doc ids must not
-    # collide across inputs — the add_documents contract)
-    for aux in ("forward_layers", "doc_names"):
+    # per-doc stores fold by disjoint union (doc ids must not collide
+    # across inputs — the add_documents contract)
+    for aux in ("docstore", "forward_layers", "doc_names", "doc_meta"):
         dirs = [str(Path(r) / aux) for r in in_roots
                 if (Path(r) / aux).exists()]
         if dirs:
@@ -210,8 +204,20 @@ def add_documents(
     in — an atomic directory rename, the parquet analog of an Iceberg
     snapshot commit).
 
-    Doc ids in ``new_pages`` must not collide with the base index.
+    Doc ids in ``new_pages`` must not collide with the base index:
+    one semi-join against the base ``doc_lens`` rejects a colliding
+    delta with ``ValueError`` before anything is built.
     """
+    clash = [r["doc_id"] for r in (
+        new_pages.select(F.col(doc_id_col).cast("long").alias("doc_id"))
+        .join(spark.read.parquet(str(Path(index_root) / "doc_lens")),
+              "doc_id", "left_semi")
+        .limit(5).collect())]
+    if clash:
+        raise ValueError(
+            f"add_documents: doc ids already in the base index "
+            f"{index_root} (e.g. {sorted(clash)}) — give new documents "
+            f"ids past the base's")
     staging = Path(staging_root)
     delta = staging / "delta"
     merged = staging / "merged"

@@ -532,21 +532,29 @@ def _test_col(test: AttrTest, col: Column) -> Column:
     return ~c if test.negated else c
 
 
-def _item_predicate(item: TokenItem, columns: list[str]) -> Column:
-    pred = F.lit(True)
-    for t in item.tests:
-        t = effective_test(t)
-        pred = pred & _test_col(t, _resolve_col(t.attr, columns))
+def _item_pred(item: TokenItem, col_of) -> Column:
+    """One item's tests AND the OR of its cross-attr ``|`` groups, each
+    test attribute resolved to a column by ``col_of`` — shared with the
+    window-join fold (``plans.relations``), which resolves attributes
+    against aliased or neighbor columns."""
+    def conj(tests) -> Column:
+        pred = F.lit(True)
+        for t in tests:
+            t = effective_test(t)
+            pred = pred & _test_col(t, col_of(t.attr))
+        return pred
+
+    pred = conj(item.tests)
     if item.alts:
         alt = F.lit(False)
         for group in item.alts:
-            g = F.lit(True)
-            for t in group:
-                t = effective_test(t)
-                g = g & _test_col(t, _resolve_col(t.attr, columns))
-            alt = alt | g
+            alt = alt | conj(group)
         pred = pred & alt
     return pred
+
+
+def _item_predicate(item: TokenItem, columns: list[str]) -> Column:
+    return _item_pred(item, lambda a: _resolve_col(a, columns))
 
 
 def has_alts(items: list[TokenItem | GapItem]) -> bool:

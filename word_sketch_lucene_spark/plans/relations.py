@@ -582,21 +582,9 @@ def _nb_pred(item, delta: int, cols: list[str]) -> Column:
     neighbor (doc edge) is NULL, so every arm referencing it
     evaluates NULL and the CASE never fires — matching the join
     chain, where a non-existent position can't match."""
-    from .cql import _test_col, effective_test
+    from .cql import _item_pred
 
-    pred = F.lit(True)
-    for t in item.tests:
-        t = effective_test(t)
-        pred = pred & _test_col(t, _nb_test_col(t.attr, delta, cols))
-    if item.alts:
-        alt = F.lit(False)
-        for group in item.alts:
-            g = F.lit(True)
-            for t in group:
-                t = effective_test(t)
-                g = g & _test_col(t, _nb_test_col(t.attr, delta, cols))
-            alt = alt | g
-        pred = pred & alt
+    pred = _item_pred(item, lambda a: _nb_test_col(a, delta, cols))
     # a negated-only test must still require the position to EXIST
     # (the chain joins the mid token; no token → no match): anchor on
     # the neighbor's surface term being present
@@ -635,24 +623,22 @@ def _ext_need_neighbors(extended, colloc_attr: str,
 
 
 def _side_pred(item, pref: str, cols: list[str]):
-    """Conjunction of one item's tests over ``{pref}``-aliased columns
-    (the CASE-arm twin of ``plans.cql._item_predicate``)."""
-    from .cql import DEFAULT_LAYERS, _test_col, effective_test
+    """One end slot's tests, cross-attr ``|`` groups included, over
+    ``{pref}``-aliased columns (the CASE-arm twin of
+    ``plans.cql._item_predicate``)."""
+    from .cql import DEFAULT_LAYERS, _item_pred
 
-    pred = F.lit(True)
-    for t in item.tests:
-        t = effective_test(t)
-        if t.attr == "class":
-            col = word_class_expr(f"{pref}.term")
-        else:
-            name = DEFAULT_LAYERS.get(t.attr, t.attr)
-            if name not in cols:
-                raise ValueError(
-                    f"pattern attribute {t.attr!r} → column {name!r} "
-                    f"not in token table (available: {sorted(cols)})")
-            col = F.col(f"{pref}.{name}")
-        pred = pred & _test_col(t, col)
-    return pred
+    def col_of(attr: str) -> Column:
+        if attr == "class":
+            return word_class_expr(f"{pref}.term")
+        name = DEFAULT_LAYERS.get(attr, attr)
+        if name not in cols:
+            raise ValueError(
+                f"pattern attribute {attr!r} → column {name!r} "
+                f"not in token table (available: {sorted(cols)})")
+        return F.col(f"{pref}.{name}")
+
+    return _item_pred(item, col_of)
 
 
 def _fast_window_pairs(tokens, fast, head, subst_attr, colloc_attr,

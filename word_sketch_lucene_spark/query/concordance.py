@@ -44,6 +44,16 @@ def find_phrase_hits(tokens: DataFrame, phrase: list[str]) -> DataFrame:
     return hits
 
 
+def _index_tokens(searcher) -> DataFrame:
+    """``(doc_id, tokens)`` off the index's forward store (stored text
+    or CoNLL-U forward layers, via ``IndexSearcher.forward_arrays``)."""
+    fw = searcher.forward_arrays({"term"})
+    if fw is None:
+        raise NotImplementedError(
+            "index has no forward store — build with store_docstore=True")
+    return fw.select("doc_id", F.col("term").alias("tokens"))
+
+
 def index_pattern_concordance(
     searcher,
     pattern: str,
@@ -56,7 +66,7 @@ def index_pattern_concordance(
     """INDEX-side BCQL → KWIC page, end to end off the index artifacts:
     spans from :meth:`IndexSearcher.pattern_spans_df` (budgeted — hot
     patterns run distributed AS A PLAN), keyword width from each span's
-    extent, context from the index's own docstore (forward index). The
+    extent, context from the index's own forward store. The
     ``POST /api/bcql`` trace (SURVEY §3.3) without touching the corpus.
     ``within_sentence=True`` excludes matches whose gap crosses a
     sentence boundary (the reference's ``<s>``-span semantics).
@@ -73,8 +83,7 @@ def index_pattern_concordance(
     hits = spans_df.select(
         "doc_id", F.col("start").alias("pos"),
         (F.col("end") - F.col("start") + 1).cast("int").alias("kw_len"))
-    docstore = searcher.spark.read.parquet(
-        str(searcher.root / "docstore")).select("doc_id", "tokens")
+    docstore = _index_tokens(searcher)
     # per-span keyword width: reuse the page machinery with kw_len as a
     # column (slice accepts column lengths); kw_len tie-breaks the rank
     # (two spans may share a start with different ends)
@@ -133,8 +142,7 @@ def index_relation_concordance(
         F.least("gp", "dp").alias("pos"),
         (F.greatest("gp", "dp") - F.least("gp", "dp") + 1)
         .cast("int").alias("kw_len")).distinct()
-    docstore = searcher.spark.read.parquet(
-        str(searcher.root / "docstore")).select("doc_id", "tokens")
+    docstore = _index_tokens(searcher)
     if doc_id_map is not None:
         m = F.broadcast(doc_id_map.select(
             F.col("doc_id").alias("_did"), F.col("ext_id")))

@@ -25,8 +25,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.scoring import B, K1, bm25_term_score_expr
-from ..functions.tokenize import doc_lengths, explode_tokens, tokenize_py
-from ..index.build import STATS_FILE
+from ..functions.tokenize import (
+    doc_lengths,
+    explode_tokens,
+    tokenize_py,
+    tokens_expr,
+)
+from ..index.build import STATS_FILE, check_format
 from .wand import BlockCursor, block_max_wand, exact_daat, idf_py, vectorized_topk
 
 
@@ -142,6 +147,7 @@ class IndexSearcher:
         self.spark = spark
         self.root = Path(root)
         self.stats = json.loads((self.root / STATS_FILE).read_text())
+        check_format(self.stats, self.root)
         self.k1 = self.stats.get("k1", K1)
         self.b = self.stats.get("b", B)
         # dataset handles resolve LAZILY (cached property below): each
@@ -446,25 +452,17 @@ class IndexSearcher:
         cache = self._forward_cache.setdefault(layer, {})
         missing = [d for d in doc_ids if d not in cache]
         if missing:
-            fwp = self.root / "forward_layers"
-            if fwp.exists():
-                fw = self.spark.read.parquet(str(fwp))
-                col = layer
-                if col not in fw.columns:
-                    raise ValueError(f"forward layer {layer!r} not stored "
-                                     f"(available: {sorted(fw.columns)})")
-            elif layer == "term" and (self.root / "docstore").exists():
-                # term-only index: the docstore's position-ordered token
-                # array IS the term forward index
-                fw = self.spark.read.parquet(str(self.root / "docstore"))
-                col = "tokens"
-            else:
-                raise NotImplementedError(
-                    "index has no forward_layers store — build with "
-                    "index.build.build_conllu_index(store_docstore=True)")
-            rows = self._filter_in(fw, "doc_id", missing) \
-                .select("doc_id", col).collect()
-            found = {int(r["doc_id"]): list(r[col]) for r in rows}
+            fw = self.forward_arrays({layer})
+            if fw is None or layer not in fw.columns:
+                if self._dataset("forward_layers", required=False) is None:
+                    raise NotImplementedError(
+                        "index has no forward_layers store — build with "
+                        "index.build.build_conllu_index(store_docstore=True)")
+                raise ValueError(
+                    f"forward layer {layer!r} not stored (available: "
+                    f"{sorted(self.forward_arrays().columns[1:])})")
+            rows = self._filter_in(fw, "doc_id", missing).collect()
+            found = {int(r["doc_id"]): list(r[layer]) for r in rows}
             for d in missing:
                 cache[d] = found.get(d, [])
         return {d: cache[d] for d in doc_ids}
@@ -491,6 +489,40 @@ class IndexSearcher:
                 cache[v] = found.get(v, 0)
         return {v: cache[v] for v in values if cache[v] > 0}
 
+    def forward_arrays(self, columns: set[str] | None = None
+                       ) -> DataFrame | None:
+        """``(doc_id, <layer>…)``: per-doc value arrays in position
+        order — the one read path of the index's forward store. Each
+        datum is stored once, so some arrays are derived here with the
+        expression the build itself uses:
+
+        - pages index: ``term`` = ``tokens_expr(text)`` over the
+          ``docstore``'s stored text (the tokenize stage's rule);
+        - CoNLL-U index: ``term``/``lemma`` = ``lower`` of the stored
+          ``word_cs``/``lemma_cs`` arrays (``sources.conllu.
+          FOLDED_LAYERS``, as ``layer_tokens`` folds them); every other
+          layer reads as stored in ``forward_layers``.
+
+        ``columns`` restricts the output (``None``: every array the
+        index can serve); ``None`` when the index has no forward
+        store."""
+        from ..sources.conllu import FOLDED_LAYERS
+
+        fw = self._dataset("forward_layers", required=False)
+        if fw is not None:
+            avail = {dst: F.transform(src, F.lower)
+                     for dst, src in FOLDED_LAYERS.items()
+                     if src in fw.columns}
+            avail.update((c, F.col(c)) for c in fw.columns if c != "doc_id")
+        else:
+            fw = self._dataset("docstore", required=False)
+            if fw is None:
+                return None
+            avail = {"term": tokens_expr("text")}
+        return fw.select("doc_id", *[
+            e.alias(c) for c, e in avail.items()
+            if columns is None or c in columns])
+
     def forward_token_table(self, columns: set[str] | None = None
                             ) -> DataFrame | None:
         """DISTRIBUTED multi-layer token table derived from the index's
@@ -502,32 +534,24 @@ class IndexSearcher:
         (``BlackLabQueryExecutor.java:117-144``) because one node holds
         the corpus; at 100× corpus the same query must shard, and the
         forward store already is a doc-partitioned parquet table.
-        Falls back to the term-only ``docstore`` when no forward layers
-        were built; ``None`` when neither exists.
+        Reads through :meth:`forward_arrays` (a pages index yields the
+        ``term`` column only); ``None`` when the index has no forward
+        store or none of ``columns``.
 
         ``columns`` restricts which layer arrays are zipped: the
         ``arrays_zip`` consumes every requested array wholesale, so
         Catalyst cannot column-prune through it — a 2-layer pattern
         must not pay for scanning all 11 stored arrays. Callers pass
         the layers their plan actually tests/captures."""
-        fwp = self.root / "forward_layers"
-        if fwp.exists():
-            fw = self.spark.read.parquet(str(fwp))
-            cols = [c for c in fw.columns
-                    if c != "doc_id"
-                    and (columns is None or c in columns)]
-            if not cols:
-                return None
-            return fw.select(
-                "doc_id",
-                F.posexplode(F.arrays_zip(*cols)).alias("pos", "z"),
-            ).select("doc_id", F.col("pos").cast("long").alias("pos"),
-                     *[F.col(f"z.{c}").alias(c) for c in cols])
-        ds = self.root / "docstore"
-        if ds.exists():
-            return self.spark.read.parquet(str(ds)).select(
-                "doc_id", F.posexplode("tokens").alias("pos", "term"))
-        return None
+        fw = self.forward_arrays(columns)
+        if fw is None or len(fw.columns) == 1:
+            return None
+        cols = fw.columns[1:]
+        return fw.select(
+            "doc_id",
+            F.posexplode(F.arrays_zip(*cols)).alias("pos", "z"),
+        ).select("doc_id", F.col("pos").cast("long").alias("pos"),
+                 *[F.col(f"z.{c}").alias(c) for c in cols])
 
     def _doc_lens(self, doc_ids: list[int]) -> dict[int, int]:
         """doc_id → token count (the doc_lens stage; pruned scan per

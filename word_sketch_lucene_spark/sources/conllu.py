@@ -181,6 +181,13 @@ def to_wpl_text(ann: DataFrame, id_col: str = "doc_id",
     )
 
 
+# case-folded layer → the case-preserved layer it lowers. Layer tokens
+# carry both; the forward store keeps only the ``*_cs`` arrays and its
+# reader derives the folded ones with the same ``lower``
+# (``IndexSearcher.forward_arrays``) — each datum stored once
+FOLDED_LAYERS = {"term": "word_cs", "lemma": "lemma_cs"}
+
+
 def layer_tokens(parsed: DataFrame, sent_len: int | None = None) -> DataFrame:
     """Parsed CoNLL-U table → flat multi-layer token table for the CQL
     compiler: ``(doc_id, pos, term, lemma, upos, xpos, deprel)`` with a
