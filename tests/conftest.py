@@ -10,10 +10,10 @@ import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
-# bound the test JVM's heap: under the session's 64g default it grows
-# past 13 GB over one run of the suite (garbage the collector is never
-# pressed to reclaim) and a small host's OOM killer takes the JVM
-# mid-suite; 4g keeps it near 5 GB with the same results
+# bound the test JVM's heap: under a large heap it grows past 13 GB
+# over one run of the suite (garbage the collector is never pressed to
+# reclaim), and the session default is half the host's memory; 4g
+# keeps it near 5 GB with the same results
 os.environ.setdefault("SPARK_DRIVER_MEM", "4g")
 
 SF_SMALL = os.environ.get("SPARK_GRAFT_SF_SMALL", "/root/testdata/sf0.001")

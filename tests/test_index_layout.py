@@ -1,11 +1,15 @@
 """On-disk layout: every datum is stored once, and each array a reader
 derives (doc tokens from stored text, case-folded CoNLL-U layers from
-the case-preserved ones) equals the stored copy it replaced."""
+the case-preserved ones) equals the stored copy it replaced. Posting
+stores write only what their readers read: the layer postings carry no
+impacts, and payload columns carry no parquet statistics."""
 
 from __future__ import annotations
 
 import json
+from pathlib import Path
 
+import pyarrow.parquet as pq
 import pytest
 
 from word_sketch_lucene_spark.functions.tokenize import tokens_expr
@@ -14,7 +18,11 @@ from word_sketch_lucene_spark.index.build import (
     STATS_FILE,
     build_conllu_index,
 )
-from word_sketch_lucene_spark.index.merge import merge_indexes
+from word_sketch_lucene_spark.index.merge import (
+    add_conllu_documents,
+    decode_segments_to_tokens,
+    merge_indexes,
+)
 from word_sketch_lucene_spark.query.concordance import (
     index_pattern_concordance,
     index_relation_concordance,
@@ -189,3 +197,104 @@ def test_forward_arrays_absent_without_forward_store(spark, docs_small,
     s = IndexSearcher(spark, root)
     assert s.forward_arrays() is None
     assert s.forward_token_table() is None
+
+
+def test_format_2_root_rejected(spark, index_small, tmp_path):
+    """A format-2 root (tf repeated in ``pos_vb``, impacts on layer
+    postings) cannot be decoded by this library: searcher and merge
+    refuse it with a rebuild message."""
+    old = tmp_path / "v2"
+    old.mkdir()
+    stats = json.loads((index_small / STATS_FILE).read_text())
+    stats["format"] = 2
+    (old / STATS_FILE).write_text(json.dumps(stats))
+    with pytest.raises(ValueError, match="format 2.*rebuild"):
+        IndexSearcher(spark, old)
+    with pytest.raises(ValueError, match="format 2.*rebuild"):
+        merge_indexes(spark, [index_small, old], tmp_path / "merged")
+
+
+def _stats_set(store: Path) -> dict[str, set[bool]]:
+    """column → the ``is_stats_set`` values of its chunks, over every
+    row group of every file of one store (pyarrow footers)."""
+    out: dict[str, set[bool]] = {}
+    for f in sorted(store.glob("part-*.parquet")):
+        md = pq.ParquetFile(f).metadata
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            for i in range(rg.num_columns):
+                c = rg.column(i)
+                out.setdefault(c.path_in_schema, set()).add(c.is_stats_set)
+    return out
+
+
+def test_posting_layouts_and_payload_statistics(spark, index_small,
+                                                conllu_root):
+    """The scored term field keeps its BM25 impacts; layer postings are
+    positions-only. Payload blobs and stored text have no footer
+    statistics; the pushdown keys keep theirs."""
+    root, _ = conllu_root
+    seg = set(spark.read.parquet(str(index_small / "segments")).columns)
+    assert {"tfs_vb", "dls_vb", "max_tf", "min_dl", "pos_vb"} <= seg
+    lay = set(spark.read.parquet(str(root / "layers")).columns)
+    assert {"tfs_vb", "pos_vb", "sum_tf"} <= lay
+    assert not lay & {"dls_vb", "max_tf", "min_dl"}
+
+    for store, payload in (
+            (index_small / "segments",
+             ("docs_vb", "tfs_vb", "dls_vb", "pos_vb")),
+            (root / "segments", ("docs_vb", "tfs_vb", "dls_vb", "pos_vb")),
+            (root / "layers", ("docs_vb", "tfs_vb", "pos_vb"))):
+        st = _stats_set(store)
+        for c in payload:
+            assert st[c] == {False}, (store, c)
+        for c in ("term", "first_doc", "last_doc"):
+            assert st[c] == {True}, (store, c)
+    st = _stats_set(index_small / "docstore")
+    assert st["text"] == {False} and st["doc_id"] == {True}
+
+
+def _layer_positions(spark, root: Path) -> set:
+    """(layer term, doc name, position) of every layer posting."""
+    names = {r["doc_id"]: r["doc_name"] for r in
+             spark.read.parquet(str(root / "doc_names")).collect()}
+    toks = decode_segments_to_tokens(
+        spark.read.parquet(str(root / "layers")))
+    assert toks.columns == ["term", "doc_id", "pos"]
+    return {(r["term"], names[r["doc_id"]], r["pos"])
+            for r in toks.collect()}
+
+
+def test_add_conllu_documents_layers_equal_rebuild(spark, tmp_path):
+    """Merging positions-only layer postings (decode without ``dl``,
+    re-encode without impacts) gives the same layer positions as a
+    rebuild of the whole corpus, and the merged store keeps the lean
+    layout."""
+    dirs = {n: tmp_path / n for n in ("base", "delta", "full")}
+    for d in dirs.values():
+        d.mkdir()
+    for name, text in CONLLU.items():
+        (dirs["full"] / name).write_text(text)
+        (dirs["base" if name == "a.conllu" else "delta"] / name
+         ).write_text(text)
+    base = tmp_path / "base_idx"
+    build_conllu_index(spark, read_conllu(spark, str(dirs["base"])), base,
+                       doc_salt=1, n_partitions=2)
+    merged = add_conllu_documents(
+        spark, base, read_conllu(spark, str(dirs["delta"])),
+        tmp_path / "staging", doc_salt=1, n_partitions=2)
+    full = tmp_path / "full_idx"
+    build_conllu_index(spark, read_conllu(spark, str(dirs["full"])), full,
+                       doc_salt=1, n_partitions=2)
+    got, want = (_layer_positions(spark, merged),
+                 _layer_positions(spark, full))
+    assert got == want and len(want) > 20
+    assert {"lemma:cat", "upos:NOUN"} <= {t for t, _, _ in want}
+    assert not set(spark.read.parquet(str(merged / "layers")).columns) \
+        & {"dls_vb", "max_tf", "min_dl"}
+    assert _stats_set(merged / "layers")["pos_vb"] == {False}
+    # layer_stats re-derived from the merged blocks equals the rebuild's
+    ls = {(r["layer"], r["value"], r["df"], r["cf"]) for r in
+          spark.read.parquet(str(merged / "layer_stats")).collect()}
+    assert ls == {(r["layer"], r["value"], r["df"], r["cf"]) for r in
+                  spark.read.parquet(str(full / "layer_stats")).collect()}

@@ -90,7 +90,9 @@ def test_positions_stored_correctly(spark, index_small, oracle):
     for r in rows:
         gaps = vbyte_decode(bytes(r["docs_vb"])).astype("int64")
         docs = gaps.cumsum() + r["first_doc"]
-        pls = decode_positions(bytes(r["pos_vb"]), r["n"])
+        tfs = vbyte_decode(bytes(r["tfs_vb"]))
+        assert tfs.size == r["n"]
+        pls = decode_positions(bytes(r["pos_vb"]), tfs)
         for d, pl in zip(docs, pls):
             seen[int(d)] = list(pl)
     assert seen == {d: pl for d, pl in oracle.positions[term].items()}

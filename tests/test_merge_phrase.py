@@ -121,6 +121,37 @@ def test_add_documents_rejects_colliding_ids(spark, split_corpus, tmp_path):
     assert not (tmp_path / "staging").exists()
 
 
+def test_repeated_adds_do_not_grow_per_doc_file_counts(spark, split_corpus,
+                                                      tmp_path):
+    """Each merge folds a per-doc store into at most its largest input's
+    file count: two add_documents cycles leave the merged docstore and
+    doc_lens with no more files than the base (a plain union summed
+    the inputs' files, so every cycle added the delta's), and the
+    stores still hold every doc once."""
+    pages, a, b, oracle = split_corpus
+    base = tmp_path / "base"
+    build_index(spark, a, base, doc_salt=2, n_partitions=4)
+    root = base
+    for i, part in enumerate((b.filter(F.col("doc_id") < 225),
+                              b.filter(F.col("doc_id") >= 225))):
+        root = add_documents(spark, root, part, tmp_path / f"stage{i}",
+                             doc_salt=2, n_partitions=4)
+
+    def n_files(r, store):
+        return len(list((r / store).glob("part-*")))
+
+    for store in ("docstore", "doc_lens"):
+        assert n_files(root, store) <= n_files(base, store), store
+    ids = [r["doc_id"] for r in
+           spark.read.parquet(str(root / "docstore")).collect()]
+    assert sorted(ids) == list(range(oracle.n_docs))
+    assert spark.read.parquet(str(root / "doc_lens")).count() \
+        == oracle.n_docs
+    got, _ = IndexSearcher(spark, root).search(["t0", "t5"], k=10)
+    assert [d for d, _ in got] == [d for d, _ in
+                                   oracle.topk(["t0", "t5"], k=10)]
+
+
 def test_compact_policy(spark, split_corpus, tmp_path):
     pages, a, b, _ = split_corpus
     roots = []

@@ -43,6 +43,14 @@ def test_bm25_scan_prunes_positions_column(spark, index_small):
     # ReadSchema must NOT include the positions blob
     read_schema = [l for l in plan.splitlines() if "ReadSchema" in l]
     assert read_schema and "pos_vb" not in read_schema[0]
+    # the positional fetch reads tf beside the Δpos stream (tf is not
+    # repeated in pos_vb), and never the BM25 impacts
+    q = seg.filter(F.col("term") == "spark").select(
+        "term", "first_doc", "docs_vb", "tfs_vb", "pos_vb")
+    read_schema = [l for l in _formatted(q).splitlines()
+                   if "ReadSchema" in l]
+    assert read_schema and "tfs_vb" in read_schema[0]
+    assert "dls_vb" not in read_schema[0]
 
 
 def test_bm25_topk_uses_bounded_heap(spark, docs_small):

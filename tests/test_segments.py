@@ -32,7 +32,7 @@ def test_full_index_decode_matches_oracle(spark, zipf_setup):
         docs = gaps.cumsum() + r["first_doc"]
         tfs = vbyte_decode(bytes(r["tfs_vb"])).astype("int64")
         dls = vbyte_decode(bytes(r["dls_vb"])).astype("int64")
-        pls = decode_positions(bytes(r["pos_vb"]), r["n"])
+        pls = decode_positions(bytes(r["pos_vb"]), tfs)
         assert r["n"] == docs.size == tfs.size == dls.size == len(pls)
         assert r["first_doc"] == docs[0] and r["last_doc"] == docs[-1]
         assert np.all(np.diff(docs) > 0)  # strictly ascending within block...

@@ -4,7 +4,9 @@ Reference parity: BlackLab's varint token codec
 (``README.md:744-752``: ``[count][Δpos][len][utf8]…``, ~30 GB vs ~80 GB
 uncompressed at 62 M sentences). Here the same idea compresses posting
 lists inside index segments: doc-id *gaps* and position *gaps* are
-VByte-packed (7 data bits/byte, MSB = continuation).
+VByte-packed (7 data bits/byte, MSB = continuation). As in Lucene's
+``.pos`` files, a position list carries no count: its length is the
+posting's tf, stored once in the block's ``tfs_vb``.
 
 These kernels run inside ``mapInPandas`` on executors over Arrow
 batches — encoding is O(total bytes) numpy work, never per-row Python.
@@ -73,45 +75,44 @@ def vbyte_decode(buf: bytes) -> np.ndarray:
     return np.add.reduceat(contrib, starts)
 
 
-def delta_encode(sorted_vals: np.ndarray, first_delta_from: int = 0) -> np.ndarray:
-    """Ascending ints → gaps (first gap relative to ``first_delta_from``)."""
-    a = np.asarray(sorted_vals, dtype=np.int64)
-    if a.size == 0:
-        return a.astype(np.uint64)
-    out = np.empty_like(a)
-    out[0] = a[0] - first_delta_from
-    np.subtract(a[1:], a[:-1], out=out[1:])
+def segmented_cumsum(values: np.ndarray, lengths: np.ndarray) -> np.ndarray:
+    """Running sums that restart at every segment: ``values`` is the
+    concatenation of segments of ``lengths`` (each ≥ 1), and each
+    segment's first value is taken as is (one cumsum, no Python loop)."""
+    v = np.asarray(values, dtype=np.int64)
+    lengths = np.asarray(lengths, dtype=np.int64)
+    c = np.cumsum(v)
+    starts = np.cumsum(lengths) - lengths
+    return c - np.repeat(c[starts] - v[starts], lengths)
+
+
+def position_gaps(positions: np.ndarray, tfs: np.ndarray) -> np.ndarray:
+    """Flat per-posting position lists → Δpos stream: each posting's
+    first position stays absolute, the rest are gaps (the count is not
+    repeated — tf lives in ``tfs_vb``)."""
+    p = np.asarray(positions, dtype=np.int64)
+    out = np.diff(p, prepend=0)
+    starts = np.cumsum(tfs) - tfs
+    out[starts] = p[starts]
     return out.astype(np.uint64)
 
 
-def delta_decode(gaps: np.ndarray, first_delta_from: int = 0) -> np.ndarray:
-    """Inverse of :func:`delta_encode`."""
-    g = np.asarray(gaps, dtype=np.uint64).astype(np.int64)
-    if g.size == 0:
-        return g
-    out = np.cumsum(g)
-    return out + first_delta_from
+def positions_flat(buf: bytes, tfs: np.ndarray) -> np.ndarray:
+    """Decode a positions stream to one flat array: posting i's
+    ascending positions are the next ``tfs[i]`` values."""
+    gaps = vbyte_decode(buf)
+    tfs = np.asarray(tfs, dtype=np.int64)
+    if gaps.size != int(tfs.sum()):
+        raise ValueError(f"positions stream holds {gaps.size} values, "
+                         f"tfs sum to {int(tfs.sum())}")
+    return segmented_cumsum(gaps.astype(np.int64), tfs)
 
 
-def encode_positions(position_lists: list[np.ndarray]) -> bytes:
-    """Concatenated per-doc position lists: VByte([len, Δpos…] per doc)."""
-    parts: list[np.ndarray] = []
-    for pl in position_lists:
-        pl = np.asarray(pl, dtype=np.int64)
-        parts.append(np.concatenate([[pl.size], delta_encode(pl)]).astype(np.uint64))
-    if not parts:
-        return b""
-    return vbyte_encode(np.concatenate(parts))
-
-
-def decode_positions(buf: bytes, n_docs: int) -> list[np.ndarray]:
-    """Inverse of :func:`encode_positions` → list of ascending position arrays."""
-    flat = vbyte_decode(buf).astype(np.int64)
-    out: list[np.ndarray] = []
-    i = 0
-    for _ in range(n_docs):
-        ln = int(flat[i])
-        i += 1
-        out.append(delta_decode(flat[i : i + ln].astype(np.uint64)))
-        i += ln
-    return out
+def decode_positions(buf: bytes, tfs: np.ndarray) -> list[np.ndarray]:
+    """Decode a block's ``pos_vb`` (``vbyte_encode(position_gaps(…))``)
+    → list of ascending position arrays, one per posting (``tfs``: the
+    block's decoded ``tfs_vb``)."""
+    tfs = np.asarray(tfs, dtype=np.int64)
+    if tfs.size == 0:
+        return []
+    return np.split(positions_flat(buf, tfs), np.cumsum(tfs)[:-1])

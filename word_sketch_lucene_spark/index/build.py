@@ -19,6 +19,9 @@ segments). Stage map:
    codec kernel of ``segments.py``. Impact metadata (max_tf, min_dl)
    replaces precomputed scores, so this stage needs no collection
    statistics — the critical path is tokenize → shuffle → encode.
+   Annotation-layer postings (:func:`build_layer_postings`) use the
+   same kernel in its positions-only layout: nothing scores a layer,
+   so they carry no ``dl`` (no ``dls_vb``/``max_tf``/``min_dl``).
 3. **doc_lens / corpus stats** — one column-pruned aggregate over the
    tokens stage (runs CONCURRENTLY with segments; the scheduler
    interleaves the jobs — the engine-level analog of the reference's
@@ -34,7 +37,11 @@ segments). Stage map:
 
 Every stage commits a :class:`~.manifest.StageManifest`; re-running
 ``build_index`` with identical inputs+config skips completed stages
-(resumable builds, north rule).
+(resumable builds, north rule). The posting stores and the docstore
+are written through :func:`write_store`, which keeps parquet
+statistics off their payload columns (VByte blobs, stored text):
+nothing filters on them, and their min/max would only fatten each
+footer.
 """
 
 from __future__ import annotations
@@ -50,13 +57,30 @@ from pyspark.sql import functions as F
 from ..functions.scoring import B, K1
 from ..functions.tokenize import explode_tokens
 from .manifest import StageManifest, config_fingerprint, input_fingerprint
-from .segments import BLOCK_SIZE, SEGMENT_SCHEMA, TOKEN_INPUT_COLUMNS, make_segment_writer
+from .segments import BLOCK_SIZE, encode_postings
 
 STATS_FILE = "stats.json"
 # on-disk layout version, recorded in stats.json. 2: each datum stored
 # once — docstore ``(doc_id, text)``, no CoNLL-U docstore, no
-# case-folded ``term``/``lemma`` forward arrays
-INDEX_FORMAT = 2
+# case-folded ``term``/``lemma`` forward arrays. 3: lean postings —
+# ``pos_vb`` is Δpos only (tf lives in ``tfs_vb``), layer postings
+# carry no impacts, payload columns carry no parquet statistics
+INDEX_FORMAT = 3
+
+# opaque payload: never filtered on, so no min/max in the footers
+PAYLOAD_COLUMNS = ("docs_vb", "tfs_vb", "dls_vb", "pos_vb", "text")
+
+
+def write_store(df: DataFrame, path: str | Path) -> None:
+    """Overwrite one index store at ``path``, with parquet column
+    statistics disabled on its :data:`PAYLOAD_COLUMNS` (``term``,
+    ``doc_id`` and ``first_doc``/``last_doc`` keep theirs, so pushdown
+    is unchanged)."""
+    w = df.write.mode("overwrite")
+    for c in PAYLOAD_COLUMNS:
+        if c in df.columns:
+            w = w.option(f"parquet.column.statistics.enabled#{c}", "false")
+    w.parquet(str(path))
 
 
 def check_format(stats: dict, root: str | Path) -> None:
@@ -164,13 +188,11 @@ def build_layer_postings(
     layer's postings, exactly like a Lucene per-field terms dictionary).
 
     ``layer_tokens``: ``(doc_id, pos, <layer columns>)`` — the
-    ``sources.conllu.layer_tokens`` shape. Plan: one window count for
-    dl (per-doc, co-partitioned), a ``stack`` melt (|layers|× rows —
-    the honest cost of indexing N fields), then the same ONE salted
-    shuffle as the term index.
+    ``sources.conllu.layer_tokens`` shape. Plan: a ``stack`` melt
+    (|layers|× rows — the honest cost of indexing N fields), then the
+    same ONE salted shuffle as the term index. Layers are never
+    scored, so the postings are positions-only: no ``dl``, no impacts.
     """
-    from pyspark.sql import Window
-
     paths = IndexPaths(out_dir)
     paths.root.mkdir(parents=True, exist_ok=True)
     nparts = n_partitions or spark.sparkContext.defaultParallelism
@@ -178,7 +200,8 @@ def build_layer_postings(
         # optional layers (feats) participate only when stored
         layers = tuple(c for c in layers if c in layer_tokens.columns)
     config = {"doc_salt": doc_salt, "n_partitions": nparts,
-              "block_size": block_size, "layers": list(layers)}
+              "block_size": block_size, "layers": list(layers),
+              "format": INDEX_FORMAT}
     cfg_fp = config_fingerprint(config)
     inputs_fp = input_fingerprint(input_paths) if input_paths else "unspecified"
 
@@ -187,36 +210,27 @@ def build_layer_postings(
         missing = [c for c in layers if c not in layer_tokens.columns]
         if missing:
             raise ValueError(f"layer columns not in input: {missing}")
-        dl_w = Window.partitionBy("doc_id")
         stack_args = ", ".join(f"'{c}', {c}" for c in layers)
         melted = (
             layer_tokens
-            .withColumn("dl", F.count("*").over(dl_w).cast("int"))
             .select(
-                "doc_id", "pos", "dl",
+                "doc_id", "pos",
                 F.expr(f"stack({len(layers)}, {stack_args}) "
                        "AS (layer, value)"))
             # "_" is CoNLL-U's explicit EMPTY value (no annotation) —
             # indexing it would create one corpus-sized hot posting
             .filter(F.col("value").isNotNull() & (F.col("value") != "_"))
             .select(F.concat_ws(":", "layer", "value").alias("term"),
-                    "doc_id", "pos", "dl")
+                    "doc_id", "pos")
         )
-        writer = make_segment_writer(block_size=block_size)
         # size the shuffle from the surface tokens stage when present
         # (the melt multiplies rows by |layers|)
         lay_parts = (_adaptive_parts(spark, nparts, paths.tokens,
                                      scale=float(len(layers)))
                      if paths.tokens.exists() else nparts)
-        (
-            melted
-            .withColumn("salt", F.pmod(F.hash("doc_id"), F.lit(doc_salt)))
-            .repartition(lay_parts, F.col("term"), F.col("salt"))
-            .sortWithinPartitions("term", "doc_id", "pos")
-            .select(*TOKEN_INPUT_COLUMNS)
-            .mapInPandas(writer, schema=SEGMENT_SCHEMA)
-            .write.mode("overwrite").parquet(str(paths.layers))
-        )
+        write_store(encode_postings(melted, lay_parts, doc_salt=doc_salt,
+                                    block_size=block_size, impacts=False),
+                    paths.layers)
         st.commit(inputs_fp, cfg_fp,
                   lineage={"inputs": input_paths or [], "config": config})
     st_ls = StageManifest(paths.layer_stats, "layer_stats")
@@ -427,18 +441,10 @@ def build_index(
         st_seg = StageManifest(paths.segments, "segments")
         if st_seg.is_complete(inputs_fp, cfg_fp):
             return
-        writer = make_segment_writer(block_size=block_size)
         seg_parts = _adaptive_parts(spark, nparts, paths.tokens)
-        (
-            tokens
-            .withColumn("salt", F.pmod(F.hash("doc_id"), F.lit(doc_salt)))
-            .repartition(seg_parts, F.col("term"), F.col("salt"))
-            .sortWithinPartitions("term", "doc_id", "pos")
-            .select(*TOKEN_INPUT_COLUMNS)
-            .mapInPandas(writer, schema=SEGMENT_SCHEMA)
-            .write.mode("overwrite")
-            .parquet(str(paths.segments))
-        )
+        write_store(encode_postings(tokens, seg_parts, doc_salt=doc_salt,
+                                    block_size=block_size),
+                    paths.segments)
         # per-partition lineage + skew metrics (north rule). One pruned
         # scan of the block-metadata columns only (never the payload
         # blobs) — at web scale this reads a few int/string columns of
@@ -524,9 +530,9 @@ def build_index(
         st_ds = StageManifest(paths.docstore, "docstore")
         if st_ds.is_complete(inputs_fp, cfg_fp):
             return
-        (pages.select(F.col(doc_id_col).alias("doc_id"),
-                      F.col(text_col).alias("text"))
-         .write.mode("overwrite").parquet(str(paths.docstore)))
+        write_store(pages.select(F.col(doc_id_col).alias("doc_id"),
+                                 F.col(text_col).alias("text")),
+                    paths.docstore)
         st_ds.commit(inputs_fp, cfg_fp, lineage={"inputs": input_paths or []})
 
     # ---- stage: doc_meta (stored metadata fields) ---------------------

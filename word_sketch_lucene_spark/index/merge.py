@@ -9,12 +9,15 @@ Spark job:
     decode (mapInPandas) → union → ONE salted shuffle → encode (the
     SAME segment-writer kernel as the initial build)
 
-Decoding emits raw token rows ``(term, doc_id, pos, dl)`` — the
-identical interchange shape the build uses, so merge is literally a
-re-run of the build's last stage over the union of inputs. Tiered
-compaction (``compact_if_needed``) keeps the number of live indexes
-bounded, and every merge commits a manifest with the input lineage —
-resumable like every other stage.
+Decoding emits raw token rows ``(term, doc_id, pos, dl)`` (``(term,
+doc_id, pos)`` for the positions-only layer postings) — the identical
+interchange shape the build uses, so merge is literally a re-run of the
+build's last stage over the union of inputs. The per-doc stores fold
+by a disjoint union coalesced to the largest input's file count, so
+repeated merges do not pile up files. Tiered compaction
+(``compact_if_needed``) keeps the number of live indexes bounded, and
+every merge commits a manifest with the input lineage — resumable like
+every other stage.
 
 Doc-id spaces must be disjoint across the merged indexes (the caller
 owns id assignment; ``add_documents`` offsets are the usual scheme).
@@ -31,45 +34,56 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.codec import decode_positions, vbyte_decode
-from .build import STATS_FILE, IndexPaths, build_index, check_format
+from ..functions.codec import positions_flat, segmented_cumsum, vbyte_decode
+from .build import (
+    INDEX_FORMAT,
+    STATS_FILE,
+    IndexPaths,
+    build_index,
+    check_format,
+    write_store,
+)
 from .manifest import StageManifest, config_fingerprint, input_fingerprint
-from .segments import BLOCK_SIZE, SEGMENT_SCHEMA, TOKEN_INPUT_COLUMNS, make_segment_writer
-
-DECODE_SCHEMA = "term string, doc_id long, pos long, dl long"
+from .segments import BLOCK_SIZE, encode_postings
 
 
 def decode_segments_to_tokens(segments: DataFrame) -> DataFrame:
     """Inverse of the segment writer: block rows → raw token rows.
 
-    Arrow-batched numpy decode; one output row per (term, doc,
-    position) — the build's interchange shape.
+    Arrow-batched numpy decode, one vectorised pass per batch (the
+    blocks' VByte streams concatenate into one stream per column);
+    one output row per (term, doc, position) — the build's interchange
+    shape. Term segments also yield each token's ``dl``; positions-only
+    layer postings (no ``dls_vb``) do not.
     """
+    impacts = "dls_vb" in segments.columns
+
+    def _stream(pdf: pd.DataFrame, col: str) -> np.ndarray:
+        return vbyte_decode(b"".join(pdf[col])).astype(np.int64)
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            terms, docs, poss, dls = [], [], [], []
-            for r in pdf.itertuples(index=False):
-                gaps = vbyte_decode(bytes(r.docs_vb)).astype(np.int64)
-                d = np.cumsum(gaps) + r.first_doc
-                tf = vbyte_decode(bytes(r.tfs_vb)).astype(np.int64)
-                dl = vbyte_decode(bytes(r.dls_vb)).astype(np.int64)
-                pls = decode_positions(bytes(r.pos_vb), int(r.n))
-                n_tok = int(tf.sum())
-                terms.append(np.full(n_tok, r.term, dtype=object))
-                docs.append(np.repeat(d, tf))
-                poss.append(np.concatenate(pls) if pls else np.empty(0, np.int64))
-                dls.append(np.repeat(dl, tf))
-            if terms:
-                yield pd.DataFrame({
-                    "term": np.concatenate(terms),
-                    "doc_id": np.concatenate(docs),
-                    "pos": np.concatenate(poss),
-                    "dl": np.concatenate(dls),
-                })
+            if pdf.empty:
+                continue
+            n = pdf["n"].to_numpy(np.int64)
+            docs = (segmented_cumsum(_stream(pdf, "docs_vb"), n)
+                    + np.repeat(pdf["first_doc"].to_numpy(np.int64), n))
+            tfs = _stream(pdf, "tfs_vb")
+            out = {
+                "term": np.repeat(pdf["term"].to_numpy(),
+                                  pdf["sum_tf"].to_numpy(np.int64)),
+                "doc_id": np.repeat(docs, tfs),
+                "pos": positions_flat(b"".join(pdf["pos_vb"]), tfs),
+            }
+            if impacts:
+                out["dl"] = np.repeat(_stream(pdf, "dls_vb"), tfs)
+            yield pd.DataFrame(out)
 
-    cols = ["term", "n", "first_doc", "docs_vb", "tfs_vb", "dls_vb", "pos_vb"]
-    return segments.select(*cols).mapInPandas(decode, schema=DECODE_SCHEMA)
+    cols = ["term", "n", "first_doc", "sum_tf", "docs_vb", "tfs_vb",
+            "pos_vb"] + (["dls_vb"] if impacts else [])
+    schema = "term string, doc_id long, pos long" + (
+        ", dl long" if impacts else "")
+    return segments.select(*cols).mapInPandas(decode, schema=schema)
 
 
 def merge_indexes(
@@ -89,7 +103,8 @@ def merge_indexes(
     nparts = n_partitions or spark.sparkContext.defaultParallelism
     in_roots = [str(r) for r in in_roots]
     config = {"doc_salt": doc_salt, "n_partitions": nparts,
-              "block_size": block_size, "op": "merge"}
+              "block_size": block_size, "op": "merge",
+              "format": INDEX_FORMAT}
     cfg_fp = config_fingerprint(config)
     inputs_fp = input_fingerprint(in_roots)
 
@@ -112,28 +127,17 @@ def merge_indexes(
                 f"(rebuild the outlier or merge compatible indexes only)")
 
     # union of decoded token streams — the LSM merge input
-    tokens = None
-    for r in in_roots:
-        t = decode_segments_to_tokens(spark.read.parquet(str(Path(r) / "segments")))
-        tokens = t if tokens is None else tokens.unionByName(t)
+    def _merge_postings(store: str, impacts: bool) -> None:
+        tokens = _union(spark, [str(Path(r) / store) for r in in_roots],
+                        decode_segments_to_tokens)
+        write_store(encode_postings(tokens, nparts, doc_salt=doc_salt,
+                                    block_size=block_size, impacts=impacts),
+                    paths.root / store)
 
-    writer = make_segment_writer(block_size=block_size)
-    (
-        tokens
-        .withColumn("salt", F.pmod(F.hash("doc_id"), F.lit(doc_salt)))
-        .repartition(nparts, F.col("term"), F.col("salt"))
-        .sortWithinPartitions("term", "doc_id", "pos")
-        .select(*TOKEN_INPUT_COLUMNS)
-        .mapInPandas(writer, schema=SEGMENT_SCHEMA)
-        .write.mode("overwrite").parquet(str(paths.segments))
-    )
+    _merge_postings("segments", impacts=True)
 
     # fold per-index doc_lens / stats / term_stats
-    dl = None
-    for r in in_roots:
-        d = spark.read.parquet(str(Path(r) / "doc_lens"))
-        dl = d if dl is None else dl.unionByName(d)
-    dl.write.mode("overwrite").parquet(str(paths.doc_lens))
+    _fold_per_doc(spark, in_roots, "doc_lens", paths.root)
     row = spark.read.parquet(str(paths.doc_lens)).agg(
         F.count("*").alias("n"), F.avg("dl").alias("avgdl"),
         F.sum("dl").alias("tt")).collect()[0]
@@ -149,43 +153,49 @@ def merge_indexes(
     # annotation-layer postings merge the same way as the term segments
     # (the prefixed key IS the term for the writer kernel); layer_stats
     # re-derives from merged block metadata
-    layer_dirs = [str(Path(r) / "layers") for r in in_roots
-                  if (Path(r) / "layers").exists()]
-    if layer_dirs:
+    if any((Path(r) / "layers").exists() for r in in_roots):
         from .build import write_layer_stats
 
-        lt = None
-        for lr in layer_dirs:
-            t = decode_segments_to_tokens(spark.read.parquet(lr))
-            lt = t if lt is None else lt.unionByName(t)
-        (
-            lt
-            .withColumn("salt", F.pmod(F.hash("doc_id"), F.lit(doc_salt)))
-            .repartition(nparts, F.col("term"), F.col("salt"))
-            .sortWithinPartitions("term", "doc_id", "pos")
-            .select(*TOKEN_INPUT_COLUMNS)
-            .mapInPandas(writer, schema=SEGMENT_SCHEMA)
-            .write.mode("overwrite").parquet(str(paths.layers))
-        )
+        _merge_postings("layers", impacts=False)
         write_layer_stats(spark, paths.layers, paths.layer_stats)
 
     # per-doc stores fold by disjoint union (doc ids must not collide
     # across inputs — the add_documents contract)
     for aux in ("docstore", "forward_layers", "doc_names", "doc_meta"):
-        dirs = [str(Path(r) / aux) for r in in_roots
-                if (Path(r) / aux).exists()]
-        if dirs:
-            u = None
-            for p in dirs:
-                d = spark.read.parquet(p)
-                u = d if u is None else u.unionByName(d)
-            u.write.mode("overwrite").parquet(str(paths.root / aux))
+        _fold_per_doc(spark, in_roots, aux, paths.root)
 
     n_blocks = seg.count()
     st.commit(inputs_fp, cfg_fp,
               metrics={"n_blocks": n_blocks, "n_docs": stats["n_docs"]},
               lineage={"merged": in_roots, "config": config})
     return stats
+
+
+def _union(spark: SparkSession, dirs: list[str], read=None) -> DataFrame:
+    """Union of the stores at ``dirs`` that exist (each passed through
+    ``read`` when given)."""
+    u = None
+    for p in dirs:
+        if Path(p).exists():
+            d = spark.read.parquet(p)
+            d = read(d) if read else d
+            u = d if u is None else u.unionByName(d)
+    return u
+
+
+def _fold_per_doc(spark: SparkSession, in_roots: list[str], store: str,
+                  out_root: Path) -> None:
+    """Fold one per-doc store (disjoint doc ids) into ``out_root``,
+    coalesced to the largest input's file count: a plain union writes
+    the SUM of its inputs' files, so every merge would add the delta's
+    files to the merged store."""
+    dirs = [str(Path(r) / store) for r in in_roots]
+    u = _union(spark, dirs)
+    if u is None:
+        return
+    n_files = max(len(list(Path(p).glob("part-*"))) for p in dirs
+                  if Path(p).exists())
+    write_store(u.coalesce(max(1, n_files)), out_root / store)
 
 
 def add_documents(

@@ -359,10 +359,6 @@ class IndexSearcher:
         queries never read the positions column (column pruning).
         ``layer != "term"`` reads the multi-layer postings dataset with
         the prefixed key (``"<layer>:<value>"``)."""
-        import numpy as np
-
-        from ..functions.codec import decode_positions, vbyte_decode
-
         return self._postings_with_positions_many([term], layer)[term]
 
     def _postings_with_positions_many(
@@ -392,7 +388,7 @@ class IndexSearcher:
                 keys = {f"{layer}:{t}": t for t in missing}
             rows = (
                 self._filter_in(src, "term", list(keys))
-                .select("term", "n", "first_doc", "docs_vb", "pos_vb")
+                .select("term", "first_doc", "docs_vb", "tfs_vb", "pos_vb")
                 .collect()
             )
             per_term: dict[str, dict[int, object]] = \
@@ -401,7 +397,8 @@ class IndexSearcher:
                 out = per_term[keys[r["term"]]]
                 gaps = vbyte_decode(bytes(r["docs_vb"])).astype(np.int64)
                 docs = np.cumsum(gaps) + r["first_doc"]
-                pls = decode_positions(bytes(r["pos_vb"]), int(r["n"]))
+                pls = decode_positions(bytes(r["pos_vb"]),
+                                       vbyte_decode(bytes(r["tfs_vb"])))
                 for d, pl in zip(docs, pls):
                     out[int(d)] = pl
             for t in missing:

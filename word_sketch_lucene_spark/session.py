@@ -15,6 +15,16 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def default_driver_memory(total_bytes: int | None = None) -> str:
+    """``spark.driver.memory`` when ``SPARK_DRIVER_MEM`` is unset: half
+    the host's physical memory (``total_bytes``, read from the OS when
+    None) in whole GB, at least ``1g`` — a fixed large heap lets the
+    JVM grow past what a small host has."""
+    if total_bytes is None:
+        total_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, total_bytes // 2 // (1 << 30))}g"
+
+
 def get_spark(
     app_name: str = "spark-fulltext",
     master: str | None = None,
@@ -51,7 +61,8 @@ def get_spark(
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
         .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "64g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory())
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
