@@ -167,14 +167,15 @@ def test_store_detects_index_content_change(spark, store_index):
     part = next(Path(s.root, "forward_layers").glob("part-*"))
     st = part.stat()
     os.utime(part, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
-    s._fw_fp_cache = None  # drop the 5s fingerprint memo (ingest
-    # paths mutate files slower than the TTL; the test does not)
+    # drop the 5s fingerprint memo (ingest paths mutate files slower
+    # than the TTL; the test does not)
+    s._cache.discard("forward_fp", None)
     try:
         assert not store_can_serve(s, cat)
         assert store_meta(s) is not None  # store exists, just stale
     finally:
         os.utime(part, ns=(st.st_atime_ns, st.st_mtime_ns))
-    s._fw_fp_cache = None
+    s._cache.discard("forward_fp", None)
     assert store_can_serve(s, cat)  # restored contents serve again
 
 

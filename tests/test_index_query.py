@@ -57,6 +57,18 @@ def test_searcher_rank_identical_to_oracle(spark, index_small, oracle, terms):
             assert s1 == pytest.approx(s2, abs=1e-12), (mode, d1)
 
 
+def test_search_rejects_unknown_mode(spark, index_small):
+    """A mode typo must fail loudly, not silently run global-bound
+    WAND; search_regex passes its mode through the same check."""
+    searcher = IndexSearcher(spark, index_small)
+    with pytest.raises(ValueError, match="'bwm'.*auto, bmw, wand, vec, daat"):
+        searcher.search(["spark"], mode="bwm")
+    with pytest.raises(ValueError, match="'bwm'"):
+        searcher.search_regex("sp.*", mode="bwm")
+    with pytest.raises(ValueError, match="'bwm'"):
+        searcher.search_regex("zzz-no-such-term", mode="bwm")
+
+
 def test_bmw_prunes_blocks(spark, index_small):
     """Block-max WAND must decode strictly fewer blocks than exhaustive DAAT
     on a rare+head query, with identical results."""

@@ -335,26 +335,48 @@ def test_relation_matches_auto_distributed_identical(spark, conllu_index):
 
 
 def test_position_cache_byte_budget_evicts_not_breaks(spark, conllu_index):
-    """The position caches are bounded in BYTES, not just entries: with
-    a tiny budget every older entry evicts, results stay identical, and
-    resident cache bytes stay ~one working entry (driver memory no
-    longer scales with how many distinct hot slots a session touched)."""
+    """The searcher's one cache is bounded in BYTES: under a 1 KiB
+    budget nearly every entry is served to its query and then evicted
+    (or never kept), and every query surface still answers exactly as
+    a default-budget searcher does — twice over, through cold caches.
+    Resident bytes stay within the budget plus one entry."""
+    from word_sketch_lucene_spark.plans.relations import (
+        EN_CATALOG,
+        GrammarCatalog,
+    )
     from word_sketch_lucene_spark.query.engine import IndexSearcher
+    from word_sketch_lucene_spark.query.sketch import index_word_sketch
 
     root, _, _ = conllu_index
-    ref = IndexSearcher(spark, root)
+    cat = GrammarCatalog.load(EN_CATALOG)
     pat = '[xpos="NN.*"] [xpos="VB.*"]'
-    want = ref.pattern_hits(pat)
+    neg = '[xpos="NN.*"] [xpos!="VB.*"] [xpos="VB.*"]'
+
+    def answers(s):
+        out = [s.search("scan table index", k=10, mode=m)[0]
+               for m in IndexSearcher.MODES]
+        out.append(s.phrase_hits("the table"))
+        out.append(s.pattern_hits(pat))
+        out.append(s.pattern_hits(neg))
+        out.append(index_word_sketch(s, "table", cat, head_pos="NOUN",
+                                     limit_per_relation=10, round_dp=4,
+                                     use_store=False))
+        return out
+
+    ref = IndexSearcher(spark, root)
+    want = answers(ref)
+    assert all(want[:5]) and want[5] and want[6] and want[8]
 
     s = IndexSearcher(spark, root)
-    s.position_cache_budget_bytes = 1024  # force constant eviction
-    assert s.pattern_hits(pat) == want
-    assert s.pattern_hits(pat) == want  # repeat through cold caches
-    resident = sum(s._position_cache_bytes.values())
-    biggest = max(s._position_cache_bytes.values())
-    assert resident <= 1024 + biggest
-    # default-budget searcher keeps everything (same machine answer)
-    assert sum(ref._position_cache_bytes.values()) > resident
+    s._cache.budget_bytes = 1024  # force constant eviction
+    largest = 0
+    for _ in range(2):
+        assert answers(s) == want
+        largest = max([largest] + [size for _v, size
+                                   in s._cache._entries.values()])
+        assert s._cache.bytes <= 1024 + largest
+    # the default-budget searcher keeps its working set
+    assert ref._cache.bytes > 1024 >= s._cache.bytes
 
 
 # ------------------------------------------------- sent_len guard (#8)

@@ -1,0 +1,163 @@
+"""The searcher's one cache: the LRU type itself (no Spark), df served
+from the fetched blocks, one Spark job per cold search, and bounded
+resident bytes over a long tail-heavy query log."""
+
+from __future__ import annotations
+
+import time
+
+import numpy as np
+from pyspark.sql import functions as F
+
+from word_sketch_lucene_spark.query.cache import LRUCache, estimate_bytes
+
+
+# ------------------------------------------------------ the cache type
+def test_lru_evicts_least_recently_used_first():
+    c = LRUCache(budget_bytes=3 * estimate_bytes(np.zeros(100)))
+    for k in "abc":
+        c.put("ns", k, np.zeros(100))
+    assert c.get("ns", "a") is not None  # a is now the most recent
+    c.put("ns", "d", np.zeros(100))
+    assert c.get("ns", "b") is None  # least recently used went first
+    assert all(c.get("ns", k) is not None for k in "acd")
+    assert len(c) == 3
+
+
+def test_resident_bytes_never_exceed_budget():
+    c = LRUCache(budget_bytes=10_000)
+    rng = np.random.default_rng(0)
+    for i in range(500):
+        c.put(("ns", i % 3), i, np.zeros(int(rng.integers(1, 400))))
+        assert c.bytes <= c.budget_bytes
+    assert c.bytes == sum(size for _v, size in c._entries.values())
+
+
+def test_over_budget_entry_is_returned_not_kept():
+    c = LRUCache(budget_bytes=1_000)
+    small = c.put("ns", "small", [1, 2, 3])
+    big = np.zeros(1_000)
+    assert c.put("ns", "big", big) is big
+    assert c.get("ns", "big") is None
+    assert c.get("ns", "small") is small  # nothing evicted for it
+    calls = []
+    assert c.get_or_put("ns", "big", lambda: calls.append(1) or big) is big
+    assert c.get_or_put("ns", "big", lambda: calls.append(1) or big) is big
+    assert len(calls) == 2  # recomputed each time, never kept
+
+
+def test_get_many_fetches_every_miss_in_one_call():
+    c = LRUCache()
+    calls = []
+
+    def fetch(missing):
+        calls.append(list(missing))
+        return {k: k * 10 for k in missing if k != 3}
+
+    assert c.get_many("ns", [1, 2, 3, 2], fetch, default=0) == \
+        {1: 10, 2: 20, 3: 0}
+    assert c.get_many("ns", [4, 1, 3], fetch, default=0) == \
+        {4: 40, 1: 10, 3: 0}
+    assert calls == [[1, 2, 3], [4]]
+    # namespaces are disjoint; the view reads one without reordering
+    c.put("other", 1, "x")
+    view = c.view("ns")
+    assert 1 in view and view.get(1) == 10 and view.get(9, ()) == ()
+    assert sorted(view) == [1, 2, 3, 4] and len(view) == 4
+    c.discard("ns", 1)
+    assert 1 not in view
+
+
+# ------------------------------------------------------- df from blocks
+def _assert_dfs_match_term_stats(spark, root):
+    from word_sketch_lucene_spark.query.engine import IndexSearcher
+
+    s = IndexSearcher(spark, root)
+    want = {r["term"]: int(r["df"])
+            for r in s.term_stats.select("term", "df").collect()}
+    got = s.term_dfs(sorted(want) + ["zzz-absent-term"])
+    assert got.pop("zzz-absent-term") == 0
+    assert got == want
+
+
+def test_term_dfs_equal_term_stats(spark, index_small):
+    _assert_dfs_match_term_stats(spark, index_small)
+
+
+def test_term_dfs_equal_term_stats_on_merged_root(spark, tmp_path):
+    from word_sketch_lucene_spark.index.build import build_index
+    from word_sketch_lucene_spark.index.merge import add_documents
+    from word_sketch_lucene_spark.sources.pages import generate_pages
+
+    pages = generate_pages(spark, 120, seed=5)
+    base = tmp_path / "base"
+    build_index(spark, pages.filter(F.col("doc_id") < 80), base,
+                doc_salt=2, n_partitions=4)
+    merged = add_documents(spark, base, pages.filter(F.col("doc_id") >= 80),
+                           tmp_path / "staging", doc_salt=2, n_partitions=4)
+    _assert_dfs_match_term_stats(spark, merged)
+
+
+def test_cold_search_runs_one_spark_job(spark, index_small):
+    """A cold two-term search fetches its block rows in one pruned
+    scan and takes df from them: one Spark job, no term_stats lookup.
+    (The segments handle opens first: its schema read is not part of
+    the query.)"""
+    from word_sketch_lucene_spark.query.engine import IndexSearcher
+
+    s = IndexSearcher(spark, index_small)
+    s.segments
+    sc = spark.sparkContext
+    group = f"cold-search-{id(s)}"
+    sc.setJobGroup(group, "cold two-term search")
+    try:
+        hits, _ = s.search(["spark", "join"], k=5)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert hits
+    time.sleep(1.0)  # let the listener bus register the jobs
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
+# --------------------------------------------- bounded searcher state
+def test_tail_heavy_log_keeps_resident_bytes_bounded(spark, tmp_path):
+    """A long Zipf-tail log (500 distinct rare terms, 500 forward-array
+    doc lookups) on a small-budget searcher: resident bytes stay within
+    the budget plus one entry while the cache keeps evicting, and the
+    answers match a default-budget searcher."""
+    from word_sketch_lucene_spark.index.build import build_index
+    from word_sketch_lucene_spark.query.engine import IndexSearcher
+    from word_sketch_lucene_spark.sources.pages import generate_pages
+
+    root = tmp_path / "zipf"
+    build_index(spark, generate_pages(spark, 600, seed=7), root,
+                doc_salt=2, n_partitions=4)
+    s = IndexSearcher(spark, root)
+    tail = [r["term"] for r in s.term_stats.orderBy("df", "term")
+            .select("term").limit(500).collect()]
+    assert len(tail) == 500
+    budget = 32 * 1024
+    s._cache.budget_bytes = budget
+    largest = inserted = 0
+    for i in range(0, 500, 10):
+        hits, _ = s.search(tail[i:i + 10], k=5, mode="vec")
+        assert hits
+        inserted += 20  # block rows + decoded arrays per term
+        largest = max([largest] + [size for _v, size
+                                   in s._cache._entries.values()])
+        assert s._cache.bytes <= budget + largest
+    docs = sorted(int(r["doc_id"]) for r in
+                  s._dataset("doc_lens").select("doc_id").collect())[:500]
+    assert len(docs) == 500
+    for i in range(0, 500, 50):
+        fw = s.forward_layer(docs[i:i + 50], "term")
+        assert all(fw[d] for d in docs[i:i + 50])
+        inserted += 50
+        largest = max([largest] + [size for _v, size
+                                   in s._cache._entries.values()])
+        assert s._cache.bytes <= budget + largest
+    assert len(s._cache) < inserted  # the budget did evict
+    ref = IndexSearcher(spark, root)
+    assert s.search(tail[:10], k=5)[0] == ref.search(tail[:10], k=5)[0]
+    assert s.forward_layer(docs[:5], "term") == \
+        ref.forward_layer(docs[:5], "term")

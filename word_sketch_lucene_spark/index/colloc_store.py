@@ -16,7 +16,7 @@ sketch at 74 M sentences). The Spark twin:
 - SERVE (plan tier): pruned scan + the SHARED scoring tail
   (``plans.relations.score_ranked_collocates``) — row-identical to the
   live fan-out by construction.
-- SERVE (interactive tier): per-head row cache on the searcher +
+- SERVE (interactive tier): per-head rows in the searcher's cache +
   cached ``layer_cf`` stats → warm sketches are pure-python scoring,
   sub-millisecond — the reference's pinned-``collocations.bin`` model.
 
@@ -57,21 +57,21 @@ def _store_rels(catalog: GrammarCatalog,
 def _forward_fingerprint(searcher, ttl_sec: float = 5.0) -> str:
     """Cheap lineage of the forward store's CURRENT contents (file
     listing + sizes + mtimes — the same identity the build manifests
-    use). Memoized on the searcher for ``ttl_sec``: the auto-serve
-    path checks per sketch call, and re-statting hundreds of part
-    files per interactive request would dominate the sub-ms serve."""
+    use). Memoized in the searcher's cache for ``ttl_sec``: the
+    auto-serve path checks per sketch call, and re-statting hundreds
+    of part files per interactive request would dominate the sub-ms
+    serve."""
     import time
 
     from .manifest import input_fingerprint
 
-    hit = getattr(searcher, "_fw_fp_cache", None)
+    hit = searcher._cache.get("forward_fp", None)
     now = time.monotonic()
     if hit is not None and now - hit[0] < ttl_sec:
         return hit[1]
     fw = Path(searcher.root) / "forward_layers"
     fp = input_fingerprint([str(fw)]) if fw.exists() else "absent"
-    searcher._fw_fp_cache = (now, fp)
-    return fp
+    return searcher._cache.put("forward_fp", None, (now, fp))[1]
 
 
 def build_collocation_store(
@@ -363,7 +363,7 @@ def serve_sketch_cached(
     relation_types: tuple[str, ...] = ("SURFACE",),
 ) -> list[tuple[str, str, int, float, float]]:
     """Interactive store serve: first call per head = ONE pruned scan
-    (head-sorted parquet → a few row groups) cached on the searcher;
+    (head-sorted parquet → a few row groups) in the searcher's cache;
     warm calls score in pure python from the cache + the cached
     ``layer_cf`` dictionary — the reference's 0–1 ms preloaded-store
     regime (``CLAUDE.md:190-196``). Result rows identical to
@@ -371,27 +371,21 @@ def serve_sketch_cached(
     logdice desc, colloc asc, capped per relation)."""
     from ..query.sketch import _logdice, _round
 
-    cache = getattr(searcher, "_colloc_store_cache", None)
-    if cache is None:
-        cache = searcher._colloc_store_cache = {}
-    # key the head rows by the store meta's mtime: a rebuild (changed
-    # catalog) in the same session must not serve the old counts
-    meta_p = Path(searcher.root) / STORE_DIR / META_NAME
-    rev = meta_p.stat().st_mtime_ns if meta_p.exists() else 0
-    key = (head, rev)
-    rows = cache.get(key)
-    if rows is None:
+    def head_rows():
         store = open_collocation_store(searcher)
         if store is None:
             raise NotImplementedError(
                 "no collocation store at this root — "
                 "index.colloc_store.build_collocation_store")
-        rows = [(r["relation"], r["colloc"], int(r["pair_freq"]))
+        return [(r["relation"], r["colloc"], int(r["pair_freq"]))
                 for r in store.filter(F.col("head") == head)
                 .select("relation", "colloc", "pair_freq").collect()]
-        if len(cache) >= 1024:
-            cache.pop(next(iter(cache)))
-        cache[key] = rows
+
+    # key the head rows by the store meta's mtime: a rebuild (changed
+    # catalog) in the same session must not serve the old counts
+    meta_p = Path(searcher.root) / STORE_DIR / META_NAME
+    rev = meta_p.stat().st_mtime_ns if meta_p.exists() else 0
+    rows = searcher._cache.get_or_put("colloc_rows", (head, rev), head_rows)
     meta = store_meta(searcher)
     if meta and meta["colloc_attr"] != colloc_attr:
         raise ValueError(

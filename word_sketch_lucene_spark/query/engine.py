@@ -32,6 +32,7 @@ from ..functions.tokenize import (
     tokens_expr,
 )
 from ..index.build import STATS_FILE, check_format
+from .cache import LRUCache
 from .wand import BlockCursor, block_max_wand, exact_daat, idf_py, vectorized_topk
 
 
@@ -141,7 +142,21 @@ class IndexSearcher:
     driver — the moral equivalent of a Lucene query node reading a few
     posting lists, not a driver-side table scan. On a cluster the same
     ``filter(term ∈ Q)`` scan prunes row groups via parquet statistics.
+
+    Everything the searcher fetches or derives (block rows, decoded
+    postings, position and slot maps, forward arrays, dictionary
+    lookups, expansion/pricing memos) lives in ONE cache,
+    ``self._cache`` (:class:`.cache.LRUCache`): least-recently-used
+    entries evict first once the estimated resident bytes pass one
+    budget, ``self._cache.budget_bytes`` (default
+    :data:`.cache.BUDGET_BYTES`, 1 GiB). Every lookup goes through
+    that cache and its caller uses the value it returns — never a
+    second read of the cache, since any insert may evict an older
+    entry and an entry larger than the budget is served but not kept.
+    ``_block_cache`` is a read-only view of the ``blocks`` namespace.
     """
+
+    MODES = ("auto", "bmw", "wand", "vec", "daat")
 
     def __init__(self, spark: SparkSession, root: str | Path):
         self.spark = spark
@@ -154,50 +169,8 @@ class IndexSearcher:
         # spark.read.parquet is a ~100 ms schema/footer round-trip, and
         # most queries touch only a subset of the four datasets
         self._datasets: dict[str, DataFrame | None] = {}
-        self._df_cache: dict[str, int] = {}
-        self._dl_cache: dict[int, int] = {}
-        # (layer, term) → {doc: positions} decoded positional postings —
-        # the hot working set an interactive serving node keeps pinned.
-        # Bounded by BYTES as well as entry count: one class-wide layer
-        # entry (xpos:NN ≈ every noun position in the corpus) can weigh
-        # as much as hundreds of word entries, so an entry-count cap
-        # alone scales resident memory linearly with corpus size.
-        self._positions_cache: dict[tuple[str, str], dict] = {}
-        self.positions_cache_max = 512
-        self._expand_cache: dict[tuple[str, str, int], list[str]] = {}
-        self._forward_cache: dict[str, dict[int, list]] = {}
-        self._cf_cache: dict[str, dict[str, int]] = {}
-        self._meta_filter_cache: dict[str, object] = {}
-        # merged per-TEST position maps: a sketch fan-out repeats the
-        # same constraints ([xpos="NN.*"] appears in ~15 relations) —
-        # re-merging a corpus-wide layer posting map per relation is
-        # the dominant warm-serving cost
-        self._test_map_cache: dict[tuple, dict] = {}
-        self.test_map_cache_max = 64
-        # fully-resolved SLOT maps (all tests intersected/subtracted):
-        # multi-test slots repeat across a fan-out too, and the per-doc
-        # intersection pass was the dominant WARM-serve cost (FIFO,
-        # entry-capped; entries are derived from — and smaller than —
-        # the byte-budgeted test maps above)
-        self._slot_map_cache: dict[tuple, tuple] = {}
-        self.slot_map_cache_max = 256
-        # shared byte budget for the two position-map caches (the only
-        # corpus-proportional driver state); exceeding it evicts FIFO —
-        # a serving node's pinned-hot-set contract, not an OOM vector
-        self.position_cache_budget_bytes = 1 << 30
-        self._position_cache_bytes: dict[tuple, int] = {}
-        # term → list[block-row dict] cache: the analog of the reference
-        # preloading collocations.bin for O(1) lookups (CLAUDE.md:190-196).
-        # One pruned parquet scan per *miss set*, pure numpy afterwards.
-        self._block_cache: dict[str, list[dict]] = {}
-        # term → (docs, scores) decoded+merged arrays (bounded, FIFO) —
-        # the hot-term working set a serving node would keep pinned.
-        self._decoded_cache: dict[str, tuple] = {}
-        self.decoded_cache_max = 256
-        # (layer, test-value, literal?) → (Σcf, n_dict_values): the
-        # router's pricing memo — a few ints per distinct test, filled
-        # by batched conditional aggregates (_price_tests)
-        self._cost_cache: dict[tuple, tuple[int, int]] = {}
+        self._cache = LRUCache()
+        self._block_cache = self._cache.view("blocks")
 
     def _dataset(self, name: str, required: bool = True
                  ) -> DataFrame | None:
@@ -224,40 +197,6 @@ class IndexSearcher:
     def layer_stats(self) -> DataFrame | None:
         return self._dataset("layer_stats", required=False)
 
-    def _budget_insert(self, cache: dict, tag: str, key, value,
-                       max_entries: int) -> None:
-        """Insert a doc→positions map into one of the two position
-        caches, charging its bytes against the SHARED budget. Eviction
-        is scoped to the pressure source: over the per-cache ENTRY cap,
-        only the inserting cache's oldest entries go (one cache's
-        churn must not flush the other's hot set — a warm-latency
-        hazard, not correctness); over the shared BYTE budget, FIFO
-        across both caches (memory pressure is global). The
-        just-inserted entry is never evicted — a single over-budget
-        working map must still serve the current query."""
-        nb = 64
-        for arr in value.values():
-            nb += int(getattr(arr, "nbytes", 8 * len(arr))) + 64
-        bk = (tag, key)
-        cache[key] = value
-        self._position_cache_bytes[bk] = nb
-        while len(cache) > max_entries:
-            old_key = next(iter(cache))
-            if old_key == key:
-                break
-            cache.pop(old_key)
-            self._position_cache_bytes.pop((tag, old_key), None)
-        total = sum(self._position_cache_bytes.values())
-        while total > self.position_cache_budget_bytes:
-            old = next(iter(self._position_cache_bytes))
-            if old == bk:
-                break
-            total -= self._position_cache_bytes.pop(old)
-            old_tag, old_key = old
-            tgt = (self._positions_cache if old_tag == "pos"
-                   else self._test_map_cache)
-            tgt.pop(old_key, None)
-
     def _filter_in(self, df: DataFrame, col: str, values: list
                    ) -> DataFrame:
         """``df`` restricted to ``col ∈ values``. Small sets inline as
@@ -275,16 +214,11 @@ class IndexSearcher:
 
     # -- stats lookups ---------------------------------------------------
     def term_dfs(self, terms: list[str]) -> dict[str, int]:
-        missing = [t for t in terms if t not in self._df_cache]
-        if missing:
-            rows = (
-                self._filter_in(self.term_stats, "term", missing)
-                .select("term", "df").collect()
-            )
-            found = {r["term"]: int(r["df"]) for r in rows}
-            for t in missing:
-                self._df_cache[t] = found.get(t, 0)
-        return {t: self._df_cache[t] for t in terms}
+        """df per term: Σ``n`` over the term's block rows (how the build
+        and the merge derive ``term_stats.df``); 0 for an absent term.
+        Served from the blocks :meth:`prefetch` fetches — no dictionary
+        scan of its own."""
+        return _dfs(self.prefetch(terms))
 
     def expand_terms(self, pattern: str, max_terms: int = 256) -> list[str]:
         """P1 regex term expansion via the term dictionary: the
@@ -294,62 +228,50 @@ class IndexSearcher:
         The expansion then feeds :meth:`search` as an OR set — a scan of
         the O(vocab) stats table, never of the postings (and cached:
         interactive serving repeats the same expansions)."""
-        ck = ("term", pattern, max_terms)
-        hit = self._expand_cache.get(ck)
-        if hit is not None:
-            return hit
-        rows = (
-            self.term_stats.filter(F.col("term").rlike(f"^(?:{pattern})$"))
-            .orderBy(F.desc("df"), F.asc("term"))
-            .select("term").limit(max_terms).collect()
-        )
-        out = [r["term"] for r in rows]
-        if len(self._expand_cache) < 4096:
-            self._expand_cache[ck] = out
-        return out
+        return self._cache.get_or_put(
+            "expand", ("term", pattern, max_terms),
+            lambda: [r["term"] for r in (
+                self.term_stats
+                .filter(F.col("term").rlike(f"^(?:{pattern})$"))
+                .orderBy(F.desc("df"), F.asc("term"))
+                .select("term").limit(max_terms).collect())])
 
     def search_regex(self, pattern: str, k: int = 10, mode: str = "auto",
                      max_terms: int = 256):
         """Top-k for a regex term query (OR over dictionary matches)."""
+        self._check_mode(mode)
         terms = self.expand_terms(pattern, max_terms)
         if not terms:
             return [], {"decoded_blocks": 0, "total_blocks": 0}
         return self.search(terms, k=k, mode=mode)
 
     # -- block fetch -------------------------------------------------------
-    def prefetch(self, terms: list[str]) -> None:
-        """Fetch block rows for all uncached terms in ONE pruned scan."""
-        missing = sorted({t for t in terms if t not in self._block_cache})
-        if not missing:
-            return
-        rows = (
-            self._filter_in(self.segments, "term", missing)
-            .select("term", "seg_part", "block_id", "first_doc", "last_doc",
-                    "max_tf", "min_dl", "docs_vb", "tfs_vb", "dls_vb")
-            .collect()
-        )
-        for t in missing:
-            self._block_cache[t] = []
-        for r in rows:
-            self._block_cache[r["term"]].append(r.asDict())
-        self.term_dfs(missing)
+    def prefetch(self, terms: list[str]) -> dict[str, list[dict]]:
+        """term → its block rows (``[]`` when absent); every uncached
+        term fetches in ONE pruned scan."""
+        def fetch(missing):
+            found = {t: [] for t in missing}
+            for r in (self._filter_in(self.segments, "term", sorted(missing))
+                      .select("term", "seg_part", "block_id", "first_doc",
+                              "last_doc", "n", "max_tf", "min_dl",
+                              "docs_vb", "tfs_vb", "dls_vb")
+                      .collect()):
+                found[r["term"]].append(r.asDict())
+            return found
+
+        return self._cache.get_many("blocks", terms, fetch)
 
     # -- queries ----------------------------------------------------------
-    def _cursors(self, terms: list[str]) -> tuple[list[BlockCursor], dict]:
-        self.prefetch(terms)
-        dfs = self.term_dfs(terms)
-        cursors = []
-        n_docs, avgdl = self.stats["n_docs"], self.stats["avgdl"]
-        for ti, t in enumerate(terms):
-            if dfs[t] == 0:
-                continue
-            idf = idf_py(dfs[t], n_docs)
-            by_part: dict[int, list[dict]] = {}
-            for r in self._block_cache[t]:
-                by_part.setdefault(r["seg_part"], []).append(r)
-            for blocks in by_part.values():
-                cursors.append(BlockCursor(blocks, ti, idf, self.k1, self.b, avgdl))
-        return cursors, dfs
+    def _term_cursors(self, rows: list[dict], ti: int, df: int
+                      ) -> list[BlockCursor]:
+        """One cursor per segment partition over a term's block rows."""
+        idf = idf_py(df, self.stats["n_docs"])
+        by_part: dict[int, list[dict]] = {}
+        for r in rows:
+            by_part.setdefault(r["seg_part"], []).append(r)
+        return [BlockCursor(blocks, ti, idf, self.k1, self.b,
+                            self.stats["avgdl"])
+                for blocks in by_part.values()]
 
     def _postings_with_positions(self, term: str, layer: str = "term"
                                  ) -> dict[int, "object"]:
@@ -373,12 +295,7 @@ class IndexSearcher:
 
         from ..functions.codec import decode_positions, vbyte_decode
 
-        # snapshot hits FIRST: the budget inserts below may evict any
-        # older entry, including another of this call's terms
-        result = {t: self._positions_cache[(layer, t)] for t in terms
-                  if (layer, t) in self._positions_cache}
-        missing = sorted({t for t in terms if t not in result})
-        if missing:
+        def fetch(missing):
             if layer == "term":
                 src = self.segments
                 keys = {t: t for t in missing}
@@ -387,7 +304,7 @@ class IndexSearcher:
                 src = self.layers
                 keys = {f"{layer}:{t}": t for t in missing}
             rows = (
-                self._filter_in(src, "term", list(keys))
+                self._filter_in(src, "term", sorted(keys))
                 .select("term", "first_doc", "docs_vb", "tfs_vb", "pos_vb")
                 .collect()
             )
@@ -401,12 +318,9 @@ class IndexSearcher:
                                        vbyte_decode(bytes(r["tfs_vb"])))
                 for d, pl in zip(docs, pls):
                     out[int(d)] = pl
-            for t in missing:
-                self._budget_insert(self._positions_cache, "pos",
-                                    (layer, t), per_term[t],
-                                    self.positions_cache_max)
-            result.update(per_term)
-        return {t: result[t] for t in terms}
+            return per_term
+
+        return self._cache.get_many(("positions", layer), terms, fetch)
 
     def _require_layers(self) -> None:
         if self.layers is None or self.layer_stats is None:
@@ -422,21 +336,14 @@ class IndexSearcher:
         if layer == "term":
             return self.expand_terms(pattern, max_terms)
         self._require_layers()
-        ck = (layer, pattern, max_terms)
-        hit = self._expand_cache.get(ck)
-        if hit is not None:
-            return hit
-        rows = (
-            self.layer_stats
-            .filter((F.col("layer") == layer)
-                    & F.col("value").rlike(f"^(?:{pattern})$"))
-            .orderBy(F.desc("df"), F.asc("value"))
-            .select("value").limit(max_terms).collect()
-        )
-        out = [r["value"] for r in rows]
-        if len(self._expand_cache) < 4096:
-            self._expand_cache[ck] = out
-        return out
+        return self._cache.get_or_put(
+            "expand", (layer, pattern, max_terms),
+            lambda: [r["value"] for r in (
+                self.layer_stats
+                .filter((F.col("layer") == layer)
+                        & F.col("value").rlike(f"^(?:{pattern})$"))
+                .orderBy(F.desc("df"), F.asc("value"))
+                .select("value").limit(max_terms).collect())])
 
     def forward_layer(self, doc_ids: list[int], layer: str
                       ) -> dict[int, list]:
@@ -446,9 +353,7 @@ class IndexSearcher:
         MISS set, cached per (layer, doc): a 41-relation sketch fan-out
         touches mostly the same candidate docs per relation, and one
         scan per relation would dominate serving latency."""
-        cache = self._forward_cache.setdefault(layer, {})
-        missing = [d for d in doc_ids if d not in cache]
-        if missing:
+        def fetch(missing):
             fw = self.forward_arrays({layer})
             if fw is None or layer not in fw.columns:
                 if self._dataset("forward_layers", required=False) is None:
@@ -458,33 +363,30 @@ class IndexSearcher:
                 raise ValueError(
                     f"forward layer {layer!r} not stored (available: "
                     f"{sorted(self.forward_arrays().columns[1:])})")
-            rows = self._filter_in(fw, "doc_id", missing).collect()
-            found = {int(r["doc_id"]): list(r[layer]) for r in rows}
-            for d in missing:
-                cache[d] = found.get(d, [])
-        return {d: cache[d] for d in doc_ids}
+            found = {d: [] for d in missing}
+            for r in self._filter_in(fw, "doc_id", missing).collect():
+                found[int(r["doc_id"])] = list(r[layer])
+            return found
+
+        return self._cache.get_many(("forward", layer), doc_ids, fetch)
 
     def layer_cf(self, layer: str, values: list[str]) -> dict[str, int]:
         """Collection frequencies for specific layer values (pruned
         dictionary lookups, cached per value — the sketch scorer's
         stats joins)."""
-        cache = self._cf_cache.setdefault(layer, {})
-        missing = [v for v in values if v not in cache]
-        if missing:
+        def fetch(missing):
             if layer == "term":
-                rows = (self._filter_in(self.term_stats, "term", missing)
-                        .select(F.col("term").alias("value"), "cf")
-                        .collect())
+                src = self.term_stats.select(
+                    F.col("term").alias("value"), "cf")
             else:
                 self._require_layers()
-                rows = (self._filter_in(
-                        self.layer_stats.filter(F.col("layer") == layer),
-                        "value", missing)
-                        .select("value", "cf").collect())
-            found = {r["value"]: int(r["cf"]) for r in rows}
-            for v in missing:
-                cache[v] = found.get(v, 0)
-        return {v: cache[v] for v in values if cache[v] > 0}
+                src = self.layer_stats.filter(F.col("layer") == layer)
+            return {r["value"]: int(r["cf"]) for r in
+                    self._filter_in(src, "value", missing)
+                    .select("value", "cf").collect()}
+
+        cfs = self._cache.get_many(("cf", layer), values, fetch, default=0)
+        return {v: cf for v, cf in cfs.items() if cf > 0}
 
     def forward_arrays(self, columns: set[str] | None = None
                        ) -> DataFrame | None:
@@ -554,15 +456,13 @@ class IndexSearcher:
         """doc_id → token count (the doc_lens stage; pruned scan per
         miss set) — the position universe for complement (negation)
         slots."""
-        missing = [d for d in doc_ids if d not in self._dl_cache]
-        if missing:
-            dl = self.spark.read.parquet(str(self.root / "doc_lens"))
-            rows = self._filter_in(dl, "doc_id", missing) \
-                .select("doc_id", "dl").collect()
-            found = {int(r["doc_id"]): int(r["dl"]) for r in rows}
-            for d in missing:
-                self._dl_cache[d] = found.get(d, 0)
-        return {d: self._dl_cache[d] for d in doc_ids}
+        def fetch(missing):
+            return {int(r["doc_id"]): int(r["dl"]) for r in
+                    self._filter_in(self._dataset("doc_lens"), "doc_id",
+                                    missing)
+                    .select("doc_id", "dl").collect()}
+
+        return self._cache.get_many("doc_lens", doc_ids, fetch, default=0)
 
     def phrase_hits(self, phrase: str | list[str]
                     ) -> list[tuple[int, list[int]]]:
@@ -624,6 +524,33 @@ class IndexSearcher:
         idx[idx == b.size] = 0
         return a[b[idx] != a]
 
+    def _test_map(self, layer: str, test, max_terms: int) -> dict:
+        """doc → sorted positions matching one (effective) test's value
+        on ``layer``, its regex expanded through the layer dictionary.
+        A sketch fan-out repeats the same constraints ([xpos="NN.*"]
+        appears in ~15 relations), so the merge is cached per test."""
+        import numpy as np
+
+        def merge():
+            if test.is_literal:
+                values = [test.value.replace("\\", "")]
+            else:
+                values = self.expand_layer_terms(layer, test.value,
+                                                 max_terms)
+            merged = {}
+            by_term = self._postings_with_positions_many(values, layer)
+            for v in values:
+                for d, pl in by_term[v].items():
+                    if d in merged:
+                        merged[d] = np.union1d(merged[d], pl)
+                    else:
+                        merged[d] = np.asarray(pl, dtype=np.int64)
+            return merged
+
+        return self._cache.get_or_put(
+            "test_map", (layer, test.value, test.is_literal, max_terms),
+            merge)
+
     def _slot_maps(self, steps, max_terms_per_slot: int):
         """Per constraint slot: (allowed-positions map | None, banned map
         | None). ``allowed`` merges every test layer per doc (positive
@@ -633,7 +560,12 @@ class IndexSearcher:
         tests subtract. A slot with ONLY negated tests gets
         ``(None, banned)`` — resolved by window complement at chain
         time (the reference executes negation inside Lucene span
-        queries; ``plans/concept-sketch-spec.md:60``)."""
+        queries; ``plans/concept-sketch-spec.md:60``).
+
+        A one-test slot IS its test map (no per-doc copy), read from
+        the test-map entry and never stored a second time; combined
+        slots cache under their signature (the per-doc intersection
+        pass was the dominant warm-serving cost)."""
         import numpy as np
 
         from ..plans.cql import DEFAULT_LAYERS, effective_test
@@ -648,7 +580,7 @@ class IndexSearcher:
             sig = tuple(
                 ((e := effective_test(t)).attr, e.value, e.negated)
                 for t in st.item.tests) + (max_terms_per_slot,)
-            hit = self._slot_map_cache.get(sig)
+            hit = self._cache.get("slot", sig)
             if hit is not None:
                 out.append(hit)
                 continue
@@ -660,66 +592,40 @@ class IndexSearcher:
                     raise NotImplementedError(
                         f"attribute {t.attr!r} has no indexed layer "
                         f"(available: {sorted(DEFAULT_LAYERS)})")
-                if t.is_literal:
-                    values = [t.value.replace("\\", "")]
-                else:
-                    values = self.expand_layer_terms(
-                        layer, t.value, max_terms_per_slot)
-                ck = (layer, tuple(sorted(values)))
-                merged = self._test_map_cache.get(ck)
-                if merged is None:
-                    merged = {}
-                    by_term = self._postings_with_positions_many(
-                        values, layer)
-                    for v in values:
-                        for d, pl in by_term[v].items():
-                            if d in merged:
-                                merged[d] = np.union1d(merged[d], pl)
-                            else:
-                                merged[d] = np.asarray(pl, dtype=np.int64)
-                    self._budget_insert(self._test_map_cache, "test",
-                                        ck, merged,
-                                        self.test_map_cache_max)
-                (ban_maps if t.negated else pos_maps).append(merged)
+                (ban_maps if t.negated else pos_maps).append(
+                    self._test_map(layer, t, max_terms_per_slot))
+            if not pos_maps and not ban_maps:
+                raise NotImplementedError(
+                    "constraint slot with no tests — use [] gaps")
+            if len(pos_maps) + len(ban_maps) == 1:
+                out.append((pos_maps[0], None) if pos_maps
+                           else (None, ban_maps[0]))
+                continue
             if pos_maps:
-                if len(pos_maps) == 1 and not ban_maps:
-                    # single positive test: the merged test map IS the
-                    # slot map — no per-doc copy loop
-                    allowed = pos_maps[0]
-                else:
-                    docs = set(pos_maps[0])
+                docs = set(pos_maps[0])
+                for m in pos_maps[1:]:
+                    docs &= set(m)
+                allowed = {}
+                for d in docs:
+                    a = pos_maps[0][d]
                     for m in pos_maps[1:]:
-                        docs &= set(m)
-                    allowed = {}
-                    for d in docs:
-                        a = pos_maps[0][d]
-                        for m in pos_maps[1:]:
-                            a = self._isect_sorted(a, m[d])
-                            if a.size == 0:
-                                break
-                        for bm in ban_maps:
-                            if a.size and d in bm:
-                                a = self._diff_sorted(a, bm[d])
-                        if a.size:
-                            allowed[d] = a
+                        a = self._isect_sorted(a, m[d])
+                        if a.size == 0:
+                            break
+                    for bm in ban_maps:
+                        if a.size and d in bm:
+                            a = self._diff_sorted(a, bm[d])
+                    if a.size:
+                        allowed[d] = a
                 res = (allowed, None)
             else:
-                if not ban_maps:
-                    raise NotImplementedError(
-                        "constraint slot with no tests — use [] gaps")
-                if len(ban_maps) == 1:
-                    ban = ban_maps[0]
-                else:
-                    ban = {}
-                    for bm in ban_maps:
-                        for d, pl in bm.items():
-                            ban[d] = (np.union1d(ban[d], pl) if d in ban
-                                      else np.asarray(pl, dtype=np.int64))
+                ban = {}
+                for bm in ban_maps:
+                    for d, pl in bm.items():
+                        ban[d] = (np.union1d(ban[d], pl) if d in ban
+                                  else np.asarray(pl, dtype=np.int64))
                 res = (None, ban)
-            if len(self._slot_map_cache) >= self.slot_map_cache_max:
-                self._slot_map_cache.pop(next(iter(self._slot_map_cache)))
-            self._slot_map_cache[sig] = res
-            out.append(res)
+            out.append(self._cache.put("slot", sig, res))
         return out
 
     def _sent_filter(self, mat, sents):
@@ -771,7 +677,6 @@ class IndexSearcher:
         import numpy as np
 
         from ..plans.cql import (
-            _steps,
             expand_repetitions,
             has_repetitions,
             parse_cql,
@@ -805,6 +710,29 @@ class IndexSearcher:
                         v, max_terms_per_slot,
                         within_sentence=within_sentence))
             return sorted(out_set)
+        out: list[tuple[int, int, int]] = []
+        for d, mat in self._chain_matches(items, max_terms_per_slot,
+                                          within_sentence):
+            if mat.shape[0] > 64:
+                # vectorized span dedup (lexicographic np.unique): at
+                # 10⁵⁺ matches per hot pattern the python set-of-tuples
+                # pass dominated the wall. Small mats keep the set —
+                # np.unique's setup constant loses below ~64 rows, and
+                # most docs are small.
+                spans = np.unique(mat[:, [0, -1]], axis=0)
+                out.extend((d, int(s), int(e)) for s, e in spans)
+            else:
+                uniq = {(int(r[0]), int(r[-1])) for r in mat}
+                out.extend((d, s, e) for s, e in sorted(uniq))
+        return out
+
+    def _chain_matches(self, items, max_terms_per_slot: int,
+                       within_sentence: bool):
+        """``(doc_id, match matrix)`` per candidate doc with at least one
+        match, ascending doc_id — the shared core of
+        :meth:`pattern_hits` and :meth:`pattern_matches`."""
+        from ..plans.cql import _steps
+
         steps = _steps(items)
         slots = self._slot_maps(steps, max_terms_per_slot)
         pos_slots = [allowed for allowed, _ in slots if allowed is not None]
@@ -813,37 +741,20 @@ class IndexSearcher:
                 "pattern needs at least one non-negated constraint "
                 "index-side (purely negative patterns are DataFrame-"
                 "path only: plans.cql.compile_cql)")
-        if any(not s for s in pos_slots):
-            return []
         cand = set(pos_slots[0])
         for s in pos_slots[1:]:
             cand &= set(s)
-        if not cand:
-            return []
+        cand = sorted(cand)
         need_dl = any(allowed is None for allowed, _ in slots)
-        dls = self._doc_lens(sorted(cand)) if need_dl else {}
-        sent_fw = (self.forward_layer(sorted(cand), "sent_no")
-                   if within_sentence else None)
-        out: list[tuple[int, int, int]] = []
-        for d in sorted(cand):
+        dls = self._doc_lens(cand) if need_dl and cand else {}
+        sent_fw = (self.forward_layer(cand, "sent_no")
+                   if within_sentence and cand else None)
+        for d in cand:
             mat = self._chain_doc(d, steps, slots, dls)
             if mat is not None and within_sentence:
                 mat = self._sent_filter(mat, sent_fw.get(d, []))
-                if not mat.shape[0]:
-                    mat = None
-            if mat is not None:
-                if mat.shape[0] > 64:
-                    # vectorized span dedup (lexicographic np.unique):
-                    # at 10⁵⁺ matches per hot pattern the python
-                    # set-of-tuples pass dominated the wall. Small mats
-                    # keep the set — np.unique's setup constant loses
-                    # below ~64 rows, and most docs are small.
-                    spans = np.unique(mat[:, [0, -1]], axis=0)
-                    out.extend((d, int(s), int(e)) for s, e in spans)
-                else:
-                    uniq = {(int(r[0]), int(r[-1])) for r in mat}
-                    out.extend((d, s, e) for s, e in sorted(uniq))
-        return out
+            if mat is not None and mat.shape[0]:
+                yield d, mat
 
     def _chain_doc(self, d: int, steps, slots, dls):
         """Doc-at-a-time slot chaining, FULL position capture: returns
@@ -907,7 +818,6 @@ class IndexSearcher:
         import numpy as np
 
         from ..plans.cql import (
-            _steps,
             has_repetitions,
             parse_cql,
             strip_within_sentence,
@@ -922,38 +832,17 @@ class IndexSearcher:
                 "labeled-capture matching with repetition quantifiers "
                 "is ambiguous (variants have different slot counts) — "
                 "use pattern_hits for spans")
-        steps = _steps(items)
-        slots = self._slot_maps(steps, max_terms_per_slot)
-        pos_slots = [allowed for allowed, _ in slots if allowed is not None]
-        if not pos_slots:
-            raise NotImplementedError(
-                "pattern needs at least one non-negated constraint "
-                "index-side")
-        if any(not s for s in pos_slots):
-            return []
-        cand = set(pos_slots[0])
-        for s in pos_slots[1:]:
-            cand &= set(s)
-        if not cand:
-            return []
-        need_dl = any(allowed is None for allowed, _ in slots)
-        dls = self._doc_lens(sorted(cand)) if need_dl else {}
-        sent_fw = (self.forward_layer(sorted(cand), "sent_no")
-                   if within_sentence else None)
         out: list[tuple[int, tuple[int, ...]]] = []
-        for d in sorted(cand):
-            mat = self._chain_doc(d, steps, slots, dls)
-            if mat is not None and within_sentence:
-                mat = self._sent_filter(mat, sent_fw.get(d, []))
-            if mat is not None and mat.shape[0]:
-                if mat.shape[0] > 64:
-                    # vectorized dedup+sort (lexicographic np.unique);
-                    # the python set pass dominated hot fan-outs
-                    for r in np.unique(mat, axis=0):
-                        out.append((d, tuple(int(x) for x in r)))
-                else:
-                    rows = {tuple(int(x) for x in r) for r in mat}
-                    out.extend((d, r) for r in sorted(rows))
+        for d, mat in self._chain_matches(items, max_terms_per_slot,
+                                          within_sentence):
+            if mat.shape[0] > 64:
+                # vectorized dedup+sort (lexicographic np.unique); the
+                # python set pass dominated hot fan-outs
+                out.extend((d, tuple(int(x) for x in r))
+                           for r in np.unique(mat, axis=0))
+            else:
+                rows = {tuple(int(x) for x in r) for r in mat}
+                out.extend((d, r) for r in sorted(rows))
         return out
 
     def relation_matches(self, query, max_terms_per_slot: int = 256
@@ -1036,14 +925,7 @@ class IndexSearcher:
         head == governor token_id)`` — the same join shape as
         ``operators.dependency.relation_query_pairs``, executed against
         the index's own store."""
-        from ..plans.cql import (
-            DEFAULT_LAYERS,
-            AttrTest,
-            TokenItem,
-            _item_predicate,
-            effective_test,
-            parse_relation_query,
-        )
+        from ..plans.cql import parse_relation_query
 
         rq = (parse_relation_query(query) if isinstance(query, str)
               else query)
@@ -1179,63 +1061,63 @@ class IndexSearcher:
             capped = capped or c2
         return total, capped
 
-    def _price_tests(self, tests) -> None:
-        """Fill the (layer, value, literal) → (Σcf, n_values) memo for
-        every test in one conditional-aggregate job per dictionary
-        table (term_stats; layer_stats once for ALL non-term layers)."""
+    @staticmethod
+    def _priced(tests) -> list[tuple[object, tuple]]:
+        """``(effective test, (layer, value, literal))`` for every test
+        on an indexed layer — the pricing memo's key."""
         from ..plans.cql import DEFAULT_LAYERS, effective_test
 
-        by_src: dict[str, list] = {}
-        for t in tests:
-            t = effective_test(t)
+        out = []
+        for t in map(effective_test, tests):
             layer = DEFAULT_LAYERS.get(t.attr)
-            if layer is None:
-                continue
-            key = (layer, t.value, t.is_literal)
-            if key in self._cost_cache:
-                continue
-            by_src.setdefault("term" if layer == "term" else "layers",
-                              []).append(key)
-        for src_name, keys in by_src.items():
-            keys = list(dict.fromkeys(keys))
-            if src_name == "term":
-                src = self.term_stats.select(
-                    F.col("term").alias("value"),
-                    F.lit("term").alias("layer"), "cf")
-            else:
-                self._require_layers()
-                src = self.layer_stats.select("value", "layer", "cf")
-            aggs = []
-            for i, (layer, value, lit) in enumerate(keys):
-                if lit:
-                    m = F.col("value") == value.replace("\\", "")
+            if layer is not None:
+                out.append((t, (layer, t.value, t.is_literal)))
+        return out
+
+    def _price_tests(self, tests) -> dict[tuple, tuple[int, int]]:
+        """(layer, value, literal) → (Σcf, n_values) for every test, the
+        uncached ones in one conditional-aggregate job per dictionary
+        table (term_stats; layer_stats once for ALL non-term layers)."""
+        def fetch(missing):
+            by_src: dict[bool, list] = {}
+            for key in missing:
+                by_src.setdefault(key[0] == "term", []).append(key)
+            found = {}
+            for is_term, keys in by_src.items():
+                if is_term:
+                    src = self.term_stats.select(
+                        F.col("term").alias("value"),
+                        F.lit("term").alias("layer"), "cf")
                 else:
-                    m = F.col("value").rlike(f"^(?:{value})$")
-                m = m & (F.col("layer") == layer)
-                aggs.append(F.sum(F.when(m, F.col("cf"))).alias(f"s{i}"))
-                aggs.append(F.sum(F.when(m, F.lit(1))).alias(f"n{i}"))
-            row = src.agg(*aggs).collect()[0]
-            if len(self._cost_cache) > 16384:  # a few ints per entry
-                self._cost_cache.clear()
-            for i, key in enumerate(keys):
-                self._cost_cache[key] = (int(row[f"s{i}"] or 0),
-                                         int(row[f"n{i}"] or 0))
+                    self._require_layers()
+                    src = self.layer_stats.select("value", "layer", "cf")
+                aggs = []
+                for i, (layer, value, lit) in enumerate(keys):
+                    if lit:
+                        m = F.col("value") == value.replace("\\", "")
+                    else:
+                        m = F.col("value").rlike(f"^(?:{value})$")
+                    m = m & (F.col("layer") == layer)
+                    aggs.append(F.sum(F.when(m, F.col("cf"))).alias(f"s{i}"))
+                    aggs.append(F.sum(F.when(m, F.lit(1))).alias(f"n{i}"))
+                row = src.agg(*aggs).collect()[0]
+                for i, key in enumerate(keys):
+                    found[key] = (int(row[f"s{i}"] or 0),
+                                  int(row[f"n{i}"] or 0))
+            return found
+
+        return self._cache.get_many(
+            "price", [key for _t, key in self._priced(tests)], fetch)
 
     def _tests_cost(self, tests, max_terms_per_slot: int
                     ) -> tuple[int, bool]:
         """Σcf + cap flag for one constraint's test list (the per-slot
         kernel of :meth:`pattern_cost`, reused by the relation-query
         router) — served from the pricing memo, filled on demand."""
-        from ..plans.cql import DEFAULT_LAYERS, effective_test
-
-        self._price_tests(tests)
+        prices = self._price_tests(tests)
         total, capped = 0, False
-        for t in tests:
-            t = effective_test(t)
-            layer = DEFAULT_LAYERS.get(t.attr)
-            if layer is None:
-                continue
-            scf, n = self._cost_cache[(layer, t.value, t.is_literal)]
+        for _t, key in self._priced(tests):
+            scf, n = prices[key]
             total += scf
             capped = capped or n > max_terms_per_slot
         return total, capped
@@ -1250,24 +1132,16 @@ class IndexSearcher:
         by :meth:`pattern_cost` on this path): every positive literal
         surface/lemma test must be under the broadcast cf cap — a
         stopword slot at web scale must shuffle, not broadcast."""
-        from ..plans.cql import (
-            DEFAULT_LAYERS,
-            _steps,
-            effective_test,
-            parse_cql,
-        )
+        from ..plans.cql import _steps, parse_cql
 
         tests = [t for st in _steps(parse_cql(pattern))
                  for t in st.item.tests]
-        self._price_tests(tests)
-        for t in tests:
-            t = effective_test(t)
-            layer = DEFAULT_LAYERS.get(t.attr)
-            if (layer in ("term", "lemma", "word_cs", "lemma_cs")
-                    and t.is_literal and not t.negated):
-                scf, _n = self._cost_cache[(layer, t.value, t.is_literal)]
-                if scf > self.broadcast_slot_max_cf:
-                    return False
+        prices = self._price_tests(tests)
+        for t, key in self._priced(tests):
+            if (key[0] in ("term", "lemma", "word_cs", "lemma_cs")
+                    and t.is_literal and not t.negated
+                    and prices[key][0] > self.broadcast_slot_max_cf):
+                return False
         return True
 
     def _pattern_fallback_tokens(self, pattern: str,
@@ -1303,17 +1177,22 @@ class IndexSearcher:
             tokens = None
         return tokens
 
+    def _doc_meta(self) -> DataFrame:
+        """The ``doc_meta`` store's dataset handle; raises when the
+        index has none."""
+        meta = self._dataset("doc_meta", required=False)
+        if meta is None:
+            raise NotImplementedError(
+                "index has no doc_meta store — rebuild with build_index "
+                "over pages that carry metadata columns (every non-id/"
+                "non-text column is stored)")
+        return meta
+
     def _meta_allowed_df(self, doc_filter: str) -> DataFrame:
         """Allowed-id PLAN for a metadata predicate (no collect): the
         in-plan twin of :meth:`filtered_doc_ids` for distributed
         consumers (semi-join side)."""
-        p = self.root / "doc_meta"
-        if not p.exists():
-            raise NotImplementedError(
-                "index has no doc_meta store — rebuild with build_index "
-                "over pages that carry metadata columns")
-        return (self.spark.read.parquet(str(p))
-                .filter(F.expr(doc_filter)).select("doc_id"))
+        return self._doc_meta().filter(F.expr(doc_filter)).select("doc_id")
 
     def pattern_spans_df(self, pattern: str,
                          max_terms_per_slot: int = 256,
@@ -1458,15 +1337,11 @@ class IndexSearcher:
         so the index's dense internal doc ids never surface."""
         from .docs import docs_facets
 
-        p = self.root / "doc_meta"
-        if not p.exists():
-            raise NotImplementedError(
-                "index has no doc_meta store — rebuild with build_index "
-                "over pages that carry metadata columns")
+        meta = self._doc_meta()
         return docs_facets(
             self.pattern_spans_df(pattern,
                                   within_sentence=within_sentence),
-            self.spark.read.parquet(str(p)), facet_cols)
+            meta, facet_cols)
 
     def subcorpus_keywords(self, predicate: str, k: int = 20,
                            round_dp: int | None = 4) -> DataFrame:
@@ -1483,12 +1358,7 @@ class IndexSearcher:
                 "index has no forward store — rebuild with "
                 "store_docstore=True, or use operators.keywords."
                 "subcorpus_keywords over the document table")
-        p = self.root / "doc_meta"
-        if not p.exists():
-            raise NotImplementedError(
-                "index has no doc_meta store — rebuild with build_index "
-                "over pages that carry metadata columns")
-        flag = (self.spark.read.parquet(str(p))
+        flag = (self._doc_meta()
                 .select("doc_id",
                         F.expr(predicate).cast("int").alias("in_a")))
         tok = tokens.join(flag, "doc_id").select("in_a", "term")
@@ -1553,22 +1423,13 @@ class IndexSearcher:
         )
 
         if doc_filter is not None:
-            pdf = (self.pattern_spans_df(
+            return _span_list(self.pattern_spans_df(
                 pattern, max_terms_per_slot, df_budget,
-                within_sentence, doc_filter=doc_filter)
-                .orderBy("doc_id", "start", "end").toPandas())
-            return list(zip(pdf["doc_id"].astype(int).tolist(),
-                            pdf["start"].astype(int).tolist(),
-                            pdf["end"].astype(int).tolist()))
+                within_sentence, doc_filter=doc_filter))
         core, mode = strip_containing(pattern)
         if mode is not None:
-            pdf = (self.sentence_spans_containing(
-                core, negated=mode == "not_containing")
-                .select("doc_id", "start", "end")
-                .orderBy("doc_id", "start", "end").toPandas())
-            return list(zip(pdf["doc_id"].astype(int).tolist(),
-                            pdf["start"].astype(int).tolist(),
-                            pdf["end"].astype(int).tolist()))
+            return _span_list(self.sentence_spans_containing(
+                core, negated=mode == "not_containing"))
         pattern, ws = strip_within_sentence(pattern)
         within_sentence = within_sentence or ws
         from ..plans.cql import has_alts, parse_cql, strip_constraints
@@ -1578,12 +1439,8 @@ class IndexSearcher:
         if _cons or has_alts(parse_cql(_core)):
             # constrained/disjunctive patterns only run on the
             # distributed compile
-            pdf = (self.pattern_spans_df(
-                pattern, max_terms_per_slot, df_budget, within_sentence)
-                .orderBy("doc_id", "start", "end").toPandas())
-            return list(zip(pdf["doc_id"].astype(int).tolist(),
-                            pdf["start"].astype(int).tolist(),
-                            pdf["end"].astype(int).tolist()))
+            return _span_list(self.pattern_spans_df(
+                pattern, max_terms_per_slot, df_budget, within_sentence))
         cost, capped = self.pattern_cost(pattern, max_terms_per_slot)
         if cost <= df_budget and not capped:
             return self.pattern_hits(pattern, max_terms_per_slot,
@@ -1592,15 +1449,10 @@ class IndexSearcher:
         if tokens is None:
             return self.pattern_hits(pattern, max_terms_per_slot,
                                      within_sentence=within_sentence)
-        pdf = (compile_cql(
+        return _span_list(compile_cql(
             tokens, pattern, keep_terms=False,
             within_sentence=within_sentence,
-            selective_broadcast=self._selective_broadcast_safe(pattern))
-            .select("doc_id", "start", "end")
-            .orderBy("doc_id", "start", "end").toPandas())
-        return list(zip(pdf["doc_id"].astype(int).tolist(),
-                        pdf["start"].astype(int).tolist(),
-                        pdf["end"].astype(int).tolist()))
+            selective_broadcast=self._selective_broadcast_safe(pattern)))
 
     def filtered_doc_ids(self, doc_filter: str):
         """Sorted doc_id array passing a SQL predicate over the stored
@@ -1611,21 +1463,17 @@ class IndexSearcher:
         (``bm25_topk_df(doc_filter=…)`` semi-joins instead)."""
         import numpy as np
 
-        hit = self._meta_filter_cache.get(doc_filter)
-        if hit is not None:
-            return hit
-        p = self.root / "doc_meta"
-        if not p.exists():
-            raise NotImplementedError(
-                "index has no doc_meta store — rebuild with build_index "
-                "over pages that carry metadata columns (every non-id/"
-                "non-text column is stored)")
-        pdf = (self.spark.read.parquet(str(p))
-               .filter(F.expr(doc_filter)).select("doc_id").toPandas())
-        arr = np.sort(pdf["doc_id"].to_numpy(np.int64))
-        if len(self._meta_filter_cache) < 64:
-            self._meta_filter_cache[doc_filter] = arr
-        return arr
+        return self._cache.get_or_put(
+            "doc_filter", doc_filter,
+            lambda: np.sort(self._doc_meta().filter(F.expr(doc_filter))
+                            .select("doc_id").toPandas()["doc_id"]
+                            .to_numpy(np.int64)))
+
+    def _check_mode(self, mode: str) -> None:
+        if mode not in self.MODES:
+            raise ValueError(
+                f"unknown search mode {mode!r}: expected one of "
+                f"{', '.join(self.MODES)}")
 
     def search(self, query: str | list[str], k: int = 10, mode: str = "auto",
                doc_filter: str | None = None
@@ -1635,7 +1483,8 @@ class IndexSearcher:
         ``mode``: ``auto`` (vectorized for head-heavy queries, block-max
         WAND when a selective term makes pruning viable), ``bmw``,
         ``wand`` (global-bound), ``vec`` (vectorized exhaustive),
-        ``daat`` (per-doc exhaustive — validation baseline).
+        ``daat`` (per-doc exhaustive — validation baseline); any other
+        value raises ``ValueError``.
 
         All modes are rank- and score-identical; they differ only in
         blocks decoded and constant factors.
@@ -1647,18 +1496,19 @@ class IndexSearcher:
         mask applied AFTER the per-term decode cache, so the cache stays
         filter-agnostic.
         """
+        self._check_mode(mode)
         terms = tokenize_py(query) if isinstance(query, str) else list(query)
         # dedupe preserving order (reference queries are unique-term sets)
         seen: set[str] = set()
         terms = [t for t in terms if not (t in seen or seen.add(t))]
         if not terms:
             return [], {"decoded_blocks": 0, "total_blocks": 0}
-        self.prefetch(terms)
-        dfs = self.term_dfs(terms)
+        blocks = self.prefetch(terms)
+        dfs = _dfs(blocks)
         if all(dfs[t] == 0 for t in terms):
             return [], {"decoded_blocks": 0, "total_blocks": 0}
         if doc_filter is not None:
-            return self._vec_cached(terms, dfs, k,
+            return self._vec_cached(terms, blocks, dfs, k,
                                     allowed=self.filtered_doc_ids(doc_filter))
         if mode == "auto":
             # Pruning pays off when the rarest term is much more selective
@@ -1668,16 +1518,17 @@ class IndexSearcher:
             selective = len(live_dfs) > 1 and min(live_dfs) * 20 < max(live_dfs)
             mode = "bmw" if selective else "vec"
         if mode == "vec":
-            return self._vec_cached(terms, dfs, k)
-        cursors, _ = self._cursors(terms)
+            return self._vec_cached(terms, blocks, dfs, k)
+        cursors = [c for ti, t in enumerate(terms) if dfs[t]
+                   for c in self._term_cursors(blocks[t], ti, dfs[t])]
         if not cursors:
             return [], {"decoded_blocks": 0, "total_blocks": 0}
         if mode == "daat":
             return exact_daat(cursors, k, len(terms))
         return block_max_wand(cursors, k, len(terms), use_block_max=(mode == "bmw"))
 
-    def _vec_cached(self, terms: list[str], dfs: dict[str, int], k: int,
-                    allowed=None
+    def _vec_cached(self, terms: list[str], blocks: dict[str, list[dict]],
+                    dfs: dict[str, int], k: int, allowed=None
                     ) -> tuple[list[tuple[int, float]], dict]:
         """Vectorized path with a decoded-postings cache for hot terms.
         ``allowed`` (sorted int64 array) masks each term's postings to
@@ -1687,30 +1538,23 @@ class IndexSearcher:
 
         from .wand import _decode_all, topk_from_arrays
 
-        n_docs, avgdl = self.stats["n_docs"], self.stats["avgdl"]
         term_arrays = []
         decoded = total = 0
         for ti, t in enumerate(terms):
             if dfs[t] == 0:
                 continue
-            if t in self._decoded_cache:
-                docs, scores = self._decoded_cache[t]
+            hit = self._cache.get("decoded", t)
+            if hit is not None:
+                docs, scores = hit
                 total += int(np.ceil(docs.size / 128)) if docs.size else 0
             else:
-                idf = idf_py(dfs[t], n_docs)
-                by_part: dict[int, list[dict]] = {}
-                for r in self._block_cache[t]:
-                    by_part.setdefault(r["seg_part"], []).append(r)
-                curs = [BlockCursor(blocks, ti, idf, self.k1, self.b, avgdl)
-                        for blocks in by_part.values()]
+                curs = self._term_cursors(blocks[t], ti, dfs[t])
                 parts = [_decode_all(c) for c in curs]
                 docs = np.concatenate([d for d, _ in parts]) if parts else np.empty(0, np.int64)
                 scores = np.concatenate([s for _, s in parts]) if parts else np.empty(0, np.float64)
                 order = np.argsort(docs, kind="stable")
-                docs, scores = docs[order], scores[order]
-                if len(self._decoded_cache) >= self.decoded_cache_max:
-                    self._decoded_cache.pop(next(iter(self._decoded_cache)))
-                self._decoded_cache[t] = (docs, scores)
+                docs, scores = self._cache.put(
+                    "decoded", t, (docs[order], scores[order]))
                 decoded += sum(c.decoded_blocks for c in curs)
                 total += sum(c.nblocks for c in curs)
             if allowed is not None and docs.size:
@@ -1723,3 +1567,17 @@ class IndexSearcher:
             term_arrays.append((ti, docs, scores))
         out = topk_from_arrays(term_arrays, k)
         return out, {"decoded_blocks": decoded, "total_blocks": total}
+
+
+def _span_list(spans: DataFrame) -> list[tuple[int, int, int]]:
+    """Sorted ``(doc_id, start, end)`` rows of a span plan, through one
+    Arrow batch exchange (``toPandas``)."""
+    cols = ("doc_id", "start", "end")
+    pdf = spans.select(*cols).orderBy(*cols).toPandas()
+    return list(zip(*(pdf[c].astype(int).tolist() for c in cols)))
+
+
+def _dfs(blocks: dict[str, list[dict]]) -> dict[str, int]:
+    """term → df from its block rows: Σ``n``, as ``term_stats`` is
+    derived at build and merge time."""
+    return {t: sum(r["n"] for r in rows) for t, rows in blocks.items()}
