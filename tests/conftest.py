@@ -48,3 +48,26 @@ def index_small(spark, docs_small, tmp_path_factory):
     build_index(spark, docs_small, root, doc_salt=2, n_partitions=8,
                 input_paths=[f"{SF_SMALL}/documents.parquet"])
     return root
+
+
+@pytest.fixture(scope="session")
+def conllu_index(spark, docs_small, tmp_path_factory):
+    """Parsed CoNLL-U corpus + a full multi-layer index with forward
+    layers, shared by the relation/sentence/containing/fallback tests
+    (read-only). Returns (root, parsed, name→dense-id map)."""
+    from word_sketch_lucene_spark.functions.tokenize import explode_tokens
+    from word_sketch_lucene_spark.index.build import build_conllu_index
+    from word_sketch_lucene_spark.operators.dependency import rule_annotate
+    from word_sketch_lucene_spark.sources.conllu import (
+        parse_conllu_docs,
+        to_conllu_text,
+    )
+
+    parsed = parse_conllu_docs(to_conllu_text(
+        rule_annotate(explode_tokens(docs_small), sent_len=10))) \
+        .localCheckpoint()
+    root = tmp_path_factory.mktemp("conllu_idx")
+    build_conllu_index(spark, parsed, root, doc_salt=2, n_partitions=4)
+    name2id = {r["doc_name"]: r["doc_id"] for r in
+               spark.read.parquet(str(root / "doc_names")).collect()}
+    return root, parsed, name2id

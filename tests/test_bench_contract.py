@@ -2,9 +2,12 @@
 
 ``perfbench/spans.py`` wraps ``IndexSearcher`` methods by name and
 derives ``query.engine.prefetch_calls`` / ``block_rows_fetched`` from
-the ``prefetch`` span and the searcher's ``_block_cache`` view. A
-refactor that renames, moves or bypasses any of these would silently
-zero those metrics; this test pins them on a tiny index.
+the ``prefetch`` span and the searcher's ``_block_cache`` view, and the
+sketch workload's ``query.engine.pattern_matches_ms`` /
+``pattern_hits_ms`` / ``phrase_ms`` from the spans of the methods of the
+same names. A refactor that renames, moves or bypasses any of these
+would silently zero those metrics; these tests pin them on tiny
+indexes.
 """
 
 from __future__ import annotations
@@ -37,3 +40,34 @@ def test_tracer_wraps_searcher_and_reports_prefetch(spark, index_small):
     assert infos and infos[0]["fetched_terms"] > 0 and infos[0]["rows"] > 0
     assert all(IndexSearcher.__dict__[m] is originals[m]
                for m in spans.SEARCHER_METHODS)
+
+
+def test_tracer_attributes_sketch_cql_and_phrase_spans(spark, conllu_index):
+    """A live word sketch runs its relations through ``pattern_matches``,
+    a CQL query through ``pattern_hits`` and a phrase through
+    ``phrase_hits`` — the spans the sketch and ingest workloads time."""
+    import spans
+
+    from word_sketch_lucene_spark.plans.relations import (
+        EN_CATALOG,
+        GrammarCatalog,
+    )
+    from word_sketch_lucene_spark.query import sketch as sk
+    from word_sketch_lucene_spark.query.engine import IndexSearcher
+
+    s = IndexSearcher(spark, conllu_index[0])
+    cat = GrammarCatalog.load(EN_CATALOG)
+    tracer = spans.Tracer()
+    tracer.install()
+    try:
+        # through the module: install() rebinds module attributes
+        sketch = sk.index_word_sketch(s, "table", cat, head_pos="NOUN",
+                                      use_store=False)
+        hits = s.pattern_hits('[xpos="JJ.*"] [lemma="table"]')
+        phrase = s.phrase_hits("the table")
+    finally:
+        tracer.uninstall()
+    assert sketch and hits and phrase
+    for name in ("index_word_sketch", "pattern_matches", "pattern_hits",
+                 "phrase_hits"):
+        assert tracer.of(name), name

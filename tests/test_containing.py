@@ -23,28 +23,6 @@ from word_sketch_lucene_spark.plans.cql import (
 PATTERN = '[xpos="JJ.*"] []{0,1} [xpos="NN.*"]'
 
 
-@pytest.fixture(scope="module")
-def conllu_index(spark, docs_small, tmp_path_factory):
-    """Parsed corpus + multi-layer index with forward layers (same
-    shape as the relation-query fixture)."""
-    from word_sketch_lucene_spark.functions.tokenize import explode_tokens
-    from word_sketch_lucene_spark.index.build import build_conllu_index
-    from word_sketch_lucene_spark.operators.dependency import rule_annotate
-    from word_sketch_lucene_spark.sources.conllu import (
-        parse_conllu_docs,
-        to_conllu_text,
-    )
-
-    parsed = parse_conllu_docs(to_conllu_text(
-        rule_annotate(explode_tokens(docs_small), sent_len=10))) \
-        .localCheckpoint()
-    root = tmp_path_factory.mktemp("conllu_idx_containing")
-    build_conllu_index(spark, parsed, root, doc_salt=2, n_partitions=4)
-    name2id = {r["doc_name"]: r["doc_id"] for r in
-               spark.read.parquet(str(root / "doc_names")).collect()}
-    return root, parsed, name2id
-
-
 def _layer_tokens(parsed):
     from word_sketch_lucene_spark.sources.conllu import layer_tokens
 

@@ -61,6 +61,30 @@ def test_index_collocates_match_dataframe(explore_ctx):
     assert got_o == want_o and got_o
 
 
+def test_min_logdice_filters_the_unrounded_score(explore_ctx):
+    """The min-score filter compares the UNROUNDED logDice and rounds
+    afterwards, on both tiers: a collocate whose score rounds UP to the
+    threshold is out of both lists."""
+    from word_sketch_lucene_spark.operators.collocation import (
+        collocates_for_head,
+    )
+    from word_sketch_lucene_spark.query.explore import (
+        index_collocates_for_head,
+    )
+
+    s, toks, stats = explore_ctx
+    raw = [(r["colloc_term"], r["logdice"]) for r in collocates_for_head(
+        toks, stats, "table", limit=1000, **WKW).collect()]
+    term, ld = next((t, ld) for t, ld in raw if round(ld, 4) > ld)
+    kw = dict(limit=50, round_dp=4, min_logdice=round(ld, 4), **WKW)
+    want = [(r["colloc_term"], r["pair_freq"], r["logdice"], r["rel_freq"])
+            for r in collocates_for_head(toks, stats, "table",
+                                         **kw).collect()]
+    got = index_collocates_for_head(s, "table", **kw)
+    assert got == want
+    assert term not in {r[0] for r in got}
+
+
 def test_index_multiseed_aggregates_match_dataframe(explore_ctx):
     """common_collocates / profile_stats / core_collocates over the
     index-served per-seed table row-equal the DataFrame operators

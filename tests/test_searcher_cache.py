@@ -46,6 +46,24 @@ def test_over_budget_entry_is_returned_not_kept():
     assert len(calls) == 2  # recomputed each time, never kept
 
 
+def test_cached_arrays_are_read_only():
+    """Entries share arrays (a one-test slot IS its test's positions):
+    every ndarray a put stores, in tuples too, refuses in-place writes,
+    and an over-budget value is frozen all the same."""
+    import pytest
+
+    c = LRUCache(budget_bytes=10_000)
+    doc, pos = np.arange(4), np.arange(4)
+    slot = c.put("slot", "k", ((doc, pos), None))
+    for arr in (doc, pos, slot[0][0], c.get("slot", "k")[0][1]):
+        with pytest.raises(ValueError):
+            arr[0] = 9
+    big = c.put("ns", "big", np.zeros(10_000))
+    with pytest.raises(ValueError):
+        big += 1
+    assert doc.tolist() == [0, 1, 2, 3]
+
+
 def test_get_many_fetches_every_miss_in_one_call():
     c = LRUCache()
     calls = []

@@ -88,7 +88,8 @@ def build_collocation_store(
     head over the index's own forward store. Idempotent per config
     (meta file records the catalog patterns + attrs; a changed catalog
     rebuilds). Returns the store path."""
-    from ..plans.cql import compile_cql, effective_test
+    from ..plans.cql import compile_cql, strip_constraints
+    from ..query.sketch import catalog_tokens
 
     rels = _store_rels(catalog, relation_types)
     if not rels:
@@ -116,32 +117,8 @@ def build_collocation_store(
                 return out
         except (json.JSONDecodeError, OSError):
             pass
-    # column-pruned token table: only the layers the fan-out tests or
-    # captures (arrays_zip blocks Catalyst pruning — must be explicit)
-    need = {"term", DEFAULT_LAYERS[subst_attr], DEFAULT_LAYERS[colloc_attr]}
-    if within_sentence:
-        need.add("sent_no")
-    from ..plans.cql import strip_constraints
-
-    def _need_attr(a: str) -> None:
-        need.add("term" if a == "class" else DEFAULT_LAYERS.get(a, a))
-
-    for rel in rels:
-        core, cons = strip_constraints(rel.pattern)
-        for c in cons:
-            _need_attr(c.attr_a)
-            _need_attr(c.attr_b)
-        for it in parse_cql(core):
-            for t in getattr(it, "tests", ()):
-                _need_attr(effective_test(t).attr)
-            for group in getattr(it, "alts", None) or ():
-                for t in group:
-                    _need_attr(effective_test(t).attr)
-    tokens = searcher.forward_token_table(columns=need)
-    if tokens is None or DEFAULT_LAYERS[subst_attr] not in tokens.columns:
-        raise NotImplementedError(
-            "collocation store needs the forward_layers store — build "
-            "with index.build.build_conllu_index(store_docstore=True)")
+    tokens = catalog_tokens(searcher, rels, subst_attr, colloc_attr,
+                            within_sentence)
     from ..plans.relations import _side_pred, _two_slot_shape
 
     spark = searcher.spark
@@ -369,7 +346,7 @@ def serve_sketch_cached(
     regime (``CLAUDE.md:190-196``). Result rows identical to
     :func:`sketch_from_store` (same counts, same scoring, same order:
     logdice desc, colloc asc, capped per relation)."""
-    from ..query.sketch import _logdice, _round
+    from ..query.sketch import rank_collocates
 
     def head_rows():
         store = open_collocation_store(searcher)
@@ -396,40 +373,25 @@ def serve_sketch_cached(
                                                with_third=True)
     rel_ids = set(rel_order)
     third_pref = tuple(f"{t}/" for t in third_ids)
-    layer = DEFAULT_LAYERS[colloc_attr]
-    cf = searcher.layer_cf(layer,
-                           sorted({c for _, c, _ in rows}) + [head])
-    head_cf = cf.get(head, 0)
-    if head_cf == 0:
-        return []
-    by_rel: dict[str, list] = {}
+    by_rel: dict[str, dict[str, int]] = {}
     for rel_id, colloc, fab in rows:
-        if rel_id not in rel_ids and not (
-                third_pref and rel_id.startswith(third_pref)):
-            continue
-        fb = cf.get(colloc)
-        if fb is None:
-            continue
-        # min-score filter on the UNROUNDED value, round for output —
-        # score_ranked_collocates' order of operations, so boundary
-        # collocates agree between the cached and plan tiers
-        ld = _logdice(fab, head_cf, fb)
-        if ld < min_logdice:
-            continue
-        rf = _round(fab / head_cf, round_dp)
-        by_rel.setdefault(rel_id, []).append(
-            (colloc, fab, _round(ld, round_dp), rf))
+        if rel_id in rel_ids or (third_pref
+                                 and rel_id.startswith(third_pref)):
+            by_rel.setdefault(rel_id, {})[colloc] = fab
+    layer = DEFAULT_LAYERS[colloc_attr]
+    # one dictionary lookup for every relation's collocates; the
+    # per-relation ranking below reads it from the searcher's cache
+    searcher.layer_cf(layer, sorted({c for counts in by_rel.values()
+                                     for c in counts}) + [head])
     out = []
     # CATALOG order (not alphabetical) — the same enumeration
     # index_word_sketch emits, so the store serve is a drop-in;
     # trinary sub-relations (`<id>/<value>`) follow their base id
     for base in rel_order:
         ids = [base] if base in by_rel else []
-        ids += sorted(k for k in by_rel
-                      if k.startswith(f"{base}/"))
+        ids += sorted(k for k in by_rel if k.startswith(f"{base}/"))
         for rel_id in ids:
-            scored = sorted(by_rel.get(rel_id, ()),
-                            key=lambda r: (-r[2], r[0]))
-            out.extend((rel_id, *row)
-                       for row in scored[:limit_per_relation])
+            out.extend((rel_id, *row) for row in rank_collocates(
+                searcher, layer, head, by_rel[rel_id], min_logdice,
+                limit_per_relation, round_dp))
     return out

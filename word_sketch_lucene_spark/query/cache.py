@@ -8,7 +8,7 @@ is charged against ONE byte budget — one policy, one knob, instead of
 a cap per structure. Callers use the value a lookup returns and never
 read the cache again to find it: any entry may be evicted by the next
 insert, and an entry larger than the whole budget is returned to its
-caller but not kept.
+caller but not kept. Cached arrays are read-only.
 """
 
 from __future__ import annotations
@@ -16,6 +16,8 @@ from __future__ import annotations
 import sys
 from collections import OrderedDict
 from collections.abc import Callable, Hashable, Iterable, Mapping
+
+import numpy as np
 
 # default budget: a serving node's pinned working set, not an OOM vector
 BUDGET_BYTES = 1 << 30
@@ -40,6 +42,14 @@ def estimate_bytes(value) -> int:
     return sys.getsizeof(value)
 
 
+def _freeze(value) -> None:
+    if isinstance(value, tuple):
+        for v in value:
+            _freeze(v)
+    elif isinstance(value, np.ndarray):
+        value.flags.writeable = False
+
+
 class LRUCache:
     """Least-recently-used entries evict first once the resident bytes
     exceed :attr:`budget_bytes`; :attr:`bytes` is the resident total."""
@@ -61,7 +71,11 @@ class LRUCache:
 
     def put(self, ns: Hashable, key: Hashable, value):
         """Insert ``value`` and return it. A value larger than the whole
-        budget is returned but not kept."""
+        budget is returned but not kept. Every ndarray in ``value`` (in
+        tuples too) becomes read-only: entries share arrays (a one-test
+        slot IS its test's positions), so an in-place write must raise
+        instead of corrupting other entries."""
+        _freeze(value)
         self.discard(ns, key)
         size = estimate_bytes(value)
         if size <= self.budget_bytes:

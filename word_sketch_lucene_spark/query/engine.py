@@ -154,6 +154,14 @@ class IndexSearcher:
     second read of the cache, since any insert may evict an older
     entry and an entry larger than the budget is served but not kept.
     ``_block_cache`` is a read-only view of the ``blocks`` namespace.
+
+    Positional queries — phrases, CQL patterns, sketch relations,
+    dependency relations — run on ONE flat form (:mod:`.positions`): a
+    term's positions, a test's matches and a constraint slot are each
+    two parallel int64 arrays ``(doc, pos)`` sorted by ``(doc, pos)``,
+    cached as read-only arrays (no per-doc dicts), and every chain,
+    window, set or forward-gather step is one numpy pass over all
+    candidate docs at once.
     """
 
     MODES = ("auto", "bmw", "wand", "vec", "daat")
@@ -273,27 +281,20 @@ class IndexSearcher:
                             self.stats["avgdl"])
                 for blocks in by_part.values()]
 
-    def _postings_with_positions(self, term: str, layer: str = "term"
-                                 ) -> dict[int, "object"]:
-        """doc_id → ascending positions array, merged across segments.
-
-        A separate pruned scan fetches ``pos_vb`` only here — BM25
-        queries never read the positions column (column pruning).
-        ``layer != "term"`` reads the multi-layer postings dataset with
-        the prefixed key (``"<layer>:<value>"``)."""
-        return self._postings_with_positions_many([term], layer)[term]
-
-    def _postings_with_positions_many(
-            self, terms: list[str], layer: str = "term"
-    ) -> dict[str, dict]:
-        """Batched :meth:`_postings_with_positions`: ALL miss terms
-        fetch in ONE pruned scan (a regex slot expands to up to 256
-        dictionary terms — one Spark job per term was the dominant
-        cold-pattern cost; one ``term IN (…)`` scan is the same bytes
-        with one job's overhead)."""
+    def _positions(self, terms: list[str], layer: str = "term"
+                   ) -> dict[str, tuple]:
+        """term → its positions as a flat ``(doc, pos)`` pair of int64
+        arrays sorted by ``(doc, pos)`` (:mod:`.positions`), merged
+        across segments. ALL miss terms fetch in ONE pruned scan (a
+        regex slot expands to up to 256 dictionary terms; one
+        ``term IN (…)`` scan is the same bytes with one job's
+        overhead) — the only read of ``pos_vb``, which BM25 queries
+        never touch (column pruning). ``layer != "term"`` reads the
+        multi-layer postings dataset with the prefixed key
+        (``"<layer>:<value>"``)."""
         import numpy as np
 
-        from ..functions.codec import decode_positions, vbyte_decode
+        from ..functions.codec import positions_flat, vbyte_decode
 
         def fetch(missing):
             if layer == "term":
@@ -308,17 +309,14 @@ class IndexSearcher:
                 .select("term", "first_doc", "docs_vb", "tfs_vb", "pos_vb")
                 .collect()
             )
-            per_term: dict[str, dict[int, object]] = \
-                {t: {} for t in missing}
-            for r in rows:
-                out = per_term[keys[r["term"]]]
+            parts: dict[str, list] = {t: [] for t in missing}
+            for r in sorted(rows, key=lambda r: r["first_doc"]):
                 gaps = vbyte_decode(bytes(r["docs_vb"])).astype(np.int64)
-                docs = np.cumsum(gaps) + r["first_doc"]
-                pls = decode_positions(bytes(r["pos_vb"]),
-                                       vbyte_decode(bytes(r["tfs_vb"])))
-                for d, pl in zip(docs, pls):
-                    out[int(d)] = pl
-            return per_term
+                tfs = vbyte_decode(bytes(r["tfs_vb"])).astype(np.int64)
+                parts[keys[r["term"]]].append((
+                    np.repeat(np.cumsum(gaps) + r["first_doc"], tfs),
+                    positions_flat(bytes(r["pos_vb"]), tfs)))
+            return {t: _flat_sorted(ps) for t, ps in parts.items()}
 
         return self._cache.get_many(("positions", layer), terms, fetch)
 
@@ -452,84 +450,72 @@ class IndexSearcher:
         ).select("doc_id", F.col("pos").cast("long").alias("pos"),
                  *[F.col(f"z.{c}").alias(c) for c in cols])
 
-    def _doc_lens(self, doc_ids: list[int]) -> dict[int, int]:
-        """doc_id → token count (the doc_lens stage; pruned scan per
-        miss set) — the position universe for complement (negation)
-        slots."""
+    def _doc_lens(self, docs):
+        """Token counts of ``docs`` (int64 array, in order; the doc_lens
+        stage, one pruned scan per miss set) — the position universe
+        for complement (negation) slots."""
+        import numpy as np
+
         def fetch(missing):
             return {int(r["doc_id"]): int(r["dl"]) for r in
                     self._filter_in(self._dataset("doc_lens"), "doc_id",
                                     missing)
                     .select("doc_id", "dl").collect()}
 
-        return self._cache.get_many("doc_lens", doc_ids, fetch, default=0)
+        return np.fromiter(self._cache.get_many(
+            "doc_lens", docs.tolist(), fetch, default=0).values(),
+            np.int64, docs.size)
+
+    def _forward_flat(self, docs, layer: str, dtype=int) -> tuple:
+        """``(values, offsets, lengths)``: one forward layer's arrays of
+        ``docs`` (sorted distinct) laid end to end in ``docs`` order —
+        what :func:`.positions.take` gathers from by flat offset. A doc
+        without a stored array has length 0. String layers read as
+        ``dtype=object`` (a fixed-width unicode copy costs ~10× more)."""
+        from itertools import chain
+
+        import numpy as np
+
+        arrays = list(self.forward_layer(docs.tolist(), layer).values())
+        lens = np.fromiter(map(len, arrays), np.int64, len(arrays))
+        values = np.fromiter(chain.from_iterable(arrays), dtype,
+                             int(lens.sum()))
+        return values, np.cumsum(lens) - lens, lens
 
     def phrase_hits(self, phrase: str | list[str]
                     ) -> list[tuple[int, list[int]]]:
         """Exact-sequence matches from the positional index: the Lucene
-        ``SpanNear(slop=0, inOrder=true)`` analog (SURVEY §2.3 J1) run
-        doc-at-a-time over decoded position lists.
+        ``SpanNear(slop=0, inOrder=true)`` analog (SURVEY §2.3 J1) — the
+        pattern chain of :mod:`.positions` with a gap of exactly one
+        between consecutive terms, over the docs holding every term.
 
         Returns ``[(doc_id, [start positions])]`` ordered by doc_id.
         """
         import numpy as np
 
+        from .positions import POS, chain, common_docs
+
         terms = tokenize_py(phrase) if isinstance(phrase, str) else list(phrase)
         if not terms:
             return []
-        by_term = self._postings_with_positions_many(terms)
-        per_term = [by_term[t] for t in terms]
-        if any(not p for p in per_term):
-            return []
-        # docs containing every term, rarest-first intersection
-        cand = set(per_term[0])
-        for p in per_term[1:]:
-            cand &= set(p)
-        out = []
-        for d in sorted(cand):
-            starts = np.asarray(per_term[0][d], dtype=np.int64)
-            for i, p in enumerate(per_term[1:], start=1):
-                nxt = np.asarray(p[d], dtype=np.int64)
-                starts = starts[np.isin(starts + i, nxt)]
-                if starts.size == 0:
-                    break
-            if starts.size:
-                out.append((d, starts.tolist()))
-        return out
+        by_term = self._positions(terms)
+        flats = [by_term[t] for t in terms]
+        docs = common_docs(flats)
+        starts = chain(docs, [(f, None) for f in flats],
+                       [(1, 1)] * len(terms))[:, 0]
+        rank, bounds = np.unique(starts >> 32, return_index=True)
+        return list(zip(docs[rank].tolist(),
+                        [p.tolist() for p in np.split(starts & POS,
+                                                      bounds[1:])]))
 
-    @staticmethod
-    def _isect_sorted(a, b):
-        """Intersection of two SORTED-UNIQUE int arrays via
-        searchsorted membership — O(min log max), no re-sort
-        (np.intersect1d re-sorts and re-uniques; at 150k calls per
-        sketch fan-out that was the dominant warm-serving cost)."""
-        import numpy as np
-
-        if a.size > b.size:
-            a, b = b, a
-        if b.size == 0:
-            return b if a.size == 0 else a[:0]
-        idx = np.searchsorted(b, a)
-        idx[idx == b.size] = 0
-        return a[b[idx] == a]
-
-    @staticmethod
-    def _diff_sorted(a, b):
-        """a \\ b for SORTED-UNIQUE int arrays (same trick)."""
-        import numpy as np
-
-        if a.size == 0 or b.size == 0:
-            return a
-        idx = np.searchsorted(b, a)
-        idx[idx == b.size] = 0
-        return a[b[idx] != a]
-
-    def _test_map(self, layer: str, test, max_terms: int) -> dict:
-        """doc → sorted positions matching one (effective) test's value
-        on ``layer``, its regex expanded through the layer dictionary.
-        A sketch fan-out repeats the same constraints ([xpos="NN.*"]
-        appears in ~15 relations), so the merge is cached per test."""
-        import numpy as np
+    def _test_map(self, layer: str, test, max_terms: int) -> tuple:
+        """The ``(doc, pos)`` position set matching one (effective)
+        test's value on ``layer``, its regex expanded through the layer
+        dictionary. A sketch fan-out repeats the same constraints
+        ([xpos="NN.*"] appears in ~15 relations), so the union is
+        cached per test; a literal test IS its term's positions
+        entry."""
+        from .positions import union
 
         def merge():
             if test.is_literal:
@@ -537,38 +523,29 @@ class IndexSearcher:
             else:
                 values = self.expand_layer_terms(layer, test.value,
                                                  max_terms)
-            merged = {}
-            by_term = self._postings_with_positions_many(values, layer)
-            for v in values:
-                for d, pl in by_term[v].items():
-                    if d in merged:
-                        merged[d] = np.union1d(merged[d], pl)
-                    else:
-                        merged[d] = np.asarray(pl, dtype=np.int64)
-            return merged
+            by_term = self._positions(values, layer)
+            return union([by_term[v] for v in values])
 
         return self._cache.get_or_put(
             "test_map", (layer, test.value, test.is_literal, max_terms),
             merge)
 
     def _slot_maps(self, steps, max_terms_per_slot: int):
-        """Per constraint slot: (allowed-positions map | None, banned map
-        | None). ``allowed`` merges every test layer per doc (positive
-        tests intersect positionally — cross-LAYER conjunctions like
-        ``[xpos="NN.*" & deprel="nsubj"]`` become per-doc position
-        intersections, the Lucene AND-of-fields span analog); negated
-        tests subtract. A slot with ONLY negated tests gets
-        ``(None, banned)`` — resolved by window complement at chain
-        time (the reference executes negation inside Lucene span
-        queries; ``plans/concept-sketch-spec.md:60``).
+        """Per constraint slot: (allowed positions | None, banned
+        positions | None), each a ``(doc, pos)`` set. ``allowed`` is the
+        intersection of every positive test's positions (cross-LAYER
+        conjunctions like ``[xpos="NN.*" & deprel="nsubj"]`` — the
+        Lucene AND-of-fields span analog) minus every negated test's. A
+        slot with ONLY negated tests gets ``(None, banned)`` — resolved
+        by window complement at chain time (the reference executes
+        negation inside Lucene span queries;
+        ``plans/concept-sketch-spec.md:60``).
 
-        A one-test slot IS its test map (no per-doc copy), read from
-        the test-map entry and never stored a second time; combined
-        slots cache under their signature (the per-doc intersection
-        pass was the dominant warm-serving cost)."""
-        import numpy as np
-
+        A one-test slot IS its test map (no copy), read from the
+        test-map entry and never stored a second time; combined slots
+        cache under their signature."""
         from ..plans.cql import DEFAULT_LAYERS, effective_test
+        from .positions import combine, union
 
         out = []
         for st in steps:
@@ -601,45 +578,10 @@ class IndexSearcher:
                 out.append((pos_maps[0], None) if pos_maps
                            else (None, ban_maps[0]))
                 continue
-            if pos_maps:
-                docs = set(pos_maps[0])
-                for m in pos_maps[1:]:
-                    docs &= set(m)
-                allowed = {}
-                for d in docs:
-                    a = pos_maps[0][d]
-                    for m in pos_maps[1:]:
-                        a = self._isect_sorted(a, m[d])
-                        if a.size == 0:
-                            break
-                    for bm in ban_maps:
-                        if a.size and d in bm:
-                            a = self._diff_sorted(a, bm[d])
-                    if a.size:
-                        allowed[d] = a
-                res = (allowed, None)
-            else:
-                ban = {}
-                for bm in ban_maps:
-                    for d, pl in bm.items():
-                        ban[d] = (np.union1d(ban[d], pl) if d in ban
-                                  else np.asarray(pl, dtype=np.int64))
-                res = (None, ban)
+            res = ((combine(pos_maps, ban_maps), None) if pos_maps
+                   else (None, union(ban_maps)))
             out.append(self._cache.put("slot", sig, res))
         return out
-
-    def _sent_filter(self, mat, sents):
-        """Keep only match rows whose first and last slot positions lie
-        in the same sentence (``sent_no`` forward array; sentences are
-        position-contiguous so the two ends bound every slot between).
-        ``sents`` may be an empty list when the doc has no stored
-        array — then nothing is constrained away (flat-stream corpus)."""
-        import numpy as np
-
-        if not len(sents):
-            return mat
-        s = np.asarray(sents, dtype=np.int64)
-        return mat[s[mat[:, 0]] == s[mat[:, -1]]]
 
     def pattern_hits(self, pattern: str, max_terms_per_slot: int = 256,
                      within_sentence: bool = False
@@ -651,9 +593,9 @@ class IndexSearcher:
         xpos/deprel — multi-layer postings via
         ``index.build.build_layer_postings``), positional postings are
         fetched via pruned scans, and the constraint sequence chains
-        doc-at-a-time over numpy position arrays with the
-        ``[]{min,max}`` gap windows (the SpanNear generalization of
-        :meth:`phrase_hits`).
+        over whole-candidate ``(doc, pos)`` arrays with the
+        ``[]{min,max}`` gap windows (:func:`.positions.chain`, the
+        SpanNear generalization of :meth:`phrase_hits`).
 
         Negation: ``attr!="..."`` subtracts banned positions; a slot
         with ONLY negated tests matches any token in the gap window
@@ -678,6 +620,7 @@ class IndexSearcher:
 
         from ..plans.cql import (
             expand_repetitions,
+            has_alts,
             has_repetitions,
             parse_cql,
             strip_constraints,
@@ -694,44 +637,33 @@ class IndexSearcher:
                 "position sets; use pattern_spans_df (routes to the "
                 "forward-store distributed compile)")
         items = parse_cql(pattern)
-        from ..plans.cql import has_alts
-
         if has_alts(items):
             raise NotImplementedError(
                 "cross-attr `|` disjunctions union positions ACROSS "
                 "layers — not expressible over per-layer postings; use "
                 "pattern_spans_df (routes to the forward-store "
                 "distributed compile)")
-        if has_repetitions(items):
-            out_set: set[tuple[int, int, int]] = set()
-            for v in expand_repetitions(items):
-                out_set.update(
-                    (d, p[0], p[-1]) for d, p in self.pattern_matches(
-                        v, max_terms_per_slot,
-                        within_sentence=within_sentence))
-            return sorted(out_set)
-        out: list[tuple[int, int, int]] = []
-        for d, mat in self._chain_matches(items, max_terms_per_slot,
-                                          within_sentence):
-            if mat.shape[0] > 64:
-                # vectorized span dedup (lexicographic np.unique): at
-                # 10⁵⁺ matches per hot pattern the python set-of-tuples
-                # pass dominated the wall. Small mats keep the set —
-                # np.unique's setup constant loses below ~64 rows, and
-                # most docs are small.
-                spans = np.unique(mat[:, [0, -1]], axis=0)
-                out.extend((d, int(s), int(e)) for s, e in spans)
-            else:
-                uniq = {(int(r[0]), int(r[-1])) for r in mat}
-                out.extend((d, s, e) for s, e in sorted(uniq))
-        return out
+        spans = []
+        for v in (expand_repetitions(items) if has_repetitions(items)
+                  else [items]):
+            doc, mat = self._chain_matches(v, max_terms_per_slot,
+                                           within_sentence)
+            spans.append(np.column_stack([doc, mat[:, 0], mat[:, -1]]))
+        spans = np.unique(np.concatenate(spans), axis=0)
+        return list(zip(*(spans[:, i].tolist() for i in range(3))))
 
     def _chain_matches(self, items, max_terms_per_slot: int,
                        within_sentence: bool):
-        """``(doc_id, match matrix)`` per candidate doc with at least one
-        match, ascending doc_id — the shared core of
-        :meth:`pattern_hits` and :meth:`pattern_matches`."""
+        """``(doc, positions)``: every match of a constraint sequence —
+        its doc per row and an (n_matches × n_slots) position matrix,
+        rows distinct and sorted by (doc, positions) — the shared core
+        of :meth:`pattern_hits` and :meth:`pattern_matches`.
+
+        Candidate docs are those in every positive slot; the chain
+        keys rank into them (:mod:`.positions`), so any int64 doc id
+        is safe."""
         from ..plans.cql import _steps
+        from .positions import POS, chain, common_docs, same_sentence
 
         steps = _steps(items)
         slots = self._slot_maps(steps, max_terms_per_slot)
@@ -741,69 +673,19 @@ class IndexSearcher:
                 "pattern needs at least one non-negated constraint "
                 "index-side (purely negative patterns are DataFrame-"
                 "path only: plans.cql.compile_cql)")
-        cand = set(pos_slots[0])
-        for s in pos_slots[1:]:
-            cand &= set(s)
-        cand = sorted(cand)
-        need_dl = any(allowed is None for allowed, _ in slots)
-        dls = self._doc_lens(cand) if need_dl and cand else {}
-        sent_fw = (self.forward_layer(cand, "sent_no")
-                   if within_sentence and cand else None)
-        for d in cand:
-            mat = self._chain_doc(d, steps, slots, dls)
-            if mat is not None and within_sentence:
-                mat = self._sent_filter(mat, sent_fw.get(d, []))
-            if mat is not None and mat.shape[0]:
-                yield d, mat
-
-    def _chain_doc(self, d: int, steps, slots, dls):
-        """Doc-at-a-time slot chaining, FULL position capture: returns
-        the (n_matches × n_slots) position matrix for doc ``d`` (one row
-        per distinct constraint-position assignment) or None.
-
-        Each extension is fully vectorized: a batched ``searchsorted``
-        range query of every partial row's gap window against the
-        slot's sorted position array (no per-row python in the hot
-        loop — a 41-relation sketch fan-out runs this for thousands of
-        candidate docs)."""
-        import numpy as np
-
-        empty = np.empty(0, dtype=np.int64)
-        allowed0, ban0 = slots[0]
-        if allowed0 is None:
-            uni = np.arange(dls.get(d, 0), dtype=np.int64)
-            p0 = np.setdiff1d(uni, ban0.get(d, empty))
-        else:
-            p0 = np.asarray(allowed0.get(d, empty), dtype=np.int64)
-        if p0.size == 0:
-            return None
-        mat = p0.reshape(-1, 1)
-        for st, (allowed, ban) in zip(steps[1:], slots[1:]):
-            prevs = mat[:, -1]
-            if allowed is not None:
-                nxt = allowed.get(d)
-                if nxt is None:
-                    return None
-            else:
-                # complement slot: window positions minus banned — the
-                # candidate universe is [0, dl); materialize it once
-                dl = dls.get(d, 0)
-                nxt = np.setdiff1d(np.arange(dl, dtype=np.int64),
-                                   ban.get(d, empty))
-            # batched range query: positions of nxt within each row's
-            # [prev+lo, prev+hi] window
-            left = np.searchsorted(nxt, prevs + st.lo, side="left")
-            right = np.searchsorted(nxt, prevs + st.hi, side="right")
-            counts = right - left
-            total = int(counts.sum())
-            if total == 0:
-                return None
-            row_idx = np.repeat(np.arange(mat.shape[0]), counts)
-            within = (np.arange(total)
-                      - np.repeat(np.cumsum(counts) - counts, counts))
-            sel = nxt[np.repeat(left, counts) + within]
-            mat = np.column_stack([mat[row_idx], sel])
-        return mat
+        docs = common_docs(pos_slots)
+        dls = (self._doc_lens(docs)
+               if any(allowed is None for allowed, _ in slots) else None)
+        mat = chain(docs, slots, [(st.lo, st.hi) for st in steps], dls)
+        if within_sentence and mat.shape[0]:
+            # first and last slot in one sentence (sentences are
+            # position-contiguous, so the two ends bound every slot
+            # between); a doc without a stored sent_no array is a flat
+            # stream and keeps its matches
+            mat = mat[same_sentence(self._forward_flat(docs, "sent_no"),
+                                    mat[:, 0] >> 32, mat[:, 0] & POS,
+                                    mat[:, -1] & POS)]
+        return docs[mat[:, 0] >> 32], mat & POS
 
     def pattern_matches(self, pattern: str | list,
                         max_terms_per_slot: int = 256,
@@ -815,8 +697,6 @@ class IndexSearcher:
         position of EVERY slot, not just the span ends). Accepts a
         pattern string or pre-parsed items (for head-substituted
         patterns)."""
-        import numpy as np
-
         from ..plans.cql import (
             has_repetitions,
             parse_cql,
@@ -832,18 +712,9 @@ class IndexSearcher:
                 "labeled-capture matching with repetition quantifiers "
                 "is ambiguous (variants have different slot counts) — "
                 "use pattern_hits for spans")
-        out: list[tuple[int, tuple[int, ...]]] = []
-        for d, mat in self._chain_matches(items, max_terms_per_slot,
-                                          within_sentence):
-            if mat.shape[0] > 64:
-                # vectorized dedup+sort (lexicographic np.unique); the
-                # python set pass dominated hot fan-outs
-                out.extend((d, tuple(int(x) for x in r))
-                           for r in np.unique(mat, axis=0))
-            else:
-                rows = {tuple(int(x) for x in r) for r in mat}
-                out.extend((d, r) for r in sorted(rows))
-        return out
+        doc, mat = self._chain_matches(items, max_terms_per_slot,
+                                       within_sentence)
+        return list(zip(doc.tolist(), map(tuple, mat.tolist())))
 
     def relation_matches(self, query, max_terms_per_slot: int = 256
                          ) -> list[tuple[int, int, int]]:
@@ -854,10 +725,11 @@ class IndexSearcher:
         artifacts: the DEPENDENT side (target tests + the positive
         ``deprel`` test) drives candidates through the layer postings,
         then the ``sent_no``/``token_id``/``head`` forward arrays
-        resolve each dependent to its governor position (CoNLL-U token
-        ids are dense 1..n per sentence, so governor position =
-        sentence start + head-id − 1, verified against the stored
-        token_id). Returns ``[(doc_id, gov_pos, dep_pos)]`` sorted.
+        resolve every dependent to its governor position at once
+        (CoNLL-U token ids are dense 1..n per sentence, so governor
+        position = sentence start + head-id − 1, verified against the
+        stored token_id). Returns ``[(doc_id, gov_pos, dep_pos)]``
+        ordered by (doc_id, dep_pos).
         """
         import numpy as np
 
@@ -867,6 +739,7 @@ class IndexSearcher:
             _steps,
             parse_relation_query,
         )
+        from .positions import POS, common_docs, keyed, member, take
 
         rq = (parse_relation_query(query) if isinstance(query, str)
               else query)
@@ -874,42 +747,42 @@ class IndexSearcher:
             raise ValueError(f"not a relation query: {query!r}")
         dep_item = TokenItem(list(rq.target.tests)
                              + [AttrTest("deprel", rq.deprel)])
-        (dep_allowed, _), = self._slot_maps(_steps([dep_item]),
-                                            max_terms_per_slot)
-        src_allowed = None
+        (dep, _), = self._slot_maps(_steps([dep_item]), max_terms_per_slot)
+        src = None
         if rq.source.tests:
             if all(t.negated for t in rq.source.tests):
                 raise NotImplementedError(
                     "purely negative source operand is DataFrame-path "
                     "only (operators.dependency.relation_query_pairs)")
-            (src_allowed, _), = self._slot_maps(_steps([rq.source]),
-                                                max_terms_per_slot)
-        docs = sorted(set(dep_allowed)
-                      & (set(src_allowed) if src_allowed is not None
-                         else set(dep_allowed)))
-        if not docs:
+            (src, _), = self._slot_maps(_steps([rq.source]),
+                                        max_terms_per_slot)
+        docs = common_docs([dep] if src is None else [dep, src])
+        if not docs.size:
             return []
-        fw_sent = self.forward_layer(docs, "sent_no")
-        fw_tok = self.forward_layer(docs, "token_id")
-        fw_head = self.forward_layer(docs, "head")
-        out: list[tuple[int, int, int]] = []
-        for d in docs:
-            sent = np.asarray(fw_sent[d], dtype=np.int64)
-            tok = np.asarray(fw_tok[d], dtype=np.int64)
-            head = np.asarray(fw_head[d], dtype=np.int64)
-            dp = np.asarray(dep_allowed[d], dtype=np.int64)
-            if dp.size == 0 or sent.size == 0:
-                continue
-            hd = head[dp]
-            gp = np.searchsorted(sent, sent[dp], side="left") + hd - 1
-            ok = (hd > 0) & (gp >= 0) & (gp < sent.size)
-            gp_c = np.clip(gp, 0, sent.size - 1)
-            ok &= (tok[gp_c] == hd) & (sent[gp_c] == sent[dp])
-            if src_allowed is not None:
-                ok &= np.isin(gp_c, src_allowed[d])
-            for g, p in zip(gp_c[ok], dp[ok]):
-                out.append((d, int(g), int(p)))
-        return out
+        dk = keyed(dep, docs)
+        rank, dp = dk >> 32, dk & POS
+        flat = self._forward_flat(docs, "sent_no")
+        sent, off, lens = flat
+        tok = self._forward_flat(docs, "token_id")[0]
+        head = self._forward_flat(docs, "head")[0]
+        s, ok = take(flat, rank, dp)
+        rank, dp = rank[ok], dp[ok]
+        if not rank.size:
+            return []
+        hd = head[off[rank] + dp]
+        # a sentence starts at the first flat index of its (rank,
+        # sent_no) key — sorted keys, since sentences are contiguous
+        start = np.searchsorted(
+            np.repeat(np.arange(docs.size), lens) << 32 | sent,
+            rank << 32 | s) - off[rank]
+        gp = start + hd - 1
+        gs, ok = take(flat, rank, np.where(hd > 0, gp, -1))
+        rank, dp, gp, hd, s = rank[ok], dp[ok], gp[ok], hd[ok], s[ok]
+        ok = (tok[off[rank] + gp] == hd) & (gs == s)
+        if src is not None:
+            ok &= member(rank << 32 | gp, keyed(src, docs))
+        return list(zip(docs[rank[ok]].tolist(), gp[ok].tolist(),
+                        dp[ok].tolist()))
 
     def relation_matches_auto(self, query, max_terms_per_slot: int = 256,
                               df_budget: int = 500_000
@@ -1145,31 +1018,13 @@ class IndexSearcher:
         return True
 
     def _pattern_fallback_tokens(self, pattern: str,
-                                 within_sentence: bool,
-                                 extra_attrs: set[str] | None = None):
+                                 within_sentence: bool):
         """Column-pruned forward token table able to serve ``pattern``
         distributed, or ``None`` when the store is absent or lacks a
         tested layer (the pattern then stays on the capped index path,
         documented best-effort like the reference's max term
         expansion)."""
-        from ..plans.cql import (
-            DEFAULT_LAYERS,
-            _steps,
-            effective_test,
-            parse_cql,
-        )
-
-        attrs = set()
-        for st in _steps(parse_cql(pattern)):
-            for t in st.item.tests:
-                attrs.add(effective_test(t).attr)
-            for group in st.item.alts or ():
-                for t in group:
-                    attrs.add(effective_test(t).attr)
-        attrs |= extra_attrs or set()
-        # the virtual `class` attr derives from the surface term column
-        need = {"term" if a == "class" else DEFAULT_LAYERS.get(a, a)
-                for a in attrs}
+        need = pattern_layers(pattern)
         if within_sentence:
             need.add("sent_no")
         tokens = self.forward_token_table(columns=need)
@@ -1194,6 +1049,65 @@ class IndexSearcher:
         consumers (semi-join side)."""
         return self._doc_meta().filter(F.expr(doc_filter)).select("doc_id")
 
+    def _span_route(self, pattern: str, max_terms_per_slot: int,
+                    df_budget: int, within_sentence: bool):
+        """The one router for index-side spans: a sorted in-driver span
+        list from :meth:`pattern_hits`, or a ``(doc_id, start, end)``
+        plan over the forward store.
+
+        - ``[!]containing`` span filters: the sentence-span plan;
+        - inter-slot constraints and cross-attr ``|`` disjunctions need
+          layer VALUES at matched positions or a union ACROSS layers,
+          which only the forward token table serves: always the
+          distributed compile (raises without a store carrying every
+          constrained layer);
+        - otherwise the Σcf estimate decides: over ``df_budget`` (or
+          when an expansion hit the term cap) the distributed compile,
+          if the store carries every tested layer; else the in-driver
+          span chain."""
+        from ..plans.cql import (
+            compile_cql,
+            has_alts,
+            parse_cql,
+            strip_constraints,
+            strip_containing,
+            strip_within_sentence,
+        )
+
+        core, mode = strip_containing(pattern)
+        if mode is not None:
+            return (self.sentence_spans_containing(
+                core, negated=mode == "not_containing")
+                .select("doc_id", "start", "end"))
+        pattern, ws = strip_within_sentence(pattern)
+        within_sentence = within_sentence or ws
+        core, cons = strip_constraints(pattern)
+        core, ws2 = strip_within_sentence(core)
+        within_sentence = within_sentence or ws2
+        if cons or has_alts(parse_cql(core)):
+            tokens = self._pattern_fallback_tokens(pattern,
+                                                   within_sentence)
+            if tokens is None:
+                raise NotImplementedError(
+                    "inter-slot constraints need the forward token "
+                    "store carrying every constrained layer — rebuild "
+                    "with store_docstore=True / build_conllu_index, or "
+                    "use plans.cql.compile_cql over a token DataFrame")
+        else:
+            core = pattern
+            cost, capped = self.pattern_cost(pattern, max_terms_per_slot)
+            tokens = (self._pattern_fallback_tokens(pattern,
+                                                    within_sentence)
+                      if cost > df_budget or capped else None)
+            if tokens is None:
+                return self.pattern_hits(pattern, max_terms_per_slot,
+                                         within_sentence=within_sentence)
+        return (compile_cql(
+            tokens, pattern, keep_terms=False,
+            within_sentence=within_sentence,
+            selective_broadcast=self._selective_broadcast_safe(core))
+            .select("doc_id", "start", "end"))
+
     def pattern_spans_df(self, pattern: str,
                          max_terms_per_slot: int = 256,
                          df_budget: int = 500_000,
@@ -1213,84 +1127,24 @@ class IndexSearcher:
         the distributed route, masked driver-side on the bounded
         in-driver route (BlackLab's metadata-filtered CQL).
         """
-        from ..plans.cql import (
-            compile_cql,
-            strip_constraints,
-            strip_containing,
-            strip_within_sentence,
-        )
-
-        core, mode = strip_containing(pattern)
-        if mode is not None:
-            # span-filter form: sentence spans, same (doc_id, start,
-            # end) shape — KWIC/consumer plumbing works unchanged
-            out = (self.sentence_spans_containing(
-                core, negated=mode == "not_containing")
-                .select("doc_id", "start", "end"))
+        out = self._span_route(pattern, max_terms_per_slot, df_budget,
+                               within_sentence)
+        if not isinstance(out, list):
             if doc_filter is not None:
                 out = out.join(self._meta_allowed_df(doc_filter),
                                "doc_id", "left_semi")
             return out
-        pattern, ws = strip_within_sentence(pattern)
-        within_sentence = within_sentence or ws
-        from ..plans.cql import has_alts, parse_cql
-
-        core, cons = strip_constraints(pattern)
-        core, ws2 = strip_within_sentence(core)
-        within_sentence = within_sentence or ws2
-        if cons or has_alts(parse_cql(core)):
-            # inter-slot constraints need layer VALUES at two matched
-            # positions, and cross-attr `|` disjunctions need a
-            # position-set union ACROSS layers — the forward token
-            # table serves both; the positional span chain only knows
-            # per-layer position sets, so these patterns always route
-            # to the distributed compile (the in-driver tier raises,
-            # naming this method)
-            tokens = self._pattern_fallback_tokens(
-                core, within_sentence,
-                extra_attrs={a for c in cons
-                             for a in (c.attr_a, c.attr_b)})
-            if tokens is None:
-                raise NotImplementedError(
-                    "inter-slot constraints need the forward token "
-                    "store carrying every constrained layer — rebuild "
-                    "with store_docstore=True / build_conllu_index, or "
-                    "use plans.cql.compile_cql over a token DataFrame")
-            out = (compile_cql(
-                tokens, pattern, keep_terms=False,
-                within_sentence=within_sentence,
-                selective_broadcast=self._selective_broadcast_safe(
-                    core))
-                .select("doc_id", "start", "end"))
-            if doc_filter is not None:
-                out = out.join(self._meta_allowed_df(doc_filter),
-                               "doc_id", "left_semi")
-            return out
-        cost, capped = self.pattern_cost(pattern, max_terms_per_slot)
-        tokens = None
-        if cost > df_budget or capped:
-            tokens = self._pattern_fallback_tokens(pattern,
-                                                   within_sentence)
-        if tokens is not None:
-            out = (compile_cql(
-                tokens, pattern, keep_terms=False,
-                within_sentence=within_sentence,
-                selective_broadcast=self._selective_broadcast_safe(
-                    pattern))
-                .select("doc_id", "start", "end"))
-            if doc_filter is not None:
-                out = out.join(self._meta_allowed_df(doc_filter),
-                               "doc_id", "left_semi")
-            return out
-        spans = self.pattern_hits(pattern, max_terms_per_slot,
-                                  within_sentence=within_sentence)
-        if doc_filter is not None:
-            allowed = set(self.filtered_doc_ids(doc_filter).tolist())
-            spans = [s for s in spans if s[0] in allowed]
         return bounded_rows_df(
-            self.spark, [(int(d), int(s), int(e)) for d, s, e in spans],
+            self.spark, self._filter_spans(out, doc_filter),
             "doc_id long, start long, end long",
             ["doc_id", "start", "end"])
+
+    def _filter_spans(self, spans: list, doc_filter: str | None) -> list:
+        """An in-driver span list restricted to ``doc_filter``'s docs."""
+        if doc_filter is None:
+            return spans
+        allowed = set(self.filtered_doc_ids(doc_filter).tolist())
+        return [sp for sp in spans if sp[0] in allowed]
 
     def group_pattern_hits(self, pattern: str, layer_col: str = "term",
                            k: int = 20,
@@ -1414,45 +1268,16 @@ class IndexSearcher:
         ``collect`` — ~5× cheaper at 10⁵⁺ spans.
 
         ``doc_filter`` restricts matches to documents passing a
-        metadata predicate (delegates to :meth:`pattern_spans_df`,
-        which applies it on whichever route runs)."""
-        from ..plans.cql import (
-            compile_cql,
-            strip_containing,
-            strip_within_sentence,
-        )
-
+        metadata predicate, on whichever route runs (the same router
+        as :meth:`pattern_spans_df`)."""
+        out = self._span_route(pattern, max_terms_per_slot, df_budget,
+                               within_sentence)
+        if isinstance(out, list):
+            return self._filter_spans(out, doc_filter)
         if doc_filter is not None:
-            return _span_list(self.pattern_spans_df(
-                pattern, max_terms_per_slot, df_budget,
-                within_sentence, doc_filter=doc_filter))
-        core, mode = strip_containing(pattern)
-        if mode is not None:
-            return _span_list(self.sentence_spans_containing(
-                core, negated=mode == "not_containing"))
-        pattern, ws = strip_within_sentence(pattern)
-        within_sentence = within_sentence or ws
-        from ..plans.cql import has_alts, parse_cql, strip_constraints
-
-        _core, _cons = strip_constraints(pattern)
-        _core, _ws2 = strip_within_sentence(_core)
-        if _cons or has_alts(parse_cql(_core)):
-            # constrained/disjunctive patterns only run on the
-            # distributed compile
-            return _span_list(self.pattern_spans_df(
-                pattern, max_terms_per_slot, df_budget, within_sentence))
-        cost, capped = self.pattern_cost(pattern, max_terms_per_slot)
-        if cost <= df_budget and not capped:
-            return self.pattern_hits(pattern, max_terms_per_slot,
-                                     within_sentence=within_sentence)
-        tokens = self._pattern_fallback_tokens(pattern, within_sentence)
-        if tokens is None:
-            return self.pattern_hits(pattern, max_terms_per_slot,
-                                     within_sentence=within_sentence)
-        return _span_list(compile_cql(
-            tokens, pattern, keep_terms=False,
-            within_sentence=within_sentence,
-            selective_broadcast=self._selective_broadcast_safe(pattern)))
+            out = out.join(self._meta_allowed_df(doc_filter), "doc_id",
+                           "left_semi")
+        return _span_list(out)
 
     def filtered_doc_ids(self, doc_filter: str):
         """Sorted doc_id array passing a SQL predicate over the stored
@@ -1569,12 +1394,55 @@ class IndexSearcher:
         return out, {"decoded_blocks": decoded, "total_blocks": total}
 
 
+def pattern_layers(pattern: str) -> set[str]:
+    """The forward layers a CQL pattern tests or constrains (the
+    virtual ``class`` attr reads the surface ``term`` layer) — what a
+    column-pruned token table must carry to run it distributed
+    (``arrays_zip`` blocks Catalyst pruning, so the request must be
+    explicit)."""
+    from ..plans.cql import (
+        DEFAULT_LAYERS,
+        effective_test,
+        parse_cql,
+        strip_constraints,
+        strip_within_sentence,
+    )
+
+    core, cons = strip_constraints(pattern)
+    attrs = {a for c in cons for a in (c.attr_a, c.attr_b)}
+    for it in parse_cql(strip_within_sentence(core)[0]):
+        groups = [getattr(it, "tests", ()), *(getattr(it, "alts", None)
+                                              or ())]
+        attrs |= {effective_test(t).attr for g in groups for t in g}
+    return {"term" if a == "class" else DEFAULT_LAYERS.get(a, a)
+            for a in attrs}
+
+
 def _span_list(spans: DataFrame) -> list[tuple[int, int, int]]:
     """Sorted ``(doc_id, start, end)`` rows of a span plan, through one
     Arrow batch exchange (``toPandas``)."""
     cols = ("doc_id", "start", "end")
     pdf = spans.select(*cols).orderBy(*cols).toPandas()
     return list(zip(*(pdf[c].astype(int).tolist() for c in cols)))
+
+
+def _flat_sorted(parts: list) -> tuple:
+    """One ``(doc, pos)`` position set from per-block pieces ordered by
+    first doc. Blocks of different segment partitions interleave their
+    doc ranges; a stable sort on doc restores ``(doc, pos)`` order (a
+    doc's positions come from one posting, ascending)."""
+    import numpy as np
+
+    from .positions import NONE
+
+    if not parts:
+        return NONE
+    doc = np.concatenate([d for d, _ in parts])
+    pos = np.concatenate([p for _, p in parts])
+    if doc.size > 1 and (doc[1:] < doc[:-1]).any():
+        order = np.argsort(doc, kind="stable")
+        doc, pos = doc[order], pos[order]
+    return doc, pos
 
 
 def _dfs(blocks: dict[str, list[dict]]) -> dict[str, int]:

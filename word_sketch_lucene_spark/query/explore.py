@@ -6,10 +6,12 @@ drives ``CollocateQueryHelper`` span searches per phase
 ``MultiSeedExplorer.java:80-200``). This module is that serving path
 over the engine's own artifacts:
 
-- window collocates of a head = term positional postings
-  (``_postings_with_positions``) + the term FORWARD array gather (the
-  stored-hit-text model the reference groups hits with);
-- collection frequencies = the term dictionary (``layer_cf``);
+- window collocates of a head = the head's flat ``(doc, pos)``
+  postings (``IndexSearcher._positions``) + ONE gather from the term
+  FORWARD arrays at every window position (the stored-hit-text model
+  the reference groups hits with), counted with one ``np.unique``;
+- collection frequencies = the term dictionary (``layer_cf``), ranked
+  by the sketch tier's shared tail (``query.sketch.rank_collocates``);
 - the cross-seed aggregates (shared counts, profiles, core collocates)
   run in plain Python over the per-seed lists — they are
   O(seeds × limit) rows, never corpus-sized.
@@ -24,7 +26,7 @@ from __future__ import annotations
 import math
 from collections import Counter
 
-from .sketch import _logdice, _round
+from .sketch import _logdice, collocate_counts, rank_collocates
 
 
 def index_collocates_for_head(
@@ -43,55 +45,23 @@ def index_collocates_for_head(
     (head-occurrence, window-token) pair counts once).
 
     Plan: one pruned postings fetch for the head's positions, one
-    forward-array gather per candidate doc (cached — the analog of the
-    reference reading stored hit text around each hit), dictionary
-    lookups for f(A)/f(B). No corpus scan.
+    forward-array gather at every window position (per-doc arrays
+    cached — the analog of the reference reading stored hit text
+    around each hit), dictionary lookups for f(A)/f(B). No corpus
+    scan.
     """
     import numpy as np
 
-    heads = searcher._postings_with_positions(head_term, "term")
-    if not heads:
-        return []
-    fw = searcher.forward_layer(sorted(heads), "term")
+    doc, pos = searcher._positions([head_term])[head_term]
     if ordered:
-        offsets = range(min_gap, max_gap + 1)
+        offsets = np.arange(min_gap, max_gap + 1)
     else:
-        offsets = [o for o in range(-max_gap, max_gap + 1)
-                   if abs(o) >= min_gap]
-    # gather every window token into ONE array, then a single
-    # unique/count pass — per-(doc, offset) np.unique calls on tiny
-    # arrays dominated the serving wall (~50k calls for a common head)
-    chunks: list[np.ndarray] = []
-    for d, hp in heads.items():
-        arr = fw.get(d)
-        if not arr:
-            continue
-        a = np.asarray(arr, dtype=object)
-        hp = np.asarray(hp, dtype=np.int64)
-        idx = (hp[:, None] + np.asarray(offsets, dtype=np.int64)).ravel()
-        sel = idx[(idx >= 0) & (idx < a.size)]
-        if sel.size:
-            chunks.append(a[sel])
-    if not chunks:
-        return []
-    vals, cnts = np.unique(np.concatenate(chunks), return_counts=True)
-    counts: Counter[str] = Counter(dict(zip(vals.tolist(), cnts.tolist())))
-    cf = searcher.layer_cf("term", sorted(counts) + [head_term])
-    head_cf = cf.get(head_term, 0)
-    if head_cf == 0:
-        return []
-    scored = []
-    for value, fab in counts.items():
-        fb = cf.get(value)
-        if fb is None:
-            continue
-        ld = _round(_logdice(fab, head_cf, fb), round_dp)
-        if ld < min_logdice:
-            continue
-        rf = _round(fab / head_cf, round_dp)
-        scored.append((value, fab, ld, rf))
-    scored.sort(key=lambda r: (-r[2], r[0]))
-    return scored[:limit]
+        offsets = np.array([o for o in range(-max_gap, max_gap + 1)
+                            if abs(o) >= min_gap], dtype=np.int64)
+    counts = collocate_counts(searcher, np.repeat(doc, offsets.size),
+                              (pos[:, None] + offsets).ravel(), "term")
+    return rank_collocates(searcher, "term", head_term, counts,
+                           min_logdice, limit, round_dp)
 
 
 def index_seed_collocates(

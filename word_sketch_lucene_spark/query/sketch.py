@@ -4,14 +4,20 @@ The reference serves every sketch from the prebuilt index — BCQL
 relation patterns run as Lucene span queries, hits group by the lemma
 forward index, logDice ranks the collocates
 (``SketchHandlers.java:127-143`` → ``CollocateQueryHelper``). This
-module reproduces that loop over the engine's own artifacts:
+module reproduces that loop over the engine's own artifacts, on the
+flat position kernel (:mod:`.positions`) — every step a whole-set
+array pass, none per candidate doc:
 
 - relation pattern → :meth:`IndexSearcher.pattern_matches` (per-layer
-  positional postings, full constraint-position capture);
-- collocate identity at the labeled position via the FORWARD layer
-  store (``build_conllu_index`` writes doc → lemma array);
-- stats from the layer term dictionary (``layer_cf``) — no corpus scan
-  anywhere.
+  positional postings as ``(doc, pos)`` arrays, full
+  constraint-position capture); a dual slop relation is two window
+  range queries of the collocate slot around the head's positions;
+- collocate identity: ONE gather from the FORWARD layer store
+  (``build_conllu_index`` writes doc → lemma array) at every matched
+  ``(doc, pos)``, counted with one ``np.unique``;
+- stats from the layer term dictionary (``layer_cf``) and one ranking
+  tail, :func:`rank_collocates`, shared by every index-served
+  collocate list — no corpus scan anywhere.
 
 The DataFrame path (``plans.relations.word_sketch_patterns``) is the
 batch/oracle-checked twin; a pytest pins rank-and-score identity
@@ -21,7 +27,8 @@ between the two.
 from __future__ import annotations
 
 import math
-from collections import Counter
+
+import numpy as np
 
 from ..plans.cql import (
     DEFAULT_LAYERS,
@@ -30,6 +37,14 @@ from ..plans.cql import (
     substitute_at_position,
 )
 from ..plans.relations import GrammarCatalog, RelationConfig, pattern_pos_group
+from .positions import (
+    POS,
+    common_docs,
+    keyed,
+    same_sentence,
+    take,
+    window,
+)
 
 
 def _logdice(fab: float, fa: float, fb: float) -> float:
@@ -39,6 +54,47 @@ def _logdice(fab: float, fa: float, fb: float) -> float:
 
 def _round(x: float, dp: int | None) -> float:
     return x if dp is None else round(x, dp)
+
+
+def rank_collocates(searcher, layer: str, head: str,
+                    counts: dict[str, int], min_logdice: float = 0.0,
+                    limit: int = 20, round_dp: int | None = None
+                    ) -> list[tuple[str, int, float, float]]:
+    """``[(colloc, pair_freq, logdice, rel_freq)]`` from collocate pair
+    counts: f(A)/f(B) from ``layer``'s dictionary, the min-score filter
+    on the UNROUNDED logDice, then rounding, then the (logdice desc,
+    colloc asc) order and ``limit`` — the plan tier's order of
+    operations (``score_collocate_pairs``, ``collocates_for_head``),
+    so boundary collocates agree between the tiers."""
+    if not counts:
+        return []
+    cf = searcher.layer_cf(layer, sorted(counts) + [head])
+    head_cf = cf.get(head, 0)
+    if head_cf == 0:
+        return []
+    scored = []
+    for value, fab in counts.items():
+        fb = cf.get(value)
+        if fb is None:
+            continue
+        ld = _logdice(fab, head_cf, fb)
+        if ld >= min_logdice:
+            scored.append((value, fab, _round(ld, round_dp),
+                           _round(fab / head_cf, round_dp)))
+    scored.sort(key=lambda r: (-r[2], r[0]))
+    return scored[:limit]
+
+
+def collocate_counts(searcher, doc: np.ndarray, pos: np.ndarray,
+                     layer: str) -> dict[str, int]:
+    """value → occurrences of ``layer``'s forward value at every
+    ``(doc[i], pos[i])``: one flat gather and one ``np.unique``.
+    Positions outside their doc's array count nothing."""
+    docs = np.unique(doc)
+    values, _ = take(searcher._forward_flat(docs, layer, object),
+                     np.searchsorted(docs, doc), pos)
+    values, counts = np.unique(values, return_counts=True)
+    return dict(zip(values.tolist(), counts.tolist()))
 
 
 def relation_collocates(
@@ -65,79 +121,55 @@ def relation_collocates(
     labels = {it.label for it in token_items if it.label}
     layer = DEFAULT_LAYERS[subst_attr]
     if rel.dual and "2" not in labels:
-        pairs = _dual_window_pairs(searcher, head, rel, layer,
-                                   max_terms_per_slot,
-                                   within_sentence=within_sentence)
+        doc, cp = _dual_window_pairs(searcher, head, rel, layer,
+                                     max_terms_per_slot,
+                                     within_sentence=within_sentence)
     else:
         hi, ci = rel.head_position - 1, rel.colloc_position - 1
         subst = substitute_at_position(items, head, rel.head_position,
                                        attr=subst_attr)
         matches = searcher.pattern_matches(subst, max_terms_per_slot,
                                            within_sentence=within_sentence)
-        pairs = {(d, row[hi], row[ci]) for d, row in matches}
-    if not pairs:
-        return []
-    fw = searcher.forward_layer(sorted({d for d, _, _ in pairs}),
-                                DEFAULT_LAYERS[colloc_attr])
-    counts: Counter[str] = Counter()
-    for d, _hp, cp in pairs:
-        arr = fw.get(d)
-        if arr is not None and 0 <= cp < len(arr):
-            counts[arr[cp]] += 1
-    if not counts:
-        return []
-    cf = searcher.layer_cf(DEFAULT_LAYERS[colloc_attr],
-                           sorted(counts) + [head])
-    head_cf = cf.get(head, 0)
-    if head_cf == 0:
-        return []
-    scored = []
-    for value, fab in counts.items():
-        fb = cf.get(value)
-        if fb is None:
-            continue
-        # filter on the UNROUNDED score, round for output — the plan
-        # tier's (score_collocate_pairs) order of operations
-        ld = _logdice(fab, head_cf, fb)
-        if ld < min_logdice:
-            continue
-        rf = _round(fab / head_cf, round_dp)
-        scored.append((value, fab, _round(ld, round_dp), rf))
-    scored.sort(key=lambda r: (-r[2], r[0]))
-    return scored[:limit]
+        if not matches:
+            return []
+        doc, rows = zip(*matches)
+        rows = np.array(rows, dtype=np.int64)
+        doc, _hp, cp = np.unique(
+            np.column_stack([doc, rows[:, hi], rows[:, ci]]), axis=0).T
+    return rank_collocates(
+        searcher, DEFAULT_LAYERS[colloc_attr], head,
+        collocate_counts(searcher, doc, cp, DEFAULT_LAYERS[colloc_attr]),
+        min_logdice, limit, round_dp)
 
 
 def _dual_window_pairs(searcher, head: str, rel: RelationConfig,
                        head_layer: str, max_terms_per_slot: int,
-                       within_sentence: bool = False) -> set:
+                       within_sentence: bool = False):
     """Dual single-position relation: collocate constraint within
     ``default_slop`` tokens of the head, either side (the DataFrame
-    twin's slop-window branch)."""
-    import numpy as np
-
+    twin's slop-window branch) — two window range queries of the
+    collocate slot's keys around every head position. Returns the
+    ``(doc, colloc_pos)`` arrays of the distinct pairs."""
     from ..plans.cql import _steps
 
     items = [it for it in parse_cql(rel.pattern)
              if isinstance(it, TokenItem)]
     citem = items[rel.head_position - 1]
-    heads = searcher._postings_with_positions(head, head_layer)
+    heads = searcher._positions([head], head_layer)[head]
     (allowed, _ban), = searcher._slot_maps(
         _steps([citem]), max_terms_per_slot)
-    docs = sorted(set(heads) & set(allowed))
-    sents = (searcher.forward_layer(docs, "sent_no")
-             if within_sentence else None)
-    pairs = set()
-    for d in docs:
-        hp = np.asarray(heads[d], dtype=np.int64)
-        cp = np.asarray(allowed[d], dtype=np.int64)
-        diff = np.abs(cp[None, :] - hp[:, None])
-        ok = (diff >= 1) & (diff <= rel.default_slop)
-        if within_sentence and len(sents.get(d, [])):
-            s = np.asarray(sents[d], dtype=np.int64)
-            ok &= s[hp][:, None] == s[cp][None, :]
-        ii, jj = np.nonzero(ok)
-        pairs.update((d, int(hp[i]), int(cp[j])) for i, j in zip(ii, jj))
-    return pairs
+    docs = common_docs([heads, allowed])
+    hk, ck = keyed(heads, docs), keyed(allowed, docs)
+    slop = rel.default_slop
+    (lrow, lk), (rrow, rk) = (window(hk, ck, -slop, -1),
+                              window(hk, ck, 1, slop))
+    hk, ck = hk[np.concatenate([lrow, rrow])], np.concatenate([lk, rk])
+    rank, hp, cp = ck >> 32, hk & POS, ck & POS
+    if within_sentence and rank.size:
+        keep = same_sentence(searcher._forward_flat(docs, "sent_no"),
+                             rank, hp, cp)
+        rank, cp = rank[keep], cp[keep]
+    return docs[rank], cp
 
 
 def layer_stats_df(searcher, layer: str):
@@ -151,6 +183,26 @@ def layer_stats_df(searcher, layer: str):
     searcher._require_layers()
     return (searcher.layer_stats.filter(F.col("layer") == layer)
             .select(F.col("value").alias("term"), "cf"))
+
+
+def catalog_tokens(searcher, rels, subst_attr: str, colloc_attr: str,
+                   within_sentence: bool):
+    """The forward token table a relation fan-out runs on, pruned to
+    the layers its patterns test or constrain plus the substituted and
+    captured layers (and ``sent_no`` when sentence-bounded)."""
+    from .engine import pattern_layers
+
+    need = {"term", DEFAULT_LAYERS[subst_attr], DEFAULT_LAYERS[colloc_attr]}
+    if within_sentence:
+        need.add("sent_no")
+    for rel in rels:
+        need |= pattern_layers(rel.pattern)
+    tokens = searcher.forward_token_table(columns=need)
+    if tokens is None or DEFAULT_LAYERS[subst_attr] not in tokens.columns:
+        raise NotImplementedError(
+            "index has no forward_layers store — build with "
+            "index.build.build_conllu_index(store_docstore=True)")
+    return tokens
 
 
 def index_word_sketch_distributed(
@@ -185,39 +237,13 @@ def index_word_sketch_distributed(
     cold/huge-head case executor-side (the scale split the reference
     never needs at one node, ``BlackLabQueryExecutor.java:117-144``).
     """
-    from ..plans.cql import effective_test, strip_constraints
-    from ..plans.relations import pattern_pos_group, word_sketch_patterns
+    from ..plans.relations import word_sketch_patterns
 
-    # request only the layer arrays this fan-out tests/captures — the
-    # posexplode consumes whole arrays, so an unrequested layer is a
-    # scan column saved (arrays_zip blocks Catalyst pruning)
-    need = {"term", DEFAULT_LAYERS[subst_attr], DEFAULT_LAYERS[colloc_attr]}
-    if within_sentence:
-        need.add("sent_no")
-
-    def _need_attr(a: str) -> None:
-        need.add("term" if a == "class" else DEFAULT_LAYERS.get(a, a))
-
-    for rel in catalog.relations:
-        if not rel.pattern or rel.type not in relation_types:
-            continue
-        if head_pos is not None and pattern_pos_group(rel) != head_pos:
-            continue
-        core, cons = strip_constraints(rel.pattern)
-        for c in cons:
-            _need_attr(c.attr_a)
-            _need_attr(c.attr_b)
-        for it in parse_cql(core):
-            for t in getattr(it, "tests", ()):
-                _need_attr(effective_test(t).attr)
-            for group in getattr(it, "alts", None) or ():
-                for t in group:
-                    _need_attr(effective_test(t).attr)
-    tokens = searcher.forward_token_table(columns=need)
-    if tokens is None or DEFAULT_LAYERS[subst_attr] not in tokens.columns:
-        raise NotImplementedError(
-            "index has no forward_layers store — build with "
-            "index.build.build_conllu_index(store_docstore=True)")
+    rels = [r for r in catalog.relations
+            if r.pattern and r.type in relation_types
+            and (head_pos is None or pattern_pos_group(r) == head_pos)]
+    tokens = catalog_tokens(searcher, rels, subst_attr, colloc_attr,
+                            within_sentence)
     stats = layer_stats_df(searcher, DEFAULT_LAYERS[colloc_attr])
     return word_sketch_patterns(
         tokens, stats, head, catalog, head_pos=head_pos,
@@ -264,36 +290,18 @@ def index_relation_collocates(
         # plan (per-doc forward pulls would cost O(corpus) driver-side)
         from pyspark.sql import functions as F
 
-        counts = Counter({r["colloc"]: r["n"] for r in
-                          searcher.relation_join_df(rq, dep_capture=colloc_attr)
-                          .groupBy("colloc")
-                          .agg(F.count("*").alias("n")).collect()})
+        counts = {r["colloc"]: r["n"] for r in
+                  searcher.relation_join_df(rq, dep_capture=colloc_attr)
+                  .groupBy("colloc").agg(F.count("*").alias("n"))
+                  .collect()}
     else:
         matches = searcher.relation_matches(rq, max_terms_per_slot)
-        fw = searcher.forward_layer(sorted({d for d, _, _ in matches}),
-                                    layer)
-        counts = Counter()
-        for d, _gp, dp in matches:
-            arr = fw.get(d)
-            if arr is not None and 0 <= dp < len(arr):
-                counts[arr[dp]] += 1
-    if not counts:
-        return []
-    cf = searcher.layer_cf(layer, sorted(counts) + [head])
-    head_cf = cf.get(head, 0)
-    if head_cf == 0:
-        return []
-    scored = []
-    for value, fab in counts.items():
-        fb = cf.get(value)
-        if fb is None:
-            continue
-        ld = _logdice(fab, head_cf, fb)
-        if ld < min_logdice:
-            continue
-        scored.append((value, fab, _round(ld, round_dp)))
-    scored.sort(key=lambda r: (-r[2], r[0]))
-    return scored[:limit]
+        if not matches:
+            return []
+        doc, _gp, dp = np.array(matches, dtype=np.int64).T
+        counts = collocate_counts(searcher, doc, dp, layer)
+    return [r[:3] for r in rank_collocates(searcher, layer, head, counts,
+                                           min_logdice, limit, round_dp)]
 
 
 def index_word_sketch(
