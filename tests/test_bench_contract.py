@@ -5,7 +5,9 @@ derives ``query.engine.prefetch_calls`` / ``block_rows_fetched`` from
 the ``prefetch`` span and the searcher's ``_block_cache`` view, and the
 sketch workload's ``query.engine.pattern_matches_ms`` /
 ``pattern_hits_ms`` / ``phrase_ms`` from the spans of the methods of the
-same names. A refactor that renames, moves or bypasses any of these
+same names. The ``index.build.*_s`` stage times come from the stage
+manifests' ``committed_at``, which stay after the tokens stage's files
+are released. A refactor that renames, moves or bypasses any of these
 would silently zero those metrics; these tests pin them on tiny
 indexes.
 """
@@ -71,3 +73,27 @@ def test_tracer_attributes_sketch_cql_and_phrase_spans(spark, conllu_index):
     for name in ("index_word_sketch", "pattern_matches", "pattern_hits",
                  "phrase_hits"):
         assert tracer.of(name), name
+
+
+def test_build_stage_times_survive_token_release(spark, docs_small,
+                                                 tmp_path):
+    """A traced build_index still yields every stage time from the
+    manifests, and ``index.build.tokens_bytes`` measures what stays on
+    disk: the tokens stage's manifest only."""
+    import spans
+
+    from word_sketch_lucene_spark.index import build
+
+    root = tmp_path / "idx"
+    tracer = spans.Tracer()
+    tracer.install()
+    try:
+        build.build_index(spark, docs_small.filter("doc_id < 60"), root,
+                          doc_salt=1, n_partitions=2)
+    finally:
+        tracer.uninstall()
+    m = spans.layer_metrics(tracer, None, 0)
+    for stage in ("tokens", "segments", "doc_lens", "docstore"):
+        assert m[f"index.build.{stage}_s"] > 0, stage
+    assert m["index.build.tokens_bytes"] \
+        == (root / "tokens" / "_manifest.json").stat().st_size

@@ -6,7 +6,6 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from word_sketch_lucene_spark.functions.codec import (
-    decode_positions,
     position_gaps,
     positions_flat,
     vbyte_decode,
@@ -57,12 +56,11 @@ def encode_positions(pls) -> bytes:
 def _check_roundtrip(pls):
     tfs = np.array([len(p) for p in pls], dtype=np.int64)
     buf = encode_positions(pls)
-    dec = decode_positions(buf, tfs)
-    ref = _reference_decode(buf, tfs)
-    assert len(dec) == len(ref) == len(pls)
-    for a, b, c in zip(pls, dec, ref):
-        assert np.array_equal(a, b) and np.array_equal(b, c)
     flat = positions_flat(buf, tfs)
+    ref = _reference_decode(buf, tfs)
+    assert len(ref) == len(pls)
+    for a, b in zip(pls, ref):
+        assert np.array_equal(a, b)
     assert np.array_equal(flat, np.concatenate(pls) if pls else flat[:0])
 
 
@@ -97,11 +95,10 @@ def test_positions_edge_cases():
 
 def test_positions_empty():
     assert encode_positions([]) == b""
-    assert decode_positions(b"", []) == []
     assert positions_flat(b"", []).size == 0
 
 
 def test_positions_tfs_mismatch_rejected():
     buf = encode_positions([np.array([1, 2, 3])])
     with pytest.raises(ValueError, match="tfs sum"):
-        decode_positions(buf, [2])
+        positions_flat(buf, [2])

@@ -2,21 +2,26 @@
 derives (doc tokens from stored text, case-folded CoNLL-U layers from
 the case-preserved ones) equals the stored copy it replaced. Posting
 stores write only what their readers read: the layer postings carry no
-impacts, and payload columns carry no parquet statistics."""
+impacts, and payload columns carry no parquet statistics. The root
+keeps only what readers read: the tokens stage's files are released
+once every stage has committed, and only its manifest stays."""
 
 from __future__ import annotations
 
 import json
+import shutil
 from pathlib import Path
 
 import pyarrow.parquet as pq
 import pytest
 
 from word_sketch_lucene_spark.functions.tokenize import tokens_expr
+from word_sketch_lucene_spark.index import build
 from word_sketch_lucene_spark.index.build import (
     INDEX_FORMAT,
     STATS_FILE,
     build_conllu_index,
+    build_index,
 )
 from word_sketch_lucene_spark.index.merge import (
     add_conllu_documents,
@@ -252,6 +257,14 @@ def test_posting_layouts_and_payload_statistics(spark, index_small,
             assert st[c] == {True}, (store, c)
     st = _stats_set(index_small / "docstore")
     assert st["text"] == {False} and st["doc_id"] == {True}
+    # forward layers: every array's leaf column drops its statistics
+    st = _stats_set(root / "forward_layers")
+    arrays = {c for c in st if c.endswith(".list.element")}
+    assert {"upos.list.element", "word_cs.list.element",
+            "sent_no.list.element", "head.list.element"} <= arrays
+    for c in arrays:
+        assert st[c] == {False}, c
+    assert st["doc_id"] == {True}
 
 
 def _layer_positions(spark, root: Path) -> set:
@@ -298,3 +311,96 @@ def test_add_conllu_documents_layers_equal_rebuild(spark, tmp_path):
           spark.read.parquet(str(merged / "layer_stats")).collect()}
     assert ls == {(r["layer"], r["value"], r["df"], r["cf"]) for r in
                   spark.read.parquet(str(full / "layer_stats")).collect()}
+
+
+def _files(root: Path) -> dict[str, int]:
+    """Relative path → mtime_ns of every file under ``root``."""
+    return {str(f.relative_to(root)): f.stat().st_mtime_ns
+            for f in sorted(root.rglob("*")) if f.is_file()}
+
+
+def _tokens_left(root: Path) -> list[str]:
+    return sorted(f.name for f in (root / "tokens").iterdir())
+
+
+def _manifest(root: Path, stage: str) -> dict:
+    return json.loads((root / stage / "_manifest.json").read_text())
+
+
+def _decoded(spark, root: Path) -> tuple:
+    """What a built root serves: its term postings as token rows, its
+    doc lengths and its stats."""
+    toks = decode_segments_to_tokens(
+        spark.read.parquet(str(root / "segments")))
+    return (sorted(tuple(r) for r in toks.collect()),
+            sorted(tuple(r) for r in
+                   spark.read.parquet(str(root / "doc_lens")).collect()),
+            json.loads((root / STATS_FILE).read_text()))
+
+
+def test_tokens_released_after_build(index_small, conllu_root):
+    """After build_index and build_conllu_index, the tokens stage
+    holds only its manifest, still marked complete."""
+    root, _ = conllu_root
+    for r in (index_small, root):
+        assert _tokens_left(r) == ["_manifest.json"], r
+        assert _manifest(r, "tokens")["status"] == "complete"
+
+
+def test_conllu_rerun_is_a_no_op(spark, conllu_root):
+    """A second build_conllu_index over a complete root rewrites
+    nothing: doc_names and forward_layers have manifests too."""
+    root, parsed = conllu_root
+    before = _files(root)
+    stamps = {s: _manifest(root, s)["committed_at"]
+              for s in ("doc_names", "forward_layers", "tokens")}
+    build_conllu_index(spark, parsed, root, doc_salt=1, n_partitions=2)
+    assert _files(root) == before
+    assert {s: _manifest(root, s)["committed_at"] for s in stamps} == stamps
+
+
+def test_interrupted_build_resumes_from_committed_tokens(
+        spark, docs_small, tmp_path, monkeypatch):
+    """A build whose segments stage fails keeps its tokens files; the
+    re-run reuses them (the tokens manifest is not re-committed),
+    releases them at the end and serves what a clean build serves."""
+    pages = docs_small.filter("doc_id < 120").select("doc_id", "text")
+    kw = dict(doc_salt=2, n_partitions=4)
+    clean = tmp_path / "clean"
+    build_index(spark, pages, clean, **kw)
+
+    def fail(*a, **k):
+        raise RuntimeError("segments interrupted")
+
+    root = tmp_path / "resumed"
+    with monkeypatch.context() as m:
+        m.setattr(build, "encode_postings", fail)
+        with pytest.raises(RuntimeError, match="segments interrupted"):
+            build_index(spark, pages, root, **kw)
+    assert any((root / "tokens").glob("part-*"))
+    assert not (root / "segments" / "_manifest.json").exists()
+    stamp = _manifest(root, "tokens")["committed_at"]
+    build_index(spark, pages, root, **kw)
+    assert _manifest(root, "tokens")["committed_at"] == stamp
+    assert _tokens_left(root) == ["_manifest.json"]
+    assert _decoded(spark, root) == _decoded(spark, clean)
+
+
+def test_removed_segments_regenerate_tokens(spark, docs_small, tmp_path):
+    """Removing segments from a complete root and re-running re-runs
+    the tokens stage, rebuilds segments and serves the same results."""
+    pages = docs_small.filter("doc_id < 120").select("doc_id", "text")
+    root = tmp_path / "idx"
+    build_index(spark, pages, root, doc_salt=2, n_partitions=4)
+    queries = (["spark", "join"], ["data"], ["table", "scan", "query"])
+    want = [IndexSearcher(spark, root).search(q, k=10)[0] for q in queries]
+    assert all(want)
+    served = _decoded(spark, root)
+    stamp = _manifest(root, "tokens")["committed_at"]
+    shutil.rmtree(root / "segments")
+    build_index(spark, pages, root, doc_salt=2, n_partitions=4)
+    assert _manifest(root, "tokens")["committed_at"] > stamp
+    assert _tokens_left(root) == ["_manifest.json"]
+    assert _decoded(spark, root) == served
+    assert [IndexSearcher(spark, root).search(q, k=10)[0]
+            for q in queries] == want

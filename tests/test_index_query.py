@@ -93,7 +93,7 @@ def test_positions_stored_correctly(spark, index_small, oracle):
     """Decode one term's position lists from segments and compare."""
     import numpy as np
 
-    from word_sketch_lucene_spark.functions.codec import decode_positions, vbyte_decode
+    from word_sketch_lucene_spark.functions.codec import positions_flat, vbyte_decode
 
     term = "spark"
     rows = (spark.read.parquet(str(index_small / "segments"))
@@ -104,7 +104,8 @@ def test_positions_stored_correctly(spark, index_small, oracle):
         docs = gaps.cumsum() + r["first_doc"]
         tfs = vbyte_decode(bytes(r["tfs_vb"]))
         assert tfs.size == r["n"]
-        pls = decode_positions(bytes(r["pos_vb"]), tfs)
+        pls = np.split(positions_flat(bytes(r["pos_vb"]), tfs),
+                       np.cumsum(tfs)[:-1])
         for d, pl in zip(docs, pls):
             seen[int(d)] = list(pl)
     assert seen == {d: pl for d, pl in oracle.positions[term].items()}

@@ -6,7 +6,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from word_sketch_lucene_spark.functions.codec import decode_positions, vbyte_decode
+from word_sketch_lucene_spark.functions.codec import positions_flat, vbyte_decode
 from word_sketch_lucene_spark.index.build import build_index
 from word_sketch_lucene_spark.query.bm25 import BM25Oracle
 from word_sketch_lucene_spark.sources.pages import generate_pages
@@ -32,7 +32,8 @@ def test_full_index_decode_matches_oracle(spark, zipf_setup):
         docs = gaps.cumsum() + r["first_doc"]
         tfs = vbyte_decode(bytes(r["tfs_vb"])).astype("int64")
         dls = vbyte_decode(bytes(r["dls_vb"])).astype("int64")
-        pls = decode_positions(bytes(r["pos_vb"]), tfs)
+        pls = np.split(positions_flat(bytes(r["pos_vb"]), tfs),
+                       np.cumsum(tfs)[:-1])
         assert r["n"] == docs.size == tfs.size == dls.size == len(pls)
         assert r["first_doc"] == docs[0] and r["last_doc"] == docs[-1]
         assert np.all(np.diff(docs) > 0)  # strictly ascending within block...

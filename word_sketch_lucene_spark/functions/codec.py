@@ -106,13 +106,3 @@ def positions_flat(buf: bytes, tfs: np.ndarray) -> np.ndarray:
         raise ValueError(f"positions stream holds {gaps.size} values, "
                          f"tfs sum to {int(tfs.sum())}")
     return segmented_cumsum(gaps.astype(np.int64), tfs)
-
-
-def decode_positions(buf: bytes, tfs: np.ndarray) -> list[np.ndarray]:
-    """Decode a block's ``pos_vb`` (``vbyte_encode(position_gaps(…))``)
-    → list of ascending position arrays, one per posting (``tfs``: the
-    block's decoded ``tfs_vb``)."""
-    tfs = np.asarray(tfs, dtype=np.int64)
-    if tfs.size == 0:
-        return []
-    return np.split(positions_flat(buf, tfs), np.cumsum(tfs)[:-1])

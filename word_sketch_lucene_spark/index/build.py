@@ -8,9 +8,13 @@ segments). Stage map:
 1. **tokens** — Arrow-vectorized tokenizer UDF (U1,
    ``tag_with_stanza.py`` analog) → exploded ``(doc_id, pos, term,
    dl)`` materialized as a compressed parquet stage (columnar,
-   spill-free, the natural crash-resume point). ``dl`` is computed
-   in-row during tokenization, so nothing downstream ever joins a
-   doc-length table.
+   spill-free): the crash-resume point while the build runs. ``dl``
+   is computed in-row during tokenization, so nothing downstream ever
+   joins a doc-length table. No reader reads it: once every stage has
+   committed, its data files are deleted and only its manifest stays
+   (as in the reference, the finished index keeps no token stream). A
+   later run that must rebuild ``segments`` or ``doc_lens`` re-runs
+   this stage first.
 2. **segments** — ONE *salted* shuffle of the flat token columns,
    keyed ``(term, pmod(hash(doc_id), doc_salt))`` (explicit skew
    defense: a head term's postings split across ``doc_salt`` segments,
@@ -37,11 +41,12 @@ segments). Stage map:
 
 Every stage commits a :class:`~.manifest.StageManifest`; re-running
 ``build_index`` with identical inputs+config skips completed stages
-(resumable builds, north rule). The posting stores and the docstore
-are written through :func:`write_store`, which keeps parquet
-statistics off their payload columns (VByte blobs, stored text):
-nothing filters on them, and their min/max would only fatten each
-footer.
+(resumable builds, north rule) and reads the tokens stage only when a
+stage that scans it is incomplete. The posting stores, the docstore
+and the forward layers are written through :func:`write_store`, which
+keeps parquet statistics off their payload columns (VByte blobs,
+stored text, array elements): nothing filters on them, and their
+min/max would only fatten each footer.
 """
 
 from __future__ import annotations
@@ -53,10 +58,16 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType
 
 from ..functions.scoring import B, K1
 from ..functions.tokenize import explode_tokens
-from .manifest import StageManifest, config_fingerprint, input_fingerprint
+from .manifest import (
+    MANIFEST_NAME,
+    StageManifest,
+    config_fingerprint,
+    input_fingerprint,
+)
 from .segments import BLOCK_SIZE, encode_postings
 
 STATS_FILE = "stats.json"
@@ -73,13 +84,21 @@ PAYLOAD_COLUMNS = ("docs_vb", "tfs_vb", "dls_vb", "pos_vb", "text")
 
 def write_store(df: DataFrame, path: str | Path) -> None:
     """Overwrite one index store at ``path``, with parquet column
-    statistics disabled on its :data:`PAYLOAD_COLUMNS` (``term``,
-    ``doc_id`` and ``first_doc``/``last_doc`` keep theirs, so pushdown
-    is unchanged)."""
+    statistics disabled on its :data:`PAYLOAD_COLUMNS` and on the
+    elements of its array columns (the forward layers: no reader
+    filters on a list element). ``term``, ``doc_id`` and
+    ``first_doc``/``last_doc`` keep theirs, so pushdown is unchanged.
+    Parquet keys the option by leaf path, so an array column's key is
+    ``<col>.list.element``; its top-level name would be ignored."""
     w = df.write.mode("overwrite")
-    for c in PAYLOAD_COLUMNS:
-        if c in df.columns:
-            w = w.option(f"parquet.column.statistics.enabled#{c}", "false")
+    for f in df.schema.fields:
+        if f.name in PAYLOAD_COLUMNS:
+            leaf = f.name
+        elif isinstance(f.dataType, ArrayType):
+            leaf = f"{f.name}.list.element"
+        else:
+            continue
+        w = w.option(f"parquet.column.statistics.enabled#{leaf}", "false")
     w.parquet(str(path))
 
 
@@ -159,6 +178,8 @@ class IndexPaths:
         self.layer_stats = self.root / "layer_stats"
         self.docstore = self.root / "docstore"
         self.doc_meta = self.root / "doc_meta"
+        self.forward_layers = self.root / "forward_layers"
+        self.doc_names = self.root / "doc_names"
         self.stats = self.root / STATS_FILE
 
 
@@ -223,11 +244,11 @@ def build_layer_postings(
             .select(F.concat_ws(":", "layer", "value").alias("term"),
                     "doc_id", "pos")
         )
-        # size the shuffle from the surface tokens stage when present
+        # size the shuffle from the surface segments when present
         # (the melt multiplies rows by |layers|)
-        lay_parts = (_adaptive_parts(spark, nparts, paths.tokens,
+        lay_parts = (_adaptive_parts(spark, nparts, paths.segments,
                                      scale=float(len(layers)))
-                     if paths.tokens.exists() else nparts)
+                     if paths.segments.exists() else nparts)
         write_store(encode_postings(melted, lay_parts, doc_salt=doc_salt,
                                     block_size=block_size, impacts=False),
                     paths.layers)
@@ -280,17 +301,27 @@ def build_conllu_index(
 
     paths = IndexPaths(out_dir)
     paths.root.mkdir(parents=True, exist_ok=True)
+    # doc_names and forward_layers are stages too: keyed like the
+    # others, so a re-run of a complete build rewrites nothing
+    config = {"id_offset": id_offset, "format": INDEX_FORMAT}
+    cfg_fp = config_fingerprint(config)
+    inputs_fp = input_fingerprint(input_paths) if input_paths else "unspecified"
     if dict(parsed.dtypes)["doc_id"] != "bigint":
         from ..sources.pages import assign_doc_ids
 
-        names = (parsed.select(F.col("doc_id").alias("doc_name"))
-                 .distinct())
-        mapping = assign_doc_ids(names, "doc_id", order_col="doc_name")
-        if id_offset:
-            mapping = mapping.withColumn(
-                "doc_id", F.col("doc_id") + F.lit(id_offset))
-        mapping.write.mode("overwrite").parquet(str(paths.root / "doc_names"))
-        mapping = spark.read.parquet(str(paths.root / "doc_names"))
+        st_names = StageManifest(paths.doc_names, "doc_names")
+        if not st_names.is_complete(inputs_fp, cfg_fp):
+            names = (parsed.select(F.col("doc_id").alias("doc_name"))
+                     .distinct())
+            mapping = assign_doc_ids(names, "doc_id", order_col="doc_name")
+            if id_offset:
+                mapping = mapping.withColumn(
+                    "doc_id", F.col("doc_id") + F.lit(id_offset))
+            mapping.write.mode("overwrite").parquet(str(paths.doc_names))
+            st_names.commit(inputs_fp, cfg_fp,
+                            lineage={"inputs": input_paths or [],
+                                     "config": config})
+        mapping = spark.read.parquet(str(paths.doc_names))
         parsed = (parsed.withColumnRenamed("doc_id", "doc_name")
                   .join(mapping, "doc_name").drop("doc_name"))
     elif id_offset:
@@ -335,11 +366,16 @@ def build_conllu_index(
                                    "word_cs", "lemma_cs", "sent_no",
                                    "token_id", "head")
                        if c in lt.columns]
-            (
-                lt.groupBy("doc_id").agg(*[_arr(c) for c in fw_cols])
-                .write.mode("overwrite")
-                .parquet(str(paths.root / "forward_layers"))
-            )
+            fw_config = {**config, "columns": fw_cols}
+            fw_fp = config_fingerprint(fw_config)
+            st_fw = StageManifest(paths.forward_layers, "forward_layers")
+            if not st_fw.is_complete(inputs_fp, fw_fp):
+                write_store(
+                    lt.groupBy("doc_id").agg(*[_arr(c) for c in fw_cols]),
+                    paths.forward_layers)
+                st_fw.commit(inputs_fp, fw_fp,
+                             lineage={"inputs": input_paths or [],
+                                      "config": fw_config})
     finally:
         lt.unpersist()
     if colloc_catalog is not None:
@@ -414,8 +450,15 @@ def build_index(
     inputs_fp = input_fingerprint(input_paths) if input_paths else "unspecified"
 
     # ---- stage: tokens ------------------------------------------------
+    # read only while a stage that scans it is incomplete; rerun when
+    # its files were released after an earlier complete build
     st_tok = StageManifest(paths.tokens, "tokens")
-    if not st_tok.is_complete(inputs_fp, cfg_fp):
+    need_tokens = not all(
+        StageManifest(d, s).is_complete(inputs_fp, cfg_fp)
+        for d, s in ((paths.segments, "segments"),
+                     (paths.doc_lens, "doc_lens")))
+    if need_tokens and not (st_tok.is_complete(inputs_fp, cfg_fp)
+                            and any(paths.tokens.glob("part-*"))):
         if pre_tokenized is not None:
             src = pre_tokenized
             if "dl" not in src.columns:
@@ -434,7 +477,7 @@ def build_index(
         src.write.mode("overwrite").parquet(str(paths.tokens))
         st_tok.commit(inputs_fp, cfg_fp,
                       lineage={"inputs": input_paths or [], "config": config})
-    tokens = spark.read.parquet(str(paths.tokens))
+    tokens = spark.read.parquet(str(paths.tokens)) if need_tokens else None
 
     # ---- stages: segments ∥ doc_lens+corpus_stats ---------------------
     def _stage_segments() -> None:
@@ -569,5 +612,10 @@ def build_index(
         futs = [pool.submit(j) for j in jobs]
         for f in futs:
             f.result()
+    # every stage has committed: release the token files, keep the
+    # manifest (a re-run stays a no-op, lineage says the stage ran)
+    for f in paths.tokens.glob("*"):
+        if f.name != MANIFEST_NAME:
+            f.unlink()
     stats = json.loads(paths.stats.read_text())
     return stats

@@ -35,7 +35,7 @@ Columns:
 - ``pos_vb``: per-posting position lists as Δpos only (Lucene
   ``.pos``): each posting's first position is absolute, the rest are
   gaps, and the count is NOT repeated — a reader takes posting i's
-  list length from ``tfs_vb`` (:func:`..functions.codec.decode_positions`).
+  list length from ``tfs_vb`` (:func:`..functions.codec.positions_flat`).
   A separate column, so pure-BM25 scans never read it (column pruning).
 
 Shuffle design (the scale-critical decision): the kernel consumes RAW

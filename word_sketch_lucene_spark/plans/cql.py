@@ -705,7 +705,9 @@ def compile_cql(
                    (F.col(f"p{i}") >= prev_p + st.lo) & \
                    (F.col(f"p{i}") <= prev_p + st.hi)
         if within_sentence:
-            cond = cond & (F.col(f"s{i}") == F.col("s0"))
+            # null-safe: a doc without a stored sentence array (nulls
+            # after arrays_zip) is one flat stream, as in the kernel
+            cond = cond & F.col(f"s{i}").eqNullSafe(F.col("s0"))
         if chain_selective:
             # the chained result is bounded by the earlier selective
             # slot (× window width) — keep it the broadcast side
@@ -878,7 +880,7 @@ def _compile_dp(
             cond = (F.col(f"_d{j}") == F.col("doc_id")) & \
                    (p >= F.col("_lo")) & (p <= F.col("_hi"))
             if within_sentence:
-                cond = cond & (F.col(f"_s{j}") == F.col("_sent"))
+                cond = cond & F.col(f"_s{j}").eqNullSafe(F.col("_sent"))
             joined = (cur.join(F.broadcast(side), cond)
                       if _dp_selective(it, selective_broadcast)
                       else cur.join(side, cond))
@@ -919,7 +921,7 @@ def _compile_dp(
         cond = (F.col(f"_d{j}") == F.col("doc_id")) & (A <= B) & \
                (qlo <= qhi)
         if within_sentence:
-            cond = cond & (F.col(f"_s{j}") == F.col("_sent"))
+            cond = cond & F.col(f"_s{j}").eqNullSafe(F.col("_sent"))
         return cur.join(runs, cond).select(
             "doc_id", "start",
             (qlo - 1).alias("_elo"), (qhi - 1).alias("_ehi"),
