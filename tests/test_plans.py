@@ -249,7 +249,9 @@ def test_extended_fold_identity_with_compile_branches(spark, docs_small,
     cross-attr alts on mid and end slots, inter-slot constraints,
     trinary 3: slots) must be
     ROW-IDENTICAL to the per-relation compile_cql branches it
-    replaced — same fan-out, same counting unit, same scores."""
+    replaced — same fan-out, same counting unit, same scores — both in
+    word_sketch_patterns and in word_sketch, which builds its pattern
+    pairs the same way."""
     from word_sketch_lucene_spark.caching import release_all
     from word_sketch_lucene_spark.plans import relations as R
     from word_sketch_lucene_spark.plans.wsdef import parse_wsdef
@@ -300,14 +302,28 @@ def test_extended_fold_identity_with_compile_branches(spark, docs_small,
     stats = toks.groupBy(F.col("lemma").alias("term")).agg(
         F.count("*").alias("cf"))
 
+    # word_sketch folds the default catalog's pattern relations (a
+    # []{0,1} gap, fixed/negated word mids, a class="X" mid) through
+    # the same pair builder, beside its window-join class relations
+    surface = explode_tokens(docs_small)
+    surface_stats = term_stats(surface)
+
     def run():
         df = R.word_sketch_patterns(toks, stats, "table", cat,
                                     limit_per_relation=10, round_dp=4)
-        rows = sorted(tuple(r) for r in df.collect())
+        ws = R.word_sketch(surface, surface_stats, "table",
+                           R.GrammarCatalog.load(),
+                           limit_per_relation=10, round_dp=4)
+        rows = [sorted(tuple(r) for r in d.collect()) for d in (df, ws)]
         release_all()
         return rows
 
     folded = run()
     monkeypatch.setattr(R, "_extended_fold_shape", lambda *a, **k: None)
+    monkeypatch.setattr(R, "_two_slot_shape", lambda *a, **k: None)
     unfolded = run()
-    assert folded == unfolded and len(folded) > 0
+    assert folded == unfolded
+    assert all(len(rows) > 0 for rows in folded)
+    pattern_ids = {r.id for r in R.GrammarCatalog.load().surface()
+                   if r.pattern}
+    assert any(r[0] in pattern_ids for r in folded[1])

@@ -83,6 +83,40 @@ def test_dual_mirror_semantics(spark):
     assert not any(r == "det_noun" for r, _ in rows)
 
 
+def test_word_sketch_dual_pattern_relation(spark, docs_small):
+    """The EN catalog's ``verb_nouns`` is a dual one-slot pattern
+    (``1:[xpos="NN.*"]``, no 2: label). ``word_sketch`` folds it, like
+    every pattern relation, through the ``word_sketch_patterns`` pair
+    builder: the call returns rows, and its pattern-relation rows equal
+    ``word_sketch_patterns`` over the surface layer."""
+    from word_sketch_lucene_spark.caching import release_all
+    from word_sketch_lucene_spark.plans.relations import (
+        EN_CATALOG,
+        word_class_expr,
+        word_sketch_patterns,
+    )
+
+    wc = word_class_expr("term")
+    lt = explode_tokens(docs_small).select(
+        "doc_id", "pos", "term", F.col("term").alias("lemma"),
+        F.when(wc == "NOUN", "NN").when(wc == "VERB", "VB")
+        .when(wc == "ADJ", "JJ").when(wc == "DET", "DT")
+        .otherwise("XX").alias("xpos"))
+    stats = term_stats(lt)
+    cat = GrammarCatalog.load(EN_CATALOG)
+    kw = dict(limit_per_relation=10, round_dp=4)
+    ws = sorted(tuple(r) for r in
+                word_sketch(lt, stats, "table", cat, **kw).collect())
+    pat = sorted(tuple(r) for r in word_sketch_patterns(
+        lt, stats, "table", cat, subst_attr="word", colloc_attr=None,
+        **kw).collect())
+    release_all()
+    pattern_ids = {r.id for r in cat.surface() if r.pattern}
+    assert ws and pat
+    assert any(r[0] == "verb_nouns" for r in ws)
+    assert [r for r in ws if r[0].split("/")[0] in pattern_ids] == pat
+
+
 def test_annotate_deterministic_and_shaped(spark, docs_small):
     ann = annotate_tokens(explode_tokens(docs_small))
     r = ann.filter((F.col("doc_id") == 0) & (F.col("sent_id") == 0)).orderBy(

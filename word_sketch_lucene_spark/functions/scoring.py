@@ -1,24 +1,27 @@
-"""Scoring expressions: BM25 (Lucene-style) and association measures.
+"""Scoring expressions: BM25 (Lucene-style), logDice, and the one
+DataFrame collocate ranking tail.
 
 Reference parity:
 - logDice:  ``log2(2·f(AB)/(f(A)+f(B))) + 14``, clamped to ≥0, errors on
   nonpositive f(A)/f(B) — mirrors ``utils/LogDiceUtils.java:21-55``.
 - relativeFrequency: ``f(AB)/f(A)`` — ``LogDiceUtils.java:51-55``.
-- MI3 / T-score / log-likelihood — documented alternates,
-  ``README.md:581-607``.
 - BM25: the Lucene default similarity underlying BlackLab search
   (``pom.xml:18,39-48``): ``idf = ln(1 + (N-df+0.5)/(df+0.5))``,
   ``tfn = tf·(k1+1)/(tf + k1·(1-b+b·dl/avgdl))`` with k1=1.2, b=0.75.
 
-All are plain Catalyst column expressions — they run inside
-whole-stage codegen, never in Python.
+The ``*_expr`` functions are plain Catalyst column expressions — they
+run inside whole-stage codegen, never in Python; each ``*_py`` twin is
+the same arithmetic for the driver-side kernels.
+:func:`score_ranked_collocates` is the reference's
+``CollocateQueryHelper`` ranking (``java:189-270``) as one plan tail,
+shared by every DataFrame collocate list.
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 K1 = 1.2
@@ -96,18 +99,53 @@ def rel_freq_expr(fab: Column, fa: Column) -> Column:
     return F.when(fa <= 0, F.lit(0.0)).otherwise(fab / fa)
 
 
-def mi3_expr(fab: Column, fa: Column, fb: Column, n: Column) -> Column:
-    """MI3 = log2(fab³·N/(fa·fb)) (``README.md:581-607`` uses cubed fab)."""
-    return F.log(F.pow(fab, F.lit(3.0)) * n / (fa * fb)) / F.lit(LN2)
+def score_ranked_collocates(
+    grouped: DataFrame,
+    term_stats: DataFrame,
+    head: str,
+    limit_per_relation: int = 10,
+    min_logdice: float = 0.0,
+    round_dp: int | None = None,
+) -> DataFrame:
+    """The ranking tail of every DataFrame collocate list:
+    ``([relation,] colloc_term, pair_freq)`` counts + the ``(term, cf)``
+    dictionary → f(A)/f(B), logDice and rel_freq, the min-score filter
+    on the UNROUNDED score, rounding, then the (logdice desc,
+    colloc_term asc) top-k — per ``relation`` when ``grouped`` has that
+    column (one ``row_number`` window), else one ``orderBy().limit()``
+    (``TakeOrderedAndProject``, a bounded heap).
 
-
-def tscore_expr(fab: Column, fa: Column, fb: Column, n: Column) -> Column:
-    """T-score = (fab - E)/sqrt(fab), E = fa·fb/N (``README.md:581-607``)."""
-    e = fa * fb / n
-    return (fab - e) / F.sqrt(fab)
-
-
-def loglik_expr(fab: Column, fa: Column, fb: Column, n: Column) -> Column:
-    """Simplified G² = 2·fab·ln(fab/E), E = fa·fb/N (``README.md:581-607``)."""
-    e = fa * fb / n
-    return F.lit(2.0) * fab * F.log(fab / e)
+    ``term_stats`` is NOT broadcast-hinted: at web scale the vocabulary
+    is O(10⁸⁺) rows and a forced broadcast OOMs the driver. The grouped
+    collocate set is the small side; AQE broadcasts it (or the stats
+    side when genuinely small) at runtime. Only the 1-row ``head_cf``
+    probe carries a hint."""
+    head_cf = term_stats.filter(F.col("term") == head).select(
+        F.col("cf").alias("head_cf"))
+    scored = (
+        grouped.join(term_stats.select(
+            F.col("term").alias("colloc_term"),
+            F.col("cf").alias("colloc_cf")), "colloc_term")
+        .crossJoin(F.broadcast(head_cf))
+        .withColumn("logdice", logdice_expr(
+            F.col("pair_freq").cast("double"),
+            F.col("head_cf").cast("double"),
+            F.col("colloc_cf").cast("double")))
+        .withColumn("rel_freq", rel_freq_expr(
+            F.col("pair_freq").cast("double"),
+            F.col("head_cf").cast("double")))
+        .filter(F.col("logdice") >= F.lit(min_logdice))
+    )
+    if round_dp is not None:
+        scored = scored.withColumn("logdice", F.round("logdice", round_dp)) \
+                       .withColumn("rel_freq", F.round("rel_freq", round_dp))
+    order = (F.desc("logdice"), F.asc("colloc_term"))
+    cols = ["colloc_term", "pair_freq", "logdice", "rel_freq"]
+    if "relation" not in grouped.columns:
+        return scored.select(*cols).orderBy(*order).limit(limit_per_relation)
+    w = Window.partitionBy("relation").orderBy(*order)
+    return (
+        scored.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= limit_per_relation)
+        .select("relation", *cols)
+    )

@@ -14,7 +14,7 @@ sketch at 74 M sentences). The Spark twin:
   head-range-partitioned, head-sorted parquet dataset → a per-head
   serve is a parquet-stats-pruned scan of a few row groups.
 - SERVE (plan tier): pruned scan + the SHARED scoring tail
-  (``plans.relations.score_ranked_collocates``) — row-identical to the
+  (``functions.scoring.score_ranked_collocates``) — row-identical to the
   live fan-out by construction.
 - SERVE (interactive tier): per-head rows in the searcher's cache +
   cached ``layer_cf`` stats → warm sketches are pure-python scoring,
@@ -34,12 +34,9 @@ from pathlib import Path
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.scoring import score_ranked_collocates
 from ..plans.cql import DEFAULT_LAYERS, parse_cql
-from ..plans.relations import (
-    GrammarCatalog,
-    pattern_pos_group,
-    score_ranked_collocates,
-)
+from ..plans.relations import GrammarCatalog, pattern_pos_group
 
 STORE_DIR = "colloc_store"
 META_NAME = "_store_meta.json"

@@ -4,7 +4,8 @@ Reference parity — the flagship query path (SURVEY §3.1):
 - A1 group-by collocate identity (``CollocateQueryHelper.java:201-205``)
 - A3 corpus term-frequency aggregate (``:121-136``)
 - A4 logDice + rank + top-k (``LogDiceUtils.java:21-55``, ranking
-  ``CollocateQueryHelper.java:226-270``)
+  ``CollocateQueryHelper.java:226-270``) — one tail for every
+  DataFrame collocate list, ``functions.scoring.score_ranked_collocates``
 - A5's upper-bound prune becomes moot: the stats lookup is ONE
   broadcast hash join instead of per-collocate fetches, so there is
   nothing lazy to skip (SURVEY §4.1).
@@ -17,9 +18,9 @@ Reference parity — the flagship query path (SURVEY §3.1):
 Scale notes: the pair table is the window join of ``proximity.py``
 (bounded per-doc fan-out). The groupBy keys are (head, collocate)
 pairs — far better spread than raw head terms; map-side partial
-aggregation collapses hot pairs before the shuffle. ``term_stats``
-joins are explicitly ``broadcast()`` when small (query-term sets) and
-left to AQE otherwise.
+aggregation collapses hot pairs before the shuffle. The ``term_stats``
+join carries no broadcast hint (only the 1-row head probe does); AQE
+picks the small side at runtime.
 """
 
 from __future__ import annotations
@@ -27,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.scoring import logdice_expr, rel_freq_expr
+from ..functions.scoring import score_ranked_collocates
 from .proximity import window_pairs
 
 
@@ -63,8 +64,9 @@ def collocates_for_head(
 
     Plan: window join (head side pre-filtered to the one term — the
     selective predicate reaches the token scan) → groupBy collocate →
-    broadcast-join term stats for f(A), f(B) → logDice → min-score
-    filter (P6) → top-k (W1 ``TakeOrderedAndProject``).
+    the shared ranking tail (``functions.scoring.score_ranked_collocates``:
+    term stats for f(A), f(B) → logDice → min-score filter (P6) →
+    top-k, W1 ``TakeOrderedAndProject``).
 
     Returns ``(colloc_term, pair_freq, logdice, rel_freq)``.
     """
@@ -74,34 +76,10 @@ def collocates_for_head(
         colloc_filter=colloc_filter,
     )
     grouped = pairs.groupBy("colloc_term").agg(F.count("*").alias("pair_freq"))
-    head_cf = term_stats.filter(F.col("term") == head_term).select(
-        F.col("cf").alias("head_cf"))
-    # NOTE: term_stats is NOT broadcast-hinted — at web scale the
-    # vocabulary is O(10⁸⁺) rows and a forced broadcast OOMs the driver.
-    # The grouped collocate set is the small side; AQE broadcasts it
-    # (or the stats side when genuinely small) at runtime.
-    scored = (
-        grouped.join(term_stats.select(
-            F.col("term").alias("colloc_term"), F.col("cf").alias("colloc_cf")),
-            "colloc_term")
-        .crossJoin(F.broadcast(head_cf))
-        .withColumn("logdice", logdice_expr(
-            F.col("pair_freq").cast("double"),
-            F.col("head_cf").cast("double"),
-            F.col("colloc_cf").cast("double")))
-        .withColumn("rel_freq", rel_freq_expr(
-            F.col("pair_freq").cast("double"),
-            F.col("head_cf").cast("double")))
-        .filter(F.col("logdice") >= F.lit(min_logdice))
-    )
-    if round_dp is not None:
-        scored = scored.withColumn("logdice", F.round("logdice", round_dp)) \
-                       .withColumn("rel_freq", F.round("rel_freq", round_dp))
-    return (
-        scored.select("colloc_term", "pair_freq", "logdice", "rel_freq")
-        .orderBy(F.desc("logdice"), F.asc("colloc_term"))
-        .limit(limit)
-    )
+    return score_ranked_collocates(grouped, term_stats, head_term,
+                                   limit_per_relation=limit,
+                                   min_logdice=min_logdice,
+                                   round_dp=round_dp)
 
 
 def relation_totals(collocates: DataFrame) -> DataFrame:

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.scoring import logdice_expr
+from ..functions.scoring import score_ranked_collocates
 from ..plans.relations import word_class_expr
 
 SENT_LEN = 20  # pseudo-sentence length of the stub annotator
@@ -275,11 +275,13 @@ def relation_query_collocates(
         raise ValueError("relation-query collocates need a literal "
                          "lemma/word test on the source operand "
                          "(the reference always substitutes one)")
-    pairs = relation_query_pairs(parsed, rq)
-    grouped = pairs.groupBy("dep_term").agg(F.count("*").alias("pair_freq"))
-    return _rank_dep_collocates(grouped, term_stats, head,
-                                min_logdice=min_logdice, limit=limit,
-                                round_dp=round_dp)
+    grouped = relation_query_pairs(parsed, rq).groupBy(
+        F.col("dep_term").alias("colloc_term")).agg(
+        F.count("*").alias("pair_freq"))
+    return score_ranked_collocates(
+        grouped, term_stats, head, limit_per_relation=limit,
+        min_logdice=min_logdice, round_dp=round_dp,
+    ).select(F.col("colloc_term").alias("dep_term"), "pair_freq", "logdice")
 
 
 def dependency_sketch_catalog(
@@ -322,38 +324,10 @@ def dependency_sketch(
         pairs = pairs.filter(F.col("head_wclass") == head_class)
     if colloc_class:
         pairs = pairs.filter(F.col("dep_wclass") == colloc_class)
-    grouped = pairs.groupBy("dep_term").agg(F.count("*").alias("pair_freq"))
-    return _rank_dep_collocates(grouped, term_stats, lemma,
-                                min_logdice=min_logdice, limit=limit,
-                                round_dp=round_dp)
-
-
-def _rank_dep_collocates(grouped: DataFrame, term_stats: DataFrame,
-                         lemma: str, min_logdice: float = 0.0,
-                         limit: int = 20,
-                         round_dp: int | None = None) -> DataFrame:
-    """Shared logDice ranking tail of every dependency collocate query:
-    ``(dep_term, pair_freq)`` counts → ``(dep_term, pair_freq,
-    logdice)`` top-k (``CollocateQueryHelper.buildAndRankCollocates``)."""
-    head_cf = term_stats.filter(F.col("term") == lemma).select(
-        F.col("cf").alias("head_cf"))
-    # term_stats deliberately not broadcast-hinted (full-vocab table —
-    # see operators/collocation.py); AQE picks the small side at runtime.
-    scored = (
-        grouped.join(term_stats.select(
-            F.col("term").alias("dep_term"), F.col("cf").alias("dep_cf")),
-            "dep_term")
-        .crossJoin(F.broadcast(head_cf))
-        .withColumn("logdice", logdice_expr(
-            F.col("pair_freq").cast("double"),
-            F.col("head_cf").cast("double"),
-            F.col("dep_cf").cast("double")))
-        .filter(F.col("logdice") >= F.lit(min_logdice))
-    )
-    if round_dp is not None:
-        scored = scored.withColumn("logdice", F.round("logdice", round_dp))
-    return (
-        scored.select("dep_term", "pair_freq", "logdice")
-        .orderBy(F.desc("logdice"), F.asc("dep_term"))
-        .limit(limit)
-    )
+    # the shared ranking tail, renamed to dep_term at this module's edge
+    grouped = pairs.groupBy(F.col("dep_term").alias("colloc_term")).agg(
+        F.count("*").alias("pair_freq"))
+    return score_ranked_collocates(
+        grouped, term_stats, lemma, limit_per_relation=limit,
+        min_logdice=min_logdice, round_dp=round_dp,
+    ).select(F.col("colloc_term").alias("dep_term"), "pair_freq", "logdice")

@@ -37,6 +37,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.scoring import score_ranked_collocates
+
 # chars whose presence makes a value a real regex; otherwise it is a
 # literal and compiles to an equality test (pushdown-friendly)
 _REGEX_META = re.compile(r"[.\^$*+?{}\[\]()|\\]")
@@ -1117,29 +1119,11 @@ def score_collocate_pairs(
     round_dp: int | None = None,
 ) -> DataFrame:
     """Distinct match-pair rows (…, ``colloc_term``) → logDice-ranked
-    top-k ``(colloc_term, pair_freq, logdice, rel_freq)`` — the scoring
-    tail shared by every pattern/window relation branch."""
-    from ..functions.scoring import logdice_expr, rel_freq_expr
-
+    top-k ``(colloc_term, pair_freq, logdice, rel_freq)``: one count per
+    pair, then the shared ranking tail
+    (``functions.scoring.score_ranked_collocates``)."""
     grouped = pairs.groupBy("colloc_term").agg(F.count("*").alias("pair_freq"))
-    head_cf = term_stats.filter(F.col("term") == head).select(
-        F.col("cf").alias("head_cf"))
-    scored = (
-        grouped.join(term_stats.select(
-            F.col("term").alias("colloc_term"),
-            F.col("cf").alias("colloc_cf")), "colloc_term")
-        .crossJoin(F.broadcast(head_cf))
-        .withColumn("logdice", logdice_expr(
-            F.col("pair_freq").cast("double"),
-            F.col("head_cf").cast("double"),
-            F.col("colloc_cf").cast("double")))
-        .withColumn("rel_freq", rel_freq_expr(
-            F.col("pair_freq").cast("double"),
-            F.col("head_cf").cast("double")))
-        .filter(F.col("logdice") >= F.lit(min_logdice))
-    )
-    if round_dp is not None:
-        scored = scored.withColumn("logdice", F.round("logdice", round_dp)) \
-                       .withColumn("rel_freq", F.round("rel_freq", round_dp))
-    return (scored.select("colloc_term", "pair_freq", "logdice", "rel_freq")
-            .orderBy(F.desc("logdice"), F.asc("colloc_term")).limit(limit))
+    return score_ranked_collocates(grouped, term_stats, head,
+                                   limit_per_relation=limit,
+                                   min_logdice=min_logdice,
+                                   round_dp=round_dp)

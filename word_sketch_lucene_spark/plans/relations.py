@@ -9,6 +9,13 @@ parameterized DataFrame plan template: token-class predicates replace
 the BCQL token constraints (P1), slop maps to the window join (J2),
 DEP-typed relations compile to the dependency join (J3).
 
+Every pattern relation — in :func:`word_sketch` and
+:func:`word_sketch_patterns` alike — folds through ONE pair builder
+(:func:`_pattern_pairs`: CASE arms of one broadcast window join,
+``plans.cql.compile_cql`` branches for the shapes the fold can't
+enumerate), and every sketch ranks through the one DataFrame tail,
+``functions.scoring.score_ranked_collocates``.
+
 The catalog ships in ``grammars/relations.json`` at the repo root —
 same declarative shape, engine-appropriate predicates.
 """
@@ -22,6 +29,8 @@ from pathlib import Path
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..functions.scoring import score_ranked_collocates
 
 DEFAULT_CATALOG = Path(__file__).resolve().parents[2] / "grammars" / "relations.json"
 # full port of the reference's 69-relation English catalog
@@ -42,6 +51,11 @@ WORD_CLASSES: dict[str, str] = {
     **dict.fromkeys(["fast", "slow", "small", "big"], "ADJ"),
     **dict.fromkeys(["the", "a"], "DET"),
 }
+
+# output schema of every sketch fan-out (``word_sketch``,
+# ``word_sketch_patterns``)
+_SKETCH_SCHEMA = ("relation string, colloc_term string, pair_freq long, "
+                  "logdice double, rel_freq double")
 
 
 @lru_cache(maxsize=64)
@@ -292,50 +306,63 @@ def word_sketch_patterns(
     reference skips position validation for these — the loose-proximity
     reading of its "nearby nouns within a wider window").
     """
-    from pyspark.sql import Window
-
     from ..caching import persist_tracked
-    from ..functions.scoring import logdice_expr, rel_freq_expr
-    from .cql import (
-        TokenItem,
-        _item_predicate,
-        _resolve_col,
-        compile_cql,
-        parse_cql,
-        strip_constraints,
-        substitute_at_position,
-    )
 
     rels = [r for r in catalog.relations
             if r.pattern and r.type in relation_types]
     if head_pos is not None:
         rels = [r for r in rels if pattern_pos_group(r) == head_pos]
     if not rels:
-        return tokens.sparkSession.createDataFrame(
-            [], "relation string, colloc_term string, pair_freq long, "
-                "logdice double, rel_freq double")
+        return tokens.sparkSession.createDataFrame([], _SKETCH_SCHEMA)
     if len(rels) > 1:
         # every branch re-reads the token table; the stats lookup joins
         # ONCE below but the cache also feeds the head_cf probe
         tokens = persist_tracked(tokens)
         term_stats = persist_tracked(term_stats)
-    cols = tokens.columns
-    # Phase 1: per-relation (doc, head-pos, colloc-pos) match pairs,
-    # RAW (no per-branch distinct — that would be one shuffle per
-    # relation; the phase-2 count(DISTINCT doc,hp,cp) dedups all 41
-    # branches in its single aggregate), unioned with the relation id.
-    # Scoring then runs ONCE for the whole fan-out — one stats join,
-    # one head_cf broadcast, one per-relation top-k window — instead
-    # of N stats joins + N limits (at 10⁸-row vocabularies the stats
-    # join is the expensive side; N relations must not multiply it).
-    # FAST path: every plain 2-slot relation (and every dual window
-    # relation) folds into ONE broadcast window join — the head side is
-    # one lemma's rows (cf-bounded), the probe is a single pass over
-    # the token table at the catalog-wide max window, and each
-    # relation's gap/direction/test predicates become a CASE arm
-    # (the proven `word_sketch` single-scan shape, generalized to BCQL
-    # tests). Only 3-slot patterns (copula shapes) stay join branches:
-    # N relations must not cost N broadcast-build stages.
+    # CollocateQueryHelper's distinct-pair count: ONE count-distinct
+    # aggregate dedups every branch (colloc_term is functionally
+    # determined by (doc, cp)), then the one ranking tail
+    grouped = _pattern_pairs(
+        tokens, term_stats, head, rels, subst_attr, colloc_attr,
+        within_sentence,
+    ).groupBy("relation", "colloc_term").agg(
+        F.count_distinct("doc_id", "hp", "cp").alias("pair_freq"))
+    return score_ranked_collocates(
+        grouped, term_stats, head, limit_per_relation=limit_per_relation,
+        min_logdice=min_logdice, round_dp=round_dp)
+
+
+def _pattern_pairs(tokens: DataFrame, term_stats: DataFrame, head: str,
+                   rels: list[RelationConfig], subst_attr: str,
+                   colloc_attr: str | None,
+                   within_sentence: bool = False) -> DataFrame:
+    """The one pattern-relation pair builder: ``(relation, doc_id, hp,
+    cp, colloc_term)`` match pairs of every relation in ``rels`` with
+    ``head`` substituted on ``subst_attr`` and the collocate read from
+    ``colloc_attr`` (``None`` = the surface ``term``).
+
+    Pairs are RAW (no per-branch distinct — that would be one shuffle
+    per relation; the caller's single count-distinct aggregate dedups
+    every branch), so scoring runs ONCE for the whole fan-out — one
+    stats join, one head_cf broadcast, one per-relation top-k window —
+    instead of N stats joins + N limits (at 10⁸-row vocabularies the
+    stats join is the expensive side; N relations must not multiply
+    it). FAST path: every plain 2-slot relation, every dual window
+    relation and every bounded quantified/fixed-mid/trinary shape
+    folds into ONE broadcast window join — the head side is one
+    lemma's rows (cf-bounded), the probe is a single pass over the
+    token table at the catalog-wide max window, and each relation's
+    gap/direction/test predicates become a CASE arm. Only the shapes
+    the fold can't enumerate stay ``compile_cql`` join branches: N
+    relations must not cost N broadcast-build stages."""
+    from .cql import (
+        TokenItem,
+        compile_cql,
+        parse_cql,
+        strip_constraints,
+        substitute_at_position,
+    )
+
     fast: list[tuple] = []
     extended: list[tuple] = []
     slow: list = []
@@ -351,7 +378,7 @@ def word_sketch_patterns(
             slow.append(rel)
     # broadcast the head side only while its cf stays executor-safe —
     # a stopword-grade head at web scale must shuffle instead (one
-    # 1-row stats probe; the same stats table feeds scoring below)
+    # 1-row stats probe; the same stats table feeds scoring)
     hcf = term_stats.filter(F.col("term") == head).select("cf").first()
     head_hot = hcf is not None and int(hcf["cf"]) > 64_000_000
     if head_hot and extended:
@@ -359,12 +386,14 @@ def word_sketch_patterns(
         # side; a corpus-hot head must keep the shuffle-join branches
         slow = [rel for rel, _ in extended] + slow
         extended = []
+    cols = tokens.columns
     pair_parts = []
     if fast or extended:
         pair_parts.append(_fast_window_pairs(
             tokens, fast, head, subst_attr, colloc_attr, cols,
             within_sentence=within_sentence,
             broadcast_head=not head_hot, extended=extended))
+
     def _build_branch(rel: RelationConfig) -> DataFrame:
         core, cons = strip_constraints(rel.pattern)
         items = parse_cql(core)
@@ -409,16 +438,7 @@ def word_sketch_patterns(
     all_pairs = pair_parts[0]
     for p in pair_parts[1:]:
         all_pairs = all_pairs.unionByName(p)
-    # Phase 2: the shared scoring tail (CollocateQueryHelper semantics:
-    # distinct-pair counts — ONE count-distinct aggregate dedups every
-    # branch, colloc_term is functionally determined by (doc, cp) —
-    # logDice vs the head/collocate collection frequencies, min-score
-    # filter, per-relation top-k)
-    grouped = all_pairs.groupBy("relation", "colloc_term").agg(
-        F.count_distinct("doc_id", "hp", "cp").alias("pair_freq"))
-    return score_ranked_collocates(
-        grouped, term_stats, head, limit_per_relation=limit_per_relation,
-        min_logdice=min_logdice, round_dp=round_dp)
+    return all_pairs
 
 
 def _two_slot_shape(rel: RelationConfig):
@@ -805,54 +825,6 @@ def unary_counts(
             .orderBy("relation"))
 
 
-def score_ranked_collocates(
-    grouped: DataFrame,
-    term_stats: DataFrame,
-    head: str,
-    limit_per_relation: int = 10,
-    min_logdice: float = 0.0,
-    round_dp: int | None = None,
-) -> DataFrame:
-    """The SHARED sketch scoring tail: ``(relation, colloc_term,
-    pair_freq)`` + a stats dictionary → logDice/rel_freq, min-score
-    filter, per-relation top-k. One implementation serves the live
-    pattern fan-out (:func:`word_sketch_patterns`), the distributed
-    index tier, AND the materialized collocation store
-    (``index.colloc_store``) — score identity between the tiers is by
-    construction, not by parallel maintenance."""
-    from pyspark.sql import Window
-
-    from ..functions.scoring import logdice_expr, rel_freq_expr
-
-    head_cf = term_stats.filter(F.col("term") == head).select(
-        F.col("cf").alias("head_cf"))
-    scored = (
-        grouped.join(term_stats.select(
-            F.col("term").alias("colloc_term"),
-            F.col("cf").alias("colloc_cf")), "colloc_term")
-        .crossJoin(F.broadcast(head_cf))
-        .withColumn("logdice", logdice_expr(
-            F.col("pair_freq").cast("double"),
-            F.col("head_cf").cast("double"),
-            F.col("colloc_cf").cast("double")))
-        .withColumn("rel_freq", rel_freq_expr(
-            F.col("pair_freq").cast("double"),
-            F.col("head_cf").cast("double")))
-        .filter(F.col("logdice") >= F.lit(min_logdice))
-    )
-    if round_dp is not None:
-        scored = scored.withColumn("logdice", F.round("logdice", round_dp)) \
-                       .withColumn("rel_freq", F.round("rel_freq", round_dp))
-    w = Window.partitionBy("relation").orderBy(
-        F.desc("logdice"), F.asc("colloc_term"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= limit_per_relation)
-        .select("relation", "colloc_term", "pair_freq", "logdice",
-                "rel_freq")
-    )
-
-
 @dataclass
 class SketchBranch:
     """One executable branch of a word sketch for a concrete head word.
@@ -898,133 +870,6 @@ def sketch_branches(catalog: GrammarCatalog, head_term: str
     return out
 
 
-def _foldable_pattern(items, head_label: str, colloc_label: str):
-    """``(head_item, mid, colloc_item)`` when a pattern relation is a
-    head-first 2-3-slot adjacency — ``1:[…] (mid)? 2:[…]`` with ``mid``
-    a short filler gap or one unlabeled token test, every test on the
-    ``word``/``class`` layers — else ``None`` (the caller falls back to
-    the per-pattern :func:`plans.cql.compile_cql` chain)."""
-    from .cql import GapItem, TokenItem, effective_test
-
-    if (not items or not isinstance(items[0], TokenItem)
-            or items[0].label != head_label):
-        return None
-    if any(isinstance(it, TokenItem)
-           and ((it.rep_min, it.rep_max) != (1, 1) or it.alts)
-           for it in items):
-        return None
-    if len(items) == 2:
-        mid, tail = None, items[1]
-    elif len(items) == 3:
-        mid, tail = items[1], items[2]
-        if isinstance(mid, TokenItem) and mid.label is not None:
-            return None
-        if isinstance(mid, GapItem) and not (0 <= mid.min <= mid.max <= 2):
-            return None
-    else:
-        return None
-    if not isinstance(tail, TokenItem) or tail.label != colloc_label:
-        return None
-
-    def _ok(item) -> bool:
-        return all(effective_test(t).attr in ("word", "class")
-                   for t in item.tests)
-
-    if not (_ok(items[0]) and _ok(tail)
-            and (not isinstance(mid, TokenItem) or _ok(mid))):
-        return None
-    return items[0], mid, tail
-
-
-def _layer_tests_pred(item, term_col: str) -> Column:
-    """The item's tests as ONE predicate over a renamed term column —
-    the :func:`plans.cql._item_predicate` twin for folded projections
-    (same ``_test_col`` literal/regex/negation semantics, ``class``
-    routed through :func:`word_class_expr`)."""
-    from .cql import _test_col, effective_test
-
-    pred = F.lit(True)
-    for t in item.tests:
-        t = effective_test(t)
-        col = (word_class_expr(term_col) if t.attr == "class"
-               else F.col(term_col))
-        pred = pred & _test_col(t, col)
-    return pred
-
-
-def _folded_pattern_counts(tokens: DataFrame, head_term: str,
-                           folds: list) -> DataFrame:
-    """``(relation, colloc_term, pair_freq)`` for ALL foldable pattern
-    relations in one broadcast join chain: the head's rows (exact-term
-    filter — maximally selective) left-join the tokens at offsets
-    +1..+K once, then every (relation, offset) becomes a CASE arm over
-    the same rows (`SketchHandlers.java:48-49` serves all relations
-    from one request; here they share one physical scan too). Counting
-    unit matches :func:`plans.cql.pattern_collocates`: one count per
-    (doc, head-pos, colloc-pos) match span — rows here are unique by
-    construction (each head position emits each (relation, offset) arm
-    at most once), so no distinct shuffle is needed.
-
-    ``folds``: ``[(rel, (head_item, mid, colloc_item)), …]``.
-    """
-    from .cql import GapItem, TokenItem
-
-    # (rel_id, head_item, offset, mid_item | None, colloc_item); the
-    # head's EXTRA tests (beyond the exact-term filter) are row-wise
-    # constant over H — they ride in the CASE arm on h_term rather
-    # than forcing per-relation head projections
-    arms = []
-    for rel, (head_item, mid, colloc) in folds:
-        if mid is None:
-            arms.append((rel.id, head_item, 1, None, colloc))
-        elif isinstance(mid, GapItem):
-            for g in range(mid.min, mid.max + 1):
-                arms.append((rel.id, head_item, g + 1, None, colloc))
-        else:
-            arms.append((rel.id, head_item, 2, mid, colloc))
-    max_off = max(o for _, _, o, _, _ in arms)
-
-    # chained INNER joins, head side broadcast each step (a left join
-    # could not broadcast its outer-preserved side and would shuffle
-    # the whole token table instead): J_k carries the head row plus
-    # tokens at +1..+k; offset-o arms evaluate over J_o, so heads near
-    # the doc end still feed the shorter arms. Each probe is one token
-    # scan against a build side bounded by the head's cf.
-    j = (tokens.filter(F.col("term") == head_term)
-         .select("doc_id", F.col("pos").alias("h_pos"),
-                 F.col("term").alias("h_term")))
-    by_off: dict[int, list] = {}
-    for arm in arms:
-        by_off.setdefault(arm[2], []).append(arm)
-    matched = []
-    for k in range(1, max_off + 1):
-        tk = tokens.select("doc_id", F.col("pos").alias(f"p{k}"),
-                           F.col("term").alias(f"t{k}"))
-        j = (tk.join(F.broadcast(j),
-                     (j["doc_id"] == tk["doc_id"])
-                     & (tk[f"p{k}"] == j["h_pos"] + k))
-             .drop(tk["doc_id"]))
-        cases = []
-        for rel_id, head_item, off, mid_item, colloc in by_off.get(k, []):
-            cond = (_layer_tests_pred(head_item, "h_term")
-                    & _layer_tests_pred(colloc, f"t{off}"))
-            if mid_item is not None:
-                cond = cond & _layer_tests_pred(mid_item, "t1")
-            cases.append(F.when(cond, F.struct(
-                F.lit(rel_id).alias("relation"),
-                F.col(f"t{off}").alias("colloc_term"))))
-        if cases:
-            matched.append(
-                j.select(F.explode(F.array_compact(F.array(*cases)))
-                         .alias("m"))
-                .select("m.relation", "m.colloc_term"))
-    out = matched[0]
-    for m in matched[1:]:
-        out = out.unionByName(m)
-    return (out.groupBy("relation", "colloc_term")
-            .agg(F.count("*").alias("pair_freq")))
-
-
 def word_sketch(
     tokens: DataFrame,
     term_stats: DataFrame,
@@ -1039,53 +884,36 @@ def word_sketch(
 
     Plan shape (one scan, not one per relation): a single window join
     at the catalog-wide max slop builds the head's pair table once;
-    each pair row then explodes into the relation ids it satisfies
-    (gap/order/class predicates as an ``array_compact`` of CASEs —
-    pure Catalyst), one groupBy counts (relation, collocate), ONE join
-    fetches collocate stats, and a per-relation ``row_number`` window
-    takes the top-k. N relations cost N cheap predicates, not N scans
-    and N stats joins.
+    each pair row then explodes into the class relation ids it
+    satisfies (gap/order/class predicates as an ``array_compact`` of
+    CASEs — pure Catalyst). Pattern relations come from the
+    :func:`word_sketch_patterns` pair builder over the surface layer
+    (head substituted on ``word``, collocates read from ``term``).
+    Both count tables union before ONE ranking tail: one stats join and
+    one per-relation ``row_number`` top-k window. N relations cost N
+    cheap predicates, not N scans and N stats joins.
     """
-    from pyspark.sql import Window
-
-    from ..functions.scoring import logdice_expr, rel_freq_expr
-
-    from .cql import parse_cql
+    from ..caching import persist_tracked
+    from ..operators.proximity import window_pairs
 
     branches = sketch_branches(catalog, head_term)
     pattern_rels = [r for r in catalog.surface() if r.pattern]
-    folds, chain_rels = [], []
-    for r in pattern_rels:
-        shape = _foldable_pattern(parse_cql(r.pattern), "1", "2")
-        (folds.append((r, shape)) if shape is not None
-         else chain_rels.append(r))
     if not branches and not pattern_rels:
-        return tokens.sparkSession.createDataFrame(
-            [], "relation string, colloc_term string, pair_freq long, "
-                "logdice double, rel_freq double")
+        return tokens.sparkSession.createDataFrame([], _SKETCH_SCHEMA)
     if pattern_rels:
-        # each pattern branch joins 2-3 filtered token projections AND a
-        # stats lookup; without materialization every branch re-derives
-        # term_stats (a full-corpus aggregate) and re-scans the token
-        # table — persist both once (term_stats is vocab-sized; tokens
-        # is the already-exploded working set). Tracked: the session
-        # owner releases via caching.release_all() after the action.
-        from ..caching import persist_tracked
-
+        # the pattern pair builder reads the token table from several
+        # branches and probes term_stats for the head cf — persist both
+        # once (tracked: the session owner releases via
+        # caching.release_all() after the action)
         tokens = persist_tracked(tokens)
         term_stats = persist_tracked(term_stats)
-    from ..operators.proximity import window_pairs
-
-    # ordered gaps may be NEGATIVE (collocate strictly BEFORE the head,
-    # the reference's `2:[...] 1:[...]` direction); the shared pair
-    # window covers every branch as |gap| ∈ [1, max|bound|]
+    counts = []
     if branches:
+        # ordered gaps may be NEGATIVE (collocate strictly BEFORE the
+        # head, the reference's `2:[...] 1:[...]` direction); the shared
+        # pair window covers every branch as |gap| ∈ [1, max|bound|]
         coverage = max(max(abs(b.min_gap), abs(b.max_gap))
                        for b in branches)
-    else:
-        coverage = 1
-    counted_all = None
-    if branches:
         pairs = window_pairs(tokens, 1, coverage, ordered=False,
                              head_filter=F.col("head_term") == head_term)
         gap = F.col("colloc_pos") - F.col("head_pos")
@@ -1099,60 +927,22 @@ def word_sketch(
             if br.colloc_class:
                 c = c & (word_class_expr("colloc_term") == br.colloc_class)
             whens.append(F.when(c, F.lit(br.id)))
-        counted_all = (
+        counts.append(
             pairs.select(
                 "colloc_term",
                 F.explode(F.array_compact(F.array(*whens))).alias("relation"))
             .groupBy("relation", "colloc_term")
-            .agg(F.count("*").alias("pair_freq"))
-        )
-    if folds:
-        # foldable pattern relations share one broadcast join chain and
-        # ride the SAME stats join + top-k window as the surface
-        # branches — N patterns cost CASE arms, not N compiled chains
-        fc = _folded_pattern_counts(tokens, head_term, folds)
-        counted_all = (fc if counted_all is None
-                       else counted_all.unionByName(fc))
-    out = None
-    if counted_all is not None:
-        head_cf = term_stats.filter(F.col("term") == head_term).select(
-            F.col("cf").alias("head_cf"))
-        scored = (
-            counted_all.join(term_stats.select(
-                F.col("term").alias("colloc_term"),
-                F.col("cf").alias("colloc_cf")), "colloc_term")
-            .crossJoin(F.broadcast(head_cf))
-            .withColumn("logdice", logdice_expr(
-                F.col("pair_freq").cast("double"),
-                F.col("head_cf").cast("double"),
-                F.col("colloc_cf").cast("double")))
-            .withColumn("rel_freq", rel_freq_expr(
-                F.col("pair_freq").cast("double"),
-                F.col("head_cf").cast("double")))
-            .filter(F.col("logdice") >= F.lit(min_logdice))
-        )
-        if round_dp is not None:
-            scored = (scored
-                      .withColumn("logdice", F.round("logdice", round_dp))
-                      .withColumn("rel_freq", F.round("rel_freq", round_dp)))
-        w = Window.partitionBy("relation").orderBy(
-            F.desc("logdice"), F.asc("colloc_term"))
-        out = (
-            scored.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= limit_per_relation)
-            .select("relation", "colloc_term", "pair_freq", "logdice",
-                    "rel_freq")
-        )
-    # non-foldable pattern relations (longer/reversed/other-layer BCQL)
-    # still compile via the CQL positional-join chain, one branch each
-    for rel in chain_rels:
-        from .cql import pattern_collocates
-
-        b = pattern_collocates(
-            tokens, term_stats, rel.pattern, head_term,
-            min_logdice=min_logdice, limit=limit_per_relation,
-            round_dp=round_dp,
-        ).select(F.lit(rel.id).alias("relation"), "colloc_term",
-                 "pair_freq", "logdice", "rel_freq")
-        out = b if out is None else out.unionByName(b)
-    return out
+            .agg(F.count("*").alias("pair_freq")))
+    if pattern_rels:
+        counts.append(
+            _pattern_pairs(tokens, term_stats, head_term, pattern_rels,
+                           subst_attr="word", colloc_attr=None)
+            .groupBy("relation", "colloc_term")
+            .agg(F.count_distinct("doc_id", "hp", "cp").alias("pair_freq")))
+    grouped = counts[0]
+    for c in counts[1:]:
+        grouped = grouped.unionByName(c)
+    return score_ranked_collocates(
+        grouped, term_stats, head_term,
+        limit_per_relation=limit_per_relation, min_logdice=min_logdice,
+        round_dp=round_dp)

@@ -26,7 +26,8 @@ from __future__ import annotations
 import math
 from collections import Counter
 
-from .sketch import _logdice, collocate_counts, rank_collocates
+from ..functions.scoring import logdice_py
+from .sketch import collocate_counts, rank_collocates
 
 
 def index_collocates_for_head(
@@ -224,7 +225,7 @@ def index_explore_single_seed(
         fa, fb = cf.get(noun), cf.get(c)
         if not fa or not fb:
             continue
-        ld = round(_logdice(fab, fa, fb) * scale)
+        ld = round(logdice_py(fab, fa, fb) * scale)
         per_noun.setdefault(noun, []).append(ld)
     nouns = []
     for noun, lds in per_noun.items():
@@ -243,7 +244,7 @@ def index_explore_single_seed(
         if not fa or not fb:
             continue
         per_seed_shape.append(
-            (noun, c, fab, _logdice(fab, fa, fb), 0.0))
+            (noun, c, fab, logdice_py(fab, fa, fb), 0.0))
     core = index_core_collocates(per_seed_shape,
                                  n_nouns=nouns_per_collocate)
     return {"seed_collocates": seed_top, "discovered_nouns": nouns,

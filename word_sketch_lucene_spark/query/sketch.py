@@ -26,10 +26,9 @@ between the two.
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 
+from ..functions.scoring import logdice_py
 from ..plans.cql import (
     DEFAULT_LAYERS,
     TokenItem,
@@ -47,11 +46,6 @@ from .positions import (
 )
 
 
-def _logdice(fab: float, fa: float, fb: float) -> float:
-    """Python twin of ``functions.scoring.logdice_expr``."""
-    return max(0.0, math.log2(2.0 * fab / (fa + fb)) + 14.0)
-
-
 def _round(x: float, dp: int | None) -> float:
     return x if dp is None else round(x, dp)
 
@@ -64,8 +58,8 @@ def rank_collocates(searcher, layer: str, head: str,
     counts: f(A)/f(B) from ``layer``'s dictionary, the min-score filter
     on the UNROUNDED logDice, then rounding, then the (logdice desc,
     colloc asc) order and ``limit`` — the plan tier's order of
-    operations (``score_collocate_pairs``, ``collocates_for_head``),
-    so boundary collocates agree between the tiers."""
+    operations (``functions.scoring.score_ranked_collocates``), so
+    boundary collocates agree between the tiers."""
     if not counts:
         return []
     cf = searcher.layer_cf(layer, sorted(counts) + [head])
@@ -77,7 +71,7 @@ def rank_collocates(searcher, layer: str, head: str,
         fb = cf.get(value)
         if fb is None:
             continue
-        ld = _logdice(fab, head_cf, fb)
+        ld = logdice_py(fab, head_cf, fb)
         if ld >= min_logdice:
             scored.append((value, fab, _round(ld, round_dp),
                            _round(fab / head_cf, round_dp)))
