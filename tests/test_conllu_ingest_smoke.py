@@ -134,7 +134,7 @@ def test_ingest_end_to_end_windowed(spark, real_corpus_index):
     # index-side identically to the DataFrame compiler
     from word_sketch_lucene_spark.plans.cql import compile_cql
 
-    assert set(s.expand_layer_terms("feats", ".*")) == \
+    assert set(s.expand_terms(".*", layer="feats")) == \
         {"Number=Plur", "Number=Sing"}
     feat_pat = '[feats="Number=Plur"] []{0,2} [xpos="VB.*"]'
     idx_spans = set(s.pattern_hits(feat_pat))

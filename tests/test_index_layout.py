@@ -176,6 +176,20 @@ def test_concordance_pages_unchanged(spark, index_small, docs_small,
     assert got == _kwic(ctoks, spans, 2, 5) and len(got) == 2
 
 
+
+def test_relation_concordance_routes_agree(spark, conllu_root):
+    """The relation KWIC page is the same on the distributed route
+    (``df_budget=0``: the dependency join plan) as on the in-driver
+    resolver."""
+    root, _ = conllu_root
+    c = IndexSearcher(spark, root)
+    q = '[lemma="bark"] -nsubj-> _'
+    want = [tuple(r) for r in index_relation_concordance(
+        c, q, page_size=5, context=2, df_budget=10**12).collect()]
+    got = [tuple(r) for r in index_relation_concordance(
+        c, q, page_size=5, context=2, df_budget=0).collect()]
+    assert got == want and len(got) == 2
+
 def test_old_format_rejected(spark, index_small, tmp_path):
     """An index written in the previous layout (no ``format`` in
     stats.json) is refused with a rebuild message by the searcher and

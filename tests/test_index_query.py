@@ -152,6 +152,20 @@ def test_empty_doc_convention(spark, tmp_path):
     assert [d for d, _ in hits] == [d for d, _ in expected]
 
 
+
+def test_arrow_tokenizer_matches_default(docs_small):
+    """The Arrow-vectorized tokenizer UDF (``use_pandas_udf=True``)
+    gives the same ``(doc_id, pos, term)`` rows and ``dl`` as the
+    default JVM expression."""
+    from word_sketch_lucene_spark.functions.tokenize import explode_tokens
+
+    for with_dl in (False, True):
+        want, got = (
+            sorted(tuple(r) for r in explode_tokens(
+                docs_small, use_pandas_udf=udf, with_dl=with_dl).collect())
+            for udf in (False, True))
+        assert got == want and want, with_dl
+
 def test_regex_term_expansion(spark, index_small, oracle):
     """P1 regex expansion: dictionary rlike → OR search; results must
     equal an explicit OR over the python oracle's matching vocab."""
@@ -249,10 +263,10 @@ def test_layered_pattern_hits_match_dataframe_path(spark, layered):
 def test_layer_term_dictionary_expansion(spark, layered):
     root, _ = layered
     s = IndexSearcher(spark, root)
-    assert set(s.expand_layer_terms("upos", ".*")) >= {"NOUN", "VERB",
-                                                       "ADJ", "DET"}
-    assert s.expand_layer_terms("xpos", "NN.*") == ["NN"] or \
-        set(s.expand_layer_terms("xpos", "NN.*")) <= {"NN", "NNS"}
+    assert set(s.expand_terms(".*", layer="upos")) >= {"NOUN", "VERB",
+                                                        "ADJ", "DET"}
+    assert s.expand_terms("NN.*", layer="xpos") == ["NN"] or \
+        set(s.expand_terms("NN.*", layer="xpos")) <= {"NN", "NNS"}
 
 
 def test_pattern_hits_auto_fallback_identical(spark, index_small, docs_small):
@@ -313,7 +327,7 @@ def test_build_conllu_index_end_to_end(spark, tmp_path):
     spans = s.pattern_hits('[upos="NOUN"] [lemma="bark"]')
     assert len(spans) == 2  # "Dogs bark" and "cat barks"
     # xpos regex through the layer dictionary
-    assert set(s.expand_layer_terms("xpos", "VB.*")) == {"VBZ", "VBP"}
+    assert set(s.expand_terms("VB.*", layer="xpos")) == {"VBZ", "VBP"}
     # doc tokens from the forward store, in position order
     ds = {r["doc_id"]: " ".join(r["term"]) for r in
           s.forward_arrays({"term"}).collect()}

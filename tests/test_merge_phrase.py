@@ -218,8 +218,8 @@ def test_merge_preserves_layer_postings(spark, split_corpus, tmp_path):
         want = set(sf.pattern_hits(pattern))
         assert got == want and got, pattern
     # layer dictionary folded
-    assert set(sm.expand_layer_terms("upos", ".*")) == \
-        set(sf.expand_layer_terms("upos", ".*"))
+    assert set(sm.expand_terms(".*", layer="upos")) == \
+        set(sf.expand_terms(".*", layer="upos"))
 
 
 def _toy_layers(pages):

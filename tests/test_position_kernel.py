@@ -227,3 +227,89 @@ def test_keys_never_cross_docs_at_large_ids():
     c = kernel.combine([a], [b])
     assert list(zip(*(x.tolist() for x in c))) == [
         (big, 0), (big, 5), (big + 1, 1)]
+
+
+SKETCH_RELATIONS = [
+    {"id": "noun_verb", "name": "noun_verb", "type": "SURFACE",
+     "pattern": '1:[xpos="NN.*"] []{0,3} 2:[xpos="VB.*"]'},
+    {"id": "adj_adj_noun", "name": "adj_adj_noun", "type": "SURFACE",
+     "pattern": '2:[xpos="JJ"] [xpos="JJ"] 1:[xpos="NN.*"]'},
+]
+
+
+@pytest.mark.parametrize("within", [False, True])
+def test_sketch_tiers_agree_on_flat_stream_doc(searcher, tmp_path, within):
+    """The in-driver sketch (``index_word_sketch``, live fan-out) and
+    the DataFrame fold (``index_word_sketch_distributed``) give the same
+    rows with and without ``within_sentence``: in both tiers the doc
+    without a stored ``sent_no`` array is one flat stream and keeps its
+    pairs."""
+    import json
+
+    from word_sketch_lucene_spark.plans.relations import GrammarCatalog
+    from word_sketch_lucene_spark.query.sketch import (
+        index_word_sketch,
+        index_word_sketch_distributed,
+    )
+
+    path = tmp_path / "catalog.json"
+    path.write_text(json.dumps(SKETCH_RELATIONS))
+    cat = GrammarCatalog.load(path)
+    kw = dict(head_pos="NOUN", limit_per_relation=50, round_dp=4,
+              within_sentence=within)
+    for head in ("cat", "dog"):
+        want = sorted(index_word_sketch(searcher, head, cat,
+                                        use_store=False, **kw))
+        got = sorted(tuple(r) for r in index_word_sketch_distributed(
+            searcher, head, cat, **kw).collect())
+        assert got == want and got, (head, within)
+
+
+def _jobs_run(spark, name: str, fn) -> tuple[object, int]:
+    """``fn()``'s result and the number of Spark jobs it ran."""
+    import time
+
+    sc = spark.sparkContext
+    group = f"{name}-{id(fn)}"
+    sc.setJobGroup(group, name)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    time.sleep(1.0)  # let the listener bus register the jobs
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _cold(spark, searcher):
+    """A fresh searcher on the same root with every dataset handle
+    open: a handle's schema read is not part of a query."""
+    from word_sketch_lucene_spark.query.engine import IndexSearcher
+
+    s = IndexSearcher(spark, searcher.root)
+    for name in ("segments", "term_stats", "layers", "layer_stats",
+                 "forward_layers", "doc_lens", "docstore", "doc_meta"):
+        s._dataset(name, required=False)
+    return s
+
+
+def test_cold_literal_pricing_runs_one_spark_job(spark, searcher):
+    """The literals of a pattern price in one cf lookup, whichever
+    dictionaries (term_stats, layer_stats) they span."""
+    s = _cold(spark, searcher)
+    (cost, capped), jobs = _jobs_run(spark, "cold-price", lambda: (
+        s.pattern_cost('[word="cat"] [xpos="NN"]')))
+    assert cost > 0 and not capped
+    assert jobs == 1
+
+
+def test_cold_under_budget_pattern_reuses_its_pricing(spark, searcher):
+    """An under-budget pattern's regex tests price from their
+    expansions, which the span chain then reuses: one job per
+    expansion and one per postings fetch, no pricing job of its own."""
+    s = _cold(spark, searcher)
+    pattern = '[word="c.*"] [xpos="NN.*"]'
+    df, jobs = _jobs_run(spark, "cold-spans",
+                         lambda: s.pattern_spans_df(pattern))
+    spans = sorted(tuple(r) for r in df.collect())
+    assert spans and spans == searcher.pattern_hits(pattern)
+    assert jobs <= 4

@@ -480,7 +480,6 @@ def test_index_relation_concordance(spark, conllu_index, monkeypatch):
         raise AssertionError("relation KWIC collected the match list")
 
     monkeypatch.setattr(s, "relation_matches", boom)
-    monkeypatch.setattr(s, "_relation_matches_distributed", boom)
     got = [tuple(r) for r in index_relation_concordance(
         s, q, page_size=5, context=2, df_budget=0).collect()]
     assert got == want

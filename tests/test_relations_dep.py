@@ -499,3 +499,45 @@ def test_kwic_distributed_route_is_a_plan(spark, docs_small, tmp_path,
     assert "TakeOrderedAndProject" in plan or "GlobalLimit" in plan
     got = [tuple(r) for r in page_df.collect()]
     assert got == want and got
+
+
+def test_dual_alternation_relation_folds(spark, tmp_path):
+    """A dual one-slot relation whose slot is a cross-attr ``|``
+    alternation folds into the window join like any dual relation:
+    ``pair_freq`` per collocate equals the pairs counted by a loop
+    (``1 ≤ |cp − hp| ≤ default_slop``, the collocate matching either
+    branch)."""
+    import random
+
+    from word_sketch_lucene_spark.plans.relations import word_sketch_patterns
+
+    vocab = [("cat", "NN"), ("dog", "NN"), ("red", "JJ"), ("big", "JJ"),
+             ("run", "VB"), ("see", "VB"), ("the", "DT")]
+    rng = random.Random(3)
+    docs = {d: [rng.choice(vocab) for _ in range(rng.randint(5, 14))]
+            for d in range(6)}
+    toks = spark.createDataFrame(
+        [(d, p, lemma, lemma, xpos) for d, ts in docs.items()
+         for p, (lemma, xpos) in enumerate(ts)],
+        "doc_id long, pos long, term string, lemma string, xpos string")
+    stats = toks.groupBy(F.col("lemma").alias("term")) \
+        .agg(F.count("*").alias("cf"))
+    slop = 4
+    path = tmp_path / "catalog.json"
+    path.write_text(json.dumps([{
+        "id": "near_adj_or_run", "name": "near_adj_or_run",
+        "type": "SURFACE", "dual": True, "default_slop": slop,
+        "pattern": '1:[xpos="JJ"|lemma="run"]'}]))
+    cat = GrammarCatalog.load(path)
+    want: dict[str, int] = {}
+    for ts in docs.values():
+        for hp, (lemma, _) in enumerate(ts):
+            if lemma != "cat":
+                continue
+            for cp, (cl, cx) in enumerate(ts):
+                if 1 <= abs(cp - hp) <= slop and (cx == "JJ" or cl == "run"):
+                    want[cl] = want.get(cl, 0) + 1
+    got = {r["colloc_term"]: r["pair_freq"] for r in word_sketch_patterns(
+        toks, stats, "cat", cat, limit_per_relation=100,
+        min_logdice=-1e9).collect()}
+    assert got == want and set(want) == {"red", "big", "run"}

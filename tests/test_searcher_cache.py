@@ -1,6 +1,7 @@
 """The searcher's one cache: the LRU type itself (no Spark), df served
-from the fetched blocks, one Spark job per cold search, and bounded
-resident bytes over a long tail-heavy query log."""
+from the fetched blocks, one Spark job per cold search, bounded
+resident bytes over a long tail-heavy query log, and route pricing
+read from the dictionary's cf lookups and expansions."""
 
 from __future__ import annotations
 
@@ -179,3 +180,66 @@ def test_tail_heavy_log_keeps_resident_bytes_bounded(spark, tmp_path):
     assert s.search(tail[:10], k=5)[0] == ref.search(tail[:10], k=5)[0]
     assert s.forward_layer(docs[:5], "term") == \
         ref.forward_layer(docs[:5], "term")
+
+
+# ------------------------------------------------------- route pricing
+PRICED = {
+    "pages": ['[word="spark"]', '[word="s.*"]', '[word="zzqxabsent"]',
+              '[word="spark"] [word!="the"]',
+              '[word="j.*n"] []{0,2} [word="(join|filter)"]',
+              '[word="q.*"] [word!="t.*"]'],
+    "conllu": ['[lemma="table"]', '[xpos="NN.*"]',
+               '[lemma="table" & xpos="NN"]',
+               '[upos="NOUN"] [deprel!="det"]',
+               '[xpos="VB.*" & lemma!="be"] [word="t.*"]',
+               '[deprel="(nsubj|obj)"] [upos!="PUNCT" & word="s.*"]'],
+}
+
+
+def _dictionary_matches(s, test) -> tuple[int, int]:
+    """(Σcf, number of values) of the dictionary values ``test``
+    matches, by a direct aggregate over term_stats / layer_stats."""
+    from word_sketch_lucene_spark.plans.cql import DEFAULT_LAYERS
+
+    layer = DEFAULT_LAYERS[test.attr]
+    if layer == "term":
+        d = s.term_stats.select(F.col("term").alias("value"), "cf")
+    else:
+        d = s.layer_stats.filter(F.col("layer") == layer) \
+            .select("value", "cf")
+    match = (F.col("value") == test.value if test.is_literal
+             else F.col("value").rlike(f"^(?:{test.value})$"))
+    row = d.filter(match).agg(F.sum("cf").alias("cf"),
+                              F.count("*").alias("n")).first()
+    return int(row["cf"] or 0), int(row["n"])
+
+
+def test_pattern_cost_equals_dictionary_aggregate(spark, index_small,
+                                                  conllu_index):
+    """``pattern_cost`` against a direct aggregate over the dictionary
+    stores, for literal, regex, negated and cross-layer tests on the
+    surface and annotation layers: ``capped`` is "some test has more
+    than m matching values", and an uncapped cost is the Σcf over every
+    matching value (a capped one is a lower bound)."""
+    from word_sketch_lucene_spark.plans.cql import _steps, parse_cql
+    from word_sketch_lucene_spark.query.engine import IndexSearcher
+
+    roots = {"pages": index_small, "conllu": conllu_index[0]}
+    n_capped = n_exact = 0
+    for kind, patterns in PRICED.items():
+        s = IndexSearcher(spark, roots[kind])
+        for p in patterns:
+            matches = [_dictionary_matches(s, t)
+                       for st in _steps(parse_cql(p)) for t in st.item.tests]
+            for m in (1, 3, 256):
+                cost, capped = s.pattern_cost(p, max_terms_per_slot=m)
+                want_capped = any(n > m for _cf, n in matches)
+                want_cost = sum(cf for cf, _n in matches)
+                assert capped == want_capped, (p, m)
+                if capped:
+                    assert cost <= want_cost, (p, m)
+                    n_capped += 1
+                else:
+                    assert cost == want_cost, (p, m)
+                    n_exact += cost > 0
+    assert n_capped >= 3 and n_exact >= 8

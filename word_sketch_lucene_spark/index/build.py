@@ -388,13 +388,20 @@ def build_conllu_index(
     return stats
 
 
+def postings_dictionary(postings: DataFrame) -> DataFrame:
+    """``(term, df, cf)`` per key of a postings store, derived from its
+    block metadata (Σn = df, Σsum_tf = cf) — the one derivation of the
+    ``term_stats`` and ``layer_stats`` dictionaries, at build and merge
+    time alike."""
+    return postings.groupBy("term").agg(
+        F.sum("n").alias("df"), F.sum("sum_tf").alias("cf"))
+
+
 def write_layer_stats(spark: SparkSession, layers_path, out_path) -> None:
-    """Per-layer term dictionary ``(layer, value, df, cf)`` derived from
-    the layer-postings block metadata (shared by build and merge)."""
-    seg = spark.read.parquet(str(layers_path))
+    """Per-layer term dictionary ``(layer, value, df, cf)`` of the
+    layer postings (shared by build and merge)."""
     (
-        seg.groupBy("term").agg(
-            F.sum("n").alias("df"), F.sum("sum_tf").alias("cf"))
+        postings_dictionary(spark.read.parquet(str(layers_path)))
         .select(
             # value may itself contain ':' (deprel "nsubj:pass") —
             # split ONLY on the first separator
@@ -557,14 +564,8 @@ def build_index(
         st_ts = StageManifest(paths.term_stats, "term_stats")
         if st_ts.is_complete(inputs_fp, cfg_fp):
             return
-        seg = spark.read.parquet(str(paths.segments))
-        (
-            seg.groupBy("term").agg(
-                F.sum("n").alias("df"),
-                F.sum("sum_tf").alias("cf"),
-            )
-            .write.mode("overwrite").parquet(str(paths.term_stats))
-        )
+        postings_dictionary(spark.read.parquet(str(paths.segments))).write \
+            .mode("overwrite").parquet(str(paths.term_stats))
         st_ts.commit(inputs_fp, cfg_fp,
                      lineage={"derived_from": str(paths.segments)})
 

@@ -145,7 +145,9 @@ def build_collocation_store(
         cond = ((F.col("h.doc_id") == F.col("c.doc_id"))
                 & (g >= -maxw) & (g <= maxw) & (g != 0))
         if within_sentence:
-            cond = cond & (F.col("h.sent_no") == F.col("c.sent_no"))
+            # null-safe: a doc without a stored sentence array is one
+            # flat stream, as in the in-driver kernel
+            cond = cond & F.col("h.sent_no").eqNullSafe(F.col("c.sent_no"))
         whens = []
         for rel, (hitem, citem, lo, hi, head_first, dual) in fast:
             if dual:

@@ -41,6 +41,8 @@ from .build import (
     IndexPaths,
     build_index,
     check_format,
+    postings_dictionary,
+    write_layer_stats,
     write_store,
 )
 from .manifest import StageManifest, config_fingerprint, input_fingerprint
@@ -146,16 +148,13 @@ def merge_indexes(
     paths.stats.write_text(json.dumps(stats, indent=1, sort_keys=True))
 
     seg = spark.read.parquet(str(paths.segments))
-    seg.groupBy("term").agg(
-        F.sum("n").alias("df"), F.sum("sum_tf").alias("cf")
-    ).write.mode("overwrite").parquet(str(paths.term_stats))
+    postings_dictionary(seg).write.mode("overwrite").parquet(
+        str(paths.term_stats))
 
     # annotation-layer postings merge the same way as the term segments
     # (the prefixed key IS the term for the writer kernel); layer_stats
     # re-derives from merged block metadata
     if any((Path(r) / "layers").exists() for r in in_roots):
-        from .build import write_layer_stats
-
         _merge_postings("layers", impacts=False)
         write_layer_stats(spark, paths.layers, paths.layer_stats)
 

@@ -683,19 +683,8 @@ def compile_cql(
                 sel.append(_resolve_col(a, cols).alias(f"x_{a}_{i}"))
         return tokens.filter(_item_predicate(item, cols)).select(*sel)
 
-    def _selective(item: TokenItem) -> bool:
-        # a positive literal surface/lemma test bounds the slot by one
-        # form's cf — the broadcast-safe side of every positional join.
-        # An `|` disjunction is NEVER selective: a literal in one
-        # branch does not bound the whole OR.
-        return selective_broadcast and not item.alts and any(
-            t.is_literal and not t.negated
-            and DEFAULT_LAYERS.get(effective_test(t).attr)
-            in ("term", "lemma", "word_cs", "lemma_cs")
-            for t in item.tests)
-
     cur = _side(0, steps[0].item)
-    chain_selective = _selective(steps[0].item)
+    chain_selective = _selective(steps[0].item, selective_broadcast)
     for i, st in enumerate(steps[1:], start=1):
         nxt = _side(i, st.item)
         prev_p = F.col(f"p{i - 1}")
@@ -714,7 +703,7 @@ def compile_cql(
             # the chained result is bounded by the earlier selective
             # slot (× window width) — keep it the broadcast side
             cur = F.broadcast(cur).join(nxt, cond)
-        elif _selective(st.item):
+        elif _selective(st.item, selective_broadcast):
             cur = cur.join(F.broadcast(nxt), cond)
             chain_selective = True
         else:
@@ -884,7 +873,7 @@ def _compile_dp(
             if within_sentence:
                 cond = cond & F.col(f"_s{j}").eqNullSafe(F.col("_sent"))
             joined = (cur.join(F.broadcast(side), cond)
-                      if _dp_selective(it, selective_broadcast)
+                      if _selective(it, selective_broadcast)
                       else cur.join(side, cond))
             out = joined.select(
                 "doc_id", "start", p.alias("_elo"), p.alias("_ehi"),
@@ -957,7 +946,11 @@ def _compile_dp(
     return out.distinct() if distinct else out
 
 
-def _dp_selective(item: TokenItem, selective_broadcast: bool) -> bool:
+def _selective(item: TokenItem, selective_broadcast: bool) -> bool:
+    """May ``item``'s slot be a join's broadcast side? A positive
+    literal surface/lemma test bounds it by one form's cf. An ``|``
+    disjunction never is: a literal in one branch does not bound the
+    whole OR."""
     return selective_broadcast and not item.alts and any(
         t.is_literal and not t.negated
         and DEFAULT_LAYERS.get(effective_test(t).attr)

@@ -451,7 +451,6 @@ def _two_slot_shape(rel: RelationConfig):
     from .cql import (
         TokenItem,
         _steps,
-        has_alts,
         has_repetitions,
         parse_cql,
         strip_constraints,
@@ -459,10 +458,11 @@ def _two_slot_shape(rel: RelationConfig):
 
     core, cons = strip_constraints(rel.pattern)
     items = parse_cql(core)
-    if has_repetitions(items) or has_alts(items) or cons:
-        # quantifiers change the join arity, cross-attr `|` needs the
-        # OR predicate, inter-slot constraints need capture columns —
-        # all compile_cql territory, not a single CASE-arm window join
+    if has_repetitions(items) or cons:
+        # quantifiers change the join arity, inter-slot constraints
+        # need capture columns — compile_cql territory, not a single
+        # CASE-arm window join (a cross-attr `|` slot folds: its CASE
+        # arm ORs the alternation groups, as _side_pred builds it)
         return None
     token_items = [it for it in items if isinstance(it, TokenItem)]
     labels = {it.label for it in token_items if it.label}
@@ -710,7 +710,9 @@ def _fast_window_pairs(tokens, fast, head, subst_attr, colloc_attr,
     cond = ((F.col("h.doc_id") == F.col("c.doc_id"))
             & (g >= -maxw) & (g <= maxw) & (g != 0))
     if within_sentence:
-        cond = cond & (F.col("h.sent_no") == F.col("c.sent_no"))
+        # null-safe: a doc without a stored sentence array is one flat
+        # stream, as in the in-driver kernel
+        cond = cond & F.col("h.sent_no").eqNullSafe(F.col("c.sent_no"))
     whens = []
     for rel, (hitem, citem, lo, hi, head_first, dual) in fast:
         if dual:

@@ -107,8 +107,8 @@ def index_relation_concordance(
     off the index artifacts — the dependency twin of
     :func:`index_pattern_concordance` (the reference displays relation
     matches as concordance lines too). The keyword span covers
-    governor→dependent (either order); match resolution auto-routes
-    like :meth:`IndexSearcher.relation_matches_auto`, and on the
+    governor→dependent (either order); match resolution routes
+    through ``IndexSearcher._relation_route``, and on the
     distributed route the page window pushes into the join plan
     before anything reaches the driver.
 
@@ -117,26 +117,13 @@ def index_relation_concordance(
     ids (a broadcast dimension join before paging; the index's dense
     ids are partition-order-dependent, so a stable public page must
     rank in the caller's id space)."""
-    from ..plans.cql import parse_relation_query
-
-    rq = parse_relation_query(query) if isinstance(query, str) else query
-    if rq is None:
-        raise ValueError(f"not a relation query: {query!r}")
-    if searcher.relation_route_distributed(rq, df_budget=df_budget):
-        try:
-            matches = searcher.relation_join_df(rq)
-        except NotImplementedError:
-            matches = None
-    else:
-        matches = None
-    if matches is None:
+    matches = searcher._relation_route(query, df_budget=df_budget)
+    if isinstance(matches, list):
         from .engine import bounded_rows_df
 
-        rows = searcher.relation_matches(rq)
         matches = bounded_rows_df(
-            searcher.spark,
-            [(int(d), int(g), int(p)) for d, g, p in rows],
-            "doc_id long, gp long, dp long", ["doc_id", "gp", "dp"])
+            searcher.spark, matches, "doc_id long, gp long, dp long",
+            ["doc_id", "gp", "dp"])
     hits = matches.select(
         "doc_id",
         F.least("gp", "dp").alias("pos"),

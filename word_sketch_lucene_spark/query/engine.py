@@ -19,6 +19,7 @@ Two execution paths, mirroring the reference's two query styles:
 from __future__ import annotations
 
 import json
+from functools import reduce
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -33,7 +34,7 @@ from ..functions.tokenize import (
 )
 from ..index.build import STATS_FILE, check_format
 from .cache import LRUCache
-from .wand import BlockCursor, block_max_wand, exact_daat, idf_py, vectorized_topk
+from .wand import BlockCursor, block_max_wand, exact_daat, idf_py
 
 
 def bounded_rows_df(spark: SparkSession, rows, schema: str,
@@ -144,8 +145,8 @@ class IndexSearcher:
     ``filter(term ∈ Q)`` scan prunes row groups via parquet statistics.
 
     Everything the searcher fetches or derives (block rows, decoded
-    postings, position and slot maps, forward arrays, dictionary
-    lookups, expansion/pricing memos) lives in ONE cache,
+    postings, position and slot maps, forward arrays, cf lookups and
+    regex expansions) lives in ONE cache,
     ``self._cache`` (:class:`.cache.LRUCache`): least-recently-used
     entries evict first once the estimated resident bytes pass one
     budget, ``self._cache.budget_bytes`` (default
@@ -162,6 +163,13 @@ class IndexSearcher:
     cached as read-only arrays (no per-doc dicts), and every chain,
     window, set or forward-gather step is one numpy pass over all
     candidate docs at once.
+
+    The term dictionary has one read path, :meth:`_dictionary`
+    (``(layer, value, df, cf)`` over ``term_stats`` and
+    ``layer_stats``): regex expansion (:meth:`expand_terms`), cf
+    lookups (:meth:`layer_cf`) and route pricing (:meth:`pattern_cost`)
+    all read through it. Spans route through :meth:`_span_route`,
+    relation queries through :meth:`_relation_route`.
     """
 
     MODES = ("auto", "bmw", "wand", "vec", "daat")
@@ -228,21 +236,71 @@ class IndexSearcher:
         scan of its own."""
         return _dfs(self.prefetch(terms))
 
-    def expand_terms(self, pattern: str, max_terms: int = 256) -> list[str]:
-        """P1 regex term expansion via the term dictionary: the
+    # -- term dictionary ----------------------------------------------
+    def _dictionary(self, layers) -> DataFrame:
+        """``(layer, value, df, cf)``: the term dictionary of ``layers``
+        — the one read of the dictionary stores: ``term_stats`` for
+        layer ``term`` (its ``term`` column read as ``value``),
+        ``layer_stats`` for every other layer (raises when the index
+        has no annotation layers). Regex expansion, cf lookups and
+        route pricing all read through here; the layers of one call
+        read as one union, so a lookup spanning them is one job."""
+        parts = []
+        if "term" in layers:
+            parts.append(self.term_stats.select(
+                F.lit("term").alias("layer"), F.col("term").alias("value"),
+                "df", "cf"))
+        other = sorted(set(layers) - {"term"})
+        if other:
+            parts.append(self._require_layers("layer_stats")
+                         .filter(F.col("layer").isin(other))
+                         .select("layer", "value", "df", "cf"))
+        return reduce(DataFrame.unionByName, parts)
+
+    def expand_terms(self, pattern: str, max_terms: int = 256,
+                     layer: str = "term") -> list[str]:
+        """P1 regex expansion through ``layer``'s term dictionary: the
         reference matches ``[lemma=".*self"]`` by regex over the indexed
-        layer — here an anchored ``rlike`` over ``term_stats`` (the term
-        dictionary), df-descending so the cap keeps the heaviest terms.
-        The expansion then feeds :meth:`search` as an OR set — a scan of
-        the O(vocab) stats table, never of the postings (and cached:
-        interactive serving repeats the same expansions)."""
+        layer — here an anchored ``rlike`` over the dictionary,
+        df-descending so the cap keeps the heaviest values. A scan of
+        the O(vocab) dictionary, never of the postings, cached per
+        (layer, pattern, cap): interactive serving repeats the same
+        expansions."""
+        return [v for v, _cf in
+                self._expansion(layer, pattern, max_terms)[:max_terms]]
+
+    def _expansion(self, layer: str, pattern: str, max_terms: int
+                   ) -> list[tuple[str, int]]:
+        """``(value, cf)`` rows of :meth:`expand_terms`, df desc then
+        value asc — up to ``max_terms + 1`` of them, so more than
+        ``max_terms`` rows means the expansion hit the cap."""
         return self._cache.get_or_put(
-            "expand", ("term", pattern, max_terms),
-            lambda: [r["term"] for r in (
-                self.term_stats
-                .filter(F.col("term").rlike(f"^(?:{pattern})$"))
-                .orderBy(F.desc("df"), F.asc("term"))
-                .select("term").limit(max_terms).collect())])
+            "expand", (layer, pattern, max_terms),
+            lambda: [(r["value"], int(r["cf"])) for r in (
+                self._dictionary({layer})
+                .filter(F.col("value").rlike(f"^(?:{pattern})$"))
+                .orderBy(F.desc("df"), F.asc("value"))
+                .select("value", "cf").limit(max_terms + 1).collect())])
+
+    def layer_cf(self, layer: str, values: list[str]) -> dict[str, int]:
+        """Collection frequencies of specific ``layer`` values (absent
+        values omitted) — the sketch scorer's stats lookups."""
+        cfs = self._cfs([(layer, v) for v in values])
+        return {v: cf for (_layer, v), cf in cfs.items() if cf > 0}
+
+    def _cfs(self, keys: list[tuple[str, str]]) -> dict[tuple, int]:
+        """``(layer, value)`` → cf (0 when absent), cached per key;
+        every miss, whichever layers it spans, fetches in ONE pruned
+        dictionary read."""
+        def fetch(missing):
+            want = set(missing)
+            rows = (self._filter_in(self._dictionary({k[0] for k in want}),
+                                    "value", sorted({k[1] for k in want}))
+                    .select("layer", "value", "cf").collect())
+            return {k: int(r["cf"]) for r in rows
+                    if (k := (r["layer"], r["value"])) in want}
+
+        return self._cache.get_many("cf", keys, fetch, default=0)
 
     def search_regex(self, pattern: str, k: int = 10, mode: str = "auto",
                      max_terms: int = 256):
@@ -301,8 +359,7 @@ class IndexSearcher:
                 src = self.segments
                 keys = {t: t for t in missing}
             else:
-                self._require_layers()
-                src = self.layers
+                src = self._require_layers()
                 keys = {f"{layer}:{t}": t for t in missing}
             rows = (
                 self._filter_in(src, "term", sorted(keys))
@@ -320,28 +377,16 @@ class IndexSearcher:
 
         return self._cache.get_many(("positions", layer), terms, fetch)
 
-    def _require_layers(self) -> None:
-        if self.layers is None or self.layer_stats is None:
+    def _require_layers(self, store: str = "layers") -> DataFrame:
+        """An annotation-layer store (``layers`` postings or the
+        ``layer_stats`` dictionary); raises when the index has none."""
+        df = self._dataset(store, required=False)
+        if df is None:
             raise NotImplementedError(
                 "index has no annotation-layer postings — build them "
                 "with index.build.build_layer_postings (reference "
                 "conllu-sentences.blf.yaml multi-field analog)")
-
-    def expand_layer_terms(self, layer: str, pattern: str,
-                           max_terms: int = 256) -> list[str]:
-        """Regex expansion through a layer's term dictionary (P1 over
-        lemma/upos/xpos/deprel), df-descending like :meth:`expand_terms`."""
-        if layer == "term":
-            return self.expand_terms(pattern, max_terms)
-        self._require_layers()
-        return self._cache.get_or_put(
-            "expand", (layer, pattern, max_terms),
-            lambda: [r["value"] for r in (
-                self.layer_stats
-                .filter((F.col("layer") == layer)
-                        & F.col("value").rlike(f"^(?:{pattern})$"))
-                .orderBy(F.desc("df"), F.asc("value"))
-                .select("value").limit(max_terms).collect())])
+        return df
 
     def forward_layer(self, doc_ids: list[int], layer: str
                       ) -> dict[int, list]:
@@ -367,24 +412,6 @@ class IndexSearcher:
             return found
 
         return self._cache.get_many(("forward", layer), doc_ids, fetch)
-
-    def layer_cf(self, layer: str, values: list[str]) -> dict[str, int]:
-        """Collection frequencies for specific layer values (pruned
-        dictionary lookups, cached per value — the sketch scorer's
-        stats joins)."""
-        def fetch(missing):
-            if layer == "term":
-                src = self.term_stats.select(
-                    F.col("term").alias("value"), "cf")
-            else:
-                self._require_layers()
-                src = self.layer_stats.filter(F.col("layer") == layer)
-            return {r["value"]: int(r["cf"]) for r in
-                    self._filter_in(src, "value", missing)
-                    .select("value", "cf").collect()}
-
-        cfs = self._cache.get_many(("cf", layer), values, fetch, default=0)
-        return {v: cf for v, cf in cfs.items() if cf > 0}
 
     def forward_arrays(self, columns: set[str] | None = None
                        ) -> DataFrame | None:
@@ -521,8 +548,7 @@ class IndexSearcher:
             if test.is_literal:
                 values = [test.value.replace("\\", "")]
             else:
-                values = self.expand_layer_terms(layer, test.value,
-                                                 max_terms)
+                values = self.expand_terms(test.value, max_terms, layer)
             by_term = self._positions(values, layer)
             return union([by_term[v] for v in values])
 
@@ -787,64 +813,58 @@ class IndexSearcher:
     def relation_matches_auto(self, query, max_terms_per_slot: int = 256,
                               df_budget: int = 500_000
                               ) -> list[tuple[int, int, int]]:
-        """:meth:`relation_matches` with the hot-slot guard: the
-        dependent side always carries a positive ``deprel`` test whose
-        Σcf is a fixed fraction of the CORPUS (every token has a
-        deprel), so at scale the in-driver resolver would pull a
-        corpus-sized postings map. Over ``df_budget`` the query runs as
-        a distributed dependency join over the forward token table
-        instead: governor side filtered by the source tests, dependent
-        side by deprel + target tests, joined on ``(doc_id, sent_no,
-        head == governor token_id)`` — the same join shape as
-        ``operators.dependency.relation_query_pairs``, executed against
-        the index's own store."""
-        from ..plans.cql import parse_relation_query
+        """:meth:`relation_matches` behind the relation-query router
+        (:meth:`_relation_route`): a hot query runs as the distributed
+        dependency join and its match list comes back through one Arrow
+        batch exchange, ordered by (doc_id, gp, dp)."""
+        out = self._relation_route(query, max_terms_per_slot, df_budget)
+        if isinstance(out, list):
+            return out
+        pdf = out.orderBy("doc_id", "gp", "dp").toPandas()
+        return list(zip(pdf["doc_id"].astype(int).tolist(),
+                        pdf["gp"].astype(int).tolist(),
+                        pdf["dp"].astype(int).tolist()))
+
+    def _relation_route(self, query, max_terms_per_slot: int = 256,
+                        df_budget: int = 500_000,
+                        dep_capture: str | None = None):
+        """The one router for relation queries: the
+        :meth:`relation_join_df` plan on the hot route, else the
+        in-driver :meth:`relation_matches` list. The dependent side
+        always carries a positive ``deprel`` test whose Σcf is a fixed
+        fraction of the corpus, and the in-driver resolver pays (a) the
+        postings pull (Σcf of every test) and (b) FULL forward-array
+        reads (sent_no/token_id/head) for every candidate doc —
+        O(candidate docs × avgdl), bounded by the most selective
+        positive test's Σcf (cf ≥ df) — which dominates. Over
+        ``df_budget``, when an expansion hit the cap, or for a purely
+        negative source (a corpus-sized position complement) the query
+        runs distributed — unless the index has no forward store to
+        serve the plan: a route change never changes results, so that
+        case falls back to the in-driver resolver."""
+        from ..plans.cql import AttrTest, parse_relation_query
 
         rq = (parse_relation_query(query) if isinstance(query, str)
               else query)
         if rq is None:
             raise ValueError(f"not a relation query: {query!r}")
-        if self.relation_route_distributed(rq, max_terms_per_slot,
-                                           df_budget):
-            return self._relation_matches_distributed(rq)
+        tests = [*rq.target.tests, AttrTest("deprel", rq.deprel),
+                 *rq.source.tests]
+        hot = bool(rq.source.tests) and all(t.negated
+                                            for t in rq.source.tests)
+        if not hot:
+            costs = self._test_costs(tests, max_terms_per_slot)
+            est_docs = min([c for t, (c, _) in zip(tests, costs)
+                            if not t.negated] + [self.stats["n_docs"]])
+            hot = (sum(c for c, _ in costs)
+                   + int(est_docs * self.stats["avgdl"]) * 4 > df_budget
+                   or any(capped for _, capped in costs))
+        if hot:
+            try:
+                return self.relation_join_df(rq, dep_capture)
+            except NotImplementedError:
+                pass
         return self.relation_matches(rq, max_terms_per_slot)
-
-    def relation_route_distributed(self, rq, max_terms_per_slot: int = 256,
-                                   df_budget: int = 500_000) -> bool:
-        """The relation-query router's cost model: the in-driver
-        resolver pays (a) the postings pull (Σcf of every test) AND
-        (b) FULL forward-array reads (sent_no/token_id/head + the
-        collocate layer) for every candidate doc — (b) is
-        O(candidate_docs × avgdl), ≈ the corpus for an unselective
-        source, and dominates. Candidate docs are bounded by the most
-        selective positive test's Σdf; when the combined estimate
-        exceeds the budget (or an expansion hit the cap), serve
-        distributed."""
-        from ..plans.cql import AttrTest
-
-        if rq.source.tests and all(t.negated for t in rq.source.tests):
-            # purely-negative source: the in-driver resolver would need
-            # the corpus-sized position complement — always distributed
-            return True
-        dep_tests = list(rq.target.tests) + [AttrTest("deprel", rq.deprel)]
-        self._price_tests(dep_tests + list(rq.source.tests))  # one batch
-        cost = 0
-        capped = False
-        doc_bounds = []
-        for tests in (dep_tests, rq.source.tests):
-            for t in tests:
-                t2, c2 = self._tests_cost([t], max_terms_per_slot)
-                cost += t2
-                capped = capped or c2
-                if not t.negated:
-                    # Σdf of one positive test bounds candidate docs
-                    # (cf ≥ df, so the cf sum is a safe upper estimate
-                    # of df without a second dictionary scan)
-                    doc_bounds.append(t2)
-        est_docs = min(doc_bounds) if doc_bounds else self.stats["n_docs"]
-        est_docs = min(est_docs, self.stats["n_docs"])
-        forward_cost = int(est_docs * self.stats["avgdl"]) * 4
-        return bool(cost + forward_cost > df_budget or capped)
 
     def relation_join_df(self, rq, dep_capture: str | None = None
                          ) -> DataFrame:
@@ -894,106 +914,55 @@ class IndexSearcher:
                          & (dep["head"] == gov["gt"]))
                 .select(*out_cols))
 
-    def _relation_matches_distributed(self, rq) -> list[tuple[int, int, int]]:
-        """Materialized match list off the distributed join — one Arrow
-        batch exchange; plan-shaped consumers (collocate counting)
-        use :meth:`relation_join_df` directly and keep aggregation
-        in-plan instead."""
-        try:
-            df = self.relation_join_df(rq)
-        except NotImplementedError:
-            return self.relation_matches(rq)
-        pdf = df.orderBy("doc_id", "gp", "dp").toPandas()
-        return list(zip(pdf["doc_id"].astype(int).tolist(),
-                        pdf["gp"].astype(int).tolist(),
-                        pdf["dp"].astype(int).tolist()))
-
     def pattern_cost(self, pattern: str, max_terms_per_slot: int = 256
                      ) -> tuple[int, bool]:
-        """(Σcf over every test's dictionary expansion, hit-the-cap
-        flag) — the postings-volume estimate that decides whether the
+        """(Σcf over every test's dictionary values, hit-the-cap flag)
+        — the postings-volume estimate that decides whether the
         in-process span chain is the right tool. The chain decodes
         POSITION lists, whose size is the collection frequency — a
         class-wide layer slot (``[xpos="NN.*"]``) has cf ≈ dl·df, so a
         df-based estimate under-counts it ~100× and keeps corpus-sized
-        pulls in the driver. Dictionary-only scans (term_stats /
-        layer_stats aggregates), never postings — and BATCHED: one
-        conditional-aggregate job per dictionary table for the whole
-        pattern's uncached tests, memoized per (layer, test), so a
-        cold 41-relation fan-out prices in a handful of jobs instead
-        of ~2 scheduler round-trips per slot (r4 verdict #5)."""
+        pulls in the driver. Read from the dictionary only, never the
+        postings: a literal test costs its value's cf, a regex test the
+        Σcf of its expansion (:meth:`expand_terms`), both cached and
+        reused by the chain itself. A test whose expansion has more
+        than ``max_terms_per_slot`` values is capped: its sum covers
+        only the first ``max_terms_per_slot + 1`` values, so the cost is
+        a lower bound — and a capped pattern routes distributed
+        anyway."""
         from ..plans.cql import _steps, parse_cql, strip_within_sentence
 
         pattern, _ws = strip_within_sentence(pattern)
-        steps = _steps(parse_cql(pattern))
-        self._price_tests([t for st in steps for t in st.item.tests])
-        total, capped = 0, False
-        for st in steps:
-            t2, c2 = self._tests_cost(st.item.tests, max_terms_per_slot)
-            total += t2
-            capped = capped or c2
-        return total, capped
+        costs = self._test_costs(
+            [t for st in _steps(parse_cql(pattern)) for t in st.item.tests],
+            max_terms_per_slot)
+        return (sum(c for c, _ in costs),
+                any(capped for _, capped in costs))
 
-    @staticmethod
-    def _priced(tests) -> list[tuple[object, tuple]]:
-        """``(effective test, (layer, value, literal))`` for every test
-        on an indexed layer — the pricing memo's key."""
+    def _test_costs(self, tests, max_terms_per_slot: int
+                    ) -> list[tuple[int, bool]]:
+        """(Σcf, capped) per test, as :meth:`pattern_cost` prices it —
+        every literal of the call in one cf lookup; a test on an
+        unindexed attribute costs ``(0, False)``."""
         from ..plans.cql import DEFAULT_LAYERS, effective_test
 
+        tests = [(DEFAULT_LAYERS.get(t.attr), t)
+                 for t in map(effective_test, tests)]
+        cfs = self._cfs([(layer, t.value.replace("\\", ""))
+                         for layer, t in tests
+                         if layer is not None and t.is_literal])
         out = []
-        for t in map(effective_test, tests):
-            layer = DEFAULT_LAYERS.get(t.attr)
-            if layer is not None:
-                out.append((t, (layer, t.value, t.is_literal)))
+        for layer, t in tests:
+            if layer is None:
+                out.append((0, False))
+            elif t.is_literal:
+                out.append((cfs[(layer, t.value.replace("\\", ""))],
+                            False))
+            else:
+                rows = self._expansion(layer, t.value, max_terms_per_slot)
+                out.append((sum(cf for _v, cf in rows),
+                            len(rows) > max_terms_per_slot))
         return out
-
-    def _price_tests(self, tests) -> dict[tuple, tuple[int, int]]:
-        """(layer, value, literal) → (Σcf, n_values) for every test, the
-        uncached ones in one conditional-aggregate job per dictionary
-        table (term_stats; layer_stats once for ALL non-term layers)."""
-        def fetch(missing):
-            by_src: dict[bool, list] = {}
-            for key in missing:
-                by_src.setdefault(key[0] == "term", []).append(key)
-            found = {}
-            for is_term, keys in by_src.items():
-                if is_term:
-                    src = self.term_stats.select(
-                        F.col("term").alias("value"),
-                        F.lit("term").alias("layer"), "cf")
-                else:
-                    self._require_layers()
-                    src = self.layer_stats.select("value", "layer", "cf")
-                aggs = []
-                for i, (layer, value, lit) in enumerate(keys):
-                    if lit:
-                        m = F.col("value") == value.replace("\\", "")
-                    else:
-                        m = F.col("value").rlike(f"^(?:{value})$")
-                    m = m & (F.col("layer") == layer)
-                    aggs.append(F.sum(F.when(m, F.col("cf"))).alias(f"s{i}"))
-                    aggs.append(F.sum(F.when(m, F.lit(1))).alias(f"n{i}"))
-                row = src.agg(*aggs).collect()[0]
-                for i, key in enumerate(keys):
-                    found[key] = (int(row[f"s{i}"] or 0),
-                                  int(row[f"n{i}"] or 0))
-            return found
-
-        return self._cache.get_many(
-            "price", [key for _t, key in self._priced(tests)], fetch)
-
-    def _tests_cost(self, tests, max_terms_per_slot: int
-                    ) -> tuple[int, bool]:
-        """Σcf + cap flag for one constraint's test list (the per-slot
-        kernel of :meth:`pattern_cost`, reused by the relation-query
-        router) — served from the pricing memo, filled on demand."""
-        prices = self._price_tests(tests)
-        total, capped = 0, False
-        for _t, key in self._priced(tests):
-            scf, n = prices[key]
-            total += scf
-            capped = capped or n > max_terms_per_slot
-        return total, capped
 
     # a broadcast side above this many positions is a driver/executor
     # memory hazard (~0.5 GB of packed rows) — fall back to shuffle
@@ -1001,21 +970,25 @@ class IndexSearcher:
 
     def _selective_broadcast_safe(self, pattern: str) -> bool:
         """May compile_cql hint literal word/lemma slots broadcast for
-        this pattern? Priced from the dictionary memo (already filled
-        by :meth:`pattern_cost` on this path): every positive literal
-        surface/lemma test must be under the broadcast cf cap — a
-        stopword slot at web scale must shuffle, not broadcast."""
-        from ..plans.cql import _steps, parse_cql
+        this pattern? Every positive literal surface/lemma test must be
+        under the broadcast cf cap (cf lookups, cached — already filled
+        by :meth:`pattern_cost` on this path): a stopword slot at web
+        scale must shuffle, not broadcast."""
+        from ..plans.cql import (
+            DEFAULT_LAYERS,
+            _steps,
+            effective_test,
+            parse_cql,
+        )
 
-        tests = [t for st in _steps(parse_cql(pattern))
-                 for t in st.item.tests]
-        prices = self._price_tests(tests)
-        for t, key in self._priced(tests):
-            if (key[0] in ("term", "lemma", "word_cs", "lemma_cs")
-                    and t.is_literal and not t.negated
-                    and prices[key][0] > self.broadcast_slot_max_cf):
-                return False
-        return True
+        keys = [(layer, t.value.replace("\\", ""))
+                for st in _steps(parse_cql(pattern))
+                for t in map(effective_test, st.item.tests)
+                if t.is_literal and not t.negated
+                and (layer := DEFAULT_LAYERS.get(t.attr))
+                in ("term", "lemma", "word_cs", "lemma_cs")]
+        return all(cf <= self.broadcast_slot_max_cf
+                   for cf in self._cfs(keys).values())
 
     def _pattern_fallback_tokens(self, pattern: str,
                                  within_sentence: bool):

@@ -168,15 +168,12 @@ def _dual_window_pairs(searcher, head: str, rel: RelationConfig,
 
 def layer_stats_df(searcher, layer: str):
     """One layer's term dictionary as a ``(term, cf)`` DataFrame —
-    the stats side every sketch scorer joins, served from the index's
-    own ``layer_stats`` dataset (no corpus scan)."""
+    the stats side every sketch scorer joins, read through the
+    searcher's one dictionary accessor (no corpus scan)."""
     from pyspark.sql import functions as F
 
-    if layer == "term":
-        return searcher.term_stats.select("term", "cf")
-    searcher._require_layers()
-    return (searcher.layer_stats.filter(F.col("layer") == layer)
-            .select(F.col("value").alias("term"), "cf"))
+    return searcher._dictionary({layer}).select(
+        F.col("value").alias("term"), "cf")
 
 
 def catalog_tokens(searcher, rels, subst_attr: str, colloc_attr: str,
@@ -218,7 +215,7 @@ def index_word_sketch_distributed(
     - token table = ``posexplode`` of the ``forward_layers`` store
       (``IndexSearcher.forward_token_table`` — doc-partitioned parquet,
       shards with the corpus);
-    - collocate stats = the ``layer_stats`` dictionary
+    - collocate stats = the layer's term dictionary
       (:func:`layer_stats_df`);
     - pattern execution/scoring = the ordinary CQL positional-join
       fan-out (``plans.relations.word_sketch_patterns``).
@@ -263,9 +260,11 @@ def index_relation_collocates(
     counting unit: one governor→dependent match = one pair), the
     reference's ``queryAndRankDepCollocates``
     (``BlackLabQueryExecutor.java:231-244``). Match resolution
-    auto-routes: in-driver forward-array resolver under the Σcf
-    budget, distributed dependency join over the forward token table
-    above it (``IndexSearcher.relation_matches_auto``)."""
+    routes through ``IndexSearcher._relation_route``: in-driver
+    forward-array resolver under the Σcf budget, distributed dependency
+    join over the forward token table above it — there matches AND
+    collocate identity run in ONE plan (per-doc forward pulls would
+    cost O(corpus) driver-side)."""
     from ..plans.cql import parse_relation_query
 
     rq = parse_relation_query(query) if isinstance(query, str) else query
@@ -278,22 +277,18 @@ def index_relation_collocates(
         raise ValueError("relation-query collocates need a literal "
                          "lemma/word test on the source operand")
     layer = DEFAULT_LAYERS[colloc_attr]
-    if searcher.relation_route_distributed(rq, max_terms_per_slot,
-                                           df_budget):
-        # hot slots: matches AND collocate identity in ONE distributed
-        # plan (per-doc forward pulls would cost O(corpus) driver-side)
+    out = searcher._relation_route(rq, max_terms_per_slot, df_budget,
+                                   dep_capture=colloc_attr)
+    if isinstance(out, list):
+        if not out:
+            return []
+        doc, _gp, dp = np.array(out, dtype=np.int64).T
+        counts = collocate_counts(searcher, doc, dp, layer)
+    else:
         from pyspark.sql import functions as F
 
-        counts = {r["colloc"]: r["n"] for r in
-                  searcher.relation_join_df(rq, dep_capture=colloc_attr)
-                  .groupBy("colloc").agg(F.count("*").alias("n"))
-                  .collect()}
-    else:
-        matches = searcher.relation_matches(rq, max_terms_per_slot)
-        if not matches:
-            return []
-        doc, _gp, dp = np.array(matches, dtype=np.int64).T
-        counts = collocate_counts(searcher, doc, dp, layer)
+        counts = {r["colloc"]: r["n"] for r in out.groupBy("colloc")
+                  .agg(F.count("*").alias("n")).collect()}
     return [r[:3] for r in rank_collocates(searcher, layer, head, counts,
                                            min_logdice, limit, round_dp)]
 

@@ -304,26 +304,3 @@ def topk_from_arrays(term_arrays: list[tuple[int, np.ndarray, np.ndarray]],
         cand = np.arange(union.size)
     order = cand[np.lexsort((union[cand], -acc[cand]))][:kk]
     return [(int(union[i]), float(acc[i])) for i in order]
-
-
-def vectorized_topk(cursors: list[BlockCursor], k: int, n_terms: int
-                    ) -> tuple[list[tuple[int, float]], dict]:
-    """Exhaustive union scoring, fully vectorized in numpy.
-
-    Decodes every block, then accumulates per-term contributions in
-    query-term order over the sorted union of candidate docs — the FP
-    addition order matches the oracle exactly (per doc: one add per
-    term, term-major), so scores are bit-identical to DAAT/WAND.
-
-    This is the fast path when pruning cannot win (single/head-term
-    queries at local scale): ~100× faster than the per-doc Python
-    loop. WAND still wins when selective terms make most blocks
-    skippable without decode.
-    """
-    term_arrays = [(c.term_idx, *_decode_all(c)) for c in cursors]
-    out = topk_from_arrays(term_arrays, k)
-    stats = {
-        "decoded_blocks": sum(c.decoded_blocks for c in cursors),
-        "total_blocks": sum(c.nblocks for c in cursors),
-    }
-    return out, stats
