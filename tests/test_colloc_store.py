@@ -64,8 +64,9 @@ def test_store_sketch_identical_to_live_fanout(spark, store_index):
                 s, head, cat, head_pos=head_pos, relation_types=rtypes,
                 limit_per_relation=10, round_dp=4).collect())
         assert got == want and got, (head, head_pos)
-        # use_store="auto" routes to the store and is FULLY identical
-        # (rows AND catalog enumeration order) to the live fan-out
+        # the default use_store=True routes to the store and is FULLY
+        # identical (rows AND catalog enumeration order) to the live
+        # fan-out
         auto = index_word_sketch(
             s, head, cat, head_pos=head_pos, relation_types=rtypes,
             limit_per_relation=10, round_dp=4)
@@ -147,6 +148,33 @@ def test_store_without_format_rebuilds(spark, store_index):
     assert not store_can_serve(s, cat)
     build_collocation_store(s, cat)
     assert store_meta(s)["format"] == STORE_FORMAT
+    assert store_can_serve(s, cat)
+
+
+def test_truncated_store_meta_falls_back_to_live(spark, store_index):
+    """A meta cut short mid-write (a build killed while writing it)
+    reads as no store: the sketch serves the live rows instead of
+    raising, and a build call rebuilds the store."""
+    from pathlib import Path
+
+    from word_sketch_lucene_spark.index.colloc_store import (
+        build_collocation_store,
+        store_can_serve,
+        store_meta,
+    )
+    from word_sketch_lucene_spark.query.sketch import index_word_sketch
+
+    s, cat = store_index
+    p = Path(s.root) / "colloc_store" / "_store_meta.json"
+    text = p.read_text()
+    p.write_text(text[:len(text) // 2])
+    assert store_meta(s) is None
+    assert not store_can_serve(s, cat)
+    kw = dict(head_pos="NOUN", limit_per_relation=10, round_dp=4)
+    live = index_word_sketch(s, "table", cat, use_store=False, **kw)
+    assert index_word_sketch(s, "table", cat, **kw) == live and live
+    build_collocation_store(s, cat)
+    assert p.read_text() == text
     assert store_can_serve(s, cat)
 
 

@@ -234,6 +234,14 @@ SKETCH_RELATIONS = [
      "pattern": '1:[xpos="NN.*"] []{0,3} 2:[xpos="VB.*"]'},
     {"id": "adj_adj_noun", "name": "adj_adj_noun", "type": "SURFACE",
      "pattern": '2:[xpos="JJ"] [xpos="JJ"] 1:[xpos="NN.*"]'},
+    # a quantified unlabeled filler: the labeled slots shift per variant
+    {"id": "adj_opt_adj_noun", "name": "adj_opt_adj_noun",
+     "type": "SURFACE",
+     "pattern": '2:[xpos="JJ"] [xpos="JJ"]{0,1} 1:[xpos="NN.*"]'},
+    # trinary: the 3: slot's lemma names the sub-relation (`via/<3>`)
+    {"id": "via", "name": "via", "type": "SURFACE",
+     "pattern": '1:[xpos="NN.*"] 3:[xpos="(DT|VB.*|IN|CC|JJ)"] '
+                '2:[xpos="NN.*"]'},
 ]
 
 
@@ -263,6 +271,41 @@ def test_sketch_tiers_agree_on_flat_stream_doc(searcher, tmp_path, within):
         got = sorted(tuple(r) for r in index_word_sketch_distributed(
             searcher, head, cat, **kw).collect())
         assert got == want and got, (head, within)
+
+
+def test_store_built_within_sentence_serves_distributed_rows(
+        searcher, tmp_path):
+    """A collocation store built with and without ``within_sentence``
+    serves the rows of the distributed fan-out under the same bound —
+    the flat-stream doc keeps its pairs in the store build too."""
+    import json
+    from pathlib import Path
+
+    from word_sketch_lucene_spark.index.colloc_store import (
+        STORE_DIR,
+        build_collocation_store,
+        serve_sketch_cached,
+    )
+    from word_sketch_lucene_spark.plans.relations import GrammarCatalog
+    from word_sketch_lucene_spark.query.sketch import (
+        index_word_sketch_distributed,
+    )
+
+    path = tmp_path / "catalog.json"
+    path.write_text(json.dumps(SKETCH_RELATIONS))
+    cat = GrammarCatalog.load(path)
+    kw = dict(head_pos="NOUN", limit_per_relation=50, round_dp=4)
+    try:
+        for within in (False, True):
+            build_collocation_store(searcher, cat, within_sentence=within)
+            for head in ("cat", "dog"):
+                got = sorted(serve_sketch_cached(searcher, head, cat, **kw))
+                want = sorted(tuple(r) for r in index_word_sketch_distributed(
+                    searcher, head, cat, within_sentence=within,
+                    **kw).collect())
+                assert got == want and got, (head, within)
+    finally:
+        shutil.rmtree(Path(searcher.root) / STORE_DIR, ignore_errors=True)
 
 
 def _jobs_run(spark, name: str, fn) -> tuple[object, int]:

@@ -9,8 +9,9 @@ parameterized DataFrame plan template: token-class predicates replace
 the BCQL token constraints (P1), slop maps to the window join (J2),
 DEP-typed relations compile to the dependency join (J3).
 
-Every pattern relation — in :func:`word_sketch` and
-:func:`word_sketch_patterns` alike — folds through ONE pair builder
+Every pattern relation — in :func:`word_sketch`,
+:func:`word_sketch_patterns` and the collocation store's all-heads
+build (``index.colloc_store``) alike — folds through ONE pair builder
 (:func:`_pattern_pairs`: CASE arms of one broadcast window join,
 ``plans.cql.compile_cql`` branches for the shapes the fold can't
 enumerate), and every sketch ranks through the one DataFrame tail,
@@ -147,6 +148,19 @@ class RelationConfig:
             return None
         return word_class_expr("colloc_term") == self.colloc_class
 
+    @property
+    def trinary(self) -> bool:
+        """True when the pattern labels a 3: slot: its value names a
+        sub-relation, ``<id>/<value>`` (Sketch-Engine ``%(3.lemma)``)."""
+        from .cql import TokenItem, parse_cql, strip_constraints
+
+        try:
+            return any(isinstance(it, TokenItem) and it.label == "3"
+                       for it in parse_cql(
+                           strip_constraints(self.pattern or "")[0]))
+        except ValueError:
+            return False
+
 
 class GrammarCatalog:
     """Loads + validates the relation catalog (hard errors on duplicate
@@ -245,6 +259,16 @@ class GrammarCatalog:
     def dep(self) -> list[RelationConfig]:
         return [r for r in self.relations if r.type == "DEP"]
 
+    def pattern_relations(self, relation_types: tuple[str, ...],
+                          head_pos: str | None = None
+                          ) -> list[RelationConfig]:
+        """The pattern relations of ``relation_types`` in catalog order,
+        narrowed to those whose head slot's POS group is ``head_pos``
+        when given — the relation set of every sketch tier."""
+        return [r for r in self.relations
+                if r.pattern and r.type in relation_types
+                and (head_pos is None or pattern_pos_group(r) == head_pos)]
+
 
 _XPOS_GROUPS = (("NNP", "NOUN"), ("NN", "NOUN"), ("VB", "VERB"),
                 ("JJ", "ADJ"), ("RB", "ADV"), ("PRP", "PRON"))
@@ -308,10 +332,7 @@ def word_sketch_patterns(
     """
     from ..caching import persist_tracked
 
-    rels = [r for r in catalog.relations
-            if r.pattern and r.type in relation_types]
-    if head_pos is not None:
-        rels = [r for r in rels if pattern_pos_group(r) == head_pos]
+    rels = catalog.pattern_relations(relation_types, head_pos)
     if not rels:
         return tokens.sparkSession.createDataFrame([], _SKETCH_SCHEMA)
     if len(rels) > 1:
@@ -332,14 +353,20 @@ def word_sketch_patterns(
         min_logdice=min_logdice, round_dp=round_dp)
 
 
-def _pattern_pairs(tokens: DataFrame, term_stats: DataFrame, head: str,
-                   rels: list[RelationConfig], subst_attr: str,
-                   colloc_attr: str | None,
+def _pattern_pairs(tokens: DataFrame, term_stats: DataFrame | None,
+                   head: str | None, rels: list[RelationConfig],
+                   subst_attr: str, colloc_attr: str | None,
                    within_sentence: bool = False) -> DataFrame:
     """The one pattern-relation pair builder: ``(relation, doc_id, hp,
-    cp, colloc_term)`` match pairs of every relation in ``rels`` with
-    ``head`` substituted on ``subst_attr`` and the collocate read from
-    ``colloc_attr`` (``None`` = the surface ``term``).
+    cp, head, colloc_term)`` match pairs of every relation in ``rels``
+    with ``head`` substituted on ``subst_attr`` and the collocate read
+    from ``colloc_attr`` (``None`` = the surface ``term``); ``head`` is
+    the head slot's ``subst_attr`` value.
+
+    ``head=None`` matches EVERY head (the collocation store's build,
+    ``index.colloc_store``; ``term_stats`` is then unused): the head
+    side is the whole corpus, so it is treated as hot — no broadcast,
+    and the extended shapes keep their compile branches.
 
     Pairs are RAW (no per-branch distinct — that would be one shuffle
     per relation; the caller's single count-distinct aggregate dedups
@@ -379,8 +406,10 @@ def _pattern_pairs(tokens: DataFrame, term_stats: DataFrame, head: str,
     # broadcast the head side only while its cf stays executor-safe —
     # a stopword-grade head at web scale must shuffle instead (one
     # 1-row stats probe; the same stats table feeds scoring)
-    hcf = term_stats.filter(F.col("term") == head).select("cf").first()
-    head_hot = hcf is not None and int(hcf["cf"]) > 64_000_000
+    head_hot = head is None
+    if not head_hot:
+        hcf = term_stats.filter(F.col("term") == head).select("cf").first()
+        head_hot = hcf is not None and int(hcf["cf"]) > 64_000_000
     if head_hot and extended:
         # the extended fold's neighbor-pivot join broadcasts the head
         # side; a corpus-hot head must keep the shuffle-join branches
@@ -405,9 +434,11 @@ def _pattern_pairs(tokens: DataFrame, term_stats: DataFrame, head: str,
                     break
         else:
             raise ValueError(f"no 1: label in pattern of {rel.id}")
-        subst = substitute_at_position(items, head, pos_n,
-                                       attr=subst_attr)
-        capture = (colloc_attr,) if colloc_attr else ()
+        subst = (items if head is None else
+                 substitute_at_position(items, head, pos_n,
+                                        attr=subst_attr))
+        capture = tuple(dict.fromkeys(
+            a for a in (subst_attr, colloc_attr) if a))
         matches = compile_cql(tokens, subst, capture_attrs=capture,
                               within_sentence=within_sentence,
                               distinct=False,
@@ -427,6 +458,7 @@ def _pattern_pairs(tokens: DataFrame, term_stats: DataFrame, head: str,
             rel_col.alias("relation"),
             "doc_id", F.col("pos_1").alias("hp"),
             F.col("pos_2").alias("cp"),
+            F.col(f"{subst_attr}_1").alias("head"),
             F.col(colloc_col).alias("colloc_term"))
 
     # NOTE plan CONSTRUCTION cost for quantified catalogs is
@@ -665,9 +697,10 @@ def _fast_window_pairs(tokens, fast, head, subst_attr, colloc_attr,
                        cols, within_sentence=False,
                        broadcast_head=True, extended=()):
     """ONE broadcast window join serving every foldable relation:
-    head side = the substituted lemma's rows, probe = one token-table
-    pass at the max window; per-relation gap/direction/tests are CASE
-    arms exploded into ``(relation, doc_id, hp, cp, colloc_term)``.
+    head side = the substituted lemma's rows (every token when ``head``
+    is ``None``), probe = one token-table pass at the max window;
+    per-relation gap/direction/tests are CASE arms exploded into
+    ``(relation, doc_id, hp, cp, head, colloc_term)``.
 
     ``extended`` relations (:func:`_extended_fold_shape`) additionally
     test INTERMEDIATE tokens / capture a trinary 3: slot: the head
@@ -680,7 +713,8 @@ def _fast_window_pairs(tokens, fast, head, subst_attr, colloc_attr,
     his = [hi for _r, (_h, _c, _lo, hi, _hf, _d) in fast]
     his += [abs(g) for _r, ext in extended for g, _v in ext.arms]
     maxw = max(his)
-    h = tokens.filter(_resolve_col(subst_attr, cols) == head)
+    h = (tokens if head is None
+         else tokens.filter(_resolve_col(subst_attr, cols) == head))
     need_nb = _ext_need_neighbors(extended, colloc_attr, cols) \
         if extended else {}
     if need_nb:
@@ -760,10 +794,12 @@ def _fast_window_pairs(tokens, fast, head, subst_attr, colloc_attr,
         (F.broadcast(h) if broadcast_head else h).join(c, cond)
         .select(F.col("h.doc_id").alias("doc_id"),
                 F.col("h.pos").alias("hp"), F.col("c.pos").alias("cp"),
+                F.col(f"h.{DEFAULT_LAYERS.get(subst_attr, subst_attr)}")
+                .alias("head"),
                 F.col(f"c.{cterm}").alias("colloc_term"),
                 F.explode(F.array_compact(F.array(*whens)))
                 .alias("relation"))
-        .select("relation", "doc_id", "hp", "cp", "colloc_term")
+        .select("relation", "doc_id", "hp", "cp", "head", "colloc_term")
     )
 
 

@@ -32,10 +32,11 @@ from ..functions.scoring import logdice_py
 from ..plans.cql import (
     DEFAULT_LAYERS,
     TokenItem,
+    expand_repetitions,
     parse_cql,
     substitute_at_position,
 )
-from ..plans.relations import GrammarCatalog, RelationConfig, pattern_pos_group
+from ..plans.relations import GrammarCatalog, RelationConfig
 from .positions import (
     POS,
     common_docs,
@@ -102,38 +103,65 @@ def relation_collocates(
     round_dp: int | None = None,
     max_terms_per_slot: int = 256,
     within_sentence: bool = False,
-) -> list[tuple[str, int, float, float]]:
+) -> list[tuple[str, str, int, float, float]]:
     """One relation's ranked collocates, fully index-side:
-    ``[(colloc_term, pair_freq, logdice, rel_freq)]``.
+    ``[(relation, colloc_term, pair_freq, logdice, rel_freq)]``.
 
     Counting unit = distinct (doc, head-pos, colloc-pos) — identical to
-    ``plans.cql.pattern_collocates``. ``within_sentence`` constrains
-    matches (and dual slop windows) to one sentence.
+    ``plans.cql.pattern_collocates``. A quantified unlabeled filler
+    matches once per concrete-length variant, its slots read by label.
+    A trinary relation ranks one sub-relation per 3:-slot value on
+    ``colloc_attr``, ``<id>/<value>`` in sorted order, as the DataFrame
+    pair builder keys them. ``within_sentence`` constrains matches (and
+    dual slop windows) to one sentence.
     """
     items = parse_cql(rel.pattern)
-    token_items = [it for it in items if isinstance(it, TokenItem)]
-    labels = {it.label for it in token_items if it.label}
-    layer = DEFAULT_LAYERS[subst_attr]
+    labels = {it.label for it in items
+              if isinstance(it, TokenItem) and it.label}
+    layer = DEFAULT_LAYERS[colloc_attr]
     if rel.dual and "2" not in labels:
-        doc, cp = _dual_window_pairs(searcher, head, rel, layer,
+        doc, cp = _dual_window_pairs(searcher, head, rel,
+                                     DEFAULT_LAYERS[subst_attr],
                                      max_terms_per_slot,
                                      within_sentence=within_sentence)
+        pairs = {rel.id: (doc, cp)}
     else:
-        hi, ci = rel.head_position - 1, rel.colloc_position - 1
         subst = substitute_at_position(items, head, rel.head_position,
                                        attr=subst_attr)
-        matches = searcher.pattern_matches(subst, max_terms_per_slot,
-                                           within_sentence=within_sentence)
-        if not matches:
+        found = []
+        for variant in expand_repetitions(subst):
+            slot = {it.label: i for i, it in enumerate(
+                it for it in variant if isinstance(it, TokenItem))}
+            matches = searcher.pattern_matches(
+                variant, max_terms_per_slot, within_sentence=within_sentence)
+            if matches:
+                doc, rows = zip(*matches)
+                rows = np.array(rows, dtype=np.int64)
+                found.append(np.column_stack(
+                    [doc] + [rows[:, slot[k]] for k in ("1", "2", "3")
+                             if k in slot]))
+        if not found:
             return []
-        doc, rows = zip(*matches)
-        rows = np.array(rows, dtype=np.int64)
-        doc, _hp, cp = np.unique(
-            np.column_stack([doc, rows[:, hi], rows[:, ci]]), axis=0).T
-    return rank_collocates(
-        searcher, DEFAULT_LAYERS[colloc_attr], head,
-        collocate_counts(searcher, doc, cp, DEFAULT_LAYERS[colloc_attr]),
-        min_logdice, limit, round_dp)
+        doc, hp, cp, *tp = np.unique(np.concatenate(found), axis=0).T
+        if not tp:
+            pairs = {rel.id: (doc, cp)}
+        else:
+            docs = np.unique(doc)
+            third, ok = take(searcher._forward_flat(docs, layer, object),
+                             np.searchsorted(docs, doc), tp[0])
+            doc, hp, cp = doc[ok], hp[ok], cp[ok]
+            pairs = {}
+            for value in sorted(set(third.tolist())):
+                sel = third == value
+                d, _hp, c = np.unique(np.column_stack(
+                    [doc[sel], hp[sel], cp[sel]]), axis=0).T
+                pairs[f"{rel.id}/{value}"] = (d, c)
+    return [(rel_id, *row)
+            for rel_id, (doc, cp) in pairs.items()
+            for row in rank_collocates(
+                searcher, layer, head,
+                collocate_counts(searcher, doc, cp, layer),
+                min_logdice, limit, round_dp)]
 
 
 def _dual_window_pairs(searcher, head: str, rel: RelationConfig,
@@ -230,9 +258,7 @@ def index_word_sketch_distributed(
     """
     from ..plans.relations import word_sketch_patterns
 
-    rels = [r for r in catalog.relations
-            if r.pattern and r.type in relation_types
-            and (head_pos is None or pattern_pos_group(r) == head_pos)]
+    rels = catalog.pattern_relations(relation_types, head_pos)
     tokens = catalog_tokens(searcher, rels, subst_attr, colloc_attr,
                             within_sentence)
     stats = layer_stats_df(searcher, DEFAULT_LAYERS[colloc_attr])
@@ -306,7 +332,7 @@ def index_word_sketch(
     relation_types: tuple[str, ...] = ("SURFACE",),
     max_terms_per_slot: int = 256,
     within_sentence: bool = False,
-    use_store: bool | str = "auto",
+    use_store: bool = True,
 ) -> list[tuple[str, str, int, float, float]]:
     """Full word sketch SERVED FROM THE INDEX: every applicable pattern
     relation's ranked collocates —
@@ -315,44 +341,34 @@ def index_word_sketch(
     Same fan-out, filters, and counting as
     ``plans.relations.word_sketch_patterns``.
 
-    ``use_store="auto"`` (default): when a MATERIALIZED collocation
-    store exists at this root with a compatible configuration
+    ``use_store=True`` (default): when a MATERIALIZED collocation store
+    exists at this root with a compatible configuration
     (``index.colloc_store`` — the reference's precomputed
     ``collocations.bin`` tier), serve from it instead of running the
     pattern fan-out: one pruned per-head scan on first touch, pure
     cached scoring after — row-identical output, orders of magnitude
-    cheaper warm. ``False`` forces the live span-chain fan-out;
-    ``True`` requires the store (raises when absent/incompatible).
+    cheaper warm. ``False``, or no compatible store, runs the live
+    fan-out.
     """
     if use_store:
         from ..index.colloc_store import serve_sketch_cached, store_can_serve
 
-        compatible = store_can_serve(
-            searcher, catalog, subst_attr=subst_attr,
-            colloc_attr=colloc_attr, within_sentence=within_sentence,
-            relation_types=relation_types)
-        if use_store is True and not compatible:
-            raise NotImplementedError(
-                "use_store=True but no compatible collocation store at "
-                "this root — index.colloc_store.build_collocation_store")
-        if compatible:
+        if store_can_serve(
+                searcher, catalog, subst_attr=subst_attr,
+                colloc_attr=colloc_attr, within_sentence=within_sentence,
+                relation_types=relation_types):
             return serve_sketch_cached(
                 searcher, head, catalog, head_pos=head_pos,
                 colloc_attr=colloc_attr,
                 limit_per_relation=limit_per_relation,
                 min_logdice=min_logdice, round_dp=round_dp,
                 relation_types=relation_types)
-    rels = [r for r in catalog.relations
-            if r.pattern and r.type in relation_types]
-    if head_pos is not None:
-        rels = [r for r in rels if pattern_pos_group(r) == head_pos]
     out = []
-    for rel in rels:
-        for row in relation_collocates(
-                searcher, head, rel, subst_attr=subst_attr,
-                colloc_attr=colloc_attr, min_logdice=min_logdice,
-                limit=limit_per_relation, round_dp=round_dp,
-                max_terms_per_slot=max_terms_per_slot,
-                within_sentence=within_sentence):
-            out.append((rel.id, *row))
+    for rel in catalog.pattern_relations(relation_types, head_pos):
+        out += relation_collocates(
+            searcher, head, rel, subst_attr=subst_attr,
+            colloc_attr=colloc_attr, min_logdice=min_logdice,
+            limit=limit_per_relation, round_dp=round_dp,
+            max_terms_per_slot=max_terms_per_slot,
+            within_sentence=within_sentence)
     return out
