@@ -15,6 +15,11 @@ overhead rows per store follow the columns:
 
 A store is a top-level entry of the root (a directory or a file); the
 last lines give the totals over all stores.
+
+After the ``layers`` store's rows, one row per key prefix (``lemma:``,
+``xpos:``, …) gives that layer's UNCOMPRESSED payload: the summed
+lengths of its blocks' ``docs_vb``/``tfs_vb``/``pos_vb`` blobs. These
+rows split the store by layer; they are not part of the totals.
 """
 
 from __future__ import annotations
@@ -50,6 +55,22 @@ def store_bytes(store: Path) -> dict[str, int]:
     return out
 
 
+PAYLOAD = ("docs_vb", "tfs_vb", "pos_vb")
+
+
+def layer_payload(store: Path) -> dict[str, int]:
+    """``"<layer>:"`` → uncompressed payload bytes of the layer's
+    postings, for the ``layers`` store."""
+    import pyarrow.compute as pc
+
+    t = pq.read_table(store, columns=["term", *PAYLOAD])
+    sizes = [pc.binary_length(t[c]).to_pylist() for c in PAYLOAD]
+    out: dict[str, int] = defaultdict(int)
+    for term, *ns in zip(t["term"].to_pylist(), *sizes):
+        out[term.split(":", 1)[0] + ":"] += sum(ns)
+    return dict(sorted(out.items()))
+
+
 def main(argv: list[str]) -> int:
     if len(argv) != 2:
         print(__doc__.strip().split("\n\n")[1], file=sys.stderr)
@@ -67,6 +88,10 @@ def main(argv: list[str]) -> int:
         n = sum(cols.values())
         print(f"{store.name:<16} {'total':<24} {n:>11} "
               f"{n / text_bytes:>14.4f}")
+        if store.name == "layers" and store.is_dir():
+            for prefix, b in layer_payload(store).items():
+                print(f"{store.name:<16} {prefix + ' (payload)':<24} "
+                      f"{b:>11} {b / text_bytes:>14.4f}")
     totals["all"] = sum(totals[k] for k in ("columns", FOOTER, SIDECAR))
     for k in ("columns", FOOTER, SIDECAR, "all"):
         print(f"{'TOTAL':<16} {k:<24} {totals[k]:>11} "

@@ -75,8 +75,8 @@ def test_store_sketch_identical_to_live_fanout(spark, store_index):
 
 def test_store_cached_serve_identical_and_fast(spark, store_index):
     """The interactive tier: same rows as the plan tier; the warm call
-    runs from the driver cache with NO Spark job (sub-ms scoring —
-    the preloaded-collocations.bin regime)."""
+    runs from the driver cache with NO Spark job (pure-python scoring
+    — the preloaded-collocations.bin model)."""
     from word_sketch_lucene_spark.index.colloc_store import (
         serve_sketch_cached,
         sketch_from_store,

@@ -394,9 +394,9 @@ def test_constraint_index_route_identical(spark, toks, index_small,
     got = {(r["doc_id"], r["start"], r["end"])
            for r in s.pattern_spans_df(pat).collect()}
     assert got == want and len(want) > 0
-    # the in-driver span chain cannot evaluate constraints — guarded
-    with pytest.raises(NotImplementedError, match="pattern_spans_df"):
-        s.pattern_hits(pat)
+    # the in-driver span chain compares the labelled slots' forward
+    # values (the whole vocabulary expands: no term cap)
+    assert set(s.pattern_hits(pat, max_terms_per_slot=10**6)) == want
     # the auto router delegates to the distributed compile
     assert set(s.pattern_hits_auto(pat)) == want
 

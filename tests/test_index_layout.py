@@ -233,6 +233,56 @@ def test_format_2_root_rejected(spark, index_small, tmp_path):
         merge_indexes(spark, [index_small, old], tmp_path / "merged")
 
 
+def test_format_3_root_rejected(spark, index_small, tmp_path):
+    """A format-3 root (closed-class layers posted in ``layers``) is
+    refused by the searcher and by merge with a rebuild message: its
+    ``layers`` manifest does not say which layers are posted."""
+    old = tmp_path / "v3"
+    old.mkdir()
+    stats = json.loads((index_small / STATS_FILE).read_text())
+    stats["format"] = 3
+    (old / STATS_FILE).write_text(json.dumps(stats))
+    with pytest.raises(ValueError, match="format 3.*rebuild"):
+        IndexSearcher(spark, old)
+    with pytest.raises(ValueError, match="format 3.*rebuild"):
+        merge_indexes(spark, [index_small, old], tmp_path / "merged")
+
+
+def test_closed_class_layers_have_dictionary_rows_but_no_postings(
+        spark, conllu_root):
+    """A CoNLL-U root posts only the open-class layers; its
+    ``layer_stats`` still holds every built layer's dictionary, equal to
+    a brute-force count over the forward token table (``"_"``
+    excluded)."""
+    from word_sketch_lucene_spark.index.build import (
+        CLOSED_CLASS_LAYERS,
+        posted_layers,
+    )
+
+    root, _ = conllu_root
+    keys = {r["term"] for r in
+            spark.read.parquet(str(root / "layers")).select("term")
+            .distinct().collect()}
+    assert keys and all(k.startswith("lemma:") for k in keys)
+    assert not {k.split(":")[0] for k in keys} & set(CLOSED_CLASS_LAYERS)
+    assert posted_layers(root) == ["lemma"]
+    s = IndexSearcher(spark, root)
+    table = s.forward_token_table({"lemma", "upos", "xpos", "deprel",
+                                   "feats"})
+    built = table.columns[2:]
+    want: dict = {}
+    for r in table.collect():
+        for layer in built:
+            if r[layer] != "_":
+                docs, cf = want.get((layer, r[layer]), (set(), 0))
+                want[(layer, r[layer])] = (docs | {r["doc_id"]}, cf + 1)
+    got = {(r["layer"], r["value"], r["df"], r["cf"]) for r in
+           spark.read.parquet(str(root / "layer_stats")).collect()}
+    assert got == {(layer, v, len(d), cf)
+                   for (layer, v), (d, cf) in want.items()}
+    assert {"lemma", "upos", "xpos", "deprel"} <= {g[0] for g in got}
+
+
 def _stats_set(store: Path) -> dict[str, set[bool]]:
     """column → the ``is_stats_set`` values of its chunks, over every
     row group of every file of one store (pyarrow footers)."""
@@ -315,16 +365,35 @@ def test_add_conllu_documents_layers_equal_rebuild(spark, tmp_path):
                        doc_salt=1, n_partitions=2)
     got, want = (_layer_positions(spark, merged),
                  _layer_positions(spark, full))
-    assert got == want and len(want) > 20
-    assert {"lemma:cat", "upos:NOUN"} <= {t for t, _, _ in want}
+    # closed-class layers are checked against the forward store: only
+    # the lemma layer is posted (one posting per token of the 13), in
+    # the merged root as in the rebuild
+    assert got == want and len(want) == 13
+    assert "lemma:cat" in {t for t, _, _ in want}
+    assert {t.split(":")[0] for t, _, _ in got} == {"lemma"}
     assert not set(spark.read.parquet(str(merged / "layers")).columns) \
         & {"dls_vb", "max_tf", "min_dl"}
     assert _stats_set(merged / "layers")["pos_vb"] == {False}
-    # layer_stats re-derived from the merged blocks equals the rebuild's
+    # layer_stats summed over the merged inputs equals the rebuild's,
+    # the closed-class dictionaries included
     ls = {(r["layer"], r["value"], r["df"], r["cf"]) for r in
           spark.read.parquet(str(merged / "layer_stats")).collect()}
     assert ls == {(r["layer"], r["value"], r["df"], r["cf"]) for r in
                   spark.read.parquet(str(full / "layer_stats")).collect()}
+    assert {("xpos", "NN"), ("deprel", "nsubj"), ("upos", "NOUN")} <= {
+        (layer, v) for layer, v, _, _ in ls}
+    m, f = IndexSearcher(spark, merged), IndexSearcher(spark, full)
+    assert m.posted_layers == f.posted_layers == {"term", "lemma"}
+
+    def named(s, root, pattern):
+        names = {r["doc_id"]: r["doc_name"] for r in
+                 spark.read.parquet(str(root / "doc_names")).collect()}
+        return {(names[d], a, b) for d, a, b in s.pattern_hits(pattern)}
+
+    for pattern in ('[xpos="NN.*"] [xpos="VB.*"]',
+                    '[lemma="cat"] [deprel!="obl"]'):
+        got = named(m, merged, pattern)
+        assert got == named(f, full, pattern) and got, pattern
 
 
 def _files(root: Path) -> dict[str, int]:

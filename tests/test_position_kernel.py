@@ -190,6 +190,45 @@ def test_pattern_chain_equals_distributed_compile(searcher):
         assert got == want, pattern
 
 
+CONSTRAINED = [
+    ('1:[xpos="NN.*"] []{0,1} 2:[xpos="NN.*"] & 1.xpos = 2.xpos', False),
+    ('1:[lemma="(cat|dog)"] []{0,2} 2:[xpos="NN.*"] & 1.word != 2.word',
+     True),
+    ('1:[xpos="VB.*"] []{0,3} 2:[xpos="VB.*"] & 1.lemma = 2.lemma', False),
+    ('1:[deprel="det"] 2:[xpos!="DT"] & 1.xpos = 2.xpos', False),
+]
+
+
+def test_constrained_pattern_equals_walk_and_distributed_compile(searcher):
+    """Inter-slot constraints run in the in-driver chain: the labelled
+    slots' forward values compare per match, and the spans equal both
+    the brute-force walk and the distributed compile."""
+    from word_sketch_lucene_spark.plans.cql import (
+        TokenItem,
+        strip_constraints,
+    )
+
+    for pattern, within in CONSTRAINED:
+        core, cons = strip_constraints(pattern)
+        slot = {it.label: i for i, it in enumerate(
+            it for it in parse_cql(core) if isinstance(it, TokenItem))}
+
+        def holds(d, a, c):
+            va = CORPUS[d][a[slot[c.label_a]]][LAYER[c.attr_a]]
+            vb = CORPUS[d][a[slot[c.label_b]]][LAYER[c.attr_b]]
+            return (va != vb) if c.negated else (va == vb)
+
+        walk = sorted((d, a) for d, a in _walk(core, within)
+                      if all(holds(d, a, c) for c in cons))
+        assert searcher.pattern_matches(
+            pattern, within_sentence=within) == walk, pattern
+        got = searcher.pattern_hits(pattern, within_sentence=within)
+        assert got == sorted({(d, a[0], a[-1]) for d, a in walk}), pattern
+        want = sorted(tuple(r) for r in searcher.pattern_spans_df(
+            pattern, df_budget=-1, within_sentence=within).collect())
+        assert got == want and got, pattern
+
+
 def test_phrase_hits_equal_brute_force(searcher):
     rng = random.Random(5)
     phrases = [["cat"], ["the", "cat"], ["the", "zebra"],
@@ -242,6 +281,11 @@ SKETCH_RELATIONS = [
     {"id": "via", "name": "via", "type": "SURFACE",
      "pattern": '1:[xpos="NN.*"] 3:[xpos="(DT|VB.*|IN|CC|JJ)"] '
                 '2:[xpos="NN.*"]'},
+    # an inter-slot constraint, in the shape parse_wsdef builds for a
+    # `*UNIMAP scoord` rule
+    {"id": "scoord", "name": "scoord", "type": "SURFACE",
+     "pattern": '1:[xpos="NN.*"] []{0,1} 2:[xpos="NN.*"] '
+                '& 1.xpos = 2.xpos'},
 ]
 
 

@@ -75,8 +75,10 @@ STATS_FILE = "stats.json"
 # once — docstore ``(doc_id, text)``, no CoNLL-U docstore, no
 # case-folded ``term``/``lemma`` forward arrays. 3: lean postings —
 # ``pos_vb`` is Δpos only (tf lives in ``tfs_vb``), layer postings
-# carry no impacts, payload columns carry no parquet statistics
-INDEX_FORMAT = 3
+# carry no impacts, payload columns carry no parquet statistics. 4:
+# closed-class layers a root's forward store carries have no postings
+# (``layers`` holds the posted layers only; ``layer_stats`` all)
+INDEX_FORMAT = 4
 
 # opaque payload: never filtered on, so no min/max in the footers
 PAYLOAD_COLUMNS = ("docs_vb", "tfs_vb", "dls_vb", "pos_vb", "text")
@@ -189,6 +191,41 @@ class IndexPaths:
 # participates when the input carries the column (CoNLL-U col 6)
 DEFAULT_EXTRA_LAYERS = ("lemma", "upos", "xpos", "deprel", "feats")
 
+# CoNLL-U's fixed tag inventories: a posting list of one of their values
+# covers a large share of the corpus, so a root whose forward store
+# carries the layer checks its tests against that store instead
+CLOSED_CLASS_LAYERS = ("upos", "xpos", "deprel", "feats")
+
+
+def posted_layers(root: str | Path) -> list[str]:
+    """The annotation layers with positional postings at ``root``: the
+    ``layers`` stage manifest's ``config.layers`` (``[]`` without
+    one). A layer with ``layer_stats`` rows but no postings is read
+    from the forward store."""
+    m = StageManifest(IndexPaths(root).layers, "layers").load() or {}
+    return list(m.get("lineage", {}).get("config", {}).get("layers", []))
+
+
+def _melt(layer_tokens: DataFrame, layers) -> DataFrame:
+    """``(layer, value, doc_id, pos)``: one row per annotated token of
+    each of ``layers``. ``"_"`` is CoNLL-U's explicit EMPTY value (no
+    annotation): no dictionary row or posting holds it."""
+    stack_args = ", ".join(f"'{c}', {c}" for c in layers)
+    return (layer_tokens
+            .select("doc_id", "pos",
+                    F.expr(f"stack({len(layers)}, {stack_args}) "
+                           "AS (layer, value)"))
+            .filter(F.col("value").isNotNull() & (F.col("value") != "_")))
+
+
+def layer_dictionary(melted: DataFrame) -> DataFrame:
+    """``(layer, value, df, cf)`` of a melted layer table — the
+    ``layer_stats`` dictionary, for posted and forward-checked layers
+    alike."""
+    return (melted.groupBy("layer", "value", "doc_id").count()
+            .groupBy("layer", "value")
+            .agg(F.count("*").alias("df"), F.sum("count").alias("cf")))
+
 
 def build_layer_postings(
     spark: SparkSession,
@@ -201,18 +238,25 @@ def build_layer_postings(
     block_size: int = BLOCK_SIZE,
     input_paths: list[str] | None = None,
 ) -> None:
-    """Positional postings for EXTRA annotation layers (lemma/upos/
-    xpos/deprel), the Lucene multi-field analog: each layer value is
-    keyed ``"<layer>:<value>"`` so the SAME segment kernel, codec, and
+    """The ``layer_stats`` dictionary of EXTRA annotation layers
+    (lemma/upos/xpos/deprel/feats) and their positional postings, the
+    Lucene multi-field analog: each layer value is keyed
+    ``"<layer>:<value>"`` so the SAME segment kernel, codec, and
     block-max layout serve every layer, and one parquet dataset holds
     them all (predicate pushdown on the prefixed key prunes to one
     layer's postings, exactly like a Lucene per-field terms dictionary).
 
+    A closed-class layer (:data:`CLOSED_CLASS_LAYERS`) that the root's
+    ``forward_layers`` store already carries gets no postings: readers
+    check its tests against the forward values. Every other layer is
+    posted. The ``layers`` manifest's ``config.layers`` lists the posted
+    layers (:func:`posted_layers`); ``layer_stats`` covers every layer.
+
     ``layer_tokens``: ``(doc_id, pos, <layer columns>)`` — the
-    ``sources.conllu.layer_tokens`` shape. Plan: a ``stack`` melt
-    (|layers|× rows — the honest cost of indexing N fields), then the
-    same ONE salted shuffle as the term index. Layers are never
-    scored, so the postings are positions-only: no ``dl``, no impacts.
+    ``sources.conllu.layer_tokens`` shape. Plan: a ``stack`` melt, one
+    aggregate for the dictionary, then for the posted layers the same
+    ONE salted shuffle as the term index. Layers are never scored, so
+    the postings are positions-only: no ``dl``, no impacts.
     """
     paths = IndexPaths(out_dir)
     paths.root.mkdir(parents=True, exist_ok=True)
@@ -220,45 +264,53 @@ def build_layer_postings(
     if layers == DEFAULT_EXTRA_LAYERS:
         # optional layers (feats) participate only when stored
         layers = tuple(c for c in layers if c in layer_tokens.columns)
+    fw = StageManifest(paths.forward_layers, "forward_layers").load() or {}
+    forward = (set(fw["lineage"].get("config", {}).get("columns", []))
+               if fw.get("status") == "complete" else set())
+    posted = [c for c in layers
+              if c not in CLOSED_CLASS_LAYERS or c not in forward]
     config = {"doc_salt": doc_salt, "n_partitions": nparts,
-              "block_size": block_size, "layers": list(layers),
-              "format": INDEX_FORMAT}
+              "block_size": block_size, "layers": posted,
+              "dictionary": list(layers), "format": INDEX_FORMAT}
     cfg_fp = config_fingerprint(config)
     inputs_fp = input_fingerprint(input_paths) if input_paths else "unspecified"
 
-    st = StageManifest(paths.layers, "layers")
-    if not st.is_complete(inputs_fp, cfg_fp):
-        missing = [c for c in layers if c not in layer_tokens.columns]
-        if missing:
-            raise ValueError(f"layer columns not in input: {missing}")
-        stack_args = ", ".join(f"'{c}', {c}" for c in layers)
-        melted = (
-            layer_tokens
-            .select(
-                "doc_id", "pos",
-                F.expr(f"stack({len(layers)}, {stack_args}) "
-                       "AS (layer, value)"))
-            # "_" is CoNLL-U's explicit EMPTY value (no annotation) —
-            # indexing it would create one corpus-sized hot posting
-            .filter(F.col("value").isNotNull() & (F.col("value") != "_"))
-            .select(F.concat_ws(":", "layer", "value").alias("term"),
-                    "doc_id", "pos")
-        )
+    missing = [c for c in layers if c not in layer_tokens.columns]
+    if missing:
+        raise ValueError(f"layer columns not in input: {missing}")
+    melted = _melt(layer_tokens, layers)
+    def _stage_layers() -> None:
+        st = StageManifest(paths.layers, "layers")
+        if st.is_complete(inputs_fp, cfg_fp):
+            return
         # size the shuffle from the surface segments when present
-        # (the melt multiplies rows by |layers|)
+        # (the melt multiplies rows by |posted|)
         lay_parts = (_adaptive_parts(spark, nparts, paths.segments,
-                                     scale=float(len(layers)))
+                                     scale=float(max(1, len(posted))))
                      if paths.segments.exists() else nparts)
-        write_store(encode_postings(melted, lay_parts, doc_salt=doc_salt,
-                                    block_size=block_size, impacts=False),
-                    paths.layers)
+        write_store(encode_postings(
+            melted.filter(F.col("layer").isin(posted)).select(
+                F.concat_ws(":", "layer", "value").alias("term"),
+                "doc_id", "pos"),
+            lay_parts, doc_salt=doc_salt, block_size=block_size,
+            impacts=False), paths.layers)
         st.commit(inputs_fp, cfg_fp,
                   lineage={"inputs": input_paths or [], "config": config})
-    st_ls = StageManifest(paths.layer_stats, "layer_stats")
-    if not st_ls.is_complete(inputs_fp, cfg_fp):
-        write_layer_stats(spark, paths.layers, paths.layer_stats)
-        st_ls.commit(inputs_fp, cfg_fp,
-                     lineage={"derived_from": str(paths.layers)})
+
+    def _stage_layer_stats() -> None:
+        st = StageManifest(paths.layer_stats, "layer_stats")
+        if st.is_complete(inputs_fp, cfg_fp):
+            return
+        layer_dictionary(melted).write.mode("overwrite").parquet(
+            str(paths.layer_stats))
+        st.commit(inputs_fp, cfg_fp,
+                  lineage={"inputs": input_paths or [], "config": config})
+
+    # independent jobs over one melt: run them side by side
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        for f in [pool.submit(_stage_layers),
+                  pool.submit(_stage_layer_stats)]:
+            f.result()
 
 
 def build_conllu_index(
@@ -332,21 +384,14 @@ def build_conllu_index(
     # scoped here, not via the tracked registry
     lt = layer_tokens(parsed).persist()
     try:
-        stats = build_index(
-            spark, None, out_dir,
-            pre_tokenized=lt.select("doc_id", "pos", "term"),
-            doc_salt=doc_salt, n_partitions=n_partitions,
-            block_size=block_size, input_paths=input_paths)
-        build_layer_postings(
-            spark, lt, out_dir, layers=layers, doc_salt=doc_salt,
-            n_partitions=n_partitions, block_size=block_size,
-            input_paths=input_paths)
         if store_docstore:
             # FORWARD layer index (doc → per-layer value arrays in
             # position order): what index-side collocate extraction
             # reads to recover "the lemma AT the matched position" —
             # the Lucene forward-index analog the reference groups
-            # sketch hits with (BlackLabQueryExecutor FORWARD_INDEX)
+            # sketch hits with (BlackLabQueryExecutor FORWARD_INDEX).
+            # Written first: the closed-class layers it carries get no
+            # postings (build_layer_postings reads its manifest)
             def _arr(c):
                 def pick(s):
                     return s[c]
@@ -376,6 +421,15 @@ def build_conllu_index(
                 st_fw.commit(inputs_fp, fw_fp,
                              lineage={"inputs": input_paths or [],
                                       "config": fw_config})
+        stats = build_index(
+            spark, None, out_dir,
+            pre_tokenized=lt.select("doc_id", "pos", "term"),
+            doc_salt=doc_salt, n_partitions=n_partitions,
+            block_size=block_size, input_paths=input_paths)
+        build_layer_postings(
+            spark, lt, out_dir, layers=layers, doc_salt=doc_salt,
+            n_partitions=n_partitions, block_size=block_size,
+            input_paths=input_paths)
     finally:
         lt.unpersist()
     if colloc_catalog is not None:
@@ -391,26 +445,9 @@ def build_conllu_index(
 def postings_dictionary(postings: DataFrame) -> DataFrame:
     """``(term, df, cf)`` per key of a postings store, derived from its
     block metadata (Σn = df, Σsum_tf = cf) — the one derivation of the
-    ``term_stats`` and ``layer_stats`` dictionaries, at build and merge
-    time alike."""
+    ``term_stats`` dictionary, at build and merge time alike."""
     return postings.groupBy("term").agg(
         F.sum("n").alias("df"), F.sum("sum_tf").alias("cf"))
-
-
-def write_layer_stats(spark: SparkSession, layers_path, out_path) -> None:
-    """Per-layer term dictionary ``(layer, value, df, cf)`` of the
-    layer postings (shared by build and merge)."""
-    (
-        postings_dictionary(spark.read.parquet(str(layers_path)))
-        .select(
-            # value may itself contain ':' (deprel "nsubj:pass") —
-            # split ONLY on the first separator
-            F.split_part("term", F.lit(":"), F.lit(1)).alias("layer"),
-            F.expr("substring(term, instr(term, ':') + 1)")
-            .alias("value"),
-            "df", "cf")
-        .write.mode("overwrite").parquet(str(out_path))
-    )
 
 
 def build_index(

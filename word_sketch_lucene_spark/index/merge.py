@@ -42,7 +42,7 @@ from .build import (
     build_index,
     check_format,
     postings_dictionary,
-    write_layer_stats,
+    posted_layers,
     write_store,
 )
 from .manifest import StageManifest, config_fingerprint, input_fingerprint
@@ -152,11 +152,26 @@ def merge_indexes(
         str(paths.term_stats))
 
     # annotation-layer postings merge the same way as the term segments
-    # (the prefixed key IS the term for the writer kernel); layer_stats
-    # re-derives from merged block metadata
-    if any((Path(r) / "layers").exists() for r in in_roots):
+    # (the prefixed key IS the term for the writer kernel); the
+    # layer_stats rows of the inputs sum per (layer, value) — doc ids
+    # are disjoint, so df and cf both add
+    lay_roots = [r for r in in_roots if (Path(r) / "layers").exists()]
+    if lay_roots:
+        posted = {tuple(posted_layers(r)) for r in lay_roots}
+        if len(posted) > 1:
+            raise ValueError(
+                f"merge_indexes: inputs post different annotation "
+                f"layers: {sorted(posted)} (rebuild them with the same "
+                f"layers and forward store)")
         _merge_postings("layers", impacts=False)
-        write_layer_stats(spark, paths.layers, paths.layer_stats)
+        (_union(spark, [str(Path(r) / "layer_stats") for r in lay_roots])
+         .groupBy("layer", "value")
+         .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
+         .write.mode("overwrite").parquet(str(paths.layer_stats)))
+        StageManifest(paths.layers, "layers").commit(
+            inputs_fp, cfg_fp,
+            lineage={"merged": lay_roots,
+                     "config": {**config, "layers": list(posted.pop())}})
 
     # per-doc stores fold by disjoint union (doc ids must not collide
     # across inputs — the add_documents contract)

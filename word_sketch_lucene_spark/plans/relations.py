@@ -226,10 +226,10 @@ class GrammarCatalog:
         carry a ``deprel=`` test (the reference's ``deriveDeprel``),
         which also fills the relation's ``deprel`` field for routing.
         """
-        from .cql import TokenItem, parse_cql
+        from .cql import TokenItem, parse_cql, strip_constraints
 
         rid = obj["id"]
-        items = parse_cql(obj["pattern"])
+        items = parse_cql(strip_constraints(obj["pattern"])[0])
         token_items = [it for it in items if isinstance(it, TokenItem)]
         labels = {it.label for it in token_items if it.label}
         if obj.get("dual"):

@@ -21,6 +21,7 @@ from __future__ import annotations
 import json
 from functools import reduce
 from pathlib import Path
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -136,6 +137,21 @@ def bm25_topk_df(
     return agg.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
+class Slot(NamedTuple):
+    """One constraint slot of the in-driver chain
+    (:meth:`IndexSearcher._slot_maps`)."""
+
+    # positions its posted positive tests share, minus its posted
+    # negated tests; None when it has no posted positive test (the
+    # slot then enumerates its window)
+    allowed: tuple | None
+    # positions of its posted negated tests, when allowed is None
+    banned: tuple | None
+    # (layer, matched dictionary values, negated) per test on a layer
+    # without postings: checked against the forward store
+    filters: tuple
+
+
 class IndexSearcher:
     """Opens a built index directory; serves point top-k queries.
 
@@ -162,7 +178,10 @@ class IndexSearcher:
     two parallel int64 arrays ``(doc, pos)`` sorted by ``(doc, pos)``,
     cached as read-only arrays (no per-doc dicts), and every chain,
     window, set or forward-gather step is one numpy pass over all
-    candidate docs at once.
+    candidate docs at once. A test on a layer without postings (the
+    closed-class tags of a CoNLL-U root, :attr:`posted_layers`) is a
+    filter: one gather of the layer's cached forward code arrays at the
+    positions the chain proposes.
 
     The term dictionary has one read path, :meth:`_dictionary`
     (``(layer, value, df, cf)`` over ``term_stats`` and
@@ -187,6 +206,9 @@ class IndexSearcher:
         self._datasets: dict[str, DataFrame | None] = {}
         self._cache = LRUCache()
         self._block_cache = self._cache.view("blocks")
+        # per forward-checked layer: value → code of the cached code
+        # arrays (outside the LRU: evicting it would orphan them)
+        self._codebooks: dict[str, dict[str, int]] = {}
 
     def _dataset(self, name: str, required: bool = True
                  ) -> DataFrame | None:
@@ -396,22 +418,54 @@ class IndexSearcher:
         MISS set, cached per (layer, doc): a 41-relation sketch fan-out
         touches mostly the same candidate docs per relation, and one
         scan per relation would dominate serving latency."""
-        def fetch(missing):
-            fw = self.forward_arrays({layer})
-            if fw is None or layer not in fw.columns:
-                if self._dataset("forward_layers", required=False) is None:
-                    raise NotImplementedError(
-                        "index has no forward_layers store — build with "
-                        "index.build.build_conllu_index(store_docstore=True)")
-                raise ValueError(
-                    f"forward layer {layer!r} not stored (available: "
-                    f"{sorted(self.forward_arrays().columns[1:])})")
-            found = {d: [] for d in missing}
-            for r in self._filter_in(fw, "doc_id", missing).collect():
-                found[int(r["doc_id"])] = list(r[layer])
-            return found
+        return self._cache.get_many(
+            ("forward", layer), doc_ids,
+            lambda missing: self._read_forward(missing, layer))
 
-        return self._cache.get_many(("forward", layer), doc_ids, fetch)
+    def _read_forward(self, doc_ids: list[int], layer: str
+                      ) -> dict[int, list]:
+        """doc_id → ``layer``'s value list for ``doc_ids`` (``[]`` for
+        a doc without one): one pruned scan of the forward store."""
+        fw = self.forward_arrays({layer})
+        if fw is None or layer not in fw.columns:
+            if self._dataset("forward_layers", required=False) is None:
+                raise NotImplementedError(
+                    "index has no forward_layers store — build with "
+                    "index.build.build_conllu_index(store_docstore=True)")
+            raise ValueError(
+                f"forward layer {layer!r} not stored (available: "
+                f"{sorted(self.forward_arrays().columns[1:])})")
+        found = {d: [] for d in doc_ids}
+        for r in self._filter_in(fw, "doc_id", doc_ids).collect():
+            found[int(r["doc_id"])] = list(r[layer])
+        return found
+
+    def _forward_codes(self, docs, layer: str) -> tuple:
+        """:meth:`_forward_flat` of ``layer`` as int32 codes into the
+        layer's code book (``self._codebooks[layer]``, value → code in
+        order of first sight, append-only so every cached code array
+        stays valid). Each doc's code array is cached, and so is the
+        flat form per doc set (a sketch's relations share their head's
+        candidate docs): a warm forward check is one gather."""
+        import numpy as np
+
+        book = self._codebooks.setdefault(layer, {})
+
+        def fetch(missing):
+            return {d: np.fromiter((book.setdefault(v, len(book))
+                                    for v in vals), np.int32, len(vals))
+                    for d, vals in self._read_forward(missing, layer).items()}
+
+        def flat():
+            arrays = list(self._cache.get_many(
+                ("fw_codes", layer), docs.tolist(), fetch).values())
+            lens = np.fromiter(map(len, arrays), np.int64, len(arrays))
+            values = (np.concatenate(arrays) if arrays
+                      else np.empty(0, np.int32))
+            return values, np.cumsum(lens) - lens, lens
+
+        return self._cache.get_or_put(("fw_flat", layer), docs.tobytes(),
+                                      flat)
 
     def forward_arrays(self, columns: set[str] | None = None
                        ) -> DataFrame | None:
@@ -480,7 +534,7 @@ class IndexSearcher:
     def _doc_lens(self, docs):
         """Token counts of ``docs`` (int64 array, in order; the doc_lens
         stage, one pruned scan per miss set) — the position universe
-        for complement (negation) slots."""
+        of slots that enumerate their window."""
         import numpy as np
 
         def fetch(missing):
@@ -492,6 +546,20 @@ class IndexSearcher:
         return np.fromiter(self._cache.get_many(
             "doc_lens", docs.tolist(), fetch, default=0).values(),
             np.int64, docs.size)
+
+    def _all_docs(self) -> tuple:
+        """``(docs, dls)``: every doc id of the ``doc_lens`` store,
+        sorted, and its token count — the candidates of a pattern with
+        no posted positive test (one scan, cached)."""
+        import numpy as np
+
+        def read():
+            pdf = (self._dataset("doc_lens").select("doc_id", "dl")
+                   .toPandas().sort_values("doc_id"))
+            return (pdf["doc_id"].to_numpy(np.int64),
+                    pdf["dl"].to_numpy(np.int64))
+
+        return self._cache.get_or_put("all_docs", None, read)
 
     def _forward_flat(self, docs, layer: str, dtype=int) -> tuple:
         """``(values, offsets, lengths)``: one forward layer's arrays of
@@ -537,11 +605,10 @@ class IndexSearcher:
 
     def _test_map(self, layer: str, test, max_terms: int) -> tuple:
         """The ``(doc, pos)`` position set matching one (effective)
-        test's value on ``layer``, its regex expanded through the layer
-        dictionary. A sketch fan-out repeats the same constraints
-        ([xpos="NN.*"] appears in ~15 relations), so the union is
-        cached per test; a literal test IS its term's positions
-        entry."""
+        test's value on a POSTED ``layer``, its regex expanded through
+        the layer dictionary. A sketch fan-out repeats the same
+        constraints, so the union is cached per test; a literal test IS
+        its term's positions entry."""
         from .positions import union
 
         def merge():
@@ -556,58 +623,134 @@ class IndexSearcher:
             "test_map", (layer, test.value, test.is_literal, max_terms),
             merge)
 
-    def _slot_maps(self, steps, max_terms_per_slot: int):
-        """Per constraint slot: (allowed positions | None, banned
-        positions | None), each a ``(doc, pos)`` set. ``allowed`` is the
-        intersection of every positive test's positions (cross-LAYER
-        conjunctions like ``[xpos="NN.*" & deprel="nsubj"]`` — the
-        Lucene AND-of-fields span analog) minus every negated test's. A
-        slot with ONLY negated tests gets ``(None, banned)`` — resolved
-        by window complement at chain time (the reference executes
-        negation inside Lucene span queries;
-        ``plans/concept-sketch-spec.md:60``).
+    @property
+    def posted_layers(self) -> frozenset:
+        """The layers whose tests read positional postings: ``term``
+        and the ``layers`` manifest's posted layers
+        (:func:`..index.build.posted_layers`); a test on any other
+        layer is checked against the forward store."""
+        from ..index.build import posted_layers
 
-        A one-test slot IS its test map (no copy), read from the
-        test-map entry and never stored a second time; combined slots
-        cache under their signature."""
+        return self._cache.get_or_put(
+            "posted", None,
+            lambda: frozenset(["term", *posted_layers(self.root)]))
+
+    def _slot_maps(self, steps, max_terms_per_slot: int) -> list:
+        """One :class:`Slot` per constraint step. Tests on posted layers
+        become position sets: ``allowed`` is the intersection of every
+        positive test's positions (cross-LAYER conjunctions like
+        ``[lemma="cat" & word!="cats"]`` — the Lucene AND-of-fields span
+        analog) minus every negated test's. A slot without a posted
+        positive test keeps its negated ones as ``banned``, resolved
+        while its window is enumerated (the reference executes negation
+        inside Lucene span queries; ``plans/concept-sketch-spec.md:60``).
+        Tests on layers without postings (closed-class tags, checked
+        against the forward store) become ``filters``; a positive one
+        that matches no dictionary value empties the slot.
+
+        A slot with one posted test IS its test map (no copy); combined
+        position sets cache under their signature."""
         from ..plans.cql import DEFAULT_LAYERS, effective_test
-        from .positions import combine, union
+        from .positions import NONE, combine, union
 
-        out = []
+        posted = self.posted_layers
+        parsed = []
         for st in steps:
             if st.item.alts:
                 raise NotImplementedError(
                     "cross-attr `|` disjunctions union positions ACROSS "
                     "layers — not expressible over per-layer postings; "
                     "route to the distributed compile (pattern_spans_df)")
-            sig = tuple(
-                ((e := effective_test(t)).attr, e.value, e.negated)
-                for t in st.item.tests) + (max_terms_per_slot,)
-            hit = self._cache.get("slot", sig)
-            if hit is not None:
-                out.append(hit)
-                continue
-            pos_maps, ban_maps = [], []
-            for t in st.item.tests:
-                t = effective_test(t)
+            if not st.item.tests:
+                raise NotImplementedError(
+                    "constraint slot with no tests — use [] gaps")
+            tests = []
+            for t in map(effective_test, st.item.tests):
                 layer = DEFAULT_LAYERS.get(t.attr)
                 if layer is None:
                     raise NotImplementedError(
                         f"attribute {t.attr!r} has no indexed layer "
                         f"(available: {sorted(DEFAULT_LAYERS)})")
-                (ban_maps if t.negated else pos_maps).append(
-                    self._test_map(layer, t, max_terms_per_slot))
-            if not pos_maps and not ban_maps:
-                raise NotImplementedError(
-                    "constraint slot with no tests — use [] gaps")
-            if len(pos_maps) + len(ban_maps) == 1:
-                out.append((pos_maps[0], None) if pos_maps
-                           else (None, ban_maps[0]))
-                continue
-            res = ((combine(pos_maps, ban_maps), None) if pos_maps
-                   else (None, union(ban_maps)))
-            out.append(self._cache.put("slot", sig, res))
+                tests.append((layer, t))
+            parsed.append(tests)
+        # a forward-checked literal matches only a dictionary value:
+        # every literal of the pattern in one cf lookup
+        cfs = self._cfs([(layer, t.value.replace("\\", ""))
+                         for tests in parsed for layer, t in tests
+                         if layer not in posted and t.is_literal])
+        out = []
+        for tests in parsed:
+            on_postings = [(layer, t) for layer, t in tests
+                           if layer in posted]
+            sig = tuple((layer, t.value, t.negated)
+                        for layer, t in on_postings) + (max_terms_per_slot,)
+            sets = self._cache.get("slot", sig)
+            if sets is None:
+                pos_maps = [self._test_map(layer, t, max_terms_per_slot)
+                            for layer, t in on_postings if not t.negated]
+                ban_maps = [self._test_map(layer, t, max_terms_per_slot)
+                            for layer, t in on_postings if t.negated]
+                if len(pos_maps) + len(ban_maps) <= 1:
+                    sets = ((pos_maps[0], None) if pos_maps else
+                            (None, ban_maps[0] if ban_maps else None))
+                else:
+                    sets = self._cache.put("slot", sig, (
+                        (combine(pos_maps, ban_maps), None) if pos_maps
+                        else (None, union(ban_maps))))
+            allowed, banned = sets
+            filters = []
+            for layer, t in tests:
+                if layer in posted:
+                    continue
+                if t.is_literal:
+                    v = t.value.replace("\\", "")
+                    values = (v,) if cfs[(layer, v)] else ()
+                else:
+                    values = tuple(self.expand_terms(
+                        t.value, max_terms_per_slot, layer))
+                if not values:
+                    if t.negated:
+                        continue  # bans nothing
+                    allowed, banned, filters = NONE, None, []
+                    break
+                filters.append((layer, values, t.negated))
+            out.append(Slot(allowed, banned, tuple(filters)))
         return out
+
+    def _keep(self, slot: "Slot", docs):
+        """The slot's ``keep`` callable for :func:`.positions.chain`
+        over ``docs`` — banned positions out, every forward filter
+        applied as one gather of codes into a table of the test's
+        values — or ``None`` when the slot has neither. A position past
+        its doc's array, or holding ``"_"`` (never a dictionary value),
+        fails a positive test and passes a negated one (the
+        ``plans.cql._ANNOT_LAYERS`` convention)."""
+        import numpy as np
+
+        from .positions import POS, gather, keyed, member
+
+        if slot.banned is None and not slot.filters:
+            return None
+        ban = None if slot.banned is None else keyed(slot.banned, docs)
+        checks = []
+        for layer, values, negated in slot.filters:
+            flat = self._forward_codes(docs, layer)
+            book = self._codebooks[layer]
+            # the last entry answers code -1 (past the array's end)
+            lut = np.zeros(len(book) + 1, dtype=bool)
+            lut[[book[v] for v in values if v in book]] = True
+            checks.append((flat, lut, negated))
+
+        def keep(keys):
+            ok = (np.ones(keys.size, dtype=bool) if ban is None
+                  else ~member(keys, ban))
+            rank, pos = keys >> 32, keys & POS
+            for flat, lut, negated in checks:
+                hit = lut[gather(flat, rank, pos, -1)]
+                ok &= ~hit if negated else hit
+            return ok
+
+        return keep
 
     def pattern_hits(self, pattern: str, max_terms_per_slot: int = 256,
                      within_sentence: bool = False
@@ -616,19 +759,19 @@ class IndexSearcher:
         path runs CQL against the Lucene index
         (``BlackLabQueryExecutor.java:117-144``); each token constraint
         expands through its LAYER's term dictionary (term/lemma/upos/
-        xpos/deprel — multi-layer postings via
-        ``index.build.build_layer_postings``), positional postings are
-        fetched via pruned scans, and the constraint sequence chains
-        over whole-candidate ``(doc, pos)`` arrays with the
-        ``[]{min,max}`` gap windows (:func:`.positions.chain`, the
-        SpanNear generalization of :meth:`phrase_hits`).
+        xpos/deprel), tests on posted layers read positional postings
+        via pruned scans (``index.build.build_layer_postings``), tests
+        on closed-class layers read the forward store, and the
+        constraint sequence chains over whole-candidate ``(doc, pos)``
+        arrays with the ``[]{min,max}`` gap windows
+        (:func:`.positions.chain`, the SpanNear generalization of
+        :meth:`phrase_hits`).
 
         Negation: ``attr!="..."`` subtracts banned positions; a slot
-        with ONLY negated tests matches any token in the gap window
-        whose position is not banned (complement against the doc's
-        position universe ``[0, dl)`` from the doc_lens stage). At
-        least one slot must have a positive test (the candidate-doc
-        driver); purely negative patterns are DataFrame-path only.
+        without a positive posted test matches any token in its gap
+        window that passes its tests. At least one slot must have a
+        positive test; purely negative patterns are DataFrame-path
+        only.
 
         ``within_sentence=True`` drops matches whose ends lie in
         different sentences (``sent_no`` forward array — the reference
@@ -640,11 +783,14 @@ class IndexSearcher:
         A trailing BlackLab ``within <s/>`` clause in the pattern
         string sets ``within_sentence`` too; bounded token quantifiers
         (``[xpos="JJ.*"]{1,2}``) execute as the union of their
-        concrete-length variants.
+        concrete-length variants; trailing inter-slot constraints
+        (``& 1.xpos = 2.xpos``) compare the labelled slots' forward
+        values.
         """
         import numpy as np
 
         from ..plans.cql import (
+            _steps,
             expand_repetitions,
             has_alts,
             has_repetitions,
@@ -656,12 +802,6 @@ class IndexSearcher:
         pattern, ws = strip_within_sentence(pattern)
         within_sentence = within_sentence or ws
         pattern, cons = strip_constraints(pattern)
-        if cons:
-            raise NotImplementedError(
-                "inter-slot constraints compare layer VALUES at matched "
-                "positions — the positional span chain only tracks "
-                "position sets; use pattern_spans_df (routes to the "
-                "forward-store distributed compile)")
         items = parse_cql(pattern)
         if has_alts(items):
             raise NotImplementedError(
@@ -672,37 +812,58 @@ class IndexSearcher:
         spans = []
         for v in (expand_repetitions(items) if has_repetitions(items)
                   else [items]):
-            doc, mat = self._chain_matches(v, max_terms_per_slot,
-                                           within_sentence)
+            doc, mat = self._chain_matches(_steps(v), max_terms_per_slot,
+                                           within_sentence, cons)
             spans.append(np.column_stack([doc, mat[:, 0], mat[:, -1]]))
         spans = np.unique(np.concatenate(spans), axis=0)
         return list(zip(*(spans[:, i].tolist() for i in range(3))))
 
-    def _chain_matches(self, items, max_terms_per_slot: int,
-                       within_sentence: bool):
-        """``(doc, positions)``: every match of a constraint sequence —
-        its doc per row and an (n_matches × n_slots) position matrix,
-        rows distinct and sorted by (doc, positions) — the shared core
-        of :meth:`pattern_hits` and :meth:`pattern_matches`.
+    def _chain_matches(self, steps, max_terms_per_slot: int,
+                       within_sentence: bool, constraints=()):
+        """``(doc, positions)``: every match of a constraint sequence
+        (``plans.cql._steps``) — its doc per row and an (n_matches ×
+        n_slots) position matrix, rows distinct and sorted by (doc,
+        positions) — the shared core of :meth:`pattern_hits`,
+        :meth:`pattern_matches` and the dual sketch window.
 
-        Candidate docs are those in every positive slot; the chain
-        keys rank into them (:mod:`.positions`), so any int64 doc id
-        is safe."""
-        from ..plans.cql import _steps
+        Candidate docs are those in every slot with posted positive
+        tests (every doc of ``doc_lens`` when no slot has one); the
+        chain keys rank into them (:mod:`.positions`), so any int64 doc
+        id is safe. ``constraints`` (``plans.cql.SlotConstraint``)
+        compare the forward values of two labelled slots per match."""
         from .positions import POS, chain, common_docs, same_sentence
 
-        steps = _steps(items)
+        labels = {}
+        for i, st in enumerate(steps):
+            labels.setdefault(st.item.label, i)
+        for c in constraints:
+            for lab in (c.label_a, c.label_b):
+                if lab not in labels:
+                    raise ValueError(
+                        f"constraint references position {lab!r} but the "
+                        f"pattern labels only "
+                        f"{[k for k in labels if k is not None]}")
         slots = self._slot_maps(steps, max_terms_per_slot)
-        pos_slots = [allowed for allowed, _ in slots if allowed is not None]
-        if not pos_slots:
+        if all(s.allowed is None and all(neg for _, _, neg in s.filters)
+               for s in slots):
             raise NotImplementedError(
                 "pattern needs at least one non-negated constraint "
                 "index-side (purely negative patterns are DataFrame-"
                 "path only: plans.cql.compile_cql)")
-        docs = common_docs(pos_slots)
-        dls = (self._doc_lens(docs)
-               if any(allowed is None for allowed, _ in slots) else None)
-        mat = chain(docs, slots, [(st.lo, st.hi) for st in steps], dls)
+        cand = [s.allowed for s in slots if s.allowed is not None]
+        if cand:
+            docs = common_docs(cand)
+            # a slot that enumerates its window stops at the doc's end;
+            # a positive forward check already rejects positions past
+            # it, so only slots without one need the doc lengths
+            dls = (self._doc_lens(docs)
+                   if any(s.allowed is None
+                          and all(neg for _, _, neg in s.filters)
+                          for s in slots) else None)
+        else:
+            docs, dls = self._all_docs()
+        mat = chain(docs, [(s.allowed, self._keep(s, docs)) for s in slots],
+                    [(st.lo, st.hi) for st in steps], dls)
         if within_sentence and mat.shape[0]:
             # first and last slot in one sentence (sentences are
             # position-contiguous, so the two ends bound every slot
@@ -711,35 +872,68 @@ class IndexSearcher:
             mat = mat[same_sentence(self._forward_flat(docs, "sent_no"),
                                     mat[:, 0] >> 32, mat[:, 0] & POS,
                                     mat[:, -1] & POS)]
+        for c in constraints:
+            if not mat.shape[0]:
+                break
+            a = self._values_at(docs, c.attr_a, mat[:, labels[c.label_a]])
+            b = self._values_at(docs, c.attr_b, mat[:, labels[c.label_b]])
+            same = (a == b).astype(bool)
+            mat = mat[~same if c.negated else same]
         return docs[mat[:, 0] >> 32], mat & POS
+
+    def _values_at(self, docs, attr: str, keys):
+        """``attr``'s forward values at ``keys`` (built over ``docs``),
+        ``None`` past a doc's array: one gather over the docs the keys
+        touch."""
+        import numpy as np
+
+        from ..plans.cql import DEFAULT_LAYERS
+        from .positions import POS, gather
+
+        if attr == "class":
+            raise NotImplementedError(
+                "the virtual `class` attribute has no forward layer — "
+                "use pattern_spans_df")
+        rank = keys >> 32
+        sub = np.unique(rank)
+        return gather(self._forward_flat(docs[sub],
+                                         DEFAULT_LAYERS.get(attr, attr),
+                                         object),
+                      np.searchsorted(sub, rank), keys & POS, None)
 
     def pattern_matches(self, pattern: str | list,
                         max_terms_per_slot: int = 256,
-                        within_sentence: bool = False
+                        within_sentence: bool = False,
+                        constraints=()
                         ) -> list[tuple[int, tuple[int, ...]]]:
         """Distinct full match assignments ``[(doc_id, (pos per token
         constraint...))]`` — the labeled-capture twin of
         :meth:`pattern_hits` (what collocate extraction needs: the
         position of EVERY slot, not just the span ends). Accepts a
-        pattern string or pre-parsed items (for head-substituted
-        patterns)."""
+        pattern string (its trailing inter-slot constraints apply) or
+        pre-parsed items (for head-substituted patterns) with their
+        ``constraints``."""
         from ..plans.cql import (
+            _steps,
             has_repetitions,
             parse_cql,
+            strip_constraints,
             strip_within_sentence,
         )
 
         if isinstance(pattern, str):
             pattern, ws = strip_within_sentence(pattern)
             within_sentence = within_sentence or ws
+            pattern, cons = strip_constraints(pattern)
+            constraints = tuple(constraints) + cons
         items = parse_cql(pattern) if isinstance(pattern, str) else pattern
         if has_repetitions(items):
             raise NotImplementedError(
                 "labeled-capture matching with repetition quantifiers "
                 "is ambiguous (variants have different slot counts) — "
                 "use pattern_hits for spans")
-        doc, mat = self._chain_matches(items, max_terms_per_slot,
-                                       within_sentence)
+        doc, mat = self._chain_matches(_steps(items), max_terms_per_slot,
+                                       within_sentence, constraints)
         return list(zip(doc.tolist(), map(tuple, mat.tolist())))
 
     def relation_matches(self, query, max_terms_per_slot: int = 256
@@ -749,13 +943,15 @@ class IndexSearcher:
         reference's relation-operator path
         (``BlackLabQueryExecutor.java:211-229``) over the engine's own
         artifacts: the DEPENDENT side (target tests + the positive
-        ``deprel`` test) drives candidates through the layer postings,
-        then the ``sent_no``/``token_id``/``head`` forward arrays
-        resolve every dependent to its governor position at once
-        (CoNLL-U token ids are dense 1..n per sentence, so governor
-        position = sentence start + head-id − 1, verified against the
-        stored token_id). Returns ``[(doc_id, gov_pos, dep_pos)]``
-        ordered by (doc_id, dep_pos).
+        ``deprel`` test) yields candidate positions — from its posted
+        tests, else from its candidate docs' positions checked against
+        the forward store — then the ``sent_no``/``token_id``/``head``
+        forward arrays resolve every dependent to its governor position
+        at once (CoNLL-U token ids are dense 1..n per sentence, so
+        governor position = sentence start + head-id − 1, verified
+        against the stored token_id), and the source slot checks the
+        governors. Returns ``[(doc_id, gov_pos, dep_pos)]`` ordered by
+        (doc_id, dep_pos).
         """
         import numpy as np
 
@@ -765,7 +961,7 @@ class IndexSearcher:
             _steps,
             parse_relation_query,
         )
-        from .positions import POS, common_docs, keyed, member, take
+        from .positions import POS, chain, common_docs, keyed, member, take
 
         rq = (parse_relation_query(query) if isinstance(query, str)
               else query)
@@ -773,19 +969,26 @@ class IndexSearcher:
             raise ValueError(f"not a relation query: {query!r}")
         dep_item = TokenItem(list(rq.target.tests)
                              + [AttrTest("deprel", rq.deprel)])
-        (dep, _), = self._slot_maps(_steps([dep_item]), max_terms_per_slot)
+        (dep,) = self._slot_maps(_steps([dep_item]), max_terms_per_slot)
         src = None
         if rq.source.tests:
             if all(t.negated for t in rq.source.tests):
                 raise NotImplementedError(
                     "purely negative source operand is DataFrame-path "
                     "only (operators.dependency.relation_query_pairs)")
-            (src, _), = self._slot_maps(_steps([rq.source]),
-                                        max_terms_per_slot)
-        docs = common_docs([dep] if src is None else [dep, src])
+            (src,) = self._slot_maps(_steps([rq.source]),
+                                     max_terms_per_slot)
+        cand = [s.allowed for s in (dep, src)
+                if s is not None and s.allowed is not None]
+        if cand:
+            docs = common_docs(cand)
+            dls = None if dep.allowed is not None else self._doc_lens(docs)
+        else:
+            docs, dls = self._all_docs()
         if not docs.size:
             return []
-        dk = keyed(dep, docs)
+        dk = chain(docs, [(dep.allowed, self._keep(dep, docs))], [(0, 0)],
+                   dls)[:, 0]
         rank, dp = dk >> 32, dk & POS
         flat = self._forward_flat(docs, "sent_no")
         sent, off, lens = flat
@@ -806,7 +1009,12 @@ class IndexSearcher:
         rank, dp, gp, hd, s = rank[ok], dp[ok], gp[ok], hd[ok], s[ok]
         ok = (tok[off[rank] + gp] == hd) & (gs == s)
         if src is not None:
-            ok &= member(rank << 32 | gp, keyed(src, docs))
+            gk = rank << 32 | gp
+            if src.allowed is not None:
+                ok &= member(gk, keyed(src.allowed, docs))
+            keep = self._keep(src, docs)
+            if keep is not None:
+                ok &= keep(gk)
         return list(zip(docs[rank[ok]].tolist(), gp[ok].tolist(),
                         dp[ok].tolist()))
 
@@ -925,7 +1133,9 @@ class IndexSearcher:
         pulls in the driver. Read from the dictionary only, never the
         postings: a literal test costs its value's cf, a regex test the
         Σcf of its expansion (:meth:`expand_terms`), both cached and
-        reused by the chain itself. A test whose expansion has more
+        reused by the chain itself. A closed-class test is priced the
+        same way, though the chain checks it against the forward store
+        instead of decoding its positions. A test whose expansion has more
         than ``max_terms_per_slot`` values is capped: its sum covers
         only the first ``max_terms_per_slot + 1`` values, so the cost is
         a lower bound — and a capped pattern routes distributed

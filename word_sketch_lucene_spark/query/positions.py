@@ -12,18 +12,20 @@ per-doc dict. The operations are whole-set numpy passes:
 - :func:`window`: the gap-window step of a pattern chain, a phrase or
   a slop window, as ONE ``searchsorted`` range query over every
   partial match at once (the Lucene ``SpanNear`` analog);
-- :func:`chain`: a constraint sequence, complement (negation-only)
-  slots included;
-- :func:`take`, :func:`same_sentence`: a forward-layer value
-  (``sent_no``, ``head``, the collocate lemma) gathered at many
-  ``(doc, pos)`` by flat offset.
+- :func:`chain`: a constraint sequence, slots without candidate
+  positions (negation-only slots, tests checked against the forward
+  store) included;
+- :func:`take`, :func:`gather`, :func:`same_sentence`: a forward-layer
+  value (``sent_no``, ``head``, the collocate lemma, a closed-class
+  tag's dictionary code) gathered at many ``(doc, pos)`` by flat
+  offset.
 
 Set operations compare one int64 key per position,
 ``rank << 32 | pos``, where ``rank`` is the doc's index in a sorted doc
 list built for the operation (:func:`keyed`) — never ``doc << 32``,
 which overflows for doc ids ≥ 2³¹. Keys sort like ``(doc, pos)``, and a
-window ``[pos + lo, pos + hi]`` never reaches another doc's keys while
-positions stay below ``2³² − hi``.
+window ``[pos + lo, pos + hi]`` (``lo`` may be negative) never reaches
+another doc's keys while positions stay below ``2³² − max(|lo|, |hi|)``.
 """
 
 from __future__ import annotations
@@ -124,32 +126,60 @@ def chain(docs: np.ndarray, slots: list, windows: list,
     and sorted).
 
     ``docs``: the candidate docs (sorted distinct; keys rank into it).
-    ``slots[i]``: ``(allowed, None)`` or, for a complement slot,
-    ``(None, banned)`` — position sets. ``windows[i]``: ``(lo, hi)``
+    ``slots[i]``: ``(allowed, keep)`` — ``allowed``, the slot's
+    candidate position set, or ``None``: the slot enumerates its window
+    (the whole doc when no slot has candidates); ``keep``, ``None`` or a
+    callable mapping keys to the mask of those the slot accepts (banned
+    positions, forward-value filters). ``windows[i]``: ``(lo, hi)``
     offset of slot ``i`` from slot ``i − 1``. ``dls``: doc lengths
-    aligned with ``docs``, needed by complement slots, which enumerate
-    their window (the whole doc for a first slot) and drop banned
-    positions and positions ≥ dl."""
-    allowed, banned = slots[0]
+    aligned with ``docs``, needed when no slot has candidates; with
+    them an enumerated window stops at its doc's last position, without
+    them it runs to its full width and the slot's ``keep`` must reject
+    positions past the doc's end.
+
+    The chain starts at the first slot with candidates and extends to
+    the right, then to the left with mirrored windows."""
+    start = next((i for i, (allowed, _) in enumerate(slots)
+                  if allowed is not None), 0)
+    allowed, keep = slots[start]
     if allowed is None:
         row, pos = ranges(np.zeros(docs.size, dtype=np.int64), dls)
         keys = row << 32 | pos
-        keys = keys[~member(keys, keyed(banned, docs))]
     else:
         keys = keyed(allowed, docs)
-    mat = keys[:, None]
-    for (lo, hi), (allowed, banned) in zip(windows[1:], slots[1:]):
-        prev = mat[:, -1]
-        if allowed is not None:
-            row, nxt = window(prev, keyed(allowed, docs), lo, hi)
-        else:
-            last = dls[prev >> 32] - 1 - (prev & POS)
-            row, nxt = ranges(prev + lo,
-                              np.maximum(np.minimum(hi, last) - lo + 1, 0))
-            keep = ~member(nxt, keyed(banned, docs))
-            row, nxt = row[keep], nxt[keep]
-        mat = np.column_stack([mat[row], nxt])
+    if keep is not None:
+        keys = keys[keep(keys)]
+    cols = [keys]
+    for i in range(start + 1, len(slots)):
+        row, nxt = _step(docs, cols[-1], slots[i], *windows[i], dls)
+        cols = [c[row] for c in cols] + [nxt]
+    for i in range(start - 1, -1, -1):
+        lo, hi = windows[i + 1]
+        row, nxt = _step(docs, cols[0], slots[i], -hi, -lo, dls)
+        cols = [nxt] + [c[row] for c in cols]
+    mat = np.column_stack(cols)
+    if start:
+        mat = mat[np.lexsort(mat.T[::-1])]
     return mat
+
+
+def _step(docs: np.ndarray, prev: np.ndarray, slot, lo: int, hi: int,
+          dls: np.ndarray | None):
+    """``(row, key)`` of every position of ``slot`` inside
+    ``[prev[row] + lo, prev[row] + hi]``."""
+    allowed, keep = slot
+    if allowed is not None:
+        row, nxt = window(prev, keyed(allowed, docs), lo, hi)
+    else:
+        pos = prev & POS
+        first = np.maximum(lo, -pos)
+        last = (hi if dls is None
+                else np.minimum(hi, dls[prev >> 32] - 1 - pos))
+        row, nxt = ranges(prev + first, np.maximum(last - first + 1, 0))
+    if keep is not None:
+        ok = keep(nxt)
+        row, nxt = row[ok], nxt[ok]
+    return row, nxt
 
 
 def take(flat, rank: np.ndarray, pos: np.ndarray):
@@ -160,6 +190,15 @@ def take(flat, rank: np.ndarray, pos: np.ndarray):
     values, off, lens = flat
     ok = (pos >= 0) & (pos < lens[rank])
     return values[off[rank[ok]] + pos[ok]], ok
+
+
+def gather(flat, rank: np.ndarray, pos: np.ndarray, fill):
+    """The forward values at every ``(rank, pos)``, ``fill`` where the
+    doc's array is too short (:func:`take` without the mask)."""
+    values, ok = take(flat, rank, pos)
+    out = np.full(rank.size, fill, dtype=flat[0].dtype)
+    out[ok] = values
+    return out
 
 
 def same_sentence(sent, rank: np.ndarray, a: np.ndarray, b: np.ndarray

@@ -8,10 +8,12 @@ module reproduces that loop over the engine's own artifacts, on the
 flat position kernel (:mod:`.positions`) — every step a whole-set
 array pass, none per candidate doc:
 
-- relation pattern → :meth:`IndexSearcher.pattern_matches` (per-layer
-  positional postings as ``(doc, pos)`` arrays, full
-  constraint-position capture); a dual slop relation is two window
-  range queries of the collocate slot around the head's positions;
+- relation pattern → :meth:`IndexSearcher.pattern_matches` (posted
+  layers' positional postings as ``(doc, pos)`` arrays, closed-class
+  tests checked against the forward store, full constraint-position
+  capture, inter-slot constraints compared on forward values); a dual
+  slop relation is one chain of the collocate slot at offsets
+  ``[-slop, slop]`` around the head's positions;
 - collocate identity: ONE gather from the FORWARD layer store
   (``build_conllu_index`` writes doc → lemma array) at every matched
   ``(doc, pos)``, counted with one ``np.unique``;
@@ -26,25 +28,22 @@ between the two.
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 
 from ..functions.scoring import logdice_py
 from ..plans.cql import (
     DEFAULT_LAYERS,
+    AttrTest,
     TokenItem,
     expand_repetitions,
     parse_cql,
+    strip_constraints,
     substitute_at_position,
 )
 from ..plans.relations import GrammarCatalog, RelationConfig
-from .positions import (
-    POS,
-    common_docs,
-    keyed,
-    same_sentence,
-    take,
-    window,
-)
+from .positions import take
 
 
 def _round(x: float, dp: int | None) -> float:
@@ -112,17 +111,18 @@ def relation_collocates(
     matches once per concrete-length variant, its slots read by label.
     A trinary relation ranks one sub-relation per 3:-slot value on
     ``colloc_attr``, ``<id>/<value>`` in sorted order, as the DataFrame
-    pair builder keys them. ``within_sentence`` constrains matches (and
-    dual slop windows) to one sentence.
+    pair builder keys them. Trailing inter-slot constraints
+    (``& 1.xpos = 2.xpos``) filter the matches. ``within_sentence``
+    constrains matches (and dual slop windows) to one sentence.
     """
-    items = parse_cql(rel.pattern)
+    core, cons = strip_constraints(rel.pattern)
+    items = parse_cql(core)
     labels = {it.label for it in items
               if isinstance(it, TokenItem) and it.label}
     layer = DEFAULT_LAYERS[colloc_attr]
     if rel.dual and "2" not in labels:
-        doc, cp = _dual_window_pairs(searcher, head, rel,
-                                     DEFAULT_LAYERS[subst_attr],
-                                     max_terms_per_slot,
+        doc, cp = _dual_window_pairs(searcher, head, items, rel,
+                                     subst_attr, max_terms_per_slot,
                                      within_sentence=within_sentence)
         pairs = {rel.id: (doc, cp)}
     else:
@@ -133,7 +133,8 @@ def relation_collocates(
             slot = {it.label: i for i, it in enumerate(
                 it for it in variant if isinstance(it, TokenItem))}
             matches = searcher.pattern_matches(
-                variant, max_terms_per_slot, within_sentence=within_sentence)
+                variant, max_terms_per_slot, within_sentence=within_sentence,
+                constraints=cons)
             if matches:
                 doc, rows = zip(*matches)
                 rows = np.array(rows, dtype=np.int64)
@@ -164,34 +165,26 @@ def relation_collocates(
                 min_logdice, limit, round_dp)]
 
 
-def _dual_window_pairs(searcher, head: str, rel: RelationConfig,
-                       head_layer: str, max_terms_per_slot: int,
+def _dual_window_pairs(searcher, head: str, items, rel: RelationConfig,
+                       subst_attr: str, max_terms_per_slot: int,
                        within_sentence: bool = False):
     """Dual single-position relation: collocate constraint within
     ``default_slop`` tokens of the head, either side (the DataFrame
-    twin's slop-window branch) — two window range queries of the
-    collocate slot's keys around every head position. Returns the
-    ``(doc, colloc_pos)`` arrays of the distinct pairs."""
-    from ..plans.cql import _steps
+    twin's slop-window branch) — one chain of the head slot and the
+    collocate slot at offsets ``[-slop, slop]``, the head's own
+    position dropped. Returns the ``(doc, colloc_pos)`` arrays of the
+    distinct pairs."""
+    from ..plans.cql import _Step
 
-    items = [it for it in parse_cql(rel.pattern)
-             if isinstance(it, TokenItem)]
-    citem = items[rel.head_position - 1]
-    heads = searcher._positions([head], head_layer)[head]
-    (allowed, _ban), = searcher._slot_maps(
-        _steps([citem]), max_terms_per_slot)
-    docs = common_docs([heads, allowed])
-    hk, ck = keyed(heads, docs), keyed(allowed, docs)
+    citem = [it for it in items
+             if isinstance(it, TokenItem)][rel.head_position - 1]
     slop = rel.default_slop
-    (lrow, lk), (rrow, rk) = (window(hk, ck, -slop, -1),
-                              window(hk, ck, 1, slop))
-    hk, ck = hk[np.concatenate([lrow, rrow])], np.concatenate([lk, rk])
-    rank, hp, cp = ck >> 32, hk & POS, ck & POS
-    if within_sentence and rank.size:
-        keep = same_sentence(searcher._forward_flat(docs, "sent_no"),
-                             rank, hp, cp)
-        rank, cp = rank[keep], cp[keep]
-    return docs[rank], cp
+    hitem = TokenItem([AttrTest(subst_attr, re.escape(head))])
+    doc, mat = searcher._chain_matches(
+        [_Step(hitem, 0, 0), _Step(citem, -slop, slop)],
+        max_terms_per_slot, within_sentence)
+    keep = mat[:, 0] != mat[:, 1]
+    return doc[keep], mat[keep, 1]
 
 
 def layer_stats_df(searcher, layer: str):
