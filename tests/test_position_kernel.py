@@ -36,6 +36,7 @@ WORDS = [("The", "the", "DT", "DET"), ("the", "the", "DT", "DET"),
          ("big", "big", "JJ", "ADJ"), ("red", "red", "JJ", "ADJ"),
          ("and", "and", "CC", "CCONJ"), ("of", "of", "IN", "ADP")]
 DEPRELS = ["nsubj", "obj", "det", "amod", "cc", "nmod"]
+RARE_DEPREL = "expl"
 LAYER = {"word": "term", "lemma": "lemma", "xpos": "xpos",
          "deprel": "deprel"}
 POSITIVE = [("word", "cat"), ("word", "the"), ("word", "c.*"),
@@ -62,6 +63,8 @@ def _corpus() -> dict[int, list[dict]]:
                     lemma=lemma, xpos=xpos, upos=upos, head=head,
                     deprel="root" if head == 0 else rng.choice(DEPRELS)))
         docs[d] = toks
+    # one dependent in one doc carries a tag rarer than the doc count
+    next(t for t in docs[DOC_IDS[-1]] if t["head"])["deprel"] = RARE_DEPREL
     return docs
 
 
@@ -227,6 +230,54 @@ def test_constrained_pattern_equals_walk_and_distributed_compile(searcher):
         want = sorted(tuple(r) for r in searcher.pattern_spans_df(
             pattern, df_budget=-1, within_sentence=within).collect())
         assert got == want and got, pattern
+
+
+def test_undriven_pattern_routes_distributed(searcher):
+    """A pattern with no positive test on a posted layer (closed-class
+    tags are checked against the forward store) enumerates every doc in
+    the driver, however rare its values: the span router prices it at
+    the corpus and returns the distributed plan, where a pattern that a
+    posted lemma test drives stays in the driver at the same budget."""
+    from pyspark.sql import DataFrame
+
+    undriven = '[xpos="JJ"] [xpos="NN"]'
+    driven = '[lemma="cat"] [xpos="NN"]'
+    budget = max(searcher.pattern_cost(p)[0] for p in (undriven, driven))
+    tokens = searcher.stats["n_docs"] * searcher.stats["avgdl"]
+    assert 0 < budget < tokens
+    for pattern, drives in ((undriven, False), (driven, True)):
+        out = searcher._span_route(pattern, 256, budget, False)
+        assert isinstance(out, list) == drives, pattern
+        spans = (out if drives
+                 else sorted(tuple(r) for r in out.collect()))
+        assert spans == searcher.pattern_hits(pattern) and spans, pattern
+    plan = searcher.pattern_spans_df(undriven, df_budget=budget)
+    assert isinstance(plan, DataFrame)
+    assert sorted(tuple(r) for r in plan.collect()) == \
+        searcher.pattern_hits(undriven)
+
+
+def test_undriven_relation_routes_distributed(searcher):
+    """A relation query has the same rule: with no positive test on a
+    posted layer every doc is a candidate, so even a deprel held by one
+    token routes to the dependency join under a budget of twice the
+    corpus, and the join gives the in-driver resolver's matches."""
+    q = f'_ -{RARE_DEPREL}-> _'
+    budget = int(2 * searcher.stats["n_docs"] * searcher.stats["avgdl"])
+    out = searcher._relation_route(q, df_budget=budget)
+    assert not isinstance(out, list)
+    direct = searcher.relation_matches(q)
+    assert sorted(tuple(r) for r in out.collect()) == direct
+    ((d, gp, dp),) = direct
+    assert CORPUS[d][dp]["deprel"] == RARE_DEPREL
+    assert CORPUS[d][gp]["token_id"] == CORPUS[d][dp]["head"]
+    # every deprel, over all docs: the flat-stream doc (no sent_no
+    # array, full head/token_id arrays) shifts no other doc's offsets
+    for rel in DEPRELS:
+        q = f'_ -{rel}-> _'
+        assert sorted(searcher.relation_matches(q)) == sorted(
+            tuple(r) for r in searcher._relation_route(
+                q, df_budget=-1).collect()), rel
 
 
 def test_phrase_hits_equal_brute_force(searcher):

@@ -279,10 +279,8 @@ def build_layer_postings(
     if missing:
         raise ValueError(f"layer columns not in input: {missing}")
     melted = _melt(layer_tokens, layers)
-    def _stage_layers() -> None:
-        st = StageManifest(paths.layers, "layers")
-        if st.is_complete(inputs_fp, cfg_fp):
-            return
+    st = StageManifest(paths.layers, "layers")
+    if not st.is_complete(inputs_fp, cfg_fp):
         # size the shuffle from the surface segments when present
         # (the melt multiplies rows by |posted|)
         lay_parts = (_adaptive_parts(spark, nparts, paths.segments,
@@ -296,21 +294,12 @@ def build_layer_postings(
             impacts=False), paths.layers)
         st.commit(inputs_fp, cfg_fp,
                   lineage={"inputs": input_paths or [], "config": config})
-
-    def _stage_layer_stats() -> None:
-        st = StageManifest(paths.layer_stats, "layer_stats")
-        if st.is_complete(inputs_fp, cfg_fp):
-            return
+    st_ls = StageManifest(paths.layer_stats, "layer_stats")
+    if not st_ls.is_complete(inputs_fp, cfg_fp):
         layer_dictionary(melted).write.mode("overwrite").parquet(
             str(paths.layer_stats))
-        st.commit(inputs_fp, cfg_fp,
-                  lineage={"inputs": input_paths or [], "config": config})
-
-    # independent jobs over one melt: run them side by side
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        for f in [pool.submit(_stage_layers),
-                  pool.submit(_stage_layer_stats)]:
-            f.result()
+        st_ls.commit(inputs_fp, cfg_fp,
+                     lineage={"inputs": input_paths or [], "config": config})
 
 
 def build_conllu_index(

@@ -726,6 +726,17 @@ def compile_cql(
     return out.distinct() if distinct else out
 
 
+def check_constraint_labels(constraints, labels: list) -> None:
+    """Raise when a constraint names a position ``labels`` (the
+    pattern's slot labels) does not hold."""
+    for c in constraints:
+        for lab in (c.label_a, c.label_b):
+            if lab not in labels:
+                raise ValueError(
+                    f"constraint references position {lab!r} but the "
+                    f"pattern labels only {labels}")
+
+
 def _compile_with_constraints(
     tokens: DataFrame,
     items: list[TokenItem | GapItem],
@@ -746,12 +757,7 @@ def _compile_with_constraints(
     before the final distinct."""
     labels = [it.label for it in items
               if isinstance(it, TokenItem) and it.label is not None]
-    for c in constraints:
-        for lab in (c.label_a, c.label_b):
-            if lab not in labels:
-                raise ValueError(
-                    f"constraint references position {lab!r} but the "
-                    f"pattern labels only {labels}")
+    check_constraint_labels(constraints, labels)
     need = []
     for c in constraints:
         for a in (c.attr_a, c.attr_b):

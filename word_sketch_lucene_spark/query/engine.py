@@ -206,9 +206,9 @@ class IndexSearcher:
         self._datasets: dict[str, DataFrame | None] = {}
         self._cache = LRUCache()
         self._block_cache = self._cache.view("blocks")
-        # per forward-checked layer: value → code of the cached code
-        # arrays (outside the LRU: evicting it would orphan them)
-        self._codebooks: dict[str, dict[str, int]] = {}
+        # forward value → code of every cached code array, one book for
+        # all layers (outside the LRU: evicting it would orphan them)
+        self._codebook: dict = {}
 
     def _dataset(self, name: str, required: bool = True
                  ) -> DataFrame | None:
@@ -442,14 +442,16 @@ class IndexSearcher:
 
     def _forward_codes(self, docs, layer: str) -> tuple:
         """:meth:`_forward_flat` of ``layer`` as int32 codes into the
-        layer's code book (``self._codebooks[layer]``, value → code in
-        order of first sight, append-only so every cached code array
-        stays valid). Each doc's code array is cached, and so is the
-        flat form per doc set (a sketch's relations share their head's
-        candidate docs): a warm forward check is one gather."""
+        searcher's code book (``self._codebook``: value → code in order
+        of first sight, append-only so every cached code array stays
+        valid, and shared by all layers so codes are equal exactly when
+        values are) — the one form forward filters and inter-slot
+        constraints read. Each doc's code array is cached, and so is
+        the flat form per doc set (a sketch's relations share their
+        head's candidate docs): a warm forward check is one gather."""
         import numpy as np
 
-        book = self._codebooks.setdefault(layer, {})
+        book = self._codebook
 
         def fetch(missing):
             return {d: np.fromiter((book.setdefault(v, len(book))
@@ -646,7 +648,8 @@ class IndexSearcher:
         inside Lucene span queries; ``plans/concept-sketch-spec.md:60``).
         Tests on layers without postings (closed-class tags, checked
         against the forward store) become ``filters``; a positive one
-        that matches no dictionary value empties the slot.
+        that matches no value (``"_"``, a regex with an empty
+        expansion) empties the slot.
 
         A slot with one posted test IS its test map (no copy); combined
         position sets cache under their signature."""
@@ -673,11 +676,6 @@ class IndexSearcher:
                         f"(available: {sorted(DEFAULT_LAYERS)})")
                 tests.append((layer, t))
             parsed.append(tests)
-        # a forward-checked literal matches only a dictionary value:
-        # every literal of the pattern in one cf lookup
-        cfs = self._cfs([(layer, t.value.replace("\\", ""))
-                         for tests in parsed for layer, t in tests
-                         if layer not in posted and t.is_literal])
         out = []
         for tests in parsed:
             on_postings = [(layer, t) for layer, t in tests
@@ -703,8 +701,10 @@ class IndexSearcher:
                 if layer in posted:
                     continue
                 if t.is_literal:
+                    # "_" is no annotation, never a value; a value the
+                    # docs do not hold misses the filter's code table
                     v = t.value.replace("\\", "")
-                    values = (v,) if cfs[(layer, v)] else ()
+                    values = (v,) if v != "_" else ()
                 else:
                     values = tuple(self.expand_terms(
                         t.value, max_terms_per_slot, layer))
@@ -735,7 +735,7 @@ class IndexSearcher:
         checks = []
         for layer, values, negated in slot.filters:
             flat = self._forward_codes(docs, layer)
-            book = self._codebooks[layer]
+            book = self._codebook
             # the last entry answers code -1 (past the array's end)
             lut = np.zeros(len(book) + 1, dtype=bool)
             lut[[book[v] for v in values if v in book]] = True
@@ -831,18 +831,14 @@ class IndexSearcher:
         chain keys rank into them (:mod:`.positions`), so any int64 doc
         id is safe. ``constraints`` (``plans.cql.SlotConstraint``)
         compare the forward values of two labelled slots per match."""
+        from ..plans.cql import check_constraint_labels
         from .positions import POS, chain, common_docs, same_sentence
 
         labels = {}
         for i, st in enumerate(steps):
-            labels.setdefault(st.item.label, i)
-        for c in constraints:
-            for lab in (c.label_a, c.label_b):
-                if lab not in labels:
-                    raise ValueError(
-                        f"constraint references position {lab!r} but the "
-                        f"pattern labels only "
-                        f"{[k for k in labels if k is not None]}")
+            if st.item.label is not None:
+                labels.setdefault(st.item.label, i)
+        check_constraint_labels(constraints, list(labels))
         slots = self._slot_maps(steps, max_terms_per_slot)
         if all(s.allowed is None and all(neg for _, _, neg in s.filters)
                for s in slots):
@@ -875,18 +871,16 @@ class IndexSearcher:
         for c in constraints:
             if not mat.shape[0]:
                 break
-            a = self._values_at(docs, c.attr_a, mat[:, labels[c.label_a]])
-            b = self._values_at(docs, c.attr_b, mat[:, labels[c.label_b]])
-            same = (a == b).astype(bool)
+            a, b = (self._codes_at(docs, attr, mat[:, labels[lab]])
+                    for attr, lab in ((c.attr_a, c.label_a),
+                                      (c.attr_b, c.label_b)))
+            same = a == b
             mat = mat[~same if c.negated else same]
         return docs[mat[:, 0] >> 32], mat & POS
 
-    def _values_at(self, docs, attr: str, keys):
-        """``attr``'s forward values at ``keys`` (built over ``docs``),
-        ``None`` past a doc's array: one gather over the docs the keys
-        touch."""
-        import numpy as np
-
+    def _codes_at(self, docs, attr: str, keys):
+        """``attr``'s forward codes (:meth:`_forward_codes`) at ``keys``
+        (built over ``docs``), ``-1`` past a doc's array."""
         from ..plans.cql import DEFAULT_LAYERS
         from .positions import POS, gather
 
@@ -894,12 +888,9 @@ class IndexSearcher:
             raise NotImplementedError(
                 "the virtual `class` attribute has no forward layer — "
                 "use pattern_spans_df")
-        rank = keys >> 32
-        sub = np.unique(rank)
-        return gather(self._forward_flat(docs[sub],
-                                         DEFAULT_LAYERS.get(attr, attr),
-                                         object),
-                      np.searchsorted(sub, rank), keys & POS, None)
+        return gather(self._forward_codes(docs,
+                                          DEFAULT_LAYERS.get(attr, attr)),
+                      keys >> 32, keys & POS, -1)
 
     def pattern_matches(self, pattern: str | list,
                         max_terms_per_slot: int = 256,
@@ -961,7 +952,15 @@ class IndexSearcher:
             _steps,
             parse_relation_query,
         )
-        from .positions import POS, chain, common_docs, keyed, member, take
+        from .positions import (
+            POS,
+            chain,
+            common_docs,
+            gather,
+            keyed,
+            member,
+            take,
+        )
 
         rq = (parse_relation_query(query) if isinstance(query, str)
               else query)
@@ -992,13 +991,13 @@ class IndexSearcher:
         rank, dp = dk >> 32, dk & POS
         flat = self._forward_flat(docs, "sent_no")
         sent, off, lens = flat
-        tok = self._forward_flat(docs, "token_id")[0]
-        head = self._forward_flat(docs, "head")[0]
         s, ok = take(flat, rank, dp)
         rank, dp = rank[ok], dp[ok]
         if not rank.size:
             return []
-        hd = head[off[rank] + dp]
+        # each array gathers through its own offsets: a doc without a
+        # sent_no array (a flat stream) still has head/token_id arrays
+        hd = gather(self._forward_flat(docs, "head"), rank, dp, 0)
         # a sentence starts at the first flat index of its (rank,
         # sent_no) key — sorted keys, since sentences are contiguous
         start = np.searchsorted(
@@ -1007,7 +1006,8 @@ class IndexSearcher:
         gp = start + hd - 1
         gs, ok = take(flat, rank, np.where(hd > 0, gp, -1))
         rank, dp, gp, hd, s = rank[ok], dp[ok], gp[ok], hd[ok], s[ok]
-        ok = (tok[off[rank] + gp] == hd) & (gs == s)
+        ok = ((gather(self._forward_flat(docs, "token_id"), rank, gp, 0)
+               == hd) & (gs == s))
         if src is not None:
             gk = rank << 32 | gp
             if src.allowed is not None:
@@ -1044,7 +1044,8 @@ class IndexSearcher:
         postings pull (Σcf of every test) and (b) FULL forward-array
         reads (sent_no/token_id/head) for every candidate doc —
         O(candidate docs × avgdl), bounded by the most selective
-        positive test's Σcf (cf ≥ df) — which dominates. Over
+        Σcf (cf ≥ df) of a test that drives the candidates, else by the
+        corpus (:meth:`_drives`) — which dominates. Over
         ``df_budget``, when an expansion hit the cap, or for a purely
         negative source (a corpus-sized position complement) the query
         runs distributed — unless the index has no forward store to
@@ -1063,7 +1064,7 @@ class IndexSearcher:
         if not hot:
             costs = self._test_costs(tests, max_terms_per_slot)
             est_docs = min([c for t, (c, _) in zip(tests, costs)
-                            if not t.negated] + [self.stats["n_docs"]])
+                            if self._drives(t)] + [self.stats["n_docs"]])
             hot = (sum(c for c, _ in costs)
                    + int(est_docs * self.stats["avgdl"]) * 4 > df_budget
                    or any(capped for _, capped in costs))
@@ -1121,6 +1122,18 @@ class IndexSearcher:
                          & (dep["sent_no"] == gov["gs"])
                          & (dep["head"] == gov["gt"]))
                 .select(*out_cols))
+
+    def _drives(self, test) -> bool:
+        """Does ``test`` bound the in-driver candidates? Only a positive
+        test on a posted layer does: the chain pulls its positions. A
+        query without such a test enumerates every doc of ``doc_lens``
+        and reads their forward arrays, so the routers price it at the
+        corpus, however rare its values."""
+        from ..plans.cql import DEFAULT_LAYERS, effective_test
+
+        t = effective_test(test)
+        return (not t.negated
+                and DEFAULT_LAYERS.get(t.attr) in self.posted_layers)
 
     def pattern_cost(self, pattern: str, max_terms_per_slot: int = 256
                      ) -> tuple[int, bool]:
@@ -1244,11 +1257,13 @@ class IndexSearcher:
           which only the forward token table serves: always the
           distributed compile (raises without a store carrying every
           constrained layer);
-        - otherwise the Σcf estimate decides: over ``df_budget`` (or
-          when an expansion hit the term cap) the distributed compile,
-          if the store carries every tested layer; else the in-driver
-          span chain."""
+        - otherwise the Σcf estimate decides, plus the corpus's token
+          count when no test drives the candidates (:meth:`_drives`):
+          over ``df_budget`` (or when an expansion hit the term cap)
+          the distributed compile, if the store carries every tested
+          layer; else the in-driver span chain."""
         from ..plans.cql import (
+            _steps,
             compile_cql,
             has_alts,
             parse_cql,
@@ -1279,6 +1294,9 @@ class IndexSearcher:
         else:
             core = pattern
             cost, capped = self.pattern_cost(pattern, max_terms_per_slot)
+            if not any(self._drives(t) for st in _steps(parse_cql(core))
+                       for t in st.item.tests):
+                cost += int(self.stats["n_docs"] * self.stats["avgdl"])
             tokens = (self._pattern_fallback_tokens(pattern,
                                                     within_sentence)
                       if cost > df_budget or capped else None)
