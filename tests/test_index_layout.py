@@ -248,6 +248,21 @@ def test_format_3_root_rejected(spark, index_small, tmp_path):
         merge_indexes(spark, [index_small, old], tmp_path / "merged")
 
 
+def test_format_4_root_rejected(spark, index_small, tmp_path):
+    """A format-4 root (each posting's doc length repeated in the term
+    segments) is refused by the searcher and by merge with a rebuild
+    message: its segments hold a stream this library does not read."""
+    old = tmp_path / "v4"
+    old.mkdir()
+    stats = json.loads((index_small / STATS_FILE).read_text())
+    stats["format"] = 4
+    (old / STATS_FILE).write_text(json.dumps(stats))
+    with pytest.raises(ValueError, match="format 4.*rebuild"):
+        IndexSearcher(spark, old)
+    with pytest.raises(ValueError, match="format 4.*rebuild"):
+        merge_indexes(spark, [index_small, old], tmp_path / "merged")
+
+
 def test_closed_class_layers_have_dictionary_rows_but_no_postings(
         spark, conllu_root):
     """A CoNLL-U root posts only the open-class layers; its
@@ -299,20 +314,21 @@ def _stats_set(store: Path) -> dict[str, set[bool]]:
 
 def test_posting_layouts_and_payload_statistics(spark, index_small,
                                                 conllu_root):
-    """The scored term field keeps its BM25 impacts; layer postings are
-    positions-only. Payload blobs and stored text have no footer
-    statistics; the pushdown keys keep theirs."""
+    """The scored term field keeps its BM25 block impacts but no
+    per-posting doc lengths (those live once per doc in ``doc_lens``);
+    layer postings are positions-only. Payload blobs and stored text
+    have no footer statistics; the pushdown keys keep theirs."""
     root, _ = conllu_root
     seg = set(spark.read.parquet(str(index_small / "segments")).columns)
-    assert {"tfs_vb", "dls_vb", "max_tf", "min_dl", "pos_vb"} <= seg
+    assert {"tfs_vb", "max_tf", "min_dl", "pos_vb"} <= seg
     lay = set(spark.read.parquet(str(root / "layers")).columns)
     assert {"tfs_vb", "pos_vb", "sum_tf"} <= lay
-    assert not lay & {"dls_vb", "max_tf", "min_dl"}
+    assert not lay & {"max_tf", "min_dl"}
+    assert "dls_vb" not in seg | lay
 
     for store, payload in (
-            (index_small / "segments",
-             ("docs_vb", "tfs_vb", "dls_vb", "pos_vb")),
-            (root / "segments", ("docs_vb", "tfs_vb", "dls_vb", "pos_vb")),
+            (index_small / "segments", ("docs_vb", "tfs_vb", "pos_vb")),
+            (root / "segments", ("docs_vb", "tfs_vb", "pos_vb")),
             (root / "layers", ("docs_vb", "tfs_vb", "pos_vb"))):
         st = _stats_set(store)
         for c in payload:

@@ -35,14 +35,69 @@ def test_decode_inverts_encode(spark, split_corpus, tmp_path):
         spark.read.parquet(str(root / "segments")))
     from word_sketch_lucene_spark.functions.tokenize import explode_tokens
 
-    expected = explode_tokens(a, with_dl=True).orderBy(
+    expected = explode_tokens(a).orderBy(
         "term", "doc_id", "pos").toPandas()
     got = toks.orderBy("term", "doc_id", "pos").toPandas()
+    # doc lengths live in doc_lens, not in the decoded postings
+    assert toks.columns == ["term", "doc_id", "pos"]
     assert len(got) == len(expected)
     assert (got["term"].to_numpy() == expected["term"].to_numpy()).all()
     assert (got["doc_id"].to_numpy() == expected["doc_id"].to_numpy()).all()
     assert (got["pos"].to_numpy() == expected["pos"].to_numpy()).all()
-    assert (got["dl"].to_numpy() == expected["dl"].to_numpy()).all()
+
+
+def _check_block_metadata(spark, root):
+    """Every ``segments`` block's impacts against its decoded postings:
+    ``max_tf`` is the largest tf, ``min_dl`` the smallest ``doc_lens``
+    length of the block's docs."""
+    import numpy as np
+
+    from word_sketch_lucene_spark.functions.codec import vbyte_decode
+
+    dl = {r["doc_id"]: r["dl"] for r in
+          spark.read.parquet(str(root / "doc_lens")).collect()}
+    rows = spark.read.parquet(str(root / "segments")).select(
+        "first_doc", "max_tf", "min_dl", "docs_vb", "tfs_vb").collect()
+    assert rows
+    for r in rows:
+        docs = vbyte_decode(bytes(r["docs_vb"])).astype(np.int64).cumsum() \
+            + r["first_doc"]
+        tfs = vbyte_decode(bytes(r["tfs_vb"]))
+        assert r["max_tf"] == tfs.max()
+        assert r["min_dl"] == min(dl[int(d)] for d in docs)
+
+
+def test_block_metadata_matches_doc_lens(spark, split_corpus, tmp_path):
+    """Block impacts of a built root and of an ``add_documents``
+    merged root (whose encoder reads ``dl`` through a join of the
+    decoded tokens to the folded ``doc_lens``)."""
+    _, a, b, _ = split_corpus
+    base = tmp_path / "base"
+    build_index(spark, a, base, doc_salt=2, n_partitions=4)
+    _check_block_metadata(spark, base)
+    merged = add_documents(spark, base, b, tmp_path / "staging",
+                           doc_salt=2, n_partitions=4)
+    _check_block_metadata(spark, merged)
+
+
+def test_missing_doc_length_raises(spark, split_corpus, tmp_path):
+    """A doc with postings but no ``doc_lens`` row fails BM25 scoring
+    with a rebuild message instead of scoring with length 0."""
+    import shutil
+
+    _, a, _, _ = split_corpus
+    root = tmp_path / "idx"
+    build_index(spark, a, root, doc_salt=2, n_partitions=4)
+    hits, _ = IndexSearcher(spark, root).search(["t0"], k=1)
+    doc = hits[0][0]
+    kept = spark.read.parquet(str(root / "doc_lens")).filter(
+        F.col("doc_id") != doc).toPandas()
+    shutil.rmtree(root / "doc_lens")
+    (root / "doc_lens").mkdir()
+    kept.to_parquet(root / "doc_lens" / "part-0.parquet")
+    for mode in IndexSearcher.MODES:
+        with pytest.raises(ValueError, match=f"doc {doc} .*rebuild"):
+            IndexSearcher(spark, root).search(["t0"], k=1, mode=mode)
 
 
 def test_merged_index_rank_identical_to_full_build(spark, split_corpus, tmp_path):

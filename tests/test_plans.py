@@ -38,7 +38,7 @@ def test_term_filter_pushed_to_segment_scan(spark, index_small):
 def test_bm25_scan_prunes_positions_column(spark, index_small):
     seg = spark.read.parquet(str(index_small / "segments"))
     q = seg.filter(F.col("term") == "spark").select(
-        "term", "first_doc", "docs_vb", "tfs_vb", "dls_vb")
+        "term", "first_doc", "max_tf", "min_dl", "docs_vb", "tfs_vb")
     plan = _formatted(q)
     # ReadSchema must NOT include the positions blob
     read_schema = [l for l in plan.splitlines() if "ReadSchema" in l]
@@ -50,7 +50,8 @@ def test_bm25_scan_prunes_positions_column(spark, index_small):
     read_schema = [l for l in _formatted(q).splitlines()
                    if "ReadSchema" in l]
     assert read_schema and "tfs_vb" in read_schema[0]
-    assert "dls_vb" not in read_schema[0]
+    assert "max_tf" not in read_schema[0]
+    assert "min_dl" not in read_schema[0]
 
 
 def test_bm25_topk_uses_bounded_heap(spark, docs_small):

@@ -316,6 +316,30 @@ def test_pattern_pos_group():
     assert pattern_pos_group(cat.by_id["adj_adverbs"]) == "ADJ"
 
 
+def test_pattern_relations_parse_once(monkeypatch):
+    """Each relation's head POS group is worked out when the catalog is
+    built: selecting a sketch's relations parses no pattern again."""
+    from word_sketch_lucene_spark.plans import cql
+    from word_sketch_lucene_spark.plans.relations import (
+        EN_CATALOG,
+        pattern_pos_group,
+    )
+
+    cat = GrammarCatalog.load(EN_CATALOG)
+    first = cat.pattern_relations(("SURFACE",), head_pos="NOUN")
+    calls = []
+    parse = cql.parse_cql
+    monkeypatch.setattr(cql, "parse_cql",
+                        lambda *a, **k: calls.append(a) or parse(*a, **k))
+    again = cat.pattern_relations(("SURFACE",), head_pos="NOUN")
+    assert not calls
+    assert again == first and first
+    monkeypatch.undo()
+    assert first == [r for r in cat.relations
+                     if r.pattern and r.type == "SURFACE"
+                     and pattern_pos_group(r) == "NOUN"]
+
+
 def test_pattern_validation_unlabeled_fails(tmp_path):
     bad = [{"id": "x", "name": "n", "type": "SURFACE",
             "pattern": '[xpos="NN.*"] [xpos="JJ.*"]'}]

@@ -25,13 +25,15 @@ def zipf_setup(spark, tmp_path_factory):
 def test_full_index_decode_matches_oracle(spark, zipf_setup):
     root, oracle = zipf_setup
     seg = spark.read.parquet(str(root / "segments")).collect()
+    doc_lens = {r["doc_id"]: r["dl"] for r in
+                spark.read.parquet(str(root / "doc_lens")).collect()}
     seen_tf: dict[str, dict[int, int]] = {}
     seen_pos: dict[str, dict[int, list]] = {}
     for r in seg:
         gaps = vbyte_decode(bytes(r["docs_vb"])).astype("int64")
         docs = gaps.cumsum() + r["first_doc"]
         tfs = vbyte_decode(bytes(r["tfs_vb"])).astype("int64")
-        dls = vbyte_decode(bytes(r["dls_vb"])).astype("int64")
+        dls = np.array([doc_lens[int(d)] for d in docs])
         pls = np.split(positions_flat(bytes(r["pos_vb"]), tfs),
                        np.cumsum(tfs)[:-1])
         assert r["n"] == docs.size == tfs.size == dls.size == len(pls)

@@ -25,7 +25,7 @@ segments). Stage map:
    statistics — the critical path is tokenize → shuffle → encode.
    Annotation-layer postings (:func:`build_layer_postings`) use the
    same kernel in its positions-only layout: nothing scores a layer,
-   so they carry no ``dl`` (no ``dls_vb``/``max_tf``/``min_dl``).
+   so they carry no ``dl`` (no ``max_tf``/``min_dl``).
 3. **doc_lens / corpus stats** — one column-pruned aggregate over the
    tokens stage (runs CONCURRENTLY with segments; the scheduler
    interleaves the jobs — the engine-level analog of the reference's
@@ -77,11 +77,13 @@ STATS_FILE = "stats.json"
 # ``pos_vb`` is Δpos only (tf lives in ``tfs_vb``), layer postings
 # carry no impacts, payload columns carry no parquet statistics. 4:
 # closed-class layers a root's forward store carries have no postings
-# (``layers`` holds the posted layers only; ``layer_stats`` all)
-INDEX_FORMAT = 4
+# (``layers`` holds the posted layers only; ``layer_stats`` all). 5:
+# doc lengths stored once, in ``doc_lens`` (Lucene norms) — term
+# segments repeat no doc length per posting
+INDEX_FORMAT = 5
 
 # opaque payload: never filtered on, so no min/max in the footers
-PAYLOAD_COLUMNS = ("docs_vb", "tfs_vb", "dls_vb", "pos_vb", "text")
+PAYLOAD_COLUMNS = ("docs_vb", "tfs_vb", "pos_vb", "text")
 
 
 def write_store(df: DataFrame, path: str | Path) -> None:

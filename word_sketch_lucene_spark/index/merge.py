@@ -9,9 +9,9 @@ Spark job:
     decode (mapInPandas) → union → ONE salted shuffle → encode (the
     SAME segment-writer kernel as the initial build)
 
-Decoding emits raw token rows ``(term, doc_id, pos, dl)`` (``(term,
-doc_id, pos)`` for the positions-only layer postings) — the identical
-interchange shape the build uses, so merge is literally a re-run of the
+Decoding emits raw token rows ``(term, doc_id, pos)``; the term rows
+join the folded ``doc_lens`` for the ``dl`` of their ``min_dl`` — the
+build's interchange shape, so merge is literally a re-run of the
 build's last stage over the union of inputs. The per-doc stores fold
 by a disjoint union coalesced to the largest input's file count, so
 repeated merges do not pile up files. Tiered compaction
@@ -54,11 +54,9 @@ def decode_segments_to_tokens(segments: DataFrame) -> DataFrame:
 
     Arrow-batched numpy decode, one vectorised pass per batch (the
     blocks' VByte streams concatenate into one stream per column);
-    one output row per (term, doc, position) — the build's interchange
-    shape. Term segments also yield each token's ``dl``; positions-only
-    layer postings (no ``dls_vb``) do not.
+    one output row per (term, doc, position), for the term segments
+    and the positions-only layer postings alike.
     """
-    impacts = "dls_vb" in segments.columns
 
     def _stream(pdf: pd.DataFrame, col: str) -> np.ndarray:
         return vbyte_decode(b"".join(pdf[col])).astype(np.int64)
@@ -71,21 +69,16 @@ def decode_segments_to_tokens(segments: DataFrame) -> DataFrame:
             docs = (segmented_cumsum(_stream(pdf, "docs_vb"), n)
                     + np.repeat(pdf["first_doc"].to_numpy(np.int64), n))
             tfs = _stream(pdf, "tfs_vb")
-            out = {
+            yield pd.DataFrame({
                 "term": np.repeat(pdf["term"].to_numpy(),
                                   pdf["sum_tf"].to_numpy(np.int64)),
                 "doc_id": np.repeat(docs, tfs),
                 "pos": positions_flat(b"".join(pdf["pos_vb"]), tfs),
-            }
-            if impacts:
-                out["dl"] = np.repeat(_stream(pdf, "dls_vb"), tfs)
-            yield pd.DataFrame(out)
+            })
 
-    cols = ["term", "n", "first_doc", "sum_tf", "docs_vb", "tfs_vb",
-            "pos_vb"] + (["dls_vb"] if impacts else [])
-    schema = "term string, doc_id long, pos long" + (
-        ", dl long" if impacts else "")
-    return segments.select(*cols).mapInPandas(decode, schema=schema)
+    return segments.select(
+        "term", "n", "first_doc", "sum_tf", "docs_vb", "tfs_vb", "pos_vb",
+    ).mapInPandas(decode, schema="term string, doc_id long, pos long")
 
 
 def merge_indexes(
@@ -128,25 +121,27 @@ def merge_indexes(
                 f"merge_indexes: inputs disagree on {param!r}: {sorted(vals)} "
                 f"(rebuild the outlier or merge compatible indexes only)")
 
-    # union of decoded token streams — the LSM merge input
-    def _merge_postings(store: str, impacts: bool) -> None:
-        tokens = _union(spark, [str(Path(r) / store) for r in in_roots],
-                        decode_segments_to_tokens)
-        write_store(encode_postings(tokens, nparts, doc_salt=doc_salt,
-                                    block_size=block_size, impacts=impacts),
-                    paths.root / store)
-
-    _merge_postings("segments", impacts=True)
-
-    # fold per-index doc_lens / stats / term_stats
+    # fold doc_lens / stats first: the segments' min_dl joins doc_lens
     _fold_per_doc(spark, in_roots, "doc_lens", paths.root)
-    row = spark.read.parquet(str(paths.doc_lens)).agg(
+    doc_lens = spark.read.parquet(str(paths.doc_lens))
+    row = doc_lens.agg(
         F.count("*").alias("n"), F.avg("dl").alias("avgdl"),
         F.sum("dl").alias("tt")).collect()[0]
     stats = {**all_stats[0], "n_docs": int(row["n"]),
              "avgdl": float(row["avgdl"]), "total_tokens": int(row["tt"])}
     paths.stats.write_text(json.dumps(stats, indent=1, sort_keys=True))
 
+    # union of decoded token streams — the LSM merge input
+    def _merge_postings(store: str, impacts: bool) -> None:
+        tokens = _union(spark, [str(Path(r) / store) for r in in_roots],
+                        decode_segments_to_tokens)
+        if impacts:
+            tokens = tokens.join(doc_lens, "doc_id")
+        write_store(encode_postings(tokens, nparts, doc_salt=doc_salt,
+                                    block_size=block_size, impacts=impacts),
+                    paths.root / store)
+
+    _merge_postings("segments", impacts=True)
     seg = spark.read.parquet(str(paths.segments))
     postings_dictionary(seg).write.mode("overwrite").parquet(
         str(paths.term_stats))

@@ -8,7 +8,7 @@ layouts — every store writes only what its readers read:
 
 - scored term field (``segments``, :data:`SEGMENT_SCHEMA`):
   ``(term, seg_part, block_id, n, first_doc, last_doc, max_tf, sum_tf,
-  min_dl, docs_vb, tfs_vb, dls_vb, pos_vb)``
+  min_dl, docs_vb, tfs_vb, pos_vb)``
 - positions-only annotation layers (``layers``, :data:`LAYER_SCHEMA`;
   Lucene's ``omitNorms`` analog — nothing scores them):
   ``(term, seg_part, block_id, n, first_doc, last_doc, sum_tf,
@@ -29,9 +29,9 @@ Columns:
   upper-bound prune (``CollocateQueryHelper.java:232-247``). Storing
   impacts instead of precomputed scores keeps the build independent of
   collection statistics: segments need NO df/avgdl join, so the
-  critical path is tokenize → one shuffle → encode.
-- ``dls_vb`` (term field only): per-posting document lengths →
-  query-time scoring is exact without a doc-store join.
+  critical path is tokenize → one shuffle → encode. Doc lengths are
+  not repeated per posting: they live once per doc in ``doc_lens``
+  (Lucene's norms, ``.nvd``); a token row's ``dl`` feeds ``min_dl``.
 - ``pos_vb``: per-posting position lists as Δpos only (Lucene
   ``.pos``): each posting's first position is absolute, the rest are
   gaps, and the count is NOT repeated — a reader takes posting i's
@@ -76,10 +76,10 @@ _TYPES = {
     "term": "string", "seg_part": "int", "block_id": "int", "n": "int",
     "first_doc": "long", "last_doc": "long", "max_tf": "int",
     "sum_tf": "long", "min_dl": "int", "docs_vb": "binary",
-    "tfs_vb": "binary", "dls_vb": "binary", "pos_vb": "binary",
+    "tfs_vb": "binary", "pos_vb": "binary",
 }
 # BM25 impacts: written for the scored term field only
-IMPACT_COLUMNS = ("max_tf", "min_dl", "dls_vb")
+IMPACT_COLUMNS = ("max_tf", "min_dl")
 SEGMENT_COLUMNS = list(_TYPES)
 LAYER_COLUMNS = [c for c in SEGMENT_COLUMNS if c not in IMPACT_COLUMNS]
 SEGMENT_SCHEMA = ", ".join(f"{c} {_TYPES[c]}" for c in SEGMENT_COLUMNS)
@@ -159,7 +159,7 @@ def _emit_single_block_runs(
 
     Posting-level arrays cover the runs contiguously; ``pos_sel`` is
     their concatenated flat position stream. ``p_dls`` None writes the
-    positions-only layer layout (no impacts, no doc lengths).
+    positions-only layer layout (no impacts).
     """
     impacts = p_dls is not None
     n_runs = run_starts.size
@@ -189,7 +189,6 @@ def _emit_single_block_runs(
             np.int32)
         out["min_dl"] = np.minimum.reduceat(p_dls, run_starts).astype(
             np.int32)
-        out["dls_vb"] = _sliced_stream(p_dls.astype(np.uint64), run_starts)
     return pd.DataFrame(out)[SEGMENT_COLUMNS if impacts else LAYER_COLUMNS]
 
 

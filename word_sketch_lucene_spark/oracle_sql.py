@@ -379,12 +379,8 @@ def sql_word_sketch_conllu(head: str, catalog, head_pos: str | None = None,
         strip_constraints,
         substitute_at_position,
     )
-    from .plans.relations import pattern_pos_group
 
-    rels = [r for r in catalog.relations
-            if r.pattern and r.type in relation_types]
-    if head_pos is not None:
-        rels = [r for r in rels if pattern_pos_group(r) == head_pos]
+    rels = catalog.pattern_relations(relation_types, head_pos)
     score_tail = f"""
  JOIN cf c ON p.colloc_term = c.term
  CROSS JOIN (SELECT cf AS head_cf FROM cf WHERE term = '{head}') h

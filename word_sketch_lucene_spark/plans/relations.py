@@ -171,6 +171,9 @@ class GrammarCatalog:
     def __init__(self, relations: list[RelationConfig]):
         self.relations = relations
         self.by_id = {r.id: r for r in relations}
+        # head POS group per pattern relation, parsed once (not per sketch)
+        self._pattern_groups = [(r, pattern_pos_group(r))
+                                for r in relations if r.pattern]
 
     @classmethod
     def load(cls, path: str | Path = DEFAULT_CATALOG) -> "GrammarCatalog":
@@ -265,9 +268,9 @@ class GrammarCatalog:
         """The pattern relations of ``relation_types`` in catalog order,
         narrowed to those whose head slot's POS group is ``head_pos``
         when given — the relation set of every sketch tier."""
-        return [r for r in self.relations
-                if r.pattern and r.type in relation_types
-                and (head_pos is None or pattern_pos_group(r) == head_pos)]
+        return [r for r, group in self._pattern_groups
+                if r.type in relation_types
+                and (head_pos is None or group == head_pos)]
 
 
 _XPOS_GROUPS = (("NNP", "NOUN"), ("NN", "NOUN"), ("VB", "VERB"),

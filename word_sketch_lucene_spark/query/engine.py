@@ -35,7 +35,7 @@ from ..functions.tokenize import (
 )
 from ..index.build import STATS_FILE, check_format
 from .cache import LRUCache
-from .wand import BlockCursor, block_max_wand, exact_daat, idf_py
+from .wand import BlockCursor, block_max_wand, doc_lengths, exact_daat, idf_py
 
 
 def bounded_rows_df(spark: SparkSession, rows, schema: str,
@@ -342,7 +342,7 @@ class IndexSearcher:
             for r in (self._filter_in(self.segments, "term", sorted(missing))
                       .select("term", "seg_part", "block_id", "first_doc",
                               "last_doc", "n", "max_tf", "min_dl",
-                              "docs_vb", "tfs_vb", "dls_vb")
+                              "docs_vb", "tfs_vb")
                       .collect()):
                 found[r["term"]].append(r.asDict())
             return found
@@ -354,11 +354,12 @@ class IndexSearcher:
                       ) -> list[BlockCursor]:
         """One cursor per segment partition over a term's block rows."""
         idf = idf_py(df, self.stats["n_docs"])
+        norms = self._all_docs()
         by_part: dict[int, list[dict]] = {}
         for r in rows:
             by_part.setdefault(r["seg_part"], []).append(r)
         return [BlockCursor(blocks, ti, idf, self.k1, self.b,
-                            self.stats["avgdl"])
+                            self.stats["avgdl"], norms)
                 for blocks in by_part.values()]
 
     def _positions(self, terms: list[str], layer: str = "term"
@@ -533,33 +534,19 @@ class IndexSearcher:
         ).select("doc_id", F.col("pos").cast("long").alias("pos"),
                  *[F.col(f"z.{c}").alias(c) for c in cols])
 
-    def _doc_lens(self, docs):
-        """Token counts of ``docs`` (int64 array, in order; the doc_lens
-        stage, one pruned scan per miss set) — the position universe
-        of slots that enumerate their window."""
-        import numpy as np
-
-        def fetch(missing):
-            return {int(r["doc_id"]): int(r["dl"]) for r in
-                    self._filter_in(self._dataset("doc_lens"), "doc_id",
-                                    missing)
-                    .select("doc_id", "dl").collect()}
-
-        return np.fromiter(self._cache.get_many(
-            "doc_lens", docs.tolist(), fetch, default=0).values(),
-            np.int64, docs.size)
-
     def _all_docs(self) -> tuple:
         """``(docs, dls)``: every doc id of the ``doc_lens`` store,
-        sorted, and its token count — the candidates of a pattern with
-        no posted positive test (one scan, cached)."""
+        sorted, and its token count — the searcher's one doc-length
+        read (BM25's norms, the window bound of enumerating slots, the
+        candidates of a pattern with no posted positive test), read
+        once in the driver with pyarrow, as ``stats.json`` is."""
         import numpy as np
+        import pyarrow.parquet as pq
 
         def read():
-            pdf = (self._dataset("doc_lens").select("doc_id", "dl")
-                   .toPandas().sort_values("doc_id"))
-            return (pdf["doc_id"].to_numpy(np.int64),
-                    pdf["dl"].to_numpy(np.int64))
+            t = pq.read_table(self.root / "doc_lens").sort_by("doc_id")
+            return (t["doc_id"].to_numpy().astype(np.int64),
+                    t["dl"].to_numpy().astype(np.int64))
 
         return self._cache.get_or_put("all_docs", None, read)
 
@@ -852,7 +839,7 @@ class IndexSearcher:
             # a slot that enumerates its window stops at the doc's end;
             # a positive forward check already rejects positions past
             # it, so only slots without one need the doc lengths
-            dls = (self._doc_lens(docs)
+            dls = (doc_lengths(self._all_docs(), docs)
                    if any(s.allowed is None
                           and all(neg for _, _, neg in s.filters)
                           for s in slots) else None)
@@ -981,7 +968,8 @@ class IndexSearcher:
                 if s is not None and s.allowed is not None]
         if cand:
             docs = common_docs(cand)
-            dls = None if dep.allowed is not None else self._doc_lens(docs)
+            dls = (None if dep.allowed is not None
+                   else doc_lengths(self._all_docs(), docs))
         else:
             docs, dls = self._all_docs()
         if not docs.size:

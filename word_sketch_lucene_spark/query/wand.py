@@ -41,21 +41,22 @@ class BlockCursor:
 
     Blocks decode lazily: :meth:`seek` skips whole blocks using only
     ``(first_doc, last_doc)`` metadata; ``max_score`` bounds come from
-    block metadata without decoding.
+    block metadata without decoding; a decoded block gathers its docs'
+    lengths from ``norms``, the ``doc_lens`` store (:func:`doc_lengths`).
     """
 
     __slots__ = (
-        "term_idx", "idf", "k1", "b", "avgdl", "first_docs", "last_docs",
-        "max_scores", "docs_vb", "tfs_vb", "dls_vb", "nblocks", "bi", "i",
-        "docs", "scores", "global_ub", "decoded_blocks",
+        "term_idx", "idf", "k1", "b", "avgdl", "norms", "first_docs",
+        "last_docs", "max_scores", "docs_vb", "tfs_vb", "nblocks", "bi",
+        "i", "docs", "scores", "global_ub", "decoded_blocks",
     )
 
     def __init__(self, blocks: list[dict], term_idx: int, idf: float,
-                 k1: float, b: float, avgdl: float):
+                 k1: float, b: float, avgdl: float, norms: tuple):
         blocks = sorted(blocks, key=lambda r: r["first_doc"])
         self.term_idx = term_idx
         self.idf = idf
-        self.k1, self.b, self.avgdl = k1, b, avgdl
+        self.k1, self.b, self.avgdl, self.norms = k1, b, avgdl, norms
         self.first_docs = np.array([r["first_doc"] for r in blocks], dtype=np.int64)
         self.last_docs = np.array([r["last_doc"] for r in blocks], dtype=np.int64)
         # safe per-block bound from impact metadata: BM25's tf-norm is
@@ -66,7 +67,6 @@ class BlockCursor:
             mtf + k1 * (1.0 - b + b * mdl / avgdl))
         self.docs_vb = [r["docs_vb"] for r in blocks]
         self.tfs_vb = [r["tfs_vb"] for r in blocks]
-        self.dls_vb = [r["dls_vb"] for r in blocks]
         self.nblocks = len(blocks)
         self.global_ub = float(self.max_scores.max()) if self.nblocks else 0.0
         self.decoded_blocks = 0
@@ -85,7 +85,7 @@ class BlockCursor:
         gaps = vbyte_decode(self.docs_vb[bi]).astype(np.int64)
         docs = np.cumsum(gaps) + self.first_docs[bi]
         tfs = vbyte_decode(self.tfs_vb[bi]).astype(np.float64)
-        dls = vbyte_decode(self.dls_vb[bi]).astype(np.float64)
+        dls = doc_lengths(self.norms, docs).astype(np.float64)
         tfn = (tfs * (self.k1 + 1.0)) / (
             tfs + self.k1 * (1.0 - self.b + self.b * dls / self.avgdl))
         self.docs = docs
@@ -146,6 +146,22 @@ class BlockCursor:
         if bi >= self.nblocks:
             return NO_DOC
         return int(self.last_docs[bi])
+
+
+def doc_lengths(norms: tuple, docs: np.ndarray) -> np.ndarray:
+    """Lengths of ``docs`` from ``norms`` = ``(docs, dls)`` (every doc
+    id, sorted, and its length) by one ``searchsorted``; a doc the norms
+    lack raises ``ValueError`` rather than scoring with length 0."""
+    all_docs, all_dls = norms
+    idx = np.searchsorted(all_docs, docs)
+    ok = idx < all_docs.size
+    ok[ok] = all_docs[idx[ok]] == docs[ok]
+    if not ok.all():
+        raise ValueError(
+            f"doc {int(docs[~ok][0])} has postings but no doc_lens row "
+            f"— the index is inconsistent; rebuild it with build_index "
+            f"/ build_conllu_index")
+    return all_dls[idx]
 
 
 def _score_aligned(cursors: list[BlockCursor], d: int, n_terms: int) -> float:
