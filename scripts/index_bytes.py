@@ -13,8 +13,12 @@ overhead rows per store follow the columns:
 - ``(sidecar)``: every non-parquet file — ``.crc`` checksums,
   ``_SUCCESS`` markers, stage manifests, ``stats.json``.
 
+A third row, ``(parquet files)``, gives the store's parquet file count
+in the bytes column, so its footer bytes can be read per file.
+
 A store is a top-level entry of the root (a directory or a file); the
-last lines give the totals over all stores.
+last lines give the totals over all stores, then the root's parquet
+file count and its count of files of any kind.
 
 After the ``layers`` store's rows, one row per key prefix (``lemma:``,
 ``xpos:``, …) gives that layer's UNCOMPRESSED payload: the summed
@@ -30,20 +34,25 @@ from pathlib import Path
 
 import pyarrow.parquet as pq
 
-FOOTER, SIDECAR = "(footer)", "(sidecar)"
+FOOTER, SIDECAR, FILES = "(footer)", "(sidecar)", "(parquet files)"
+
+
+def store_files(store: Path) -> list[Path]:
+    """Every file of one store."""
+    return [store] if store.is_file() else sorted(
+        f for f in store.rglob("*") if f.is_file())
 
 
 def store_bytes(store: Path) -> dict[str, int]:
     """column (plus the two overhead rows) → bytes, for one store."""
     out: dict[str, int] = defaultdict(int)
-    files = [store] if store.is_file() else sorted(
-        f for f in store.rglob("*") if f.is_file())
-    for f in files:
+    for f in store_files(store):
         size = f.stat().st_size
         if f.suffix != ".parquet":
             out[SIDECAR] += size
             continue
         md = pq.ParquetFile(f).metadata
+        out[FILES] += 1
         in_chunks = 0
         for g in range(md.num_row_groups):
             rg = md.row_group(g)
@@ -80,11 +89,15 @@ def main(argv: list[str]) -> int:
     print(f"{'store':<16} {'column':<24} {'bytes':>11} {'per_text_byte':>14}")
     for store in sorted(root.iterdir()):
         cols = store_bytes(store)
+        n_files = cols.pop(FILES, 0)
         names = sorted(c for c in cols if c not in (FOOTER, SIDECAR))
         for col in names + [c for c in (FOOTER, SIDECAR) if c in cols]:
             print(f"{store.name:<16} {col:<24} {cols[col]:>11} "
                   f"{cols[col] / text_bytes:>14.4f}")
             totals["columns" if col in names else col] += cols[col]
+        print(f"{store.name:<16} {FILES:<24} {n_files:>11}")
+        totals[FILES] += n_files
+        totals["(files)"] += len(store_files(store))
         n = sum(cols.values())
         print(f"{store.name:<16} {'total':<24} {n:>11} "
               f"{n / text_bytes:>14.4f}")
@@ -96,6 +109,8 @@ def main(argv: list[str]) -> int:
     for k in ("columns", FOOTER, SIDECAR, "all"):
         print(f"{'TOTAL':<16} {k:<24} {totals[k]:>11} "
               f"{totals[k] / text_bytes:>14.4f}")
+    for k in (FILES, "(files)"):
+        print(f"{'TOTAL':<16} {k:<24} {totals[k]:>11}")
     return 0
 
 

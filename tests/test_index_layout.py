@@ -145,6 +145,58 @@ def test_conllu_layout_and_derived_layers(spark, conllu_root):
         s.forward_layer(ids, "nope")
 
 
+def test_forward_read_rows_equal_spark_read(spark, index_small,
+                                           conllu_index):
+    """The driver's forward read returns what the Spark read of
+    ``forward_arrays`` returns, on a candidate set past the 64 ids a
+    Spark filter inlines: stored layers, the case-folded ones and a
+    pages root's tokens alike, and ``[]`` for a doc with no row."""
+    from pyspark.sql import functions as F
+
+    for root, layers in ((index_small, ("term",)),
+                         (conllu_index[0], ("term", "lemma", "upos",
+                                            "xpos", "sent_no", "head"))):
+        s = IndexSearcher(spark, root)
+        ids = sorted(r["doc_id"] for r in spark.read.parquet(
+            str(root / "doc_lens")).collect())[::3]
+        ids.append(ids[-1] + 10**6)
+        assert len(ids) > 64
+        for layer in layers:
+            want = {d: [] for d in ids}
+            want.update((r["doc_id"], list(r[layer])) for r in
+                        s.forward_arrays({layer})
+                        .filter(F.col("doc_id").isin(ids)).collect())
+            assert s._read_forward(ids, layer) == want, (root, layer)
+
+
+def test_cold_closed_class_pattern_reads_forward_without_jobs(
+        spark, conllu_index, monkeypatch):
+    """A fresh searcher's undriven closed-class pattern reads every
+    doc's forward arrays, and that read submits no Spark job."""
+    import time
+
+    sc = spark.sparkContext
+    calls = []
+    read = IndexSearcher._read_forward
+
+    def grouped(self, doc_ids, layer):
+        group = f"forward-read-{len(calls)}"
+        sc.setJobGroup(group, "forward read")
+        try:
+            return read(self, doc_ids, layer)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            calls.append((group, len(doc_ids)))
+
+    monkeypatch.setattr(IndexSearcher, "_read_forward", grouped)
+    hits = IndexSearcher(spark, conllu_index[0]).pattern_hits(
+        '[xpos="JJ"] [xpos="NN.*"]')
+    time.sleep(1.0)  # let the listener bus register any job
+    assert hits and max(n for _, n in calls) > 64
+    assert not [g for g, _ in calls
+                if sc.statusTracker().getJobIdsForGroup(g)]
+
+
 def test_concordance_pages_unchanged(spark, index_small, docs_small,
                                      conllu_root):
     """KWIC pages read their context through the accessor and equal a

@@ -100,6 +100,38 @@ def test_missing_doc_length_raises(spark, split_corpus, tmp_path):
             IndexSearcher(spark, root).search(["t0"], k=1, mode=mode)
 
 
+def test_overlapping_blocks_in_one_run_raise(spark, split_corpus,
+                                            tmp_path):
+    """A term whose blocks under one ``seg_part`` overlap in doc range
+    (two doc-interleaved runs, as a coalesced encoder would write them)
+    fails every ``search`` mode with a rebuild message: block-max WAND
+    and exhaustive DAAT would skip postings of it, and the vectorized
+    mode would answer differently from them."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    _, a, _, _ = split_corpus
+    root = tmp_path / "idx"
+    build_index(spark, a, root, doc_salt=2, n_partitions=4)
+    seg = pq.read_table(root / "segments")
+    t0 = seg.filter(pc.equal(seg["term"], "t0")).to_pylist()
+    assert len({r["seg_part"] for r in t0}) > 1
+    runs = sorted((r["first_doc"], r["last_doc"]) for r in t0)
+    assert any(y[0] <= x[1] for x, y in zip(runs, runs[1:]))
+    shutil.rmtree(root / "segments")
+    (root / "segments").mkdir()
+    pq.write_table(seg.set_column(
+        seg.schema.get_field_index("seg_part"), "seg_part",
+        pa.array([0] * seg.num_rows, pa.int32())),
+        root / "segments" / "part-0.parquet")
+    for mode in IndexSearcher.MODES:
+        with pytest.raises(ValueError, match="overlap.*rebuild"):
+            IndexSearcher(spark, root).search(["t0"], k=3, mode=mode)
+
+
 def test_merged_index_rank_identical_to_full_build(spark, split_corpus, tmp_path):
     """Index(A) ⊔ Index(B) merged must answer like Index(A∪B)."""
     _, a, b, oracle = split_corpus
@@ -178,11 +210,11 @@ def test_add_documents_rejects_colliding_ids(spark, split_corpus, tmp_path):
 
 def test_repeated_adds_do_not_grow_per_doc_file_counts(spark, split_corpus,
                                                       tmp_path):
-    """Each merge folds a per-doc store into at most its largest input's
-    file count: two add_documents cycles leave the merged docstore and
-    doc_lens with no more files than the base (a plain union summed
-    the inputs' files, so every cycle added the delta's), and the
-    stores still hold every doc once."""
+    """Each merge sizes a per-doc store by its inputs' bytes: two
+    add_documents cycles leave the merged docstore and doc_lens with no
+    more files than the base (a plain union summed the inputs' files,
+    so every cycle added the delta's), and the stores still hold every
+    doc once."""
     pages, a, b, oracle = split_corpus
     base = tmp_path / "base"
     build_index(spark, a, base, doc_salt=2, n_partitions=4)

@@ -17,12 +17,15 @@ segments). Stage map:
    this stage first.
 2. **segments** — ONE *salted* shuffle of the flat token columns,
    keyed ``(term, pmod(hash(doc_id), doc_salt))`` (explicit skew
-   defense: a head term's postings split across ``doc_salt`` segments,
-   each sorted by doc_id — query-side merge is a cheap disjoint
-   concat), sorted ``(term, doc_id, pos)``, then the ``mapInPandas``
-   codec kernel of ``segments.py``. Impact metadata (max_tf, min_dl)
-   replaces precomputed scores, so this stage needs no collection
-   statistics — the critical path is tokenize → shuffle → encode.
+   defense: a head term's postings split across up to ``doc_salt``
+   partitions), sorted ``(term, doc_id, pos)``, then the
+   ``mapInPandas`` codec kernel of ``segments.py``. Each partition
+   writes one doc-ordered run per term under its own ``seg_part``;
+   runs of one term in different partitions overlap in doc range, so
+   readers keep one cursor per ``(term, seg_part)`` and re-sort merged
+   positions. Impact metadata (max_tf, min_dl) replaces precomputed
+   scores, so this stage needs no collection statistics — the
+   critical path is tokenize → shuffle → encode.
    Annotation-layer postings (:func:`build_layer_postings`) use the
    same kernel in its positions-only layout: nothing scores a layer,
    so they carry no ``dl`` (no ``max_tf``/``min_dl``).
@@ -42,11 +45,14 @@ segments). Stage map:
 Every stage commits a :class:`~.manifest.StageManifest`; re-running
 ``build_index`` with identical inputs+config skips completed stages
 (resumable builds, north rule) and reads the tokens stage only when a
-stage that scans it is incomplete. The posting stores, the docstore
-and the forward layers are written through :func:`write_store`, which
-keeps parquet statistics off their payload columns (VByte blobs,
-stored text, array elements): nothing filters on them, and their
-min/max would only fatten each footer.
+stage that scans it is incomplete. Every shuffle and every store's
+file count follows one rule, :func:`_adaptive_parts`: one partition
+per 16 MB of the bytes the write reads, so a small build writes one
+file per store and one doc-ordered run per term. The posting stores,
+the docstore and the forward layers are written through
+:func:`write_store`, which keeps parquet statistics off their payload
+columns (VByte blobs, stored text, array elements): nothing filters on
+them, and their min/max would only fatten each footer.
 """
 
 from __future__ import annotations
@@ -93,7 +99,10 @@ def write_store(df: DataFrame, path: str | Path) -> None:
     filters on a list element). ``term``, ``doc_id`` and
     ``first_doc``/``last_doc`` keep theirs, so pushdown is unchanged.
     Parquet keys the option by leaf path, so an array column's key is
-    ``<col>.list.element``; its top-level name would be ignored."""
+    ``<col>.list.element``; its top-level name would be ignored.
+    ``df`` comes sized by :func:`_adaptive_parts` (shuffled to its
+    count, or a per-doc store coalesced to it); an
+    :func:`~.segments.encode_postings` result is never coalesced."""
     w = df.write.mode("overwrite")
     for f in df.schema.fields:
         if f.name in PAYLOAD_COLUMNS:
@@ -117,56 +126,47 @@ def check_format(stats: dict, root: str | Path) -> None:
             f"/ build_conllu_index")
 
 
-def _cluster_width(spark: SparkSession) -> int:
-    """Actual execution width (concurrent task slots). ``local[N]``
-    parses from the master URL — ``spark.default.parallelism`` is set
-    to the SHUFFLE width by :func:`..session.get_spark`, so it cannot
-    distinguish cores from partitioning policy."""
-    import re as _re
-
-    m = spark.sparkContext.master or ""
-    mt = _re.match(r"local\[(\d+|\*)\]", m)
-    if mt:
-        return (os.cpu_count() or 1) if mt.group(1) == "*" \
-            else int(mt.group(1))
-    return spark.sparkContext.defaultParallelism
+# one partition, and so one file, per this many bytes of input
+PART_BYTES = 16 << 20
 
 
-def _adaptive_parts(spark: SparkSession, requested: int,
-                    data_dir: str | Path, scale: float = 1.0,
-                    target_bytes: int = 16 << 20) -> int:
-    """Effective partition count for the salted segment shuffle:
-    ``min(requested, max(cluster_width, input_bytes/target))``.
+def store_parts(nbytes: int, cap: int) -> int:
+    """The sizing rule: ``ceil(nbytes / PART_BYTES)``, in ``[1, cap]``."""
+    return max(1, min(cap, -(-nbytes // PART_BYTES)))
 
-    The requested count stays the CAP (cluster-width policy); deriving
-    the effective count from the input's on-disk size stops a small
-    input from paying requested-width fixed task costs — the codec
-    stage's per-task overhead (~50 ms of Arrow/pandas setup) made a
-    64-partition tiny build cost seconds of pure scheduling (guide §2:
-    scale-adaptive partitioning, not a constant tuned to one mode).
-    Deterministic per (input, config): resume decisions are unaffected.
+
+def _adaptive_parts(spark: SparkSession, n_partitions: int | None,
+                    *sources, scale: float = 1.0) -> int:
+    """Partition count of one index write — the width of its shuffle,
+    or the file count a per-doc store is coalesced to — and the one
+    sizing rule of the build, the merge and the collocation store.
+
+    An explicit ``n_partitions`` is used as given. Otherwise
+    :func:`store_parts` of ``scale`` × the bytes the write reads,
+    capped at the session's default parallelism. A source is a store
+    directory (its parquet bytes; a missing one sizes the write at the
+    cap) or a DataFrame (Spark's plan size estimate: the bytes of the
+    files it scans, for a file read). So a small input writes one file
+    per store and one doc-ordered run per term, and a large one spreads
+    over the cluster, with the salted shuffle still splitting head
+    terms. Never coalesce an :func:`~.segments.encode_postings`
+    result: ``seg_part`` is the encoder task's partition id, so the
+    count is set at its shuffle. Deterministic per (input, config).
     """
-    try:
-        nbytes = sum(f.stat().st_size
-                     for f in Path(data_dir).rglob("*.parquet"))
-    except OSError:
-        return requested
-    want = int(nbytes * scale) // target_bytes
-    return max(1, min(requested, max(_cluster_width(spark), want)))
-
-
-def build_postings(tokens: DataFrame) -> DataFrame:
-    """Exploded tokens → ``(term, doc_id, tf, positions)`` (logical view).
-
-    ``sort_array(collect_list(pos))`` restores ascending positions
-    regardless of shuffle arrival order. The segment kernel does this
-    aggregation itself from sorted rows; this DataFrame form exists for
-    the API/oracle surface.
-    """
-    return tokens.groupBy("term", "doc_id").agg(
-        F.count("*").alias("tf"),
-        F.sort_array(F.collect_list("pos")).alias("positions"),
-    )
+    if n_partitions:
+        return n_partitions
+    cap = spark.sparkContext.defaultParallelism
+    nbytes = 0
+    for src in sources:
+        if isinstance(src, DataFrame):
+            nbytes += src._jdf.queryExecution().optimizedPlan().stats() \
+                .sizeInBytes()
+        elif Path(src).is_dir():
+            nbytes += sum(f.stat().st_size
+                          for f in Path(src).rglob("*.parquet"))
+        else:
+            return cap
+    return store_parts(int(nbytes * scale), cap)
 
 
 class IndexPaths:
@@ -262,7 +262,6 @@ def build_layer_postings(
     """
     paths = IndexPaths(out_dir)
     paths.root.mkdir(parents=True, exist_ok=True)
-    nparts = n_partitions or spark.sparkContext.defaultParallelism
     if layers == DEFAULT_EXTRA_LAYERS:
         # optional layers (feats) participate only when stored
         layers = tuple(c for c in layers if c in layer_tokens.columns)
@@ -271,7 +270,7 @@ def build_layer_postings(
                if fw.get("status") == "complete" else set())
     posted = [c for c in layers
               if c not in CLOSED_CLASS_LAYERS or c not in forward]
-    config = {"doc_salt": doc_salt, "n_partitions": nparts,
+    config = {"doc_salt": doc_salt, "n_partitions": n_partitions,
               "block_size": block_size, "layers": posted,
               "dictionary": list(layers), "format": INDEX_FORMAT}
     cfg_fp = config_fingerprint(config)
@@ -283,11 +282,10 @@ def build_layer_postings(
     melted = _melt(layer_tokens, layers)
     st = StageManifest(paths.layers, "layers")
     if not st.is_complete(inputs_fp, cfg_fp):
-        # size the shuffle from the surface segments when present
-        # (the melt multiplies rows by |posted|)
-        lay_parts = (_adaptive_parts(spark, nparts, paths.segments,
-                                     scale=float(max(1, len(posted))))
-                     if paths.segments.exists() else nparts)
+        # size the shuffle from the surface segments (the melt
+        # multiplies rows by |posted|)
+        lay_parts = _adaptive_parts(spark, n_partitions, paths.segments,
+                                    scale=float(max(1, len(posted))))
         write_store(encode_postings(
             melted.filter(F.col("layer").isin(posted)).select(
                 F.concat_ws(":", "layer", "value").alias("term"),
@@ -349,6 +347,7 @@ def build_conllu_index(
     config = {"id_offset": id_offset, "format": INDEX_FORMAT}
     cfg_fp = config_fingerprint(config)
     inputs_fp = input_fingerprint(input_paths) if input_paths else "unspecified"
+    doc_parts = _adaptive_parts(spark, n_partitions, parsed)
     if dict(parsed.dtypes)["doc_id"] != "bigint":
         from ..sources.pages import assign_doc_ids
 
@@ -360,7 +359,8 @@ def build_conllu_index(
             if id_offset:
                 mapping = mapping.withColumn(
                     "doc_id", F.col("doc_id") + F.lit(id_offset))
-            mapping.write.mode("overwrite").parquet(str(paths.doc_names))
+            mapping.coalesce(doc_parts).write.mode("overwrite").parquet(
+                str(paths.doc_names))
             st_names.commit(inputs_fp, cfg_fp,
                             lineage={"inputs": input_paths or [],
                                      "config": config})
@@ -407,8 +407,8 @@ def build_conllu_index(
             st_fw = StageManifest(paths.forward_layers, "forward_layers")
             if not st_fw.is_complete(inputs_fp, fw_fp):
                 write_store(
-                    lt.groupBy("doc_id").agg(*[_arr(c) for c in fw_cols]),
-                    paths.forward_layers)
+                    lt.groupBy("doc_id").agg(*[_arr(c) for c in fw_cols])
+                    .coalesce(doc_parts), paths.forward_layers)
                 st_fw.commit(inputs_fp, fw_fp,
                              lineage={"inputs": input_paths or [],
                                       "config": fw_config})
@@ -473,10 +473,9 @@ def build_index(
     """
     paths = IndexPaths(out_dir)
     paths.root.mkdir(parents=True, exist_ok=True)
-    nparts = n_partitions or spark.sparkContext.defaultParallelism
     config = {
-        "doc_salt": doc_salt, "n_partitions": nparts, "block_size": block_size,
-        "k1": k1, "b": b, "use_pandas_udf": use_pandas_udf,
+        "doc_salt": doc_salt, "n_partitions": n_partitions, "k1": k1,
+        "b": b, "block_size": block_size, "use_pandas_udf": use_pandas_udf,
         "tokenizer": ("pre-tokenized" if pre_tokenized is not None
                       else "lower-split-[^a-z0-9]+"),
         "format": INDEX_FORMAT,
@@ -513,14 +512,14 @@ def build_index(
         st_tok.commit(inputs_fp, cfg_fp,
                       lineage={"inputs": input_paths or [], "config": config})
     tokens = spark.read.parquet(str(paths.tokens)) if need_tokens else None
+    tok_parts = _adaptive_parts(spark, n_partitions, paths.tokens)
 
     # ---- stages: segments ∥ doc_lens+corpus_stats ---------------------
     def _stage_segments() -> None:
         st_seg = StageManifest(paths.segments, "segments")
         if st_seg.is_complete(inputs_fp, cfg_fp):
             return
-        seg_parts = _adaptive_parts(spark, nparts, paths.tokens)
-        write_store(encode_postings(tokens, seg_parts, doc_salt=doc_salt,
+        write_store(encode_postings(tokens, tok_parts, doc_salt=doc_salt,
                                     block_size=block_size),
                     paths.segments)
         # per-partition lineage + skew metrics (north rule). One pruned
@@ -556,18 +555,16 @@ def build_index(
 
         # dl is a per-row column of the tokens stage, so doc_lens is a
         # pushed-down FILTER (pos == 0 → one row per non-empty doc) —
-        # no shuffle, no aggregation. Coalesced: the output is 2 ints
-        # per doc; committing nparts near-empty files is pure driver
-        # fixed cost. The corpus stats ride the SAME write job as
-        # observed metrics — the former read-back aggregate was one
-        # whole extra job of per-build fixed cost.
+        # no shuffle, no aggregation. The corpus stats ride the SAME
+        # write job as observed metrics — the former read-back
+        # aggregate was one whole extra job of per-build fixed cost.
         obs = Observation("corpus_stats")
         (
             tokens.filter(F.col("pos") == 0).select("doc_id", "dl")
             .observe(obs, F.count(F.lit(1)).alias("n_docs"),
                      F.avg("dl").alias("avgdl"),
                      F.sum("dl").alias("total_tokens"))
-            .coalesce(max(1, min(nparts, 8)))
+            .coalesce(tok_parts)
             .write.mode("overwrite").parquet(str(paths.doc_lens))
         )
         row = obs.get
@@ -603,7 +600,8 @@ def build_index(
         if st_ds.is_complete(inputs_fp, cfg_fp):
             return
         write_store(pages.select(F.col(doc_id_col).alias("doc_id"),
-                                 F.col(text_col).alias("text")),
+                                 F.col(text_col).alias("text"))
+                    .coalesce(_adaptive_parts(spark, n_partitions, pages)),
                     paths.docstore)
         st_ds.commit(inputs_fp, cfg_fp, lineage={"inputs": input_paths or []})
 
@@ -622,7 +620,7 @@ def build_index(
             return
         (pages.select(F.col(doc_id_col).cast("long").alias("doc_id"),
                       *meta_cols)
-         .coalesce(max(1, min(nparts, 8)))
+         .coalesce(_adaptive_parts(spark, n_partitions, pages))
          .write.mode("overwrite").parquet(str(paths.doc_meta)))
         st_meta.commit(inputs_fp, cfg_fp,
                        lineage={"inputs": input_paths or [],

@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from ..functions.scoring import score_ranked_collocates
 from ..plans.cql import DEFAULT_LAYERS
 from ..plans.relations import GrammarCatalog, _pattern_pairs
+from .build import _adaptive_parts
 
 STORE_DIR = "colloc_store"
 META_NAME = "_store_meta.json"
@@ -107,7 +108,9 @@ def build_collocation_store(
     # posexplode ONCE
     tokens = catalog_tokens(searcher, rels, subst_attr, colloc_attr,
                             within_sentence).persist()
-    nparts = n_partitions or searcher.spark.sparkContext.defaultParallelism
+    # sized by the forward store the pairs are counted from
+    nparts = _adaptive_parts(searcher.spark, n_partitions,
+                             Path(searcher.root) / "forward_layers")
     try:
         (
             # one count-distinct aggregate dedups every branch (head/

@@ -13,8 +13,9 @@ Decoding emits raw token rows ``(term, doc_id, pos)``; the term rows
 join the folded ``doc_lens`` for the ``dl`` of their ``min_dl`` — the
 build's interchange shape, so merge is literally a re-run of the
 build's last stage over the union of inputs. The per-doc stores fold
-by a disjoint union coalesced to the largest input's file count, so
-repeated merges do not pile up files. Tiered compaction
+by a disjoint union. Every write is sized by the bytes of its inputs
+(``build._adaptive_parts``), so repeated merges do not pile up files
+and a small merge writes one file per store. Tiered compaction
 (``compact_if_needed``) keeps the number of live indexes bounded, and
 every merge commits a manifest with the input lineage — resumable like
 every other stage.
@@ -27,6 +28,7 @@ from __future__ import annotations
 
 import json
 from collections.abc import Iterator
+from functools import reduce
 from pathlib import Path
 
 import numpy as np
@@ -39,6 +41,7 @@ from .build import (
     INDEX_FORMAT,
     STATS_FILE,
     IndexPaths,
+    _adaptive_parts,
     build_index,
     check_format,
     postings_dictionary,
@@ -95,9 +98,8 @@ def merge_indexes(
     and k1/b/block_size. Resumable via the output manifest."""
     paths = IndexPaths(out_root)
     paths.root.mkdir(parents=True, exist_ok=True)
-    nparts = n_partitions or spark.sparkContext.defaultParallelism
     in_roots = [str(r) for r in in_roots]
-    config = {"doc_salt": doc_salt, "n_partitions": nparts,
+    config = {"doc_salt": doc_salt, "n_partitions": n_partitions,
               "block_size": block_size, "op": "merge",
               "format": INDEX_FORMAT}
     cfg_fp = config_fingerprint(config)
@@ -122,7 +124,7 @@ def merge_indexes(
                 f"(rebuild the outlier or merge compatible indexes only)")
 
     # fold doc_lens / stats first: the segments' min_dl joins doc_lens
-    _fold_per_doc(spark, in_roots, "doc_lens", paths.root)
+    _fold_per_doc(spark, in_roots, "doc_lens", paths.root, n_partitions)
     doc_lens = spark.read.parquet(str(paths.doc_lens))
     row = doc_lens.agg(
         F.count("*").alias("n"), F.avg("dl").alias("avgdl"),
@@ -133,13 +135,14 @@ def merge_indexes(
 
     # union of decoded token streams — the LSM merge input
     def _merge_postings(store: str, impacts: bool) -> None:
-        tokens = _union(spark, [str(Path(r) / store) for r in in_roots],
-                        decode_segments_to_tokens)
+        dirs = _existing(in_roots, store)
+        tokens = _union(spark, dirs, decode_segments_to_tokens)
         if impacts:
             tokens = tokens.join(doc_lens, "doc_id")
-        write_store(encode_postings(tokens, nparts, doc_salt=doc_salt,
-                                    block_size=block_size, impacts=impacts),
-                    paths.root / store)
+        write_store(encode_postings(
+            tokens, _adaptive_parts(spark, n_partitions, *dirs),
+            doc_salt=doc_salt, block_size=block_size, impacts=impacts),
+            paths.root / store)
 
     _merge_postings("segments", impacts=True)
     seg = spark.read.parquet(str(paths.segments))
@@ -159,7 +162,7 @@ def merge_indexes(
                 f"layers: {sorted(posted)} (rebuild them with the same "
                 f"layers and forward store)")
         _merge_postings("layers", impacts=False)
-        (_union(spark, [str(Path(r) / "layer_stats") for r in lay_roots])
+        (_union(spark, _existing(lay_roots, "layer_stats"))
          .groupBy("layer", "value")
          .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
          .write.mode("overwrite").parquet(str(paths.layer_stats)))
@@ -171,7 +174,7 @@ def merge_indexes(
     # per-doc stores fold by disjoint union (doc ids must not collide
     # across inputs — the add_documents contract)
     for aux in ("docstore", "forward_layers", "doc_names", "doc_meta"):
-        _fold_per_doc(spark, in_roots, aux, paths.root)
+        _fold_per_doc(spark, in_roots, aux, paths.root, n_partitions)
 
     n_blocks = seg.count()
     st.commit(inputs_fp, cfg_fp,
@@ -180,31 +183,29 @@ def merge_indexes(
     return stats
 
 
+def _existing(roots: list[str], store: str) -> list[str]:
+    """The ``store`` directories of ``roots`` that exist."""
+    return [str(Path(r) / store) for r in roots
+            if (Path(r) / store).exists()]
+
+
 def _union(spark: SparkSession, dirs: list[str], read=None) -> DataFrame:
-    """Union of the stores at ``dirs`` that exist (each passed through
-    ``read`` when given)."""
-    u = None
-    for p in dirs:
-        if Path(p).exists():
-            d = spark.read.parquet(p)
-            d = read(d) if read else d
-            u = d if u is None else u.unionByName(d)
-    return u
+    """Union of the stores at ``dirs`` (each passed through ``read``
+    when given)."""
+    frames = [spark.read.parquet(p) for p in dirs]
+    return reduce(DataFrame.unionByName, map(read, frames) if read
+                  else frames)
 
 
 def _fold_per_doc(spark: SparkSession, in_roots: list[str], store: str,
-                  out_root: Path) -> None:
+                  out_root: Path, n_partitions: int | None) -> None:
     """Fold one per-doc store (disjoint doc ids) into ``out_root``,
-    coalesced to the largest input's file count: a plain union writes
-    the SUM of its inputs' files, so every merge would add the delta's
-    files to the merged store."""
-    dirs = [str(Path(r) / store) for r in in_roots]
-    u = _union(spark, dirs)
-    if u is None:
-        return
-    n_files = max(len(list(Path(p).glob("part-*"))) for p in dirs
-                  if Path(p).exists())
-    write_store(u.coalesce(max(1, n_files)), out_root / store)
+    sized by its inputs' bytes: a plain union writes the SUM of its
+    inputs' files, so every merge would add the delta's files."""
+    dirs = _existing(in_roots, store)
+    if dirs:
+        write_store(_union(spark, dirs).coalesce(
+            _adaptive_parts(spark, n_partitions, *dirs)), out_root / store)
 
 
 def add_documents(

@@ -426,19 +426,38 @@ class IndexSearcher:
     def _read_forward(self, doc_ids: list[int], layer: str
                       ) -> dict[int, list]:
         """doc_id → ``layer``'s value list for ``doc_ids`` (``[]`` for
-        a doc without one): one pruned scan of the forward store."""
-        fw = self.forward_arrays({layer})
-        if fw is None or layer not in fw.columns:
-            if self._dataset("forward_layers", required=False) is None:
+        a doc without one): one ``doc_id IN`` read of the forward store
+        in the driver with pyarrow, as :meth:`_all_docs` reads
+        ``doc_lens`` (no Spark job). Derived layers fold as
+        :meth:`forward_arrays` derives them."""
+        import pyarrow.dataset as pads
+
+        from ..sources.conllu import FOLDED_LAYERS
+
+        fw, avail = self.root / "forward_layers", {}
+        if fw.exists():
+            store = pads.dataset(fw, format="parquet")
+            names = store.schema.names
+            avail = {dst: (src, lambda v: [x if x is None else x.lower()
+                                           for x in v])
+                     for dst, src in FOLDED_LAYERS.items() if src in names}
+            avail.update((c, (c, list)) for c in names if c != "doc_id")
+        elif (self.root / "docstore").exists():
+            store = pads.dataset(self.root / "docstore", format="parquet")
+            avail = {"term": ("text", tokenize_py)}
+        if layer not in avail:
+            if not fw.exists():
                 raise NotImplementedError(
                     "index has no forward_layers store — build with "
                     "index.build.build_conllu_index(store_docstore=True)")
-            raise ValueError(
-                f"forward layer {layer!r} not stored (available: "
-                f"{sorted(self.forward_arrays().columns[1:])})")
+            raise ValueError(f"forward layer {layer!r} not stored "
+                             f"(available: {sorted(avail)})")
+        col, fold = avail[layer]
+        t = store.to_table(columns=["doc_id", col],
+                           filter=pads.field("doc_id").isin(doc_ids))
         found = {d: [] for d in doc_ids}
-        for r in self._filter_in(fw, "doc_id", doc_ids).collect():
-            found[int(r["doc_id"])] = list(r[layer])
+        for d, v in zip(t["doc_id"].to_pylist(), t[col].to_pylist()):
+            found[d] = fold(v)
         return found
 
     def _forward_codes(self, docs, layer: str) -> tuple:

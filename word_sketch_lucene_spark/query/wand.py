@@ -21,6 +21,9 @@ Correctness notes (SURVEY §4.4 hard parts):
 - Salted builds split a term's postings across segments with disjoint
   doc sets; each (term, segment) list is an independent cursor. Bounds
   stay safe (each cursor's bound is its own max), scores stay exact.
+  Within one cursor the blocks must be one doc-ordered run: a cursor
+  rejects blocks whose doc ranges overlap, which seek and next would
+  otherwise skip postings of.
 """
 
 from __future__ import annotations
@@ -37,7 +40,8 @@ NO_DOC = 1 << 62
 
 
 class BlockCursor:
-    """Doc-ordered cursor over one (term, segment) list of encoded blocks.
+    """Doc-ordered cursor over one (term, segment) list of encoded blocks
+    (one run: block doc ranges disjoint, else ``ValueError``).
 
     Blocks decode lazily: :meth:`seek` skips whole blocks using only
     ``(first_doc, last_doc)`` metadata; ``max_score`` bounds come from
@@ -59,6 +63,15 @@ class BlockCursor:
         self.k1, self.b, self.avgdl, self.norms = k1, b, avgdl, norms
         self.first_docs = np.array([r["first_doc"] for r in blocks], dtype=np.int64)
         self.last_docs = np.array([r["last_doc"] for r in blocks], dtype=np.int64)
+        bad = np.flatnonzero(self.last_docs[:-1] >= self.first_docs[1:])
+        if bad.size:
+            i = int(bad[0])
+            raise ValueError(
+                f"posting blocks of one (term, seg_part) overlap in doc "
+                f"range: [{self.first_docs[i]}, {self.last_docs[i]}] and "
+                f"[{self.first_docs[i + 1]}, {self.last_docs[i + 1]}] — "
+                f"the index is inconsistent; rebuild it with build_index "
+                f"/ build_conllu_index")
         # safe per-block bound from impact metadata: BM25's tf-norm is
         # monotone ↑tf, ↓dl ⇒ idf·tfn(max_tf, min_dl) dominates the block
         mtf = np.array([r["max_tf"] for r in blocks], dtype=np.float64)
