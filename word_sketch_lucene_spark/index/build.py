@@ -17,15 +17,13 @@ segments). Stage map:
    this stage first.
 2. **segments** — ONE *salted* shuffle of the flat token columns,
    keyed ``(term, pmod(hash(doc_id), doc_salt))`` (explicit skew
-   defense: a head term's postings split across up to ``doc_salt``
-   partitions), sorted ``(term, doc_id, pos)``, then the
-   ``mapInPandas`` codec kernel of ``segments.py``. Each partition
-   writes one doc-ordered run per term under its own ``seg_part``;
-   runs of one term in different partitions overlap in doc range, so
-   readers keep one cursor per ``(term, seg_part)`` and re-sort merged
-   positions. Impact metadata (max_tf, min_dl) replaces precomputed
-   scores, so this stage needs no collection statistics — the
-   critical path is tokenize → shuffle → encode.
+   defense: a head term splits across up to ``doc_salt`` partitions,
+   each one doc-ordered run per ``seg_part``; the runs overlap in doc
+   range, so readers keep a cursor per ``(term, seg_part)`` and re-sort
+   positions), sorted ``(term, doc_id, pos)``, then the ``mapInPandas``
+   codec kernel of ``segments.py``. Impact metadata (max_tf, min_dl)
+   replaces precomputed scores, so this stage needs no collection
+   statistics — the critical path is tokenize → shuffle → encode.
    Annotation-layer postings (:func:`build_layer_postings`) use the
    same kernel in its positions-only layout: nothing scores a layer,
    so they carry no ``dl`` (no ``max_tf``/``min_dl``).
@@ -45,14 +43,13 @@ segments). Stage map:
 Every stage commits a :class:`~.manifest.StageManifest`; re-running
 ``build_index`` with identical inputs+config skips completed stages
 (resumable builds, north rule) and reads the tokens stage only when a
-stage that scans it is incomplete. Every shuffle and every store's
-file count follows one rule, :func:`_adaptive_parts`: one partition
-per 16 MB of the bytes the write reads, so a small build writes one
-file per store and one doc-ordered run per term. The posting stores,
-the docstore and the forward layers are written through
-:func:`write_store`, which keeps parquet statistics off their payload
-columns (VByte blobs, stored text, array elements): nothing filters on
-them, and their min/max would only fatten each footer.
+stage that scans it is incomplete. Every write is sized by one rule,
+:func:`_adaptive_parts` (one partition per 16 MB of token bytes), so a
+small build writes one file per store and one run per term. The
+posting stores, the docstore and the forward layers are written
+through :func:`write_store`, which keeps parquet statistics off their
+payload columns (VByte blobs, stored text, array elements): nothing
+filters on them, and their min/max would only fatten each footer.
 """
 
 from __future__ import annotations
@@ -62,7 +59,7 @@ import os
 from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType
 
@@ -100,8 +97,7 @@ def write_store(df: DataFrame, path: str | Path) -> None:
     ``first_doc``/``last_doc`` keep theirs, so pushdown is unchanged.
     Parquet keys the option by leaf path, so an array column's key is
     ``<col>.list.element``; its top-level name would be ignored.
-    ``df`` comes sized by :func:`_adaptive_parts` (shuffled to its
-    count, or a per-doc store coalesced to it); an
+    ``df`` comes sized by :func:`_adaptive_parts`; an
     :func:`~.segments.encode_postings` result is never coalesced."""
     w = df.write.mode("overwrite")
     for f in df.schema.fields:
@@ -126,47 +122,39 @@ def check_format(stats: dict, root: str | Path) -> None:
             f"/ build_conllu_index")
 
 
-# one partition, and so one file, per this many bytes of input
+# one partition, and so one file, per this many bytes of a write
 PART_BYTES = 16 << 20
 
 
-def store_parts(nbytes: int, cap: int) -> int:
+def store_parts(nbytes: float, cap: int) -> int:
     """The sizing rule: ``ceil(nbytes / PART_BYTES)``, in ``[1, cap]``."""
-    return max(1, min(cap, -(-nbytes // PART_BYTES)))
+    return max(1, min(cap, -(-int(nbytes) // PART_BYTES)))
+
+
+def store_bytes(path: str | Path) -> int:
+    """The parquet bytes of the store at ``path`` (0 when absent)."""
+    return sum(f.stat().st_size for f in Path(path).rglob("*.parquet"))
 
 
 def _adaptive_parts(spark: SparkSession, n_partitions: int | None,
-                    *sources, scale: float = 1.0) -> int:
-    """Partition count of one index write — the width of its shuffle,
-    or the file count a per-doc store is coalesced to — and the one
-    sizing rule of the build, the merge and the collocation store.
-
-    An explicit ``n_partitions`` is used as given. Otherwise
-    :func:`store_parts` of ``scale`` × the bytes the write reads,
-    capped at the session's default parallelism. A source is a store
-    directory (its parquet bytes; a missing one sizes the write at the
-    cap) or a DataFrame (Spark's plan size estimate: the bytes of the
-    files it scans, for a file read). So a small input writes one file
-    per store and one doc-ordered run per term, and a large one spreads
-    over the cluster, with the salted shuffle still splitting head
-    terms. Never coalesce an :func:`~.segments.encode_postings`
-    result: ``seg_part`` is the encoder task's partition id, so the
-    count is set at its shuffle. Deterministic per (input, config).
-    """
+                    nbytes: float | None, scale: float = 1.0) -> int:
+    """Partition count of one index write (its shuffle's width, or the
+    file count a per-doc store is coalesced to): an explicit
+    ``n_partitions`` as given, else :func:`store_parts` of ``scale`` ×
+    ``nbytes``, capped at the default parallelism (``nbytes`` None: the
+    cap). Posting shuffles are sized by decoded token rows' parquet
+    bytes (the tokens stage, kept as ``stats.json`` ``token_bytes``); a
+    merge sums its inputs', so a build and a merge of equal token
+    volume get equal counts. Layer shuffles scale them by the posted
+    layers, a build's per-doc stores by their share (docs per token;
+    forward columns per token-stage column); merge folds and the
+    collocation store use the bytes of the stores they read. Never
+    coalesce an :func:`~.segments.encode_postings` result: ``seg_part``
+    is the encoder task's partition id."""
     if n_partitions:
         return n_partitions
     cap = spark.sparkContext.defaultParallelism
-    nbytes = 0
-    for src in sources:
-        if isinstance(src, DataFrame):
-            nbytes += src._jdf.queryExecution().optimizedPlan().stats() \
-                .sizeInBytes()
-        elif Path(src).is_dir():
-            nbytes += sum(f.stat().st_size
-                          for f in Path(src).rglob("*.parquet"))
-        else:
-            return cap
-    return store_parts(int(nbytes * scale), cap)
+    return cap if nbytes is None else store_parts(nbytes * scale, cap)
 
 
 class IndexPaths:
@@ -197,6 +185,12 @@ DEFAULT_EXTRA_LAYERS = ("lemma", "upos", "xpos", "deprel", "feats")
 # covers a large share of the corpus, so a root whose forward store
 # carries the layer checks its tests against that store instead
 CLOSED_CLASS_LAYERS = ("upos", "xpos", "deprel", "feats")
+
+
+def _token_bytes(paths: IndexPaths) -> int | None:
+    """The root's ``stats.json`` ``token_bytes`` (None if unrecorded)."""
+    return (json.loads(paths.stats.read_text()).get("token_bytes")
+            if paths.stats.exists() else None)
 
 
 def posted_layers(root: str | Path) -> list[str]:
@@ -282,10 +276,9 @@ def build_layer_postings(
     melted = _melt(layer_tokens, layers)
     st = StageManifest(paths.layers, "layers")
     if not st.is_complete(inputs_fp, cfg_fp):
-        # size the shuffle from the surface segments (the melt
-        # multiplies rows by |posted|)
-        lay_parts = _adaptive_parts(spark, n_partitions, paths.segments,
-                                    scale=float(max(1, len(posted))))
+        # the melt multiplies the token rows by |posted|
+        lay_parts = _adaptive_parts(
+            spark, n_partitions, _token_bytes(paths), scale=len(posted))
         write_store(encode_postings(
             melted.filter(F.col("layer").isin(posted)).select(
                 F.concat_ws(":", "layer", "value").alias("term"),
@@ -347,7 +340,6 @@ def build_conllu_index(
     config = {"id_offset": id_offset, "format": INDEX_FORMAT}
     cfg_fp = config_fingerprint(config)
     inputs_fp = input_fingerprint(input_paths) if input_paths else "unspecified"
-    doc_parts = _adaptive_parts(spark, n_partitions, parsed)
     if dict(parsed.dtypes)["doc_id"] != "bigint":
         from ..sources.pages import assign_doc_ids
 
@@ -359,8 +351,7 @@ def build_conllu_index(
             if id_offset:
                 mapping = mapping.withColumn(
                     "doc_id", F.col("doc_id") + F.lit(id_offset))
-            mapping.coalesce(doc_parts).write.mode("overwrite").parquet(
-                str(paths.doc_names))
+            mapping.write.mode("overwrite").parquet(str(paths.doc_names))
             st_names.commit(inputs_fp, cfg_fp,
                             lineage={"inputs": input_paths or [],
                                      "config": config})
@@ -375,14 +366,19 @@ def build_conllu_index(
     # scoped here, not via the tracked registry
     lt = layer_tokens(parsed).persist()
     try:
+        stats = build_index(
+            spark, None, out_dir,
+            pre_tokenized=lt.select("doc_id", "pos", "term"),
+            doc_salt=doc_salt, n_partitions=n_partitions,
+            block_size=block_size, input_paths=input_paths)
         if store_docstore:
             # FORWARD layer index (doc → per-layer value arrays in
             # position order): what index-side collocate extraction
             # reads to recover "the lemma AT the matched position" —
             # the Lucene forward-index analog the reference groups
             # sketch hits with (BlackLabQueryExecutor FORWARD_INDEX).
-            # Written first: the closed-class layers it carries get no
-            # postings (build_layer_postings reads its manifest)
+            # Written before the layer postings: the closed-class layers it
+            # carries get none (build_layer_postings reads its manifest)
             def _arr(c):
                 def pick(s):
                     return s[c]
@@ -408,15 +404,12 @@ def build_conllu_index(
             if not st_fw.is_complete(inputs_fp, fw_fp):
                 write_store(
                     lt.groupBy("doc_id").agg(*[_arr(c) for c in fw_cols])
-                    .coalesce(doc_parts), paths.forward_layers)
+                    .coalesce(_adaptive_parts(
+                        spark, n_partitions, _token_bytes(paths),
+                        scale=len(fw_cols) / 4)), paths.forward_layers)
                 st_fw.commit(inputs_fp, fw_fp,
                              lineage={"inputs": input_paths or [],
                                       "config": fw_config})
-        stats = build_index(
-            spark, None, out_dir,
-            pre_tokenized=lt.select("doc_id", "pos", "term"),
-            doc_salt=doc_salt, n_partitions=n_partitions,
-            block_size=block_size, input_paths=input_paths)
         build_layer_postings(
             spark, lt, out_dir, layers=layers, doc_salt=doc_salt,
             n_partitions=n_partitions, block_size=block_size,
@@ -508,11 +501,19 @@ def build_index(
         else:
             src = explode_tokens(pages, doc_id_col, text_col,
                                  use_pandas_udf=use_pandas_udf, with_dl=True)
-        src.write.mode("overwrite").parquet(str(paths.tokens))
-        st_tok.commit(inputs_fp, cfg_fp,
+        obs = Observation("tokens")
+        src.observe(obs, F.count(F.lit(1)).alias("n_tokens"),
+                    F.count(F.when(F.col("pos") == 0, 1)).alias("n_docs")
+                    ).write.mode("overwrite").parquet(str(paths.tokens))
+        st_tok.commit(inputs_fp, cfg_fp, metrics=obs.get,
                       lineage={"inputs": input_paths or [], "config": config})
     tokens = spark.read.parquet(str(paths.tokens)) if need_tokens else None
-    tok_parts = _adaptive_parts(spark, n_partitions, paths.tokens)
+    tok_bytes = (store_bytes(paths.tokens) if need_tokens
+                 else _token_bytes(paths))
+    tm = (st_tok.load() or {}).get("metrics", {})
+    tok_parts = _adaptive_parts(spark, n_partitions, tok_bytes)
+    doc_parts = _adaptive_parts(spark, n_partitions, tok_bytes, scale=(
+        tm.get("n_docs", 1) / max(1, tm.get("n_tokens", 1))))
 
     # ---- stages: segments ∥ doc_lens+corpus_stats ---------------------
     def _stage_segments() -> None:
@@ -551,8 +552,6 @@ def build_index(
         st_stats = StageManifest(paths.doc_lens, "doc_lens")
         if st_stats.is_complete(inputs_fp, cfg_fp):
             return
-        from pyspark.sql import Observation
-
         # dl is a per-row column of the tokens stage, so doc_lens is a
         # pushed-down FILTER (pos == 0 → one row per non-empty doc) —
         # no shuffle, no aggregation. The corpus stats ride the SAME
@@ -564,7 +563,7 @@ def build_index(
             .observe(obs, F.count(F.lit(1)).alias("n_docs"),
                      F.avg("dl").alias("avgdl"),
                      F.sum("dl").alias("total_tokens"))
-            .coalesce(tok_parts)
+            .coalesce(doc_parts)
             .write.mode("overwrite").parquet(str(paths.doc_lens))
         )
         row = obs.get
@@ -573,7 +572,7 @@ def build_index(
             "avgdl": float(row["avgdl"]),
             "total_tokens": int(row["total_tokens"]),
             "k1": k1, "b": b, "block_size": block_size, "doc_salt": doc_salt,
-            "format": INDEX_FORMAT,
+            "format": INDEX_FORMAT, "token_bytes": tok_bytes,
         }
         tmp = paths.stats.with_suffix(".tmp")
         tmp.write_text(json.dumps(s, indent=1, sort_keys=True))
@@ -601,8 +600,7 @@ def build_index(
             return
         write_store(pages.select(F.col(doc_id_col).alias("doc_id"),
                                  F.col(text_col).alias("text"))
-                    .coalesce(_adaptive_parts(spark, n_partitions, pages)),
-                    paths.docstore)
+                    .coalesce(tok_parts), paths.docstore)
         st_ds.commit(inputs_fp, cfg_fp, lineage={"inputs": input_paths or []})
 
     # ---- stage: doc_meta (stored metadata fields) ---------------------
@@ -620,7 +618,7 @@ def build_index(
             return
         (pages.select(F.col(doc_id_col).cast("long").alias("doc_id"),
                       *meta_cols)
-         .coalesce(_adaptive_parts(spark, n_partitions, pages))
+         .coalesce(doc_parts)
          .write.mode("overwrite").parquet(str(paths.doc_meta)))
         st_meta.commit(inputs_fp, cfg_fp,
                        lineage={"inputs": input_paths or [],

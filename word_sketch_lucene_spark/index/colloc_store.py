@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 from ..functions.scoring import score_ranked_collocates
 from ..plans.cql import DEFAULT_LAYERS
 from ..plans.relations import GrammarCatalog, _pattern_pairs
-from .build import _adaptive_parts
+from .build import _adaptive_parts, store_bytes
 
 STORE_DIR = "colloc_store"
 META_NAME = "_store_meta.json"
@@ -109,8 +109,8 @@ def build_collocation_store(
     tokens = catalog_tokens(searcher, rels, subst_attr, colloc_attr,
                             within_sentence).persist()
     # sized by the forward store the pairs are counted from
-    nparts = _adaptive_parts(searcher.spark, n_partitions,
-                             Path(searcher.root) / "forward_layers")
+    nparts = _adaptive_parts(searcher.spark, n_partitions, store_bytes(
+        Path(searcher.root) / "forward_layers"))
     try:
         (
             # one count-distinct aggregate dedups every branch (head/

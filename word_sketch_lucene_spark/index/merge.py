@@ -13,9 +13,9 @@ Decoding emits raw token rows ``(term, doc_id, pos)``; the term rows
 join the folded ``doc_lens`` for the ``dl`` of their ``min_dl`` — the
 build's interchange shape, so merge is literally a re-run of the
 build's last stage over the union of inputs. The per-doc stores fold
-by a disjoint union. Every write is sized by the bytes of its inputs
-(``build._adaptive_parts``), so repeated merges do not pile up files
-and a small merge writes one file per store. Tiered compaction
+by a disjoint union sized by its inputs' bytes, the postings by their
+summed ``token_bytes`` (``build._adaptive_parts``), so repeated merges
+do not pile up files. Tiered compaction
 (``compact_if_needed``) keeps the number of live indexes bounded, and
 every merge commits a manifest with the input lineage — resumable like
 every other stage.
@@ -28,7 +28,6 @@ from __future__ import annotations
 
 import json
 from collections.abc import Iterator
-from functools import reduce
 from pathlib import Path
 
 import numpy as np
@@ -44,8 +43,9 @@ from .build import (
     _adaptive_parts,
     build_index,
     check_format,
-    postings_dictionary,
     posted_layers,
+    postings_dictionary,
+    store_bytes,
     write_store,
 )
 from .manifest import StageManifest, config_fingerprint, input_fingerprint
@@ -129,18 +129,21 @@ def merge_indexes(
     row = doc_lens.agg(
         F.count("*").alias("n"), F.avg("dl").alias("avgdl"),
         F.sum("dl").alias("tt")).collect()[0]
+    tb = [s.get("token_bytes") for s in all_stats]
     stats = {**all_stats[0], "n_docs": int(row["n"]),
-             "avgdl": float(row["avgdl"]), "total_tokens": int(row["tt"])}
+             "avgdl": float(row["avgdl"]), "total_tokens": int(row["tt"]),
+             "token_bytes": None if None in tb else sum(tb)}
     paths.stats.write_text(json.dumps(stats, indent=1, sort_keys=True))
 
     # union of decoded token streams — the LSM merge input
-    def _merge_postings(store: str, impacts: bool) -> None:
-        dirs = _existing(in_roots, store)
-        tokens = _union(spark, dirs, decode_segments_to_tokens)
+    def _merge_postings(store: str, impacts: bool, scale: int = 1) -> None:
+        tokens = _union(spark, [str(Path(r) / store) for r in in_roots],
+                        decode_segments_to_tokens)
         if impacts:
             tokens = tokens.join(doc_lens, "doc_id")
         write_store(encode_postings(
-            tokens, _adaptive_parts(spark, n_partitions, *dirs),
+            tokens, _adaptive_parts(spark, n_partitions,
+                                    stats["token_bytes"], scale=scale),
             doc_salt=doc_salt, block_size=block_size, impacts=impacts),
             paths.root / store)
 
@@ -161,8 +164,8 @@ def merge_indexes(
                 f"merge_indexes: inputs post different annotation "
                 f"layers: {sorted(posted)} (rebuild them with the same "
                 f"layers and forward store)")
-        _merge_postings("layers", impacts=False)
-        (_union(spark, _existing(lay_roots, "layer_stats"))
+        _merge_postings("layers", impacts=False, scale=len(next(iter(posted))))
+        (_union(spark, [str(Path(r) / "layer_stats") for r in lay_roots])
          .groupBy("layer", "value")
          .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
          .write.mode("overwrite").parquet(str(paths.layer_stats)))
@@ -183,18 +186,16 @@ def merge_indexes(
     return stats
 
 
-def _existing(roots: list[str], store: str) -> list[str]:
-    """The ``store`` directories of ``roots`` that exist."""
-    return [str(Path(r) / store) for r in roots
-            if (Path(r) / store).exists()]
-
-
 def _union(spark: SparkSession, dirs: list[str], read=None) -> DataFrame:
-    """Union of the stores at ``dirs`` (each passed through ``read``
-    when given)."""
-    frames = [spark.read.parquet(p) for p in dirs]
-    return reduce(DataFrame.unionByName, map(read, frames) if read
-                  else frames)
+    """Union of the stores at ``dirs`` that exist (each passed through
+    ``read`` when given)."""
+    u = None
+    for p in dirs:
+        if Path(p).exists():
+            d = spark.read.parquet(p)
+            d = read(d) if read else d
+            u = d if u is None else u.unionByName(d)
+    return u
 
 
 def _fold_per_doc(spark: SparkSession, in_roots: list[str], store: str,
@@ -202,10 +203,12 @@ def _fold_per_doc(spark: SparkSession, in_roots: list[str], store: str,
     """Fold one per-doc store (disjoint doc ids) into ``out_root``,
     sized by its inputs' bytes: a plain union writes the SUM of its
     inputs' files, so every merge would add the delta's files."""
-    dirs = _existing(in_roots, store)
-    if dirs:
-        write_store(_union(spark, dirs).coalesce(
-            _adaptive_parts(spark, n_partitions, *dirs)), out_root / store)
+    dirs = [str(Path(r) / store) for r in in_roots]
+    u = _union(spark, dirs)
+    if u is not None:
+        write_store(u.coalesce(_adaptive_parts(
+            spark, n_partitions, sum(map(store_bytes, dirs)))),
+            out_root / store)
 
 
 def add_documents(
