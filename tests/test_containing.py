@@ -16,8 +16,8 @@ from pyspark.sql import functions as F
 
 from word_sketch_lucene_spark.plans.cql import (
     compile_cql,
+    parse_query,
     sentence_spans_containing,
-    strip_containing,
 )
 
 PATTERN = '[xpos="JJ.*"] []{0,1} [xpos="NN.*"]'
@@ -31,16 +31,26 @@ def _layer_tokens(parsed):
 
 # ------------------------------------------------------------- parser
 def test_strip_containing_forms():
-    core, mode = strip_containing('<s/> containing [word="a"]')
-    assert (core, mode) == ('[word="a"]', "containing")
-    core, mode = strip_containing('<s/> !containing [word="a"]')
-    assert (core, mode) == ('[word="a"]', "not_containing")
+    core = parse_query('[word="a"]')
+    q = parse_query('<s/> containing [word="a"]')
+    assert q.containing == "containing" and q.items == core.items
+    q = parse_query('<s/> !containing [word="a"]')
+    assert q.containing == "not_containing" and q.items == core.items
     # case-insensitive keyword, flexible tag spelling
-    core, mode = strip_containing('< s > CONTAINING [word="a"]')
-    assert mode == "containing"
-    # no clause → untouched
-    core, mode = strip_containing('[word="a"] within <s/>')
-    assert mode is None and core == '[word="a"] within <s/>'
+    assert parse_query('< s > CONTAINING [word="a"]').containing \
+        == "containing"
+    # no clause → a token query; `within <s/>` is its own flag
+    q = parse_query('[word="a"] within <s/>')
+    assert q.containing is None and q.within_sentence
+    assert q.items == core.items
+    # constraints and `within <s/>` follow the clause in either order
+    a = parse_query('<s/> containing 1:[xpos="JJ.*"] 2:[xpos="NN.*"] '
+                    'within <s/> :: 1.deprel = 2.deprel')
+    b = parse_query('<s/> containing 1:[xpos="JJ.*"] 2:[xpos="NN.*"] '
+                    '& 1.deprel = 2.deprel within <s/>')
+    assert a == b and a.containing == "containing" and a.constraints
+    assert parse_query('<s/> containing [word="a"]') is \
+        parse_query('<s/> containing [word="a"]')
 
 
 def test_capture_sent_requires_within(spark):

@@ -17,8 +17,8 @@ from word_sketch_lucene_spark.plans.cql import (
     compile_cql,
     find_pattern_hits,
     parse_cql,
+    parse_query,
     pattern_collocates,
-    substitute_at_position,
 )
 
 DOCS = [
@@ -99,8 +99,8 @@ def test_distinct_spans_for_variable_gaps(toks):
 
 
 def test_substitution_preserves_other_tests():
-    items = parse_cql('1:[xpos="NN.*"] 2:[xpos="JJ.*"]')
-    out = substitute_at_position(items, "theory", 1)
+    q = parse_query('1:[xpos="NN.*"] 2:[xpos="JJ.*"]')
+    items, out = q.items, q.substitute("theory", 1).items
     assert out[0].tests[0] == AttrTest("word", "theory")
     assert out[0].tests[1].attr == "xpos"          # original test kept
     assert out[1].tests == items[1].tests          # other position untouched
@@ -310,23 +310,37 @@ def test_group_pattern_hits_index_path_identical(spark, toks, index_small,
 
 # -------------------------------------------- inter-slot constraints
 def test_strip_constraints_parse():
-    from word_sketch_lucene_spark.plans.cql import (
-        SlotConstraint,
-        strip_constraints,
-    )
+    from word_sketch_lucene_spark.plans.cql import SlotConstraint
 
-    core, cons = strip_constraints(
-        '1:[word="a"] 2:[word="b"] & 1.word = 2.word')
-    assert core.strip() == '1:[word="a"] 2:[word="b"]'
-    assert cons == (SlotConstraint("1", "word", "2", "word"),)
+    q = parse_query('1:[word="a"] 2:[word="b"] & 1.word = 2.word')
+    assert q.items == tuple(parse_cql('1:[word="a"] 2:[word="b"]'))
+    assert q.constraints == (SlotConstraint("1", "word", "2", "word"),)
+    assert not q.within_sentence and q.containing is None
     # two constraints, BlackLab `::` and wsdef `&` forms, source order
-    core, cons = strip_constraints(
-        '1:[] 2:[] :: 1.lemma != 2.lemma & 1.xpos = 2.xpos')
-    assert cons == (SlotConstraint("1", "lemma", "2", "lemma", True),
-                    SlotConstraint("1", "xpos", "2", "xpos", False))
+    q = parse_query('1:[word="x"] 2:[word="y"] '
+                    ':: 1.lemma != 2.lemma & 1.xpos = 2.xpos')
+    assert q.constraints == (SlotConstraint("1", "lemma", "2", "lemma", True),
+                             SlotConstraint("1", "xpos", "2", "xpos", False))
+    assert q.layers == {"term", "lemma", "xpos"}
     # the in-bracket `&` conjunction is never touched
-    core, cons = strip_constraints('[word="a" & lemma="b"]')
-    assert core == '[word="a" & lemma="b"]' and cons == ()
+    q = parse_query('[word="a" & lemma="b"]')
+    assert q.items == tuple(parse_cql('[word="a" & lemma="b"]'))
+    assert q.constraints == ()
+    # `within <s/>` before (BlackLab) or after (wsdef) the constraints
+    blacklab = parse_query('1:[xpos="JJ.*"] 2:[xpos="NN.*"] within <s/> '
+                           ':: 1.deprel = 2.deprel')
+    wsdef = parse_query('1:[xpos="JJ.*"] 2:[xpos="NN.*"] '
+                        '& 1.deprel = 2.deprel within <s/>')
+    assert blacklab == wsdef and blacklab.within_sentence
+    assert blacklab.constraints == (
+        SlotConstraint("1", "deprel", "2", "deprel"),)
+    # a constraint on an unlabeled position fails at parse time
+    with pytest.raises(ValueError, match="position '9'"):
+        parse_query('1:[word="a"] [word="b"] & 1.word = 9.word')
+    # bounded cache; a repeated string returns the identical Query
+    info = parse_query.cache_info()
+    assert info.maxsize is not None and 0 < info.maxsize < 10_000
+    assert parse_query('[word="a" & lemma="b"]') is q
 
 
 def test_constraint_equality_dataframe(spark):

@@ -22,7 +22,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from word_sketch_lucene_spark.plans.cql import GapItem, parse_cql
+from word_sketch_lucene_spark.plans.cql import GapItem, parse_query
 from word_sketch_lucene_spark.query import positions as kernel
 
 DOC_IDS = (0, 7, 2**31 + 5, 2**40)
@@ -100,8 +100,9 @@ def searcher(spark, tmp_path_factory):
 
 def _walk(pattern: str, within: bool) -> set[tuple[int, tuple]]:
     """Every full assignment of positions to the token constraints,
-    tried from every start position of every doc."""
-    items = parse_cql(pattern)
+    tried from every start position of every doc (inter-slot
+    constraints and sentence bounds are the caller's)."""
+    items = parse_query(pattern).items
     out = set()
 
     def ok(item, tok):
@@ -206,22 +207,17 @@ def test_constrained_pattern_equals_walk_and_distributed_compile(searcher):
     """Inter-slot constraints run in the in-driver chain: the labelled
     slots' forward values compare per match, and the spans equal both
     the brute-force walk and the distributed compile."""
-    from word_sketch_lucene_spark.plans.cql import (
-        TokenItem,
-        strip_constraints,
-    )
-
     for pattern, within in CONSTRAINED:
-        core, cons = strip_constraints(pattern)
-        slot = {it.label: i for i, it in enumerate(
-            it for it in parse_cql(core) if isinstance(it, TokenItem))}
+        q = parse_query(pattern)
+        cons = q.constraints
+        slot = {lab: n - 1 for lab, n in q.labels.items()}
 
         def holds(d, a, c):
             va = CORPUS[d][a[slot[c.label_a]]][LAYER[c.attr_a]]
             vb = CORPUS[d][a[slot[c.label_b]]][LAYER[c.attr_b]]
             return (va != vb) if c.negated else (va == vb)
 
-        walk = sorted((d, a) for d, a in _walk(core, within)
+        walk = sorted((d, a) for d, a in _walk(pattern, within)
                       if all(holds(d, a, c) for c in cons))
         assert searcher.pattern_matches(
             pattern, within_sentence=within) == walk, pattern

@@ -316,28 +316,44 @@ def test_pattern_pos_group():
     assert pattern_pos_group(cat.by_id["adj_adverbs"]) == "ADJ"
 
 
-def test_pattern_relations_parse_once(monkeypatch):
-    """Each relation's head POS group is worked out when the catalog is
-    built: selecting a sketch's relations parses no pattern again."""
+def test_pattern_relations_parse_once(monkeypatch, spark, conllu_index):
+    """Each relation's pattern is parsed when the catalog is built:
+    selecting a sketch's relations, reading their POS groups and
+    trinary flags, and a warm live sketch parse no pattern again."""
     from word_sketch_lucene_spark.plans import cql
     from word_sketch_lucene_spark.plans.relations import (
         EN_CATALOG,
         pattern_pos_group,
     )
+    from word_sketch_lucene_spark.query.engine import IndexSearcher
+    from word_sketch_lucene_spark.query.sketch import index_word_sketch
 
     cat = GrammarCatalog.load(EN_CATALOG)
+    s = IndexSearcher(spark, conllu_index[0])
     first = cat.pattern_relations(("SURFACE",), head_pos="NOUN")
+    sketches = (("table", "NOUN"), ("make", "VERB"))
+    warm = [index_word_sketch(s, h, cat, head_pos=pos, use_store=False)
+            for h, pos in sketches]
     calls = []
     parse = cql.parse_cql
     monkeypatch.setattr(cql, "parse_cql",
                         lambda *a, **k: calls.append(a) or parse(*a, **k))
     again = cat.pattern_relations(("SURFACE",), head_pos="NOUN")
+    groups = {r.id: (pattern_pos_group(r), r.trinary)
+              for r in cat.relations}
     assert not calls
     assert again == first and first
+    for (h, pos), want in zip(sketches, warm):
+        assert index_word_sketch(s, h, cat, head_pos=pos,
+                                 use_store=False) == want
+        assert not calls, (h, len(calls))
+    assert warm[0] and groups["noun_adj_predicates"] == ("NOUN", False)
     monkeypatch.undo()
     assert first == [r for r in cat.relations
                      if r.pattern and r.type == "SURFACE"
                      and pattern_pos_group(r) == "NOUN"]
+    assert all(r.query is cql.parse_query(r.pattern)
+               for r in cat.relations if r.pattern)
 
 
 def test_pattern_validation_unlabeled_fails(tmp_path):

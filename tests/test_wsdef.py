@@ -5,9 +5,11 @@ import os
 import pytest
 
 from word_sketch_lucene_spark.plans.cql import (
+    Query,
     compile_cql,
     expand_repetitions,
     parse_cql,
+    parse_query,
 )
 from word_sketch_lucene_spark.plans.wsdef import load_wsdef, parse_wsdef
 
@@ -59,10 +61,8 @@ def test_parse_wsdef_sections():
     of = by["object_of"][0]
     assert of.pattern.startswith('2:[tag="VB.*"]')
     # every emitted pattern parses in the engine dialect
-    from word_sketch_lucene_spark.plans.cql import strip_constraints
-
     for r in cat.relations:
-        parse_cql(strip_constraints(r.pattern)[0])
+        assert r.query is parse_query(r.pattern)
 
 
 def test_parse_wsdef_keep_unary():
@@ -79,8 +79,6 @@ def test_full_reference_grammar_parses():
     pattern entries over 30 relation ids, every pattern parseable by
     the engine (quantifiers, cross-attr `|`, negated groups,
     `& 1.tag = 2.tag` constraints)."""
-    from word_sketch_lucene_spark.plans.cql import strip_constraints
-
     cat = load_wsdef(REF_GRAMMAR)
     assert cat.catalog_structlimit is True
     ids = {r.id for r in cat.relations}
@@ -90,8 +88,7 @@ def test_full_reference_grammar_parses():
     assert cat.skipped_unary == ["passive", "reflexive", "it", "it",
                                  "it"]
     for r in cat.relations:
-        core, cons = strip_constraints(r.pattern)
-        parse_cql(core)
+        assert r.query is parse_query(r.pattern)
 
 
 # ------------------------------------------------- quantifier DP path
@@ -137,7 +134,7 @@ def test_dp_equals_expansion(dp_tokens, pat):
     got = {tuple(r) for r in compile_cql(dp_tokens, pat).collect()}
     exp = None
     for v in expand_repetitions(parse_cql(pat), max_variants=4096):
-        b = compile_cql(dp_tokens, v)
+        b = compile_cql(dp_tokens, Query(tuple(v)))
         exp = b if exp is None else exp.unionByName(b)
     want = {tuple(r) for r in exp.distinct().collect()}
     assert got == want

@@ -370,15 +370,7 @@ def sql_word_sketch_conllu(head: str, catalog, head_pos: str | None = None,
     and multiple pattern lines sharing one relation id (Sketch-Engine
     gramrel union — the span sets merge BEFORE counting, mirroring the
     engine's single count-distinct aggregate)."""
-    from .plans.cql import (
-        TokenItem,
-        _steps,
-        expand_repetitions,
-        has_repetitions,
-        parse_cql,
-        strip_constraints,
-        substitute_at_position,
-    )
+    from .plans.cql import _steps, expand_repetitions
 
     rels = catalog.pattern_relations(relation_types, head_pos)
     score_tail = f"""
@@ -423,10 +415,6 @@ def sql_word_sketch_conllu(head: str, catalog, head_pos: str | None = None,
         label_ix = {st.item.label: i for i, st in enumerate(steps)
                     if st.item.label is not None}
         for c in cons:
-            for lab in (c.label_a, c.label_b):
-                if lab not in label_ix:
-                    raise ValueError(f"constraint label {lab!r} not in "
-                                     f"pattern")
             la = f"t{label_ix[c.label_a]}." \
                  f"{CONLLU_SQL_LAYERS[c.attr_a]}"
             lb = f"t{label_ix[c.label_b]}." \
@@ -452,15 +440,10 @@ def sql_word_sketch_conllu(head: str, catalog, head_pos: str | None = None,
         dual0 = grp[0]
         items0 = None
         if dual0.dual:
-            labels0 = {it.label
-                       for it in parse_cql(dual0.pattern)
-                       if isinstance(it, TokenItem) and it.label}
-            if "2" not in labels0:
+            if "2" not in dual0.query.labels:
                 # dual single-position window relation (reference
                 # verb_nouns): the pattern IS the collocate constraint
-                citem = [it for it in parse_cql(dual0.pattern)
-                         if isinstance(it, TokenItem)][
-                             dual0.head_position - 1]
+                citem = dual0.query.tokens[dual0.head_position - 1]
                 tests = " AND ".join(
                     _cql_item_sql(citem, "cc", CONLLU_SQL_LAYERS)) \
                     or "TRUE"
@@ -479,14 +462,12 @@ def sql_word_sketch_conllu(head: str, catalog, head_pos: str | None = None,
                 continue
         selects = []
         for rel in grp:
-            core, cons = strip_constraints(rel.pattern)
-            items = parse_cql(core)
-            subst = substitute_at_position(items, head,
-                                           rel.head_position,
-                                           attr="lemma")
-            variants = (expand_repetitions(subst, max_variants=4096)
-                        if has_repetitions(subst) else [subst])
-            selects += [_variant_select(v, cons, rid) for v in variants]
+            subst = rel.query.substitute(head, rel.head_position,
+                                         attr="lemma")
+            variants = (expand_repetitions(subst.items, max_variants=4096)
+                        if subst.has_repetitions else [subst.items])
+            selects += [_variant_select(v, subst.constraints, rid)
+                        for v in variants]
         union = "\n             UNION\n             ".join(selects)
         # window-based top-k PER relation value: a plain-id group has
         # one relation (the old per-branch LIMIT), a TRINARY group has
@@ -519,25 +500,16 @@ def sql_unary_counts(head: str, catalog) -> str:
     distinct (doc, head-pos) match counts over the CoNLL-U layer
     table, same variant expansion / constraint handling as the sketch
     oracle."""
-    from .plans.cql import (
-        _steps,
-        expand_repetitions,
-        has_repetitions,
-        parse_cql,
-        strip_constraints,
-        substitute_at_position,
-    )
+    from .plans.cql import _steps, expand_repetitions
 
     rels = [r for r in catalog.relations
             if r.pattern and r.extra.get("unary")]
     branches = []
     for rel in rels:
-        core, cons = strip_constraints(rel.pattern)
-        items = parse_cql(core)
-        subst = substitute_at_position(items, head, rel.head_position,
-                                       attr="lemma")
-        variants = (expand_repetitions(subst, max_variants=4096)
-                    if has_repetitions(subst) else [subst])
+        subst = rel.query.substitute(head, rel.head_position, attr="lemma")
+        cons = subst.constraints
+        variants = (expand_repetitions(subst.items, max_variants=4096)
+                    if subst.has_repetitions else [subst.items])
         selects = []
         for v in variants:
             steps = _steps(v)
@@ -1318,15 +1290,12 @@ def _cql_joins(pattern: str, table: str = "tokens",
     WHERE fragment — every oracle built on this helper accepts them.
     Token repetition quantifiers are a hard error here — each concrete
     variant is its own join shape; use :func:`_cql_join_variants`."""
-    from .plans.cql import has_repetitions, parse_cql, strip_constraints
-
-    pattern, cons = strip_constraints(pattern)
-    items = parse_cql(pattern)
-    if has_repetitions(items):
+    q = _oracle_query(pattern)
+    if q.has_repetitions:
         raise ValueError("pattern has token repetition quantifiers — "
                          "use _cql_join_variants (one join shape per "
                          "concrete-length variant)")
-    return _cql_joins_items(items, cons, table, layers)
+    return _cql_joins_items(q.items, q.constraints, table, layers)
 
 
 def _cql_join_variants(pattern: str, table: str = "tokens",
@@ -1336,18 +1305,23 @@ def _cql_join_variants(pattern: str, table: str = "tokens",
     — token repetition quantifiers expand exactly like
     ``plans.cql.expand_repetitions``; callers UNION the per-variant
     selects (span identity dedups across variants)."""
-    from .plans.cql import (
-        expand_repetitions,
-        has_repetitions,
-        parse_cql,
-        strip_constraints,
-    )
+    q = _oracle_query(pattern)
+    if q.containing:
+        raise ValueError("a `containing` query has its own oracle: "
+                         "sql_sentence_containing")
+    return [_cql_joins_items(v.items, q.constraints, table, layers)
+            for v in q.variants]
 
-    pattern, cons = strip_constraints(pattern)
-    items = parse_cql(pattern)
-    variants = (expand_repetitions(items) if has_repetitions(items)
-                else [items])
-    return [_cql_joins_items(v, cons, table, layers) for v in variants]
+
+def _oracle_query(pattern: str):
+    """The parsed pattern; these joins model no sentence bound, so a
+    ``within <s/>`` clause is refused rather than ignored."""
+    from .plans.cql import parse_query
+
+    q = parse_query(pattern)
+    if q.within_sentence:
+        raise ValueError("the SQL oracles take no `within <s/>` clause")
+    return q
 
 
 def _cql_joins_items(items, cons, table: str = "tokens",
@@ -1372,9 +1346,6 @@ def _cql_joins_items(items, cons, table: str = "tokens",
                     if st.item.label is not None}
 
         def _ccol(lab: str, attr: str) -> str:
-            if lab not in label_ix:
-                raise ValueError(f"constraint references position "
-                                 f"{lab!r} not labeled in the pattern")
             alias = f"t{label_ix[lab]}"
             if layers is not None:
                 return f"{alias}.{layers[attr]}"
@@ -1564,12 +1535,11 @@ def sql_sentence_containing(pattern: str, negated: bool = False,
     ``IndexSearcher.sentence_spans_containing``): sentence extents
     [anti-]semi-joined with the distinct sentences holding a full
     within-sentence match — ``(doc_id, sent_no, start, end)``."""
-    from .plans.cql import strip_containing
+    from .plans.cql import parse_query
 
-    core, mode = strip_containing(pattern)
-    if mode is not None:
-        negated = negated or mode == "not_containing"
-    steps, frm, where = _cql_joins(core, table="ann",
+    q = parse_query(pattern)
+    negated = negated or q.containing == "not_containing"
+    steps, frm, where = _cql_joins(pattern, table="ann",
                                    layers=CONLLU_SQL_LAYERS)
     sent_conds = " AND ".join(
         f"t{i}.pos // {sent_len} = t0.pos // {sent_len}"
@@ -1602,26 +1572,14 @@ def sql_pattern_collocates(pattern: str, head: str,
                            k: int = 20, relation_id: str | None = None) -> str:
     """Oracle for ``plans.cql.pattern_collocates`` (head substituted at
     the 1: label, distinct match-pair counting, logDice rank)."""
-    from .plans.cql import (
-        TokenItem,
-        _steps,
-        parse_cql,
-        substitute_at_position,
-    )
+    from .plans.cql import parse_query
 
-    items = parse_cql(pattern)
-    pos_n = 0
-    for it in items:
-        if isinstance(it, TokenItem):
-            pos_n += 1
-            if it.label == head_label:
-                break
-    else:
+    q = parse_query(pattern)
+    if head_label not in q.labels:
         # mirror plans.cql.pattern_collocates: fail fast at SQL-generation
         # time instead of emitting invalid SQL (tNone.pos)
         raise ValueError(f"no {head_label}: label in pattern")
-    items = substitute_at_position(items, head, pos_n)
-    steps = _steps(items)
+    steps = q.substitute(head, q.labels[head_label]).steps
     hi = ci = None
     for i, st in enumerate(steps):
         if st.item.label == head_label:

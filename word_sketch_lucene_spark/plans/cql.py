@@ -23,6 +23,17 @@ band predicate. This is the same join shape as
 :mod:`..operators.proximity`, so it scales with the corpus, never
 quadratically: per-doc fan-out is bounded by document length.
 
+Query grammar, parsed once by :func:`parse_query` into a
+:class:`Query` (memoised by string in a bounded LRU cache, so every
+layer that sees the same string shares one parse)::
+
+    [<s/> [!]containing] PATTERN [within <s/>] [CONSTRAINTS]
+
+``CONSTRAINTS`` is one or more ``& a.attr = b.attr`` (wsdef) or
+``:: a.attr = b.attr`` (BlackLab) clauses, ``!=`` negating; the
+trailing ``within <s/>`` may stand before or after them. ``PATTERN``
+is the token sequence :func:`parse_cql` reads.
+
 Layer routing: attribute names map to token-table columns (``word`` /
 ``term`` → ``term``; ``lemma``/``upos``/``xpos``/``deprel`` → same-named
 columns when present — the CoNLL-U multi-layer schema of
@@ -32,7 +43,8 @@ columns when present — the CoNLL-U multi-layer schema of
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
+from functools import cached_property, lru_cache
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -112,7 +124,7 @@ _CONSTRAINT_RE = re.compile(
     r"(?P<op>!?=)\s*(?P<lb>\w+)\s*\.\s*(?P<ab>\w+)\s*$")
 
 
-def strip_constraints(pattern: str) \
+def _strip_constraints(pattern: str) \
         -> tuple[str, tuple[SlotConstraint, ...]]:
     """Split trailing inter-slot constraints off a BCQL string:
     ``(core_pattern, constraints)`` in source order."""
@@ -220,7 +232,7 @@ def _parse_item_body(body: str) \
 _WITHIN_RE = re.compile(r"\s+within\s*<\s*s\s*/?\s*>\s*$", re.IGNORECASE)
 
 
-def strip_within_sentence(pattern: str) -> tuple[str, bool]:
+def _strip_within_sentence(pattern: str) -> tuple[str, bool]:
     """Split an optional trailing ``within <s/>`` clause off a BCQL
     string: ``(core_pattern, within_sentence_flag)``."""
     m = _WITHIN_RE.search(pattern)
@@ -237,7 +249,7 @@ _CONTAINING_RE = re.compile(
     r"^\s*<\s*s\s*/?\s*>\s*(!?)\s*containing\s+", re.IGNORECASE)
 
 
-def strip_containing(pattern: str) -> tuple[str, str | None]:
+def _strip_containing(pattern: str) -> tuple[str, str | None]:
     """Split an optional leading ``<s/> [!]containing`` clause off a
     BCQL string: ``(core_pattern, mode)`` where mode is ``None`` (no
     clause), ``"containing"`` or ``"not_containing"``."""
@@ -371,11 +383,6 @@ def parse_relation_query(pattern: str,
     return RelationQuery(src, m.group("rel"), tgt)
 
 
-def has_repetitions(items: list[TokenItem | GapItem]) -> bool:
-    return any(isinstance(it, TokenItem)
-               and (it.rep_min, it.rep_max) != (1, 1) for it in items)
-
-
 def expand_repetitions(items: list[TokenItem | GapItem],
                        max_variants: int = 64
                        ) -> list[list[TokenItem | GapItem]]:
@@ -425,28 +432,6 @@ def expand_repetitions(items: list[TokenItem | GapItem],
     return out
 
 
-def substitute_at_position(items: list[TokenItem | GapItem], value: str,
-                           position: int, attr: str = "word"
-                           ) -> list[TokenItem | GapItem]:
-    """Inject ``attr="value"`` (escaped literal) into the Nth token
-    constraint, keeping its other tests — the reference's lemma
-    substitution (``CqlUtils.substituteAtPosition``,
-    ``CqlUtils.java:131-168``)."""
-    out: list[TokenItem | GapItem] = []
-    n = 0
-    for it in items:
-        if isinstance(it, TokenItem):
-            n += 1
-            if n == position:
-                it = TokenItem([AttrTest(attr, re.escape(value))] + it.tests,
-                               label=it.label, rep_min=it.rep_min,
-                               rep_max=it.rep_max, alts=it.alts)
-        out.append(it)
-    if n < position:
-        raise ValueError(f"pattern has {n} token positions, not {position}")
-    return out
-
-
 # ------------------------------------------------------------ steps
 @dataclass
 class _Step:
@@ -473,6 +458,124 @@ def _steps(items: list[TokenItem | GapItem]) -> list[_Step]:
             steps.append(_Step(it, 1 + pend_lo, 1 + pend_hi))
         pend_lo = pend_hi = 0
     return steps
+
+
+# distinct query strings kept parsed: a catalog's relations plus a
+# serving working set of CQL queries
+_QUERY_CACHE = 1024
+
+
+@dataclass(frozen=True)
+class Query:
+    """One parsed query (:func:`parse_query`): the token ``items``, the
+    trailing inter-slot ``constraints``, the ``within <s/>`` flag and the
+    ``containing`` span-filter mode (``None``, ``"containing"`` or
+    ``"not_containing"``), plus what every consumer derives from them.
+    Shared by every caller of one string: never mutate its items."""
+
+    items: tuple[TokenItem | GapItem, ...]
+    constraints: tuple[SlotConstraint, ...] = ()
+    within_sentence: bool = False
+    containing: str | None = None
+
+    def __post_init__(self):
+        for c in self.constraints:
+            for lab in (c.label_a, c.label_b):
+                if lab not in self.labels:
+                    raise ValueError(
+                        f"constraint references position {lab!r} but the "
+                        f"pattern labels only {list(self.labels)}")
+
+    @cached_property
+    def tokens(self) -> tuple[TokenItem, ...]:
+        return tuple(it for it in self.items if isinstance(it, TokenItem))
+
+    @cached_property
+    def labels(self) -> dict[str, int]:
+        """label → 1-based token position of its first slot (the
+        position convention of :meth:`substitute`)."""
+        out: dict[str, int] = {}
+        for n, it in enumerate(self.tokens, start=1):
+            if it.label is not None:
+                out.setdefault(it.label, n)
+        return out
+
+    @cached_property
+    def steps(self) -> tuple[_Step, ...]:
+        return tuple(_steps(self.items))
+
+    @cached_property
+    def layers(self) -> frozenset[str]:
+        """The token-table columns the query tests or constrains (the
+        virtual ``class`` attr reads ``term``) — what a column-pruned
+        token table must carry to run it."""
+        attrs = {a for c in self.constraints for a in (c.attr_a, c.attr_b)}
+        for it in self.tokens:
+            for group in (it.tests, *(it.alts or ())):
+                attrs |= {effective_test(t).attr for t in group}
+        return frozenset("term" if a == "class" else DEFAULT_LAYERS.get(a, a)
+                         for a in attrs)
+
+    @cached_property
+    def has_alts(self) -> bool:
+        """True when any token carries a cross-attr ``|`` disjunction —
+        the in-driver span chain tracks per-LAYER position sets and
+        cannot union across layers, so these route to the distributed
+        compile."""
+        return any(it.alts for it in self.tokens)
+
+    @cached_property
+    def has_repetitions(self) -> bool:
+        return any((it.rep_min, it.rep_max) != (1, 1) for it in self.tokens)
+
+    @cached_property
+    def variants(self) -> tuple[Query, ...]:
+        """The concrete-length variants of its token quantifiers
+        (:func:`expand_repetitions`), each with this query's clauses;
+        ``(self,)`` without quantifiers."""
+        if not self.has_repetitions:
+            return (self,)
+        return tuple(replace(self, items=tuple(v))
+                     for v in expand_repetitions(self.items))
+
+    def substitute(self, value: str, position: int,
+                   attr: str = "word") -> Query:
+        """This query with ``attr="value"`` (escaped literal) injected
+        into its ``position``-th token (1-based), keeping that token's
+        other tests — the reference's lemma substitution
+        (``CqlUtils.substituteAtPosition``, ``CqlUtils.java:131-168``)."""
+        at = [i for i, it in enumerate(self.items)
+              if isinstance(it, TokenItem)]
+        if not 1 <= position <= len(at):
+            raise ValueError(f"pattern has {len(at)} token positions, "
+                             f"not {position}")
+        items = list(self.items)
+        it = items[at[position - 1]]
+        items[at[position - 1]] = TokenItem(
+            [AttrTest(attr, re.escape(value))] + it.tests, label=it.label,
+            rep_min=it.rep_min, rep_max=it.rep_max, alts=it.alts)
+        return replace(self, items=tuple(items))
+
+
+def as_query(pattern: str | Query) -> Query:
+    """``pattern`` parsed (:func:`parse_query`), or itself when it is
+    already a :class:`Query`."""
+    return parse_query(pattern) if isinstance(pattern, str) else pattern
+
+
+@lru_cache(maxsize=_QUERY_CACHE)
+def parse_query(pattern: str) -> Query:
+    """Parse a query string once: the optional leading ``<s/>
+    [!]containing``, then the trailing ``within <s/>`` and inter-slot
+    constraints in either order, then the token sequence
+    (:func:`parse_cql`). Memoised by string; raises ``ValueError`` as
+    :func:`parse_cql` does, or on a constraint naming an unlabeled
+    position."""
+    core, containing = _strip_containing(pattern)
+    core, ws = _strip_within_sentence(core)
+    core, cons = _strip_constraints(core)
+    core, ws2 = _strip_within_sentence(core)
+    return Query(tuple(parse_cql(core)), cons, ws or ws2, containing)
 
 
 DEFAULT_LAYERS = {"word": "term", "term": "term", "lemma": "lemma",
@@ -559,25 +662,20 @@ def _item_predicate(item: TokenItem, columns: list[str]) -> Column:
     return _item_pred(item, lambda a: _resolve_col(a, columns))
 
 
-def has_alts(items: list[TokenItem | GapItem]) -> bool:
-    """True when any token carries a cross-attr ``|`` disjunction —
-    the in-driver span chain tracks per-LAYER position sets and cannot
-    union across layers, so these route to the distributed compile."""
-    return any(isinstance(it, TokenItem) and it.alts for it in items)
-
-
 def compile_cql(
     tokens: DataFrame,
-    pattern: str | list[TokenItem | GapItem],
+    pattern: str | Query,
     keep_terms: bool = True,
     capture_attrs: tuple[str, ...] = (),
     within_sentence: bool = False,
     distinct: bool = True,
     selective_broadcast: bool = True,
     capture_sent: bool = False,
-    constraints: tuple[SlotConstraint, ...] = (),
 ) -> DataFrame:
-    """Compile a pattern to the DataFrame of its matches.
+    """Compile a query string or :class:`Query` to the DataFrame of its
+    matches; its inter-slot constraints and ``within <s/>`` clause
+    apply (a ``containing`` query yields sentence spans instead:
+    :func:`sentence_spans_containing`).
 
     Output: one row per distinct match assignment —
     ``(doc_id, start, end)`` plus, per labeled position L,
@@ -617,27 +715,24 @@ def compile_cql(
     the hint stands, because a literal content form's cf is bounded
     by vocabulary statistics, not corpus size.
     """
+    q = as_query(pattern)
+    if q.containing:
+        raise ValueError("a `<s/> containing` query yields sentence "
+                         "spans — use sentence_spans_containing")
+    within_sentence = within_sentence or q.within_sentence
     if capture_sent and not within_sentence:
         raise ValueError("capture_sent=True requires within_sentence="
                          "True (a cross-sentence match has no single "
                          "sent_no)")
-    if isinstance(pattern, str):
-        pattern, ws = strip_within_sentence(pattern)
-        pattern, parsed_cons = strip_constraints(pattern)
-        # BlackLab writes constraints LAST (`… within <s/> :: a.w =
-        # b.w`), wsdef puts them before a within — accept both orders
-        pattern, ws2 = strip_within_sentence(pattern)
-        within_sentence = within_sentence or ws or ws2
-        constraints = tuple(constraints) + parsed_cons
-    items = parse_cql(pattern) if isinstance(pattern, str) else pattern
-    if constraints:
+    if q.constraints:
         return _compile_with_constraints(
-            tokens, items, constraints, keep_terms=keep_terms,
+            tokens, q, keep_terms=keep_terms,
             capture_attrs=capture_attrs,
             within_sentence=within_sentence, distinct=distinct,
             selective_broadcast=selective_broadcast,
             capture_sent=capture_sent)
-    if has_repetitions(items):
+    items = q.items
+    if q.has_repetitions:
         # bounded token quantifiers: a linear DP chain (one join per
         # possible filler token, one union branch per optional count)
         # — plan size Σrep_max, where naive variant expansion is
@@ -657,7 +752,7 @@ def compile_cql(
         # stay suppressed); the cross-variant dedup runs once, only
         # when the caller asked for it.
         out = None
-        for v in expand_repetitions(items):
+        for v in q.variants:
             b = compile_cql(tokens, v, keep_terms=keep_terms,
                             capture_attrs=capture_attrs,
                             within_sentence=within_sentence,
@@ -666,7 +761,7 @@ def compile_cql(
                             capture_sent=capture_sent)
             out = b if out is None else out.unionByName(b)
         return out.distinct() if distinct else out
-    steps = _steps(items)
+    steps = q.steps
     cols = tokens.columns
     if within_sentence and "sent_no" not in cols:
         raise ValueError("within_sentence=True needs a sent_no column "
@@ -726,21 +821,9 @@ def compile_cql(
     return out.distinct() if distinct else out
 
 
-def check_constraint_labels(constraints, labels: list) -> None:
-    """Raise when a constraint names a position ``labels`` (the
-    pattern's slot labels) does not hold."""
-    for c in constraints:
-        for lab in (c.label_a, c.label_b):
-            if lab not in labels:
-                raise ValueError(
-                    f"constraint references position {lab!r} but the "
-                    f"pattern labels only {labels}")
-
-
 def _compile_with_constraints(
     tokens: DataFrame,
-    items: list[TokenItem | GapItem],
-    constraints: tuple[SlotConstraint, ...],
+    q: Query,
     keep_terms: bool,
     capture_attrs: tuple[str, ...],
     within_sentence: bool,
@@ -755,25 +838,22 @@ def _compile_with_constraints(
     join sides upgrades to an equi-join key — no post-join blowup),
     and helper capture columns the caller didn't ask for are dropped
     before the final distinct."""
-    labels = [it.label for it in items
-              if isinstance(it, TokenItem) and it.label is not None]
-    check_constraint_labels(constraints, labels)
     need = []
-    for c in constraints:
+    for c in q.constraints:
         for a in (c.attr_a, c.attr_b):
             if a not in capture_attrs and a not in need:
                 need.append(a)
     out = compile_cql(
-        tokens, items, keep_terms=keep_terms,
+        tokens, replace(q, constraints=()), keep_terms=keep_terms,
         capture_attrs=tuple(capture_attrs) + tuple(need),
         within_sentence=within_sentence, distinct=False,
         selective_broadcast=selective_broadcast,
         capture_sent=capture_sent)
-    for c in constraints:
+    for c in q.constraints:
         lhs = F.col(f"{c.attr_a}_{c.label_a}")
         rhs = F.col(f"{c.attr_b}_{c.label_b}")
         out = out.filter(lhs != rhs if c.negated else lhs == rhs)
-    drop = {f"{a}_{lab}" for a in need for lab in labels}
+    drop = {f"{a}_{lab}" for a in need for lab in q.labels}
     out = out.drop(*[col for col in out.columns if col in drop])
     return out.distinct() if distinct else out
 
@@ -965,7 +1045,7 @@ def _selective(item: TokenItem, selective_broadcast: bool) -> bool:
 
 
 def sentence_spans_containing(tokens: DataFrame,
-                              pattern: str | list[TokenItem | GapItem],
+                              pattern: str | Query,
                               negated: bool = False,
                               selective_broadcast: bool = True
                               ) -> DataFrame:
@@ -987,16 +1067,17 @@ def sentence_spans_containing(tokens: DataFrame,
     aggregate), so the operator is one extra exchange over the bare
     pattern — no corpus-scale driver state, web-scale safe either way
     (``!containing`` anti-joins the same key set).
+
+    A leading ``<s/> [!]containing`` clause in ``pattern`` is optional
+    and sets the mode (``!containing`` negates).
     """
-    if isinstance(pattern, str):
-        core, mode = strip_containing(pattern)
-        if mode is not None:
-            negated = negated or mode == "not_containing"
-            pattern = core
+    q = as_query(pattern)
+    negated = negated or q.containing == "not_containing"
     if "sent_no" not in tokens.columns:
         raise ValueError("containing needs a sent_no column "
                          "(sources.conllu.layer_tokens emits it)")
-    hit_sents = (compile_cql(tokens, pattern, keep_terms=False,
+    hit_sents = (compile_cql(tokens, replace(q, containing=None),
+                             keep_terms=False,
                              within_sentence=True, capture_sent=True,
                              distinct=False,
                              selective_broadcast=selective_broadcast)
@@ -1087,18 +1168,13 @@ def pattern_collocates(
     colloc_attr="lemma"`` over a CoNLL-U layer table (with
     ``term_stats`` keyed on the same layer); the defaults keep the
     surface-term behavior for plain corpora."""
-    items = parse_cql(pattern)
-    pos_n = 0
-    for it in items:
-        if isinstance(it, TokenItem):
-            pos_n += 1
-            if it.label == head_label:
-                break
-    else:
+    q = parse_query(pattern)
+    if head_label not in q.labels:
         raise ValueError(f"no {head_label}: label in pattern")
-    items = substitute_at_position(items, head, pos_n, attr=subst_attr)
     capture = (colloc_attr,) if colloc_attr else ()
-    matches = compile_cql(tokens, items, capture_attrs=capture)
+    matches = compile_cql(
+        tokens, q.substitute(head, q.labels[head_label], attr=subst_attr),
+        capture_attrs=capture)
     colloc_col = (f"{colloc_attr}_{colloc_label}" if colloc_attr
                   else f"term_{colloc_label}")
     pairs = matches.select(

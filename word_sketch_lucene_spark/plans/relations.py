@@ -24,7 +24,7 @@ same declarative shape, engine-appropriate predicates.
 from __future__ import annotations
 
 import json
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, fields
 from functools import lru_cache
 from pathlib import Path
 
@@ -32,6 +32,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.scoring import score_ranked_collocates
+from .cql import Query, compile_cql, parse_query
 
 DEFAULT_CATALOG = Path(__file__).resolve().parents[2] / "grammars" / "relations.json"
 # full port of the reference's 69-relation English catalog
@@ -137,6 +138,18 @@ class RelationConfig:
     head_position: int = 1     # 1-based pattern token index of the head
     colloc_position: int = 2   # ... and of the collocate
     extra: dict = field(default_factory=dict)
+    # the parsed pattern, parsed once here (None without a pattern)
+    query: Query | None = field(init=False, default=None, repr=False,
+                                compare=False)
+
+    def __post_init__(self):
+        if self.pattern:
+            self.query = parse_query(self.pattern)
+            if self.query.within_sentence or self.query.containing:
+                raise ValueError(
+                    f"relation {self.id}: a relation pattern takes no "
+                    "`within`/`containing` clause (the sketch call's "
+                    "within_sentence bounds every relation)")
 
     def head_filter(self) -> Column | None:
         if not self.head_class:
@@ -152,14 +165,7 @@ class RelationConfig:
     def trinary(self) -> bool:
         """True when the pattern labels a 3: slot: its value names a
         sub-relation, ``<id>/<value>`` (Sketch-Engine ``%(3.lemma)``)."""
-        from .cql import TokenItem, parse_cql, strip_constraints
-
-        try:
-            return any(isinstance(it, TokenItem) and it.label == "3"
-                       for it in parse_cql(
-                           strip_constraints(self.pattern or "")[0]))
-        except ValueError:
-            return False
+        return self.query is not None and "3" in self.query.labels
 
 
 class GrammarCatalog:
@@ -211,7 +217,8 @@ class GrammarCatalog:
                         f"relation {obj['id']}: bad gap range [{lo},{hi}] "
                         f"(must not span 0; negative = before the head)")
             seen.add(obj["id"])
-            known = {f for f in RelationConfig.__dataclass_fields__ if f != "extra"}
+            known = {f.name for f in fields(RelationConfig)
+                     if f.init and f.name != "extra"}
             rels.append(RelationConfig(
                 **{k: v for k, v in obj.items() if k in known},
                 extra={k: v for k, v in obj.items() if k not in known},
@@ -228,28 +235,25 @@ class GrammarCatalog:
         validation for dual; see ``verb_nouns``). DEP patterns must
         carry a ``deprel=`` test (the reference's ``deriveDeprel``),
         which also fills the relation's ``deprel`` field for routing.
+        The :class:`RelationConfig` built next holds this same cached
+        parse.
         """
-        from .cql import TokenItem, parse_cql, strip_constraints
-
         rid = obj["id"]
-        items = parse_cql(strip_constraints(obj["pattern"])[0])
-        token_items = [it for it in items if isinstance(it, TokenItem)]
-        labels = {it.label for it in token_items if it.label}
+        q = parse_query(obj["pattern"])
+        labels = q.labels
         if obj.get("dual"):
             if "1" not in labels and "2" not in labels:
                 raise ValueError(
                     f"relation {rid}: dual pattern needs a labeled position")
-        elif not {"1", "2"} <= labels:
+        elif not {"1", "2"} <= labels.keys():
             raise ValueError(f"relation {rid}: pattern needs 1: and 2: labels")
         # derive 1-based token positions of the labels (reference
         # deriveTokenPosition, defaults 1/2 when a label is absent)
         for label, fld, default in (("1", "head_position", 1),
                                     ("2", "colloc_position", 2)):
-            pos = next((n for n, it in enumerate(token_items, start=1)
-                        if it.label == label), default)
-            obj.setdefault(fld, pos)
+            obj.setdefault(fld, labels.get(label, default))
         if obj["type"] == "DEP" and not obj.get("deprel"):
-            dep = next((t.value for it in token_items for t in it.tests
+            dep = next((t.value for it in q.tokens for t in it.tests
                         if t.attr == "deprel" and not t.negated), None)
             if dep is None:
                 raise ValueError(
@@ -282,12 +286,9 @@ def pattern_pos_group(rel: RelationConfig, position: int | None = None) -> str:
     position) — mirror of the reference's
     ``RelationUtils.computeHeadPosGroup`` (xpos prefix → group), used to
     select which relations apply to a NOUN/VERB/ADJ-headed sketch."""
-    from .cql import TokenItem, parse_cql, strip_constraints
-
-    if not rel.pattern:
+    if rel.query is None:
         return rel.head_class or "OTHER"
-    items = [it for it in parse_cql(strip_constraints(rel.pattern)[0])
-             if isinstance(it, TokenItem)]
+    items = rel.query.tokens
     pos = rel.head_position if position is None else position
     if not 1 <= pos <= len(items):
         return "OTHER"
@@ -385,14 +386,6 @@ def _pattern_pairs(tokens: DataFrame, term_stats: DataFrame | None,
     gap/direction/test predicates become a CASE arm. Only the shapes
     the fold can't enumerate stay ``compile_cql`` join branches: N
     relations must not cost N broadcast-build stages."""
-    from .cql import (
-        TokenItem,
-        compile_cql,
-        parse_cql,
-        strip_constraints,
-        substitute_at_position,
-    )
-
     fast: list[tuple] = []
     extended: list[tuple] = []
     slow: list = []
@@ -427,26 +420,17 @@ def _pattern_pairs(tokens: DataFrame, term_stats: DataFrame | None,
             broadcast_head=not head_hot, extended=extended))
 
     def _build_branch(rel: RelationConfig) -> DataFrame:
-        core, cons = strip_constraints(rel.pattern)
-        items = parse_cql(core)
-        pos_n = 0
-        for it in items:
-            if isinstance(it, TokenItem):
-                pos_n += 1
-                if it.label == "1":
-                    break
-        else:
+        q = rel.query
+        if "1" not in q.labels:
             raise ValueError(f"no 1: label in pattern of {rel.id}")
-        subst = (items if head is None else
-                 substitute_at_position(items, head, pos_n,
-                                        attr=subst_attr))
+        subst = (q if head is None else
+                 q.substitute(head, q.labels["1"], attr=subst_attr))
         capture = tuple(dict.fromkeys(
             a for a in (subst_attr, colloc_attr) if a))
         matches = compile_cql(tokens, subst, capture_attrs=capture,
                               within_sentence=within_sentence,
                               distinct=False,
-                              selective_broadcast=not head_hot,
-                              constraints=cons)
+                              selective_broadcast=not head_hot)
         colloc_col = (f"{colloc_attr}_2" if colloc_attr else "term_2")
         # Sketch-Engine TRINARY gramrels: a 3: slot parameterizes the
         # relation NAME (`%(3.lemma)` — prepositional phrases become
@@ -483,30 +467,22 @@ def _two_slot_shape(rel: RelationConfig):
     from the first), or a ``dual`` one-constraint window relation.
     ``None`` → the relation keeps its own join branch (3+ slots,
     repetition quantifiers)."""
-    from .cql import (
-        TokenItem,
-        _steps,
-        has_repetitions,
-        parse_cql,
-        strip_constraints,
-    )
+    from .cql import TokenItem
 
-    core, cons = strip_constraints(rel.pattern)
-    items = parse_cql(core)
-    if has_repetitions(items) or cons:
+    q = rel.query
+    if q.has_repetitions or q.constraints:
         # quantifiers change the join arity, inter-slot constraints
         # need capture columns — compile_cql territory, not a single
         # CASE-arm window join (a cross-attr `|` slot folds: its CASE
         # arm ORs the alternation groups, as _side_pred builds it)
         return None
-    token_items = [it for it in items if isinstance(it, TokenItem)]
-    labels = {it.label for it in token_items if it.label}
-    if rel.dual and "2" not in labels:
+    token_items = q.tokens
+    if rel.dual and "2" not in q.labels:
         citem = token_items[rel.head_position - 1]
         return (TokenItem([]), citem, 1, rel.default_slop, True, True)
-    if len(token_items) != 2 or not {"1", "2"} <= labels:
+    if len(token_items) != 2 or not {"1", "2"} <= q.labels.keys():
         return None
-    steps = _steps(items)
+    steps = q.steps
     head_first = rel.head_position == 1
     return (token_items[rel.head_position - 1],
             token_items[rel.colloc_position - 1],
@@ -546,13 +522,9 @@ def _extended_fold_shape(rel: RelationConfig, max_arms: int = 24,
     back to the per-relation compile."""
     from itertools import product
 
-    from .cql import GapItem, TokenItem, parse_cql, strip_constraints
+    from .cql import GapItem, TokenItem
 
-    core, cons = strip_constraints(rel.pattern)
-    try:
-        items = parse_cql(core)
-    except ValueError:
-        return None
+    items, cons = rel.query.items, rel.query.constraints
     if (len(items) < 2 or not isinstance(items[0], TokenItem)
             or not isinstance(items[-1], TokenItem)):
         return None
@@ -839,9 +811,6 @@ def unary_counts(
     matched, relation-ordered. One compiled plan per relation unioned
     before a single count-distinct aggregate (the word-sketch fan-out
     shape without the scoring tail)."""
-    from .cql import compile_cql, parse_cql, strip_constraints
-    from .cql import substitute_at_position
-
     rels = [r for r in catalog.relations
             if r.pattern and r.extra.get("unary")]
     if not rels:
@@ -849,13 +818,11 @@ def unary_counts(
             [], "relation string, freq long")
     parts = []
     for rel in rels:
-        core, cons = strip_constraints(rel.pattern)
-        items = parse_cql(core)
-        subst = substitute_at_position(items, head, rel.head_position,
-                                       attr=subst_attr)
-        m = compile_cql(tokens, subst, keep_terms=False,
-                        within_sentence=within_sentence,
-                        distinct=False, constraints=cons)
+        m = compile_cql(tokens,
+                        rel.query.substitute(head, rel.head_position,
+                                             attr=subst_attr),
+                        keep_terms=False, within_sentence=within_sentence,
+                        distinct=False)
         parts.append(m.select(F.lit(rel.id).alias("relation"),
                               "doc_id", F.col("pos_1").alias("hp")))
     out = parts[0]

@@ -117,7 +117,7 @@ def parse_wsdef(text: str, skip_unary: bool = True) -> GrammarCatalog:
     union semantics: one entry per pattern line, sharing the relation
     id — the fan-out's count-distinct aggregate merges them.
     """
-    from .cql import TokenItem, parse_cql, strip_constraints
+    from .cql import parse_query
 
     default_attr = "tag"
     structlimit = False
@@ -133,10 +133,7 @@ def parse_wsdef(text: str, skip_unary: bool = True) -> GrammarCatalog:
     ids: list[str] = []
 
     def _positions(pattern: str) -> tuple[int, int | None]:
-        core, _ = strip_constraints(pattern)
-        toks = [it for it in parse_cql(core) if isinstance(it, TokenItem)]
-        labels = {it.label: n for n, it in enumerate(toks, start=1)
-                  if it.label}
+        labels = parse_query(pattern).labels
         if "1" not in labels:
             raise ValueError(f"wsdef pattern lacks a 1: head slot: "
                              f"{pattern!r}")

@@ -21,7 +21,7 @@ from __future__ import annotations
 import json
 from functools import reduce
 from pathlib import Path
-from typing import NamedTuple
+from typing import TYPE_CHECKING, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,6 +36,9 @@ from ..functions.tokenize import (
 from ..index.build import STATS_FILE, check_format
 from .cache import LRUCache
 from .wand import BlockCursor, block_max_wand, doc_lengths, exact_daat, idf_py
+
+if TYPE_CHECKING:
+    from ..plans.cql import Query
 
 
 def bounded_rows_df(spark: SparkSession, rows, schema: str,
@@ -758,7 +761,8 @@ class IndexSearcher:
 
         return keep
 
-    def pattern_hits(self, pattern: str, max_terms_per_slot: int = 256,
+    def pattern_hits(self, pattern: str | Query,
+                     max_terms_per_slot: int = 256,
                      within_sentence: bool = False
                      ) -> list[tuple[int, int, int]]:
         """Index-side mini-BCQL execution — the reference's main query
@@ -786,40 +790,27 @@ class IndexSearcher:
 
         Returns distinct ``[(doc_id, start, end)]`` sorted.
 
-        A trailing BlackLab ``within <s/>`` clause in the pattern
-        string sets ``within_sentence`` too; bounded token quantifiers
-        (``[xpos="JJ.*"]{1,2}``) execute as the union of their
-        concrete-length variants; trailing inter-slot constraints
+        ``pattern`` is a query string or a ``plans.cql.Query``. Its
+        ``within <s/>`` clause sets ``within_sentence`` too; bounded
+        token quantifiers (``[xpos="JJ.*"]{1,2}``) execute as the union
+        of their concrete-length variants; inter-slot constraints
         (``& 1.xpos = 2.xpos``) compare the labelled slots' forward
         values.
         """
         import numpy as np
 
-        from ..plans.cql import (
-            _steps,
-            expand_repetitions,
-            has_alts,
-            has_repetitions,
-            parse_cql,
-            strip_constraints,
-            strip_within_sentence,
-        )
-
-        pattern, ws = strip_within_sentence(pattern)
-        within_sentence = within_sentence or ws
-        pattern, cons = strip_constraints(pattern)
-        items = parse_cql(pattern)
-        if has_alts(items):
+        q = _span_query(pattern)
+        if q.has_alts:
             raise NotImplementedError(
                 "cross-attr `|` disjunctions union positions ACROSS "
                 "layers — not expressible over per-layer postings; use "
                 "pattern_spans_df (routes to the forward-store "
                 "distributed compile)")
         spans = []
-        for v in (expand_repetitions(items) if has_repetitions(items)
-                  else [items]):
-            doc, mat = self._chain_matches(_steps(v), max_terms_per_slot,
-                                           within_sentence, cons)
+        for v in q.variants:
+            doc, mat = self._chain_matches(
+                v.steps, max_terms_per_slot,
+                within_sentence or q.within_sentence, q.constraints)
             spans.append(np.column_stack([doc, mat[:, 0], mat[:, -1]]))
         spans = np.unique(np.concatenate(spans), axis=0)
         return list(zip(*(spans[:, i].tolist() for i in range(3))))
@@ -837,14 +828,12 @@ class IndexSearcher:
         chain keys rank into them (:mod:`.positions`), so any int64 doc
         id is safe. ``constraints`` (``plans.cql.SlotConstraint``)
         compare the forward values of two labelled slots per match."""
-        from ..plans.cql import check_constraint_labels
         from .positions import POS, chain, common_docs, same_sentence
 
         labels = {}
         for i, st in enumerate(steps):
             if st.item.label is not None:
                 labels.setdefault(st.item.label, i)
-        check_constraint_labels(constraints, list(labels))
         slots = self._slot_maps(steps, max_terms_per_slot)
         if all(s.allowed is None and all(neg for _, _, neg in s.filters)
                for s in slots):
@@ -898,39 +887,26 @@ class IndexSearcher:
                                           DEFAULT_LAYERS.get(attr, attr)),
                       keys >> 32, keys & POS, -1)
 
-    def pattern_matches(self, pattern: str | list,
+    def pattern_matches(self, pattern: str | Query,
                         max_terms_per_slot: int = 256,
-                        within_sentence: bool = False,
-                        constraints=()
+                        within_sentence: bool = False
                         ) -> list[tuple[int, tuple[int, ...]]]:
         """Distinct full match assignments ``[(doc_id, (pos per token
         constraint...))]`` — the labeled-capture twin of
         :meth:`pattern_hits` (what collocate extraction needs: the
-        position of EVERY slot, not just the span ends). Accepts a
-        pattern string (its trailing inter-slot constraints apply) or
-        pre-parsed items (for head-substituted patterns) with their
-        ``constraints``."""
-        from ..plans.cql import (
-            _steps,
-            has_repetitions,
-            parse_cql,
-            strip_constraints,
-            strip_within_sentence,
-        )
-
-        if isinstance(pattern, str):
-            pattern, ws = strip_within_sentence(pattern)
-            within_sentence = within_sentence or ws
-            pattern, cons = strip_constraints(pattern)
-            constraints = tuple(constraints) + cons
-        items = parse_cql(pattern) if isinstance(pattern, str) else pattern
-        if has_repetitions(items):
+        position of EVERY slot, not just the span ends). ``pattern`` is
+        a query string or a ``plans.cql.Query`` (a head-substituted
+        relation variant); its inter-slot constraints and ``within
+        <s/>`` clause apply."""
+        q = _span_query(pattern)
+        if q.has_repetitions:
             raise NotImplementedError(
                 "labeled-capture matching with repetition quantifiers "
                 "is ambiguous (variants have different slot counts) — "
                 "use pattern_hits for spans")
-        doc, mat = self._chain_matches(_steps(items), max_terms_per_slot,
-                                       within_sentence, constraints)
+        doc, mat = self._chain_matches(
+            q.steps, max_terms_per_slot,
+            within_sentence or q.within_sentence, q.constraints)
         return list(zip(doc.tolist(), map(tuple, mat.tolist())))
 
     def relation_matches(self, query, max_terms_per_slot: int = 256
@@ -1142,7 +1118,8 @@ class IndexSearcher:
         return (not t.negated
                 and DEFAULT_LAYERS.get(t.attr) in self.posted_layers)
 
-    def pattern_cost(self, pattern: str, max_terms_per_slot: int = 256
+    def pattern_cost(self, pattern: str | Query,
+                     max_terms_per_slot: int = 256
                      ) -> tuple[int, bool]:
         """(Σcf over every test's dictionary values, hit-the-cap flag)
         — the postings-volume estimate that decides whether the
@@ -1160,11 +1137,10 @@ class IndexSearcher:
         only the first ``max_terms_per_slot + 1`` values, so the cost is
         a lower bound — and a capped pattern routes distributed
         anyway."""
-        from ..plans.cql import _steps, parse_cql, strip_within_sentence
+        from ..plans.cql import as_query
 
-        pattern, _ws = strip_within_sentence(pattern)
         costs = self._test_costs(
-            [t for st in _steps(parse_cql(pattern)) for t in st.item.tests],
+            [t for st in as_query(pattern).steps for t in st.item.tests],
             max_terms_per_slot)
         return (sum(c for c, _ in costs),
                 any(capped for _, capped in costs))
@@ -1198,21 +1174,16 @@ class IndexSearcher:
     # memory hazard (~0.5 GB of packed rows) — fall back to shuffle
     broadcast_slot_max_cf = 64_000_000
 
-    def _selective_broadcast_safe(self, pattern: str) -> bool:
+    def _selective_broadcast_safe(self, q: Query) -> bool:
         """May compile_cql hint literal word/lemma slots broadcast for
         this pattern? Every positive literal surface/lemma test must be
         under the broadcast cf cap (cf lookups, cached — already filled
         by :meth:`pattern_cost` on this path): a stopword slot at web
         scale must shuffle, not broadcast."""
-        from ..plans.cql import (
-            DEFAULT_LAYERS,
-            _steps,
-            effective_test,
-            parse_cql,
-        )
+        from ..plans.cql import DEFAULT_LAYERS, effective_test
 
         keys = [(layer, t.value.replace("\\", ""))
-                for st in _steps(parse_cql(pattern))
+                for st in q.steps
                 for t in map(effective_test, st.item.tests)
                 if t.is_literal and not t.negated
                 and (layer := DEFAULT_LAYERS.get(t.attr))
@@ -1220,14 +1191,13 @@ class IndexSearcher:
         return all(cf <= self.broadcast_slot_max_cf
                    for cf in self._cfs(keys).values())
 
-    def _pattern_fallback_tokens(self, pattern: str,
-                                 within_sentence: bool):
-        """Column-pruned forward token table able to serve ``pattern``
-        distributed, or ``None`` when the store is absent or lacks a
-        tested layer (the pattern then stays on the capped index path,
+    def _pattern_fallback_tokens(self, q: Query, within_sentence: bool):
+        """Column-pruned forward token table able to serve the query
+        ``q`` distributed, or ``None`` when the store is absent or lacks
+        a tested layer (the pattern then stays on the capped index path,
         documented best-effort like the reference's max term
         expansion)."""
-        need = pattern_layers(pattern)
+        need = set(q.layers)
         if within_sentence:
             need.add("sent_no")
         tokens = self.forward_token_table(columns=need)
@@ -1252,7 +1222,7 @@ class IndexSearcher:
         consumers (semi-join side)."""
         return self._doc_meta().filter(F.expr(doc_filter)).select("doc_id")
 
-    def _span_route(self, pattern: str, max_terms_per_slot: int,
+    def _span_route(self, pattern: str | Query, max_terms_per_slot: int,
                     df_budget: int, within_sentence: bool):
         """The one router for index-side spans: a sorted in-driver span
         list from :meth:`pattern_hits`, or a ``(doc_id, start, end)``
@@ -1269,29 +1239,15 @@ class IndexSearcher:
           over ``df_budget`` (or when an expansion hit the term cap)
           the distributed compile, if the store carries every tested
           layer; else the in-driver span chain."""
-        from ..plans.cql import (
-            _steps,
-            compile_cql,
-            has_alts,
-            parse_cql,
-            strip_constraints,
-            strip_containing,
-            strip_within_sentence,
-        )
+        from ..plans.cql import as_query, compile_cql
 
-        core, mode = strip_containing(pattern)
-        if mode is not None:
-            return (self.sentence_spans_containing(
-                core, negated=mode == "not_containing")
-                .select("doc_id", "start", "end"))
-        pattern, ws = strip_within_sentence(pattern)
-        within_sentence = within_sentence or ws
-        core, cons = strip_constraints(pattern)
-        core, ws2 = strip_within_sentence(core)
-        within_sentence = within_sentence or ws2
-        if cons or has_alts(parse_cql(core)):
-            tokens = self._pattern_fallback_tokens(pattern,
-                                                   within_sentence)
+        q = as_query(pattern)
+        if q.containing:
+            return (self.sentence_spans_containing(q)
+                    .select("doc_id", "start", "end"))
+        within_sentence = within_sentence or q.within_sentence
+        if q.constraints or q.has_alts:
+            tokens = self._pattern_fallback_tokens(q, within_sentence)
             if tokens is None:
                 raise NotImplementedError(
                     "inter-slot constraints need the forward token "
@@ -1299,21 +1255,19 @@ class IndexSearcher:
                     "with store_docstore=True / build_conllu_index, or "
                     "use plans.cql.compile_cql over a token DataFrame")
         else:
-            core = pattern
-            cost, capped = self.pattern_cost(pattern, max_terms_per_slot)
-            if not any(self._drives(t) for st in _steps(parse_cql(core))
+            cost, capped = self.pattern_cost(q, max_terms_per_slot)
+            if not any(self._drives(t) for st in q.steps
                        for t in st.item.tests):
                 cost += int(self.stats["n_docs"] * self.stats["avgdl"])
-            tokens = (self._pattern_fallback_tokens(pattern,
-                                                    within_sentence)
+            tokens = (self._pattern_fallback_tokens(q, within_sentence)
                       if cost > df_budget or capped else None)
             if tokens is None:
-                return self.pattern_hits(pattern, max_terms_per_slot,
+                return self.pattern_hits(q, max_terms_per_slot,
                                          within_sentence=within_sentence)
         return (compile_cql(
-            tokens, pattern, keep_terms=False,
+            tokens, q, keep_terms=False,
             within_sentence=within_sentence,
-            selective_broadcast=self._selective_broadcast_safe(core))
+            selective_broadcast=self._selective_broadcast_safe(q))
             .select("doc_id", "start", "end"))
 
     def pattern_spans_df(self, pattern: str,
@@ -1426,7 +1380,7 @@ class IndexSearcher:
         tok = tokens.join(flag, "doc_id").select("in_a", "term")
         return keywords_from_flagged_tokens(tok, k, round_dp)
 
-    def sentence_spans_containing(self, pattern: str,
+    def sentence_spans_containing(self, pattern: str | Query,
                                   negated: bool = False) -> DataFrame:
         """Index-served ``<s/> [!]containing PATTERN``: sentence spans
         ``(doc_id, sent_no, start, end)`` holding (or, negated, NOT
@@ -1434,12 +1388,10 @@ class IndexSearcher:
         this index's forward-layer store. Always a DataFrame plan
         (``!containing`` enumerates the corpus's sentence complement,
         O(corpus) rows — never a driver list)."""
-        from ..plans.cql import sentence_spans_containing, strip_containing
+        from ..plans.cql import as_query, sentence_spans_containing
 
-        core, mode = strip_containing(pattern)
-        if mode is not None:
-            negated = negated or mode == "not_containing"
-        tokens = self._pattern_fallback_tokens(core, within_sentence=True)
+        q = as_query(pattern)
+        tokens = self._pattern_fallback_tokens(q, within_sentence=True)
         if tokens is None:
             raise NotImplementedError(
                 "containing needs the forward-layer store (build the "
@@ -1447,8 +1399,8 @@ class IndexSearcher:
                 "over a plain token table use "
                 "plans.cql.sentence_spans_containing")
         return sentence_spans_containing(
-            tokens, core, negated=negated,
-            selective_broadcast=self._selective_broadcast_safe(core))
+            tokens, q, negated=negated,
+            selective_broadcast=self._selective_broadcast_safe(q))
 
     def pattern_hits_auto(self, pattern: str,
                           max_terms_per_slot: int = 256,
@@ -1602,28 +1554,18 @@ class IndexSearcher:
         return out, {"decoded_blocks": decoded, "total_blocks": total}
 
 
-def pattern_layers(pattern: str) -> set[str]:
-    """The forward layers a CQL pattern tests or constrains (the
-    virtual ``class`` attr reads the surface ``term`` layer) — what a
-    column-pruned token table must carry to run it distributed
-    (``arrays_zip`` blocks Catalyst pruning, so the request must be
-    explicit)."""
-    from ..plans.cql import (
-        DEFAULT_LAYERS,
-        effective_test,
-        parse_cql,
-        strip_constraints,
-        strip_within_sentence,
-    )
+def _span_query(pattern: str | Query) -> Query:
+    """``pattern`` as a ``plans.cql.Query`` the in-driver chain can
+    run: a ``containing`` query yields sentence spans, not token
+    matches."""
+    from ..plans.cql import as_query
 
-    core, cons = strip_constraints(pattern)
-    attrs = {a for c in cons for a in (c.attr_a, c.attr_b)}
-    for it in parse_cql(strip_within_sentence(core)[0]):
-        groups = [getattr(it, "tests", ()), *(getattr(it, "alts", None)
-                                              or ())]
-        attrs |= {effective_test(t).attr for g in groups for t in g}
-    return {"term" if a == "class" else DEFAULT_LAYERS.get(a, a)
-            for a in attrs}
+    q = as_query(pattern)
+    if q.containing:
+        raise ValueError("a `<s/> containing` query yields sentence "
+                         "spans — use sentence_spans_containing or "
+                         "pattern_spans_df")
+    return q
 
 
 def _span_list(spans: DataFrame) -> list[tuple[int, int, int]]:

@@ -33,15 +33,7 @@ import re
 import numpy as np
 
 from ..functions.scoring import logdice_py
-from ..plans.cql import (
-    DEFAULT_LAYERS,
-    AttrTest,
-    TokenItem,
-    expand_repetitions,
-    parse_cql,
-    strip_constraints,
-    substitute_at_position,
-)
+from ..plans.cql import DEFAULT_LAYERS, AttrTest, Query, TokenItem
 from ..plans.relations import GrammarCatalog, RelationConfig
 from .positions import take
 
@@ -115,31 +107,25 @@ def relation_collocates(
     (``& 1.xpos = 2.xpos``) filter the matches. ``within_sentence``
     constrains matches (and dual slop windows) to one sentence.
     """
-    core, cons = strip_constraints(rel.pattern)
-    items = parse_cql(core)
-    labels = {it.label for it in items
-              if isinstance(it, TokenItem) and it.label}
+    q = rel.query
     layer = DEFAULT_LAYERS[colloc_attr]
-    if rel.dual and "2" not in labels:
-        doc, cp = _dual_window_pairs(searcher, head, items, rel,
+    if rel.dual and "2" not in q.labels:
+        doc, cp = _dual_window_pairs(searcher, head, q, rel,
                                      subst_attr, max_terms_per_slot,
                                      within_sentence=within_sentence)
         pairs = {rel.id: (doc, cp)}
     else:
-        subst = substitute_at_position(items, head, rel.head_position,
-                                       attr=subst_attr)
         found = []
-        for variant in expand_repetitions(subst):
-            slot = {it.label: i for i, it in enumerate(
-                it for it in variant if isinstance(it, TokenItem))}
+        for variant in q.substitute(head, rel.head_position,
+                                    attr=subst_attr).variants:
+            slot = variant.labels
             matches = searcher.pattern_matches(
-                variant, max_terms_per_slot, within_sentence=within_sentence,
-                constraints=cons)
+                variant, max_terms_per_slot, within_sentence=within_sentence)
             if matches:
                 doc, rows = zip(*matches)
                 rows = np.array(rows, dtype=np.int64)
                 found.append(np.column_stack(
-                    [doc] + [rows[:, slot[k]] for k in ("1", "2", "3")
+                    [doc] + [rows[:, slot[k] - 1] for k in ("1", "2", "3")
                              if k in slot]))
         if not found:
             return []
@@ -165,7 +151,7 @@ def relation_collocates(
                 min_logdice, limit, round_dp)]
 
 
-def _dual_window_pairs(searcher, head: str, items, rel: RelationConfig,
+def _dual_window_pairs(searcher, head: str, q: Query, rel: RelationConfig,
                        subst_attr: str, max_terms_per_slot: int,
                        within_sentence: bool = False):
     """Dual single-position relation: collocate constraint within
@@ -176,8 +162,7 @@ def _dual_window_pairs(searcher, head: str, items, rel: RelationConfig,
     distinct pairs."""
     from ..plans.cql import _Step
 
-    citem = [it for it in items
-             if isinstance(it, TokenItem)][rel.head_position - 1]
+    citem = q.tokens[rel.head_position - 1]
     slop = rel.default_slop
     hitem = TokenItem([AttrTest(subst_attr, re.escape(head))])
     doc, mat = searcher._chain_matches(
@@ -202,13 +187,11 @@ def catalog_tokens(searcher, rels, subst_attr: str, colloc_attr: str,
     """The forward token table a relation fan-out runs on, pruned to
     the layers its patterns test or constrain plus the substituted and
     captured layers (and ``sent_no`` when sentence-bounded)."""
-    from .engine import pattern_layers
-
     need = {"term", DEFAULT_LAYERS[subst_attr], DEFAULT_LAYERS[colloc_attr]}
     if within_sentence:
         need.add("sent_no")
     for rel in rels:
-        need |= pattern_layers(rel.pattern)
+        need |= rel.query.layers
     tokens = searcher.forward_token_table(columns=need)
     if tokens is None or DEFAULT_LAYERS[subst_attr] not in tokens.columns:
         raise NotImplementedError(
