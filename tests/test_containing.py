@@ -49,8 +49,27 @@ def test_strip_containing_forms():
     b = parse_query('<s/> containing 1:[xpos="JJ.*"] 2:[xpos="NN.*"] '
                     '& 1.deprel = 2.deprel within <s/>')
     assert a == b and a.containing == "containing" and a.constraints
-    assert parse_query('<s/> containing [word="a"]') is \
-        parse_query('<s/> containing [word="a"]')
+
+
+def test_join_oracles_refuse_containing():
+    """Every SQL join oracle refuses a ``containing`` clause rather than
+    dropping the span filter; its own oracle strips the clause before
+    building the match join."""
+    from word_sketch_lucene_spark.oracle_sql import (
+        _cql_join_variants,
+        _cql_joins,
+        sql_sentence_containing,
+    )
+
+    for pat in ('<s/> containing [word="a"]',
+                '<s/> !containing 1:[word="a"] 2:[word="b"]'):
+        for fn in (_cql_joins, _cql_join_variants):
+            with pytest.raises(ValueError, match="its own oracle"):
+                fn(pat)
+    assert "WHERE EXISTS" in sql_sentence_containing(
+        '<s/> containing [word="a"]')
+    assert "NOT EXISTS" in sql_sentence_containing(
+        '<s/> !containing [word="a"]')
 
 
 def test_capture_sent_requires_within(spark):

@@ -337,10 +337,8 @@ def test_strip_constraints_parse():
     # a constraint on an unlabeled position fails at parse time
     with pytest.raises(ValueError, match="position '9'"):
         parse_query('1:[word="a"] [word="b"] & 1.word = 9.word')
-    # bounded cache; a repeated string returns the identical Query
-    info = parse_query.cache_info()
-    assert info.maxsize is not None and 0 < info.maxsize < 10_000
-    assert parse_query('[word="a" & lemma="b"]') is q
+    # a parsed Query passes through unparsed
+    assert parse_query(q) is q
 
 
 def test_constraint_equality_dataframe(spark):

@@ -242,7 +242,8 @@ def test_undriven_pattern_routes_distributed(searcher):
     tokens = searcher.stats["n_docs"] * searcher.stats["avgdl"]
     assert 0 < budget < tokens
     for pattern, drives in ((undriven, False), (driven, True)):
-        out = searcher._span_route(pattern, 256, budget, False)
+        out = searcher._span_route(parse_query(pattern), 256, budget,
+                                   False)
         assert isinstance(out, list) == drives, pattern
         spans = (out if drives
                  else sorted(tuple(r) for r in out.collect()))

@@ -352,7 +352,7 @@ def test_pattern_relations_parse_once(monkeypatch, spark, conllu_index):
     assert first == [r for r in cat.relations
                      if r.pattern and r.type == "SURFACE"
                      and pattern_pos_group(r) == "NOUN"]
-    assert all(r.query is cql.parse_query(r.pattern)
+    assert all(r.query == cql.parse_query(r.pattern)
                for r in cat.relations if r.pattern)
 
 

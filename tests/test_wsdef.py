@@ -62,7 +62,7 @@ def test_parse_wsdef_sections():
     assert of.pattern.startswith('2:[tag="VB.*"]')
     # every emitted pattern parses in the engine dialect
     for r in cat.relations:
-        assert r.query is parse_query(r.pattern)
+        assert r.query == parse_query(r.pattern)
 
 
 def test_parse_wsdef_keep_unary():
@@ -70,6 +70,8 @@ def test_parse_wsdef_keep_unary():
     un = [r for r in cat.relations if r.extra.get("unary")]
     assert [r.id for r in un] == ["passive"]
     assert un[0].pattern == '[tag="VB.*"]{0,1} 1:[tag="VBN"]'
+    # a unary relation's collocate is its head
+    assert un[0].head_position == un[0].colloc_position == 2
 
 
 @pytest.mark.skipif(not os.path.exists(REF_GRAMMAR),
@@ -88,7 +90,7 @@ def test_full_reference_grammar_parses():
     assert cat.skipped_unary == ["passive", "reflexive", "it", "it",
                                  "it"]
     for r in cat.relations:
-        assert r.query is parse_query(r.pattern)
+        assert r.query == parse_query(r.pattern)
 
 
 # ------------------------------------------------- quantifier DP path

@@ -1281,7 +1281,7 @@ def _cql_item_sql(item, alias: str,
     return conds
 
 
-def _cql_joins(pattern: str, table: str = "tokens",
+def _cql_joins(pattern, table: str = "tokens",
                layers: dict[str, str] | None = None) -> tuple[list, str, str]:
     """Shared FROM/WHERE fragments for a parsed pattern: returns
     (steps, from_sql, where_sql) over aliases t0..tN of ``table``.
@@ -1298,7 +1298,7 @@ def _cql_joins(pattern: str, table: str = "tokens",
     return _cql_joins_items(q.items, q.constraints, table, layers)
 
 
-def _cql_join_variants(pattern: str, table: str = "tokens",
+def _cql_join_variants(pattern, table: str = "tokens",
                        layers: dict[str, str] | None = None
                        ) -> list[tuple[list, str, str]]:
     """Every concrete-length variant's ``(steps, from_sql, where_sql)``
@@ -1306,21 +1306,22 @@ def _cql_join_variants(pattern: str, table: str = "tokens",
     ``plans.cql.expand_repetitions``; callers UNION the per-variant
     selects (span identity dedups across variants)."""
     q = _oracle_query(pattern)
-    if q.containing:
-        raise ValueError("a `containing` query has its own oracle: "
-                         "sql_sentence_containing")
     return [_cql_joins_items(v.items, q.constraints, table, layers)
             for v in q.variants]
 
 
-def _oracle_query(pattern: str):
-    """The parsed pattern; these joins model no sentence bound, so a
-    ``within <s/>`` clause is refused rather than ignored."""
+def _oracle_query(pattern):
+    """The parsed pattern (a string or ``plans.cql.Query``); these
+    joins model no sentence bound and no span filter, so a ``within
+    <s/>`` or ``containing`` clause is refused rather than ignored."""
     from .plans.cql import parse_query
 
     q = parse_query(pattern)
     if q.within_sentence:
         raise ValueError("the SQL oracles take no `within <s/>` clause")
+    if q.containing:
+        raise ValueError("a `containing` query has its own oracle: "
+                         "sql_sentence_containing")
     return q
 
 
@@ -1535,11 +1536,13 @@ def sql_sentence_containing(pattern: str, negated: bool = False,
     ``IndexSearcher.sentence_spans_containing``): sentence extents
     [anti-]semi-joined with the distinct sentences holding a full
     within-sentence match — ``(doc_id, sent_no, start, end)``."""
+    from dataclasses import replace
+
     from .plans.cql import parse_query
 
     q = parse_query(pattern)
     negated = negated or q.containing == "not_containing"
-    steps, frm, where = _cql_joins(pattern, table="ann",
+    steps, frm, where = _cql_joins(replace(q, containing=None), table="ann",
                                    layers=CONLLU_SQL_LAYERS)
     sent_conds = " AND ".join(
         f"t{i}.pos // {sent_len} = t0.pos // {sent_len}"

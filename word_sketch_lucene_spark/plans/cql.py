@@ -24,8 +24,8 @@ band predicate. This is the same join shape as
 quadratically: per-doc fan-out is bounded by document length.
 
 Query grammar, parsed once by :func:`parse_query` into a
-:class:`Query` (memoised by string in a bounded LRU cache, so every
-layer that sees the same string shares one parse)::
+:class:`Query` that every layer then takes (a relation's pattern is
+parsed when its ``RelationConfig`` is built)::
 
     [<s/> [!]containing] PATTERN [within <s/>] [CONSTRAINTS]
 
@@ -44,7 +44,7 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field, replace
-from functools import cached_property, lru_cache
+from functools import cached_property
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -460,18 +460,12 @@ def _steps(items: list[TokenItem | GapItem]) -> list[_Step]:
     return steps
 
 
-# distinct query strings kept parsed: a catalog's relations plus a
-# serving working set of CQL queries
-_QUERY_CACHE = 1024
-
-
 @dataclass(frozen=True)
 class Query:
     """One parsed query (:func:`parse_query`): the token ``items``, the
     trailing inter-slot ``constraints``, the ``within <s/>`` flag and the
     ``containing`` span-filter mode (``None``, ``"containing"`` or
-    ``"not_containing"``), plus what every consumer derives from them.
-    Shared by every caller of one string: never mutate its items."""
+    ``"not_containing"``), plus what every consumer derives from them."""
 
     items: tuple[TokenItem | GapItem, ...]
     constraints: tuple[SlotConstraint, ...] = ()
@@ -557,20 +551,16 @@ class Query:
         return replace(self, items=tuple(items))
 
 
-def as_query(pattern: str | Query) -> Query:
-    """``pattern`` parsed (:func:`parse_query`), or itself when it is
-    already a :class:`Query`."""
-    return parse_query(pattern) if isinstance(pattern, str) else pattern
-
-
-@lru_cache(maxsize=_QUERY_CACHE)
-def parse_query(pattern: str) -> Query:
-    """Parse a query string once: the optional leading ``<s/>
+def parse_query(pattern: str | Query) -> Query:
+    """Parse a query string: the optional leading ``<s/>
     [!]containing``, then the trailing ``within <s/>`` and inter-slot
     constraints in either order, then the token sequence
-    (:func:`parse_cql`). Memoised by string; raises ``ValueError`` as
+    (:func:`parse_cql`). A :class:`Query` passes through, so an entry
+    point taking either parses at most once. Raises ``ValueError`` as
     :func:`parse_cql` does, or on a constraint naming an unlabeled
     position."""
+    if isinstance(pattern, Query):
+        return pattern
     core, containing = _strip_containing(pattern)
     core, ws = _strip_within_sentence(core)
     core, cons = _strip_constraints(core)
@@ -715,7 +705,7 @@ def compile_cql(
     the hint stands, because a literal content form's cf is bounded
     by vocabulary statistics, not corpus size.
     """
-    q = as_query(pattern)
+    q = parse_query(pattern)
     if q.containing:
         raise ValueError("a `<s/> containing` query yields sentence "
                          "spans — use sentence_spans_containing")
@@ -1071,7 +1061,7 @@ def sentence_spans_containing(tokens: DataFrame,
     A leading ``<s/> [!]containing`` clause in ``pattern`` is optional
     and sets the mode (``!containing`` negates).
     """
-    q = as_query(pattern)
+    q = parse_query(pattern)
     negated = negated or q.containing == "not_containing"
     if "sent_no" not in tokens.columns:
         raise ValueError("containing needs a sent_no column "

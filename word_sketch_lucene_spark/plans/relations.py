@@ -135,21 +135,60 @@ class RelationConfig:
     pattern: str | None = None  # BCQL pattern (labeled 1:/2:) — compiled
     description: str = ""      # via plans.cql instead of the window join
     default_slop: int = 10     # reference GrammarConfigLoader.java:204
-    head_position: int = 1     # 1-based pattern token index of the head
-    colloc_position: int = 2   # ... and of the collocate
+    # 1-based pattern token index of the head and of the collocate
+    # (None: the 1:/2: labels' positions, defaulting to 1/2)
+    head_position: int | None = None
+    colloc_position: int | None = None
     extra: dict = field(default_factory=dict)
     # the parsed pattern, parsed once here (None without a pattern)
     query: Query | None = field(init=False, default=None, repr=False,
                                 compare=False)
 
     def __post_init__(self):
+        """Parse and check a pattern relation, mirroring the reference's
+        ``GrammarConfigLoader.validatePositions`` (java:211-221): hard
+        error on an unparseable pattern; labeled 1:/2: positions
+        required — except ``dual`` relations, whose pattern is the
+        COLLOCATE constraint alone (the reference skips position
+        validation for dual; see ``verb_nouns``), and ``unary`` ones,
+        which label the head only. DEP patterns must carry a
+        ``deprel=`` test (the reference's ``deriveDeprel``), which also
+        fills ``deprel`` for routing."""
+        labels = {}
         if self.pattern:
-            self.query = parse_query(self.pattern)
-            if self.query.within_sentence or self.query.containing:
+            q = self.query = parse_query(self.pattern)
+            labels = q.labels
+            if q.within_sentence or q.containing:
                 raise ValueError(
                     f"relation {self.id}: a relation pattern takes no "
                     "`within`/`containing` clause (the sketch call's "
                     "within_sentence bounds every relation)")
+            if self.dual:
+                if "1" not in labels and "2" not in labels:
+                    raise ValueError(f"relation {self.id}: dual pattern "
+                                     "needs a labeled position")
+            elif self.extra.get("unary"):
+                if "1" not in labels:
+                    raise ValueError(f"relation {self.id}: unary pattern "
+                                     "needs a 1: label")
+            elif not {"1", "2"} <= labels.keys():
+                raise ValueError(
+                    f"relation {self.id}: pattern needs 1: and 2: labels")
+            if self.type == "DEP" and not self.deprel:
+                self.deprel = next(
+                    (t.value for it in q.tokens for t in it.tests
+                     if t.attr == "deprel" and not t.negated), None)
+        if self.type == "DEP" and not self.deprel:
+            raise ValueError(f"relation {self.id}: DEP "
+                             + ("pattern must constrain deprel"
+                                if self.pattern else "requires deprel"))
+        # reference deriveTokenPosition: the label's position, else 1/2
+        if self.head_position is None:
+            self.head_position = labels.get("1", 1)
+        if self.colloc_position is None:
+            # a unary relation's collocate is its head
+            self.colloc_position = labels.get(
+                "2", self.head_position if self.extra.get("unary") else 2)
 
     def head_filter(self) -> Column | None:
         if not self.head_class:
@@ -203,11 +242,7 @@ class GrammarCatalog:
                 raise ValueError(f"duplicate relation id: {obj['id']}")
             if obj["type"] not in ("SURFACE", "DEP"):
                 raise ValueError(f"relation {obj['id']}: bad type {obj['type']}")
-            if obj.get("pattern"):
-                cls._validate_pattern(obj)
-            else:
-                if obj["type"] == "DEP" and not obj.get("deprel"):
-                    raise ValueError(f"relation {obj['id']}: DEP requires deprel")
+            if not obj.get("pattern"):
                 lo = obj.get("min_gap", 1)
                 hi = obj.get("max_gap", 5)
                 # ordered gaps may be negative (collocate before head) but a
@@ -224,41 +259,6 @@ class GrammarCatalog:
                 extra={k: v for k, v in obj.items() if k not in known},
             ))
         return cls(rels)
-
-    @staticmethod
-    def _validate_pattern(obj: dict) -> None:
-        """Pattern-typed relation checks, mirroring the reference's
-        ``GrammarConfigLoader.validatePositions`` (java:211-221): hard
-        error on unparseable patterns at load time; labeled 1:/2:
-        positions required — except ``dual`` relations, whose pattern is
-        the COLLOCATE constraint alone (reference skips position
-        validation for dual; see ``verb_nouns``). DEP patterns must
-        carry a ``deprel=`` test (the reference's ``deriveDeprel``),
-        which also fills the relation's ``deprel`` field for routing.
-        The :class:`RelationConfig` built next holds this same cached
-        parse.
-        """
-        rid = obj["id"]
-        q = parse_query(obj["pattern"])
-        labels = q.labels
-        if obj.get("dual"):
-            if "1" not in labels and "2" not in labels:
-                raise ValueError(
-                    f"relation {rid}: dual pattern needs a labeled position")
-        elif not {"1", "2"} <= labels.keys():
-            raise ValueError(f"relation {rid}: pattern needs 1: and 2: labels")
-        # derive 1-based token positions of the labels (reference
-        # deriveTokenPosition, defaults 1/2 when a label is absent)
-        for label, fld, default in (("1", "head_position", 1),
-                                    ("2", "colloc_position", 2)):
-            obj.setdefault(fld, labels.get(label, default))
-        if obj["type"] == "DEP" and not obj.get("deprel"):
-            dep = next((t.value for it in q.tokens for t in it.tests
-                        if t.attr == "deprel" and not t.negated), None)
-            if dep is None:
-                raise ValueError(
-                    f"relation {rid}: DEP pattern must constrain deprel")
-            obj["deprel"] = dep
 
     def surface(self) -> list[RelationConfig]:
         return [r for r in self.relations if r.type == "SURFACE"]

@@ -117,8 +117,6 @@ def parse_wsdef(text: str, skip_unary: bool = True) -> GrammarCatalog:
     union semantics: one entry per pattern line, sharing the relation
     id — the fan-out's count-distinct aggregate merges them.
     """
-    from .cql import parse_query
-
     default_attr = "tag"
     structlimit = False
     rels: list[RelationConfig] = []
@@ -132,38 +130,25 @@ def parse_wsdef(text: str, skip_unary: bool = True) -> GrammarCatalog:
     names: list[str] = []
     ids: list[str] = []
 
-    def _positions(pattern: str) -> tuple[int, int | None]:
-        labels = parse_query(pattern).labels
-        if "1" not in labels:
-            raise ValueError(f"wsdef pattern lacks a 1: head slot: "
-                             f"{pattern!r}")
-        return labels["1"], labels.get("2")
-
     def _emit(line: str) -> None:
         rid = ids[0] if ids else _slug(names[0] if names else "relation")
         name = names[0] if names else rid
         pattern = _translate_line(line, default_attr)
-        hp, cp = _positions(pattern)
-        if cp is None and not unary:
-            raise ValueError(f"relation {rid}: pattern lacks a 2: "
-                             f"collocate slot: {pattern!r}")
         if unary:
+            # built (and so checked) even when skipped
+            rel = RelationConfig(id=rid, name=name, type="SURFACE",
+                                 pattern=pattern, extra={"unary": True})
             if skip_unary:
                 skipped_unary.append(rid)
-                return
-            rels.append(RelationConfig(
-                id=rid, name=name, type="SURFACE", pattern=pattern,
-                head_position=hp, colloc_position=hp,
-                extra={"unary": True}))
+            else:
+                rels.append(rel)
             return
         rels.append(RelationConfig(
             id=rid, name=name, type="SURFACE", pattern=pattern,
-            head_position=hp, colloc_position=cp,
             dual=False, extra={"wsdef": True}))
         if dual or symmetric:
             mirrored = _translate_line(line, default_attr,
                                        swap_labels=True)
-            hp2, cp2 = _positions(mirrored)
             if dual and len(ids) > 1:
                 rid2 = ids[1]
             elif dual and len(names) > 1 and not ids:
@@ -173,7 +158,6 @@ def parse_wsdef(text: str, skip_unary: bool = True) -> GrammarCatalog:
             name2 = (names[1] if len(names) > 1 else f"{name} (of)")
             rels.append(RelationConfig(
                 id=rid2, name=name2, type="SURFACE", pattern=mirrored,
-                head_position=hp2, colloc_position=cp2,
                 dual=False, extra={"wsdef": True, "mirror_of": rid}))
 
     for raw in text.splitlines():

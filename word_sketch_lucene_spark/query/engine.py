@@ -799,7 +799,13 @@ class IndexSearcher:
         """
         import numpy as np
 
-        q = _span_query(pattern)
+        from ..plans.cql import parse_query
+
+        q = parse_query(pattern)
+        if q.containing:
+            raise ValueError("a `<s/> containing` query yields sentence "
+                             "spans — use sentence_spans_containing or "
+                             "pattern_spans_df")
         if q.has_alts:
             raise NotImplementedError(
                 "cross-attr `|` disjunctions union positions ACROSS "
@@ -898,7 +904,13 @@ class IndexSearcher:
         a query string or a ``plans.cql.Query`` (a head-substituted
         relation variant); its inter-slot constraints and ``within
         <s/>`` clause apply."""
-        q = _span_query(pattern)
+        from ..plans.cql import parse_query
+
+        q = parse_query(pattern)
+        if q.containing:
+            raise ValueError("a `<s/> containing` query yields sentence "
+                             "spans — use sentence_spans_containing or "
+                             "pattern_spans_df")
         if q.has_repetitions:
             raise NotImplementedError(
                 "labeled-capture matching with repetition quantifiers "
@@ -1137,10 +1149,10 @@ class IndexSearcher:
         only the first ``max_terms_per_slot + 1`` values, so the cost is
         a lower bound — and a capped pattern routes distributed
         anyway."""
-        from ..plans.cql import as_query
+        from ..plans.cql import parse_query
 
         costs = self._test_costs(
-            [t for st in as_query(pattern).steps for t in st.item.tests],
+            [t for st in parse_query(pattern).steps for t in st.item.tests],
             max_terms_per_slot)
         return (sum(c for c, _ in costs),
                 any(capped for _, capped in costs))
@@ -1222,7 +1234,7 @@ class IndexSearcher:
         consumers (semi-join side)."""
         return self._doc_meta().filter(F.expr(doc_filter)).select("doc_id")
 
-    def _span_route(self, pattern: str | Query, max_terms_per_slot: int,
+    def _span_route(self, q: Query, max_terms_per_slot: int,
                     df_budget: int, within_sentence: bool):
         """The one router for index-side spans: a sorted in-driver span
         list from :meth:`pattern_hits`, or a ``(doc_id, start, end)``
@@ -1239,9 +1251,8 @@ class IndexSearcher:
           over ``df_budget`` (or when an expansion hit the term cap)
           the distributed compile, if the store carries every tested
           layer; else the in-driver span chain."""
-        from ..plans.cql import as_query, compile_cql
+        from ..plans.cql import compile_cql
 
-        q = as_query(pattern)
         if q.containing:
             return (self.sentence_spans_containing(q)
                     .select("doc_id", "start", "end"))
@@ -1289,8 +1300,10 @@ class IndexSearcher:
         the distributed route, masked driver-side on the bounded
         in-driver route (BlackLab's metadata-filtered CQL).
         """
-        out = self._span_route(pattern, max_terms_per_slot, df_budget,
-                               within_sentence)
+        from ..plans.cql import parse_query
+
+        out = self._span_route(parse_query(pattern), max_terms_per_slot,
+                               df_budget, within_sentence)
         if not isinstance(out, list):
             if doc_filter is not None:
                 out = out.join(self._meta_allowed_df(doc_filter),
@@ -1388,9 +1401,9 @@ class IndexSearcher:
         this index's forward-layer store. Always a DataFrame plan
         (``!containing`` enumerates the corpus's sentence complement,
         O(corpus) rows — never a driver list)."""
-        from ..plans.cql import as_query, sentence_spans_containing
+        from ..plans.cql import parse_query, sentence_spans_containing
 
-        q = as_query(pattern)
+        q = parse_query(pattern)
         tokens = self._pattern_fallback_tokens(q, within_sentence=True)
         if tokens is None:
             raise NotImplementedError(
@@ -1430,8 +1443,10 @@ class IndexSearcher:
         ``doc_filter`` restricts matches to documents passing a
         metadata predicate, on whichever route runs (the same router
         as :meth:`pattern_spans_df`)."""
-        out = self._span_route(pattern, max_terms_per_slot, df_budget,
-                               within_sentence)
+        from ..plans.cql import parse_query
+
+        out = self._span_route(parse_query(pattern), max_terms_per_slot,
+                               df_budget, within_sentence)
         if isinstance(out, list):
             return self._filter_spans(out, doc_filter)
         if doc_filter is not None:
@@ -1552,20 +1567,6 @@ class IndexSearcher:
             term_arrays.append((ti, docs, scores))
         out = topk_from_arrays(term_arrays, k)
         return out, {"decoded_blocks": decoded, "total_blocks": total}
-
-
-def _span_query(pattern: str | Query) -> Query:
-    """``pattern`` as a ``plans.cql.Query`` the in-driver chain can
-    run: a ``containing`` query yields sentence spans, not token
-    matches."""
-    from ..plans.cql import as_query
-
-    q = as_query(pattern)
-    if q.containing:
-        raise ValueError("a `<s/> containing` query yields sentence "
-                         "spans — use sentence_spans_containing or "
-                         "pattern_spans_df")
-    return q
 
 
 def _span_list(spans: DataFrame) -> list[tuple[int, int, int]]:
