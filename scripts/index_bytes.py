@@ -24,10 +24,17 @@ After the ``layers`` store's rows, one row per key prefix (``lemma:``,
 ``xpos:``, …) gives that layer's UNCOMPRESSED payload: the summed
 lengths of its blocks' ``docs_vb``/``tfs_vb``/``pos_vb`` blobs. These
 rows split the store by layer; they are not part of the totals.
+
+A CoNLL-U root's forward index closes the report: the ``lexicon``'s
+row count (distinct annotation tuples) and the bytes per token
+(``stats.json`` ``total_tokens``) of ``forward_layers``, of
+``lexicon`` and of the two together, so the ratio can be read from
+any root.
 """
 
 from __future__ import annotations
 
+import json
 import sys
 from collections import defaultdict
 from pathlib import Path
@@ -111,7 +118,27 @@ def main(argv: list[str]) -> int:
               f"{totals[k] / text_bytes:>14.4f}")
     for k in (FILES, "(files)"):
         print(f"{'TOTAL':<16} {k:<24} {totals[k]:>11}")
+    if (root / "lexicon").is_dir():
+        forward_report(root)
     return 0
+
+
+def forward_report(root: Path) -> None:
+    """The lexicon's row count and the forward index's bytes per
+    token."""
+    rows = sum(pq.ParquetFile(f).metadata.num_rows
+               for f in store_files(root / "lexicon")
+               if f.suffix == ".parquet")
+    tokens = json.loads((root / "stats.json").read_text())["total_tokens"]
+    print(f"{'lexicon':<16} {'(rows)':<24} {rows:>11}")
+    both = 0
+    for store in ("forward_layers", "lexicon"):
+        n = sum(store_bytes(root / store).values()) - \
+            store_bytes(root / store).get(FILES, 0)
+        both += n
+        print(f"{store:<16} {'(bytes per token)':<24} {n / tokens:>11.3f}")
+    print(f"{'forward+lexicon':<16} {'(bytes per token)':<24} "
+          f"{both / tokens:>11.3f}")
 
 
 if __name__ == "__main__":

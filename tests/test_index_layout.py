@@ -122,7 +122,7 @@ def test_conllu_layout_and_derived_layers(spark, conllu_root):
     what the previous layout stored."""
     root, parsed = conllu_root
     assert not (root / "docstore").exists()
-    stored = set(spark.read.parquet(str(root / "forward_layers")).columns)
+    stored = set(spark.read.parquet(str(root / "lexicon")).columns)
     assert not stored & {"term", "lemma"}
     assert {"word_cs", "lemma_cs"} <= stored
     s = IndexSearcher(spark, root)
@@ -149,13 +149,16 @@ def test_forward_read_rows_equal_spark_read(spark, index_small,
                                            conllu_index):
     """The driver's forward read returns what the Spark read of
     ``forward_arrays`` returns, on a candidate set past the 64 ids a
-    Spark filter inlines: stored layers, the case-folded ones and a
-    pages root's tokens alike, and ``[]`` for a doc with no row."""
+    Spark filter inlines: every layer decoded from the lexicon, the
+    case-folded ones, the structural arrays and a pages root's tokens
+    alike, and ``[]`` for a doc with no row."""
     from pyspark.sql import functions as F
 
     for root, layers in ((index_small, ("term",)),
-                         (conllu_index[0], ("term", "lemma", "upos",
-                                            "xpos", "sent_no", "head"))):
+                         (conllu_index[0], ("term", "lemma", "word_cs",
+                                            "lemma_cs", "upos", "xpos",
+                                            "deprel", "feats", "sent_no",
+                                            "token_id", "head"))):
         s = IndexSearcher(spark, root)
         ids = sorted(r["doc_id"] for r in spark.read.parquet(
             str(root / "doc_lens")).collect())[::3]
@@ -166,7 +169,7 @@ def test_forward_read_rows_equal_spark_read(spark, index_small,
             want.update((r["doc_id"], list(r[layer])) for r in
                         s.forward_arrays({layer})
                         .filter(F.col("doc_id").isin(ids)).collect())
-            assert s._read_forward(ids, layer) == want, (root, layer)
+            assert s.forward_layer(ids, layer) == want, (root, layer)
 
 
 def test_cold_closed_class_pattern_reads_forward_without_jobs(
@@ -315,6 +318,22 @@ def test_format_4_root_rejected(spark, index_small, tmp_path):
         merge_indexes(spark, [index_small, old], tmp_path / "merged")
 
 
+def test_format_5_root_rejected(spark, index_small, tmp_path):
+    """A format-5 root (one string array per annotation layer in the
+    CoNLL-U forward store, no lexicon) is refused by the searcher and
+    by merge with a rebuild message: its forward store holds no type
+    ids to decode."""
+    old = tmp_path / "v5"
+    old.mkdir()
+    stats = json.loads((index_small / STATS_FILE).read_text())
+    stats["format"] = 5
+    (old / STATS_FILE).write_text(json.dumps(stats))
+    with pytest.raises(ValueError, match="format 5.*rebuild"):
+        IndexSearcher(spark, old)
+    with pytest.raises(ValueError, match="format 5.*rebuild"):
+        merge_indexes(spark, [index_small, old], tmp_path / "merged")
+
+
 def test_closed_class_layers_have_dictionary_rows_but_no_postings(
         spark, conllu_root):
     """A CoNLL-U root posts only the open-class layers; its
@@ -392,8 +411,8 @@ def test_posting_layouts_and_payload_statistics(spark, index_small,
     # forward layers: every array's leaf column drops its statistics
     st = _stats_set(root / "forward_layers")
     arrays = {c for c in st if c.endswith(".list.element")}
-    assert {"upos.list.element", "word_cs.list.element",
-            "sent_no.list.element", "head.list.element"} <= arrays
+    assert {"type_id.list.element", "sent_no.list.element",
+            "token_id.list.element", "head.list.element"} == arrays
     for c in arrays:
         assert st[c] == {False}, c
     assert st["doc_id"] == {True}
@@ -504,7 +523,7 @@ def test_conllu_rerun_is_a_no_op(spark, conllu_root):
     root, parsed = conllu_root
     before = _files(root)
     stamps = {s: _manifest(root, s)["committed_at"]
-              for s in ("doc_names", "forward_layers", "tokens")}
+              for s in ("doc_names", "lexicon", "forward_layers", "tokens")}
     build_conllu_index(spark, parsed, root, doc_salt=1, n_partitions=2)
     assert _files(root) == before
     assert {s: _manifest(root, s)["committed_at"] for s in stamps} == stamps

@@ -40,6 +40,15 @@ segments). Stage map:
    derive the token array with the build's own ``tokens_expr``
    (``IndexSearcher.forward_arrays``), so each datum is stored once.
 
+A CoNLL-U root (:func:`build_conllu_index`) has no docstore. Its
+forward index is two stores, as BlackLab keeps integer term ids over a
+terms file: ``lexicon`` holds one row per distinct tuple of a token's
+string annotations (:data:`LEXICON_COLUMNS`) with a dense int
+``type_id``, and ``forward_layers`` holds per doc, in position order,
+one ``type_id`` array plus the structural ``sent_no``/``token_id``/
+``head`` arrays. A token's annotations are one lexical analysis, so the
+joint column costs their joint entropy, not the sum of six columns.
+
 Every stage commits a :class:`~.manifest.StageManifest`; re-running
 ``build_index`` with identical inputs+config skips completed stages
 (resumable builds, north rule) and reads the tokens stage only when a
@@ -57,6 +66,7 @@ from __future__ import annotations
 import json
 import os
 from concurrent.futures import ThreadPoolExecutor
+from functools import reduce
 from pathlib import Path
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -82,8 +92,10 @@ STATS_FILE = "stats.json"
 # closed-class layers a root's forward store carries have no postings
 # (``layers`` holds the posted layers only; ``layer_stats`` all). 5:
 # doc lengths stored once, in ``doc_lens`` (Lucene norms) — term
-# segments repeat no doc length per posting
-INDEX_FORMAT = 5
+# segments repeat no doc length per posting. 6: one type id per token —
+# the CoNLL-U forward store holds ``type_id`` arrays over a per-root
+# ``lexicon`` of annotation tuples instead of one string array per layer
+INDEX_FORMAT = 6
 
 # opaque payload: never filtered on, so no min/max in the footers
 PAYLOAD_COLUMNS = ("docs_vb", "tfs_vb", "pos_vb", "text")
@@ -171,6 +183,7 @@ class IndexPaths:
         self.docstore = self.root / "docstore"
         self.doc_meta = self.root / "doc_meta"
         self.forward_layers = self.root / "forward_layers"
+        self.lexicon = self.root / "lexicon"
         self.doc_names = self.root / "doc_names"
         self.stats = self.root / STATS_FILE
 
@@ -185,6 +198,37 @@ DEFAULT_EXTRA_LAYERS = ("lemma", "upos", "xpos", "deprel", "feats")
 # covers a large share of the corpus, so a root whose forward store
 # carries the layer checks its tests against that store instead
 CLOSED_CLASS_LAYERS = ("upos", "xpos", "deprel", "feats")
+
+# a CoNLL-U token's string annotations: one ``lexicon`` row per distinct
+# tuple ("feats" only when the input carries it), and the token's
+# ``type_id`` in its doc's ``forward_layers`` array
+LEXICON_COLUMNS = ("upos", "xpos", "deprel", "feats", "word_cs", "lemma_cs")
+# per-token ints the forward store keeps beside the type ids
+STRUCTURAL_COLUMNS = ("sent_no", "token_id", "head")
+
+
+def with_type_ids(tokens: DataFrame, lexicon: DataFrame, cols,
+                  how: str = "inner") -> DataFrame:
+    """``tokens`` plus the ``type_id`` of their ``cols`` tuple in
+    ``lexicon`` (``how="left_anti"``: the tokens whose tuple it lacks),
+    by a null-safe equi-join: under a plain ``==`` a token carrying a
+    null annotation matches no lexicon row."""
+    lex = lexicon.select("type_id",
+                         *[F.col(c).alias(f"_lex_{c}") for c in cols])
+    on = reduce(lambda a, b: a & b,
+                [F.col(c).eqNullSafe(F.col(f"_lex_{c}")) for c in cols])
+    return tokens.join(lex, on, how).drop(*[f"_lex_{c}" for c in cols])
+
+
+def sorted_arrays(*cols: str) -> list:
+    """Per-group aggregates: each of ``cols`` collected into one array
+    in ``pos`` order (the forward store's per-doc arrays)."""
+    z = F.array_sort(F.collect_list(F.struct("pos", *cols)))
+
+    def field(c):
+        return lambda s: s[c]
+
+    return [F.transform(z, field(c)).alias(c) for c in cols]
 
 
 def _token_bytes(paths: IndexPaths) -> int | None:
@@ -321,9 +365,10 @@ def build_conllu_index(
     index's ids, see ``merge.add_conllu_documents``); the name↔id
     mapping is written to ``<root>/doc_names``.
 
-    ``store_docstore``: keep the ``forward_layers`` store — the
-    root's only doc store (no separate ``docstore`` is written; doc
-    tokens read back through ``IndexSearcher.forward_arrays``).
+    ``store_docstore``: keep the forward index (``lexicon`` +
+    ``forward_layers``) — the root's only doc store (no separate
+    ``docstore`` is written; doc tokens read back through
+    ``IndexSearcher.forward_arrays``).
 
     ``colloc_catalog``: a ``GrammarCatalog`` — when given, the build
     additionally materializes the collocation store for it
@@ -335,8 +380,8 @@ def build_conllu_index(
 
     paths = IndexPaths(out_dir)
     paths.root.mkdir(parents=True, exist_ok=True)
-    # doc_names and forward_layers are stages too: keyed like the
-    # others, so a re-run of a complete build rewrites nothing
+    # doc_names, lexicon and forward_layers are stages too: keyed like
+    # the others, so a re-run of a complete build rewrites nothing
     config = {"id_offset": id_offset, "format": INDEX_FORMAT}
     cfg_fp = config_fingerprint(config)
     inputs_fp = input_fingerprint(input_paths) if input_paths else "unspecified"
@@ -372,44 +417,20 @@ def build_conllu_index(
             doc_salt=doc_salt, n_partitions=n_partitions,
             block_size=block_size, input_paths=input_paths)
         if store_docstore:
-            # FORWARD layer index (doc → per-layer value arrays in
-            # position order): what index-side collocate extraction
-            # reads to recover "the lemma AT the matched position" —
-            # the Lucene forward-index analog the reference groups
-            # sketch hits with (BlackLabQueryExecutor FORWARD_INDEX).
-            # Written before the layer postings: the closed-class layers it
-            # carries get none (build_layer_postings reads its manifest)
-            def _arr(c):
-                def pick(s):
-                    return s[c]
-
-                return F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", c))),
-                    pick).alias(c)
-
-            # sent_no/token_id/head are STRUCTURAL forward columns:
-            # sentence-bounded span matching (reference <s> spans,
-            # conllu-sentences.blf.yaml:16) and dependency-relation
-            # queries ("X" -deprel-> _) read them per candidate doc.
-            # term/lemma are not stored: the reader lowers word_cs/
-            # lemma_cs (FOLDED_LAYERS), and this store is also the
-            # index's only docstore
-            fw_cols = [c for c in ("upos", "xpos", "deprel", "feats",
-                                   "word_cs", "lemma_cs", "sent_no",
-                                   "token_id", "head")
+            # FORWARD index (doc → per-position values): what index-side
+            # collocate extraction reads to recover "the lemma AT the
+            # matched position" — the Lucene forward-index analog the
+            # reference groups sketch hits with (BlackLabQueryExecutor
+            # FORWARD_INDEX). Written before the layer postings: the
+            # closed-class layers it carries get none (build_layer_postings
+            # reads its manifest's config.columns). term/lemma are not
+            # stored: the reader lowers word_cs/lemma_cs (FOLDED_LAYERS),
+            # and this store is also the index's only docstore
+            fw_cols = [c for c in (*LEXICON_COLUMNS, *STRUCTURAL_COLUMNS)
                        if c in lt.columns]
-            fw_config = {**config, "columns": fw_cols}
-            fw_fp = config_fingerprint(fw_config)
-            st_fw = StageManifest(paths.forward_layers, "forward_layers")
-            if not st_fw.is_complete(inputs_fp, fw_fp):
-                write_store(
-                    lt.groupBy("doc_id").agg(*[_arr(c) for c in fw_cols])
-                    .coalesce(_adaptive_parts(
-                        spark, n_partitions, _token_bytes(paths),
-                        scale=len(fw_cols) / 4)), paths.forward_layers)
-                st_fw.commit(inputs_fp, fw_fp,
-                             lineage={"inputs": input_paths or [],
-                                      "config": fw_config})
+            _write_forward(spark, lt, paths, fw_cols, n_partitions,
+                           inputs_fp, {**config, "columns": fw_cols},
+                           input_paths)
         build_layer_postings(
             spark, lt, out_dir, layers=layers, doc_salt=doc_salt,
             n_partitions=n_partitions, block_size=block_size,
@@ -424,6 +445,46 @@ def build_conllu_index(
                                 colloc_catalog,
                                 n_partitions=n_partitions)
     return stats
+
+
+def _write_forward(spark: SparkSession, lt: DataFrame, paths: IndexPaths,
+                   fw_cols: list[str], n_partitions: int | None,
+                   inputs_fp: str, config: dict,
+                   input_paths: list[str] | None) -> None:
+    """The ``lexicon`` and ``forward_layers`` stages of a CoNLL-U root.
+    The lexicon's dense ids come from the distributed two-phase
+    assignment (``sources.pages.assign_doc_ids``, never a global
+    window), ordered by tuple within each partition. The forward store
+    is the layer table joined to the written lexicon, then one
+    ``groupBy(doc_id)`` collecting ``type_id`` and the structural
+    columns (sent_no/token_id/head: sentence-bounded span matching and
+    dependency-relation queries read them per candidate doc). A
+    rewritten lexicon rewrites the forward store: its ids may differ."""
+    from ..sources.pages import assign_doc_ids
+
+    lex_cols = [c for c in fw_cols if c in LEXICON_COLUMNS]
+    fp = config_fingerprint(config)
+    lineage = {"inputs": input_paths or [], "config": config}
+    # sized as the forward store was when it held one array per column
+    parts = _adaptive_parts(spark, n_partitions, _token_bytes(paths),
+                            scale=len(fw_cols) / 4)
+    st_lex = StageManifest(paths.lexicon, "lexicon")
+    st_fw = StageManifest(paths.forward_layers, "forward_layers")
+    fresh = not st_lex.is_complete(inputs_fp, fp)
+    if fresh:
+        types = assign_doc_ids(lt.select(*lex_cols).distinct(), "type_id",
+                               order_col=F.struct(*lex_cols))
+        write_store(types.select(F.col("type_id").cast("int"), *lex_cols)
+                    .coalesce(parts), paths.lexicon)
+        st_lex.commit(inputs_fp, fp, lineage=lineage)
+    if fresh or not st_fw.is_complete(inputs_fp, fp):
+        stored = ["type_id", *(c for c in fw_cols
+                               if c in STRUCTURAL_COLUMNS)]
+        typed = with_type_ids(lt, spark.read.parquet(str(paths.lexicon)),
+                              lex_cols)
+        write_store(typed.groupBy("doc_id").agg(*sorted_arrays(*stored))
+                    .coalesce(parts), paths.forward_layers)
+        st_fw.commit(inputs_fp, fp, lineage=lineage)
 
 
 def postings_dictionary(postings: DataFrame) -> DataFrame:
@@ -590,8 +651,10 @@ def build_index(
             return
         postings_dictionary(spark.read.parquet(str(paths.segments))).write \
             .mode("overwrite").parquet(str(paths.term_stats))
+        # root-relative, so the manifest's bytes are the same wherever
+        # the root lives
         st_ts.commit(inputs_fp, cfg_fp,
-                     lineage={"derived_from": str(paths.segments)})
+                     lineage={"derived_from": paths.segments.name})
 
     # ---- stage: docstore (stored text) --------------------------------
     def _stage_docstore() -> None:

@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import json
 from collections.abc import Iterator
+from functools import reduce
 from pathlib import Path
 
 import numpy as np
@@ -45,7 +46,9 @@ from .build import (
     check_format,
     posted_layers,
     postings_dictionary,
+    sorted_arrays,
     store_bytes,
+    with_type_ids,
     write_store,
 )
 from .manifest import StageManifest, config_fingerprint, input_fingerprint
@@ -176,8 +179,9 @@ def merge_indexes(
 
     # per-doc stores fold by disjoint union (doc ids must not collide
     # across inputs — the add_documents contract)
-    for aux in ("docstore", "forward_layers", "doc_names", "doc_meta"):
+    for aux in ("docstore", "doc_names", "doc_meta"):
         _fold_per_doc(spark, in_roots, aux, paths.root, n_partitions)
+    _fold_forward(spark, in_roots, paths, n_partitions)
 
     n_blocks = seg.count()
     st.commit(inputs_fp, cfg_fp,
@@ -209,6 +213,55 @@ def _fold_per_doc(spark: SparkSession, in_roots: list[str], store: str,
         write_store(u.coalesce(_adaptive_parts(
             spark, n_partitions, sum(map(store_bytes, dirs)))),
             out_root / store)
+
+
+def _fold_forward(spark: SparkSession, in_roots: list[str],
+                  paths: IndexPaths, n_partitions: int | None) -> None:
+    """Fold the CoNLL-U forward index (``lexicon`` + ``forward_layers``)
+    of the inputs that have one. The merged lexicon keeps the first
+    input's ids and appends, with the next dense ids, the tuples it
+    lacks; so only the other inputs' ``type_id`` arrays are remapped
+    (posexplode, join to their new ids, regroup per doc), and the first
+    input's rows are copied as they are."""
+    from ..sources.pages import assign_doc_ids
+
+    roots = [Path(r) for r in in_roots if (Path(r) / "lexicon").exists()]
+    if not roots:
+        return
+    lexes = [spark.read.parquet(str(r / "lexicon")) for r in roots]
+    cols = [c for c in lexes[0].columns if c != "type_id"]
+    if any(set(lx.columns) != set(lexes[0].columns) for lx in lexes):
+        raise ValueError(
+            f"merge_indexes: inputs' lexicons carry different columns: "
+            f"{sorted({tuple(sorted(lx.columns)) for lx in lexes})} "
+            f"(rebuild them from inputs with the same annotations)")
+    base = lexes[0]
+    dirs = [str(r / s) for r in roots for s in ("lexicon", "forward_layers")]
+    parts = _adaptive_parts(spark, n_partitions, sum(map(store_bytes, dirs)))
+    if len(roots) > 1:
+        unseen = with_type_ids(
+            reduce(DataFrame.unionByName,
+                   [lx.select(*cols) for lx in lexes[1:]]).distinct(),
+            base, cols, how="left_anti")
+        n_base = base.count()
+        new = assign_doc_ids(unseen, "type_id", order_col=F.struct(*cols))
+        base = base.unionByName(new.select(
+            (F.col("type_id") + n_base).cast("int").alias("type_id"), *cols))
+    write_store(base.coalesce(parts), paths.lexicon)
+    merged = spark.read.parquet(str(paths.lexicon))
+    fws = [spark.read.parquet(str(roots[0] / "forward_layers"))]
+    for r, lx in zip(roots[1:], lexes[1:]):
+        fw = spark.read.parquet(str(r / "forward_layers"))
+        remap = with_type_ids(
+            lx.withColumnRenamed("type_id", "old_id"), merged, cols)
+        ids = (fw.select("doc_id", F.posexplode("type_id")
+                         .alias("pos", "old_id"))
+               .join(remap.select("old_id", "type_id"), "old_id")
+               .groupBy("doc_id").agg(*sorted_arrays("type_id")))
+        fws.append(fw.drop("type_id").join(ids, "doc_id")
+                   .select(*fws[0].columns))
+    write_store(reduce(DataFrame.unionByName, fws).coalesce(parts),
+                paths.forward_layers)
 
 
 def add_documents(

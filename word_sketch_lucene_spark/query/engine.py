@@ -140,6 +140,16 @@ def bm25_topk_df(
     return agg.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
+def _posexplode(arrays: DataFrame, cols: list[str]) -> DataFrame:
+    """``(doc_id, pos, *cols)``: one row per position of the per-doc
+    ``cols`` arrays of ``arrays`` (``arrays_zip``: a shorter array
+    reads null past its end)."""
+    return arrays.select(
+        "doc_id", F.posexplode(F.arrays_zip(*cols)).alias("pos", "z"),
+    ).select("doc_id", F.col("pos").cast("long").alias("pos"),
+             *[F.col(f"z.{c}").alias(c) for c in cols])
+
+
 class Slot(NamedTuple):
     """One constraint slot of the in-driver chain
     (:meth:`IndexSearcher._slot_maps`)."""
@@ -183,8 +193,8 @@ class IndexSearcher:
     window, set or forward-gather step is one numpy pass over all
     candidate docs at once. A test on a layer without postings (the
     closed-class tags of a CoNLL-U root, :attr:`posted_layers`) is a
-    filter: one gather of the layer's cached forward code arrays at the
-    positions the chain proposes.
+    filter: the test runs once per lexicon entry, then one gather of the
+    cached ``type_id`` arrays at the positions the chain proposes.
 
     The term dictionary has one read path, :meth:`_dictionary`
     (``(layer, value, df, cf)`` over ``term_stats`` and
@@ -209,9 +219,6 @@ class IndexSearcher:
         self._datasets: dict[str, DataFrame | None] = {}
         self._cache = LRUCache()
         self._block_cache = self._cache.view("blocks")
-        # forward value → code of every cached code array, one book for
-        # all layers (outside the LRU: evicting it would orphan them)
-        self._codebook: dict = {}
 
     def _dataset(self, name: str, required: bool = True
                  ) -> DataFrame | None:
@@ -416,145 +423,220 @@ class IndexSearcher:
 
     def forward_layer(self, doc_ids: list[int], layer: str
                       ) -> dict[int, list]:
-        """doc_id → value array (position order) for one annotation
-        layer — the forward-index read that recovers "the lemma AT the
-        matched position" for collocate grouping. One pruned scan per
-        MISS set, cached per (layer, doc): a 41-relation sketch fan-out
-        touches mostly the same candidate docs per relation, and one
-        scan per relation would dominate serving latency."""
-        return self._cache.get_many(
-            ("forward", layer), doc_ids,
-            lambda missing: self._read_forward(missing, layer))
+        """doc_id → value list (position order, ``[]`` for a doc without
+        one) for one forward layer — the forward-index read that
+        recovers "the lemma AT the matched position". Decoded from the
+        cached flat arrays of :meth:`_forward`, so each doc is read once
+        per stored column, whichever layers and doc sets ask for it."""
+        import numpy as np
 
-    def _read_forward(self, doc_ids: list[int], layer: str
-                      ) -> dict[int, list]:
-        """doc_id → ``layer``'s value list for ``doc_ids`` (``[]`` for
-        a doc without one): one ``doc_id IN`` read of the forward store
-        in the driver with pyarrow, as :meth:`_all_docs` reads
-        ``doc_lens`` (no Spark job). Derived layers fold as
-        :meth:`forward_arrays` derives them."""
+        docs = np.unique(np.asarray(doc_ids, dtype=np.int64))
+        (ids, off, _lens), table, vocab = self._forward(docs, layer)
+        values = ids if table is None else vocab.to_numpy()[table[ids]]
+        per_doc = dict(zip(docs.tolist(),
+                           (a.tolist() for a in np.split(values, off[1:]))))
+        return {d: per_doc[d] for d in doc_ids}
+
+    def _read_forward(self, doc_ids: list[int], column: str
+                      ) -> dict:
+        """doc_id → ``column``'s array for ``doc_ids`` (empty for a doc
+        without one): one ``doc_id IN`` read in the driver with pyarrow,
+        as :meth:`_all_docs` reads ``doc_lens`` (no Spark job), flattened
+        once and split per doc — no per-value Python loop. On a CoNLL-U
+        root ``column`` is a stored int column of ``forward_layers``
+        (``type_id``, ``sent_no``, ``token_id``, ``head``); on a pages
+        root it is ``term``, the docstore text tokenized as the build
+        tokenizes it."""
+        from itertools import chain
+
+        import numpy as np
+        import pyarrow.compute as pc
         import pyarrow.dataset as pads
+
+        fw, ds = self.root / "forward_layers", self.root / "docstore"
+        isin = pads.field("doc_id").isin(doc_ids)
+        if fw.exists():
+            store = pads.dataset(fw, format="parquet")
+            if column not in store.schema.names:
+                raise ValueError(
+                    f"forward layer {column!r} not stored (columns: "
+                    f"{sorted(store.schema.names)})")
+            t = store.to_table(columns=["doc_id", column], filter=isin)
+            arr = t[column].combine_chunks()
+            values = arr.flatten().to_numpy(zero_copy_only=False)
+            lens = pc.list_value_length(arr).fill_null(0).to_numpy(
+                zero_copy_only=False)
+        elif ds.exists() and column == "term":
+            t = pads.dataset(ds, format="parquet").to_table(
+                columns=["doc_id", "text"], filter=isin)
+            toks = [tokenize_py(x) for x in t["text"].to_pylist()]
+            values = np.array(list(chain.from_iterable(toks)), dtype=object)
+            lens = np.fromiter(map(len, toks), np.int64, len(toks))
+        else:
+            raise NotImplementedError(
+                "index has no forward_layers store — build with "
+                "index.build.build_conllu_index(store_docstore=True)")
+        found = {d: values[:0] for d in doc_ids}
+        found.update(zip(t["doc_id"].to_pylist(),
+                         np.split(values, np.cumsum(lens)[:-1])))
+        return found
+
+    def _lexicon(self):
+        """``(vocab, tables)`` of a CoNLL-U root's ``lexicon`` (None
+        without one), loaded once per searcher with pyarrow through the
+        cache. ``tables``: layer → int32 code of each type id's value,
+        plus a trailing ``-1`` (the id a gather fills past a doc's end),
+        for every lexicon column and the folded ``term``/``lemma``
+        (lowered as ``layer_tokens`` folds them). ``vocab``: code →
+        value, one ``pandas.Index`` over all layers, so codes are equal
+        exactly when values are. Codes follow the file, so a reload
+        after an eviction yields the same codes."""
+        import numpy as np
+        import pandas as pd
+        import pyarrow as pa
+        import pyarrow.parquet as pq
 
         from ..sources.conllu import FOLDED_LAYERS
 
-        fw, avail = self.root / "forward_layers", {}
-        if fw.exists():
-            store = pads.dataset(fw, format="parquet")
-            names = store.schema.names
-            avail = {dst: (src, lambda v: [x if x is None else x.lower()
-                                           for x in v])
-                     for dst, src in FOLDED_LAYERS.items() if src in names}
-            avail.update((c, (c, list)) for c in names if c != "doc_id")
-        elif (self.root / "docstore").exists():
-            store = pads.dataset(self.root / "docstore", format="parquet")
-            avail = {"term": ("text", tokenize_py)}
-        if layer not in avail:
-            if not fw.exists():
-                raise NotImplementedError(
-                    "index has no forward_layers store — build with "
-                    "index.build.build_conllu_index(store_docstore=True)")
-            raise ValueError(f"forward layer {layer!r} not stored "
-                             f"(available: {sorted(avail)})")
-        col, fold = avail[layer]
-        t = store.to_table(columns=["doc_id", col],
-                           filter=pads.field("doc_id").isin(doc_ids))
-        found = {d: [] for d in doc_ids}
-        for d, v in zip(t["doc_id"].to_pylist(), t[col].to_pylist()):
-            found[d] = fold(v)
-        return found
+        path = self.root / "lexicon"
 
-    def _forward_codes(self, docs, layer: str) -> tuple:
-        """:meth:`_forward_flat` of ``layer`` as int32 codes into the
-        searcher's code book (``self._codebook``: value → code in order
-        of first sight, append-only so every cached code array stays
-        valid, and shared by all layers so codes are equal exactly when
-        values are) — the one form forward filters and inter-slot
-        constraints read. Each doc's code array is cached, and so is
-        the flat form per doc set (a sketch's relations share their
-        head's candidate docs): a warm forward check is one gather."""
+        def read():
+            if not path.exists():
+                return None
+            t = pq.read_table(path).sort_by("type_id")
+            n = t.num_rows
+            if n and t["type_id"][n - 1].as_py() != n - 1:
+                raise ValueError(f"lexicon at {path} has non-dense type "
+                                 f"ids — rebuild the index")
+            cols = {c: t[c].combine_chunks().cast(pa.string())
+                    for c in t.column_names if c != "type_id"}
+            for dst, src in FOLDED_LAYERS.items():
+                if src in cols:
+                    cols[dst] = pa.array(
+                        [v if v is None else v.lower()
+                         for v in cols[src].to_pylist()], pa.string())
+            enc = pa.concat_arrays(list(cols.values())).dictionary_encode(
+                null_encoding="encode")
+            codes = enc.indices.to_numpy()
+            return (pd.Index(enc.dictionary.to_pylist(), dtype=object),
+                    {c: np.append(codes[i * n:(i + 1) * n], np.int32(-1))
+                     for i, c in enumerate(cols)})
+
+        return self._cache.get_or_put("lexicon", None, read)
+
+    def _forward(self, docs, layer: str) -> tuple:
+        """``(flat, table, vocab)``: ``layer``'s arrays of ``docs``
+        (sorted distinct), ``flat`` as :meth:`_forward_flat` returns it.
+        A string layer's flat holds ids, ``table[id]`` is the id's code
+        in ``vocab`` and ``table[-1] == -1`` answers a gather's past-
+        the-end fill: on a CoNLL-U root the ids are the stored
+        ``type_id``s and table/vocab come from :meth:`_lexicon` (one
+        code space for all layers); a pages root's ``term`` is coded per
+        doc set. A structural layer (``sent_no``/``token_id``/``head``)
+        has ``table = vocab = None``: its flat holds the values."""
         import numpy as np
+        import pandas as pd
 
-        book = self._codebook
+        from ..index.build import STRUCTURAL_COLUMNS
 
-        def fetch(missing):
-            return {d: np.fromiter((book.setdefault(v, len(book))
-                                    for v in vals), np.int32, len(vals))
-                    for d, vals in self._read_forward(missing, layer).items()}
+        if layer in STRUCTURAL_COLUMNS:
+            return self._forward_flat(docs, layer), None, None
+        lex = self._lexicon()
+        if lex is not None:
+            vocab, tables = lex
+            if layer not in tables:
+                raise ValueError(f"forward layer {layer!r} not stored "
+                                 f"(available: {sorted(tables)})")
+            return self._forward_flat(docs, "type_id"), tables[layer], vocab
 
-        def flat():
-            arrays = list(self._cache.get_many(
-                ("fw_codes", layer), docs.tolist(), fetch).values())
-            lens = np.fromiter(map(len, arrays), np.int64, len(arrays))
-            values = (np.concatenate(arrays) if arrays
-                      else np.empty(0, np.int32))
-            return values, np.cumsum(lens) - lens, lens
+        def code():
+            values, off, lens = self._forward_flat(docs, layer)
+            vocab, ids = np.unique(values, return_inverse=True)
+            return ((ids, off, lens), np.append(np.arange(vocab.size), -1),
+                    pd.Index(vocab, dtype=object))
 
-        return self._cache.get_or_put(("fw_flat", layer), docs.tobytes(),
-                                      flat)
+        return self._cache.get_or_put(("fw_coded", layer), docs.tobytes(),
+                                      code)
 
     def forward_arrays(self, columns: set[str] | None = None
                        ) -> DataFrame | None:
         """``(doc_id, <layer>…)``: per-doc value arrays in position
         order — the one read path of the index's forward store. Each
-        datum is stored once, so some arrays are derived here with the
-        expression the build itself uses:
+        datum is stored once, so the arrays are derived here with the
+        expressions the build itself uses:
 
         - pages index: ``term`` = ``tokens_expr(text)`` over the
           ``docstore``'s stored text (the tokenize stage's rule);
-        - CoNLL-U index: ``term``/``lemma`` = ``lower`` of the stored
-          ``word_cs``/``lemma_cs`` arrays (``sources.conllu.
-          FOLDED_LAYERS``, as ``layer_tokens`` folds them); every other
-          layer reads as stored in ``forward_layers``.
+        - CoNLL-U index: the :meth:`forward_token_table` rows collected
+          back per doc in position order — string layers decoded from
+          the ``lexicon`` by ``type_id``, ``term``/``lemma`` the
+          ``lower`` of ``word_cs``/``lemma_cs`` (``sources.conllu.
+          FOLDED_LAYERS``, as ``layer_tokens`` folds them).
 
         ``columns`` restricts the output (``None``: every array the
         index can serve); ``None`` when the index has no forward
         store."""
-        from ..sources.conllu import FOLDED_LAYERS
+        from ..index.build import sorted_arrays
 
         fw = self._dataset("forward_layers", required=False)
-        if fw is not None:
-            avail = {dst: F.transform(src, F.lower)
-                     for dst, src in FOLDED_LAYERS.items()
-                     if src in fw.columns}
-            avail.update((c, F.col(c)) for c in fw.columns if c != "doc_id")
-        else:
-            fw = self._dataset("docstore", required=False)
-            if fw is None:
+        if fw is None:
+            ds = self._dataset("docstore", required=False)
+            if ds is None:
                 return None
-            avail = {"term": tokens_expr("text")}
-        return fw.select("doc_id", *[
-            e.alias(c) for c, e in avail.items()
-            if columns is None or c in columns])
+            return ds.select("doc_id", *(
+                [tokens_expr("text").alias("term")]
+                if columns is None or "term" in columns else []))
+        tokens = self.forward_token_table(columns)
+        if tokens is None:
+            return fw.select("doc_id")
+        return tokens.groupBy("doc_id").agg(
+            *sorted_arrays(*tokens.columns[2:]))
 
     def forward_token_table(self, columns: set[str] | None = None
                             ) -> DataFrame | None:
         """DISTRIBUTED multi-layer token table derived from the index's
-        own ``forward_layers`` store: ``posexplode`` of the per-doc
-        value arrays → ``(doc_id, pos, term, lemma, upos, xpos, deprel,
-        …)`` — exactly the shape :func:`..plans.cql.compile_cql`
-        consumes. This is how a HOT pattern leaves the driver: the
-        reference executes every pattern in its in-process index
+        own forward store: ``posexplode`` of the per-doc arrays →
+        ``(doc_id, pos, term, lemma, upos, xpos, deprel, …)`` — exactly
+        the shape :func:`..plans.cql.compile_cql` consumes. This is how
+        a HOT pattern leaves the driver: the reference executes every
+        pattern in its in-process index
         (``BlackLabQueryExecutor.java:117-144``) because one node holds
         the corpus; at 100× corpus the same query must shard, and the
-        forward store already is a doc-partitioned parquet table.
-        Reads through :meth:`forward_arrays` (a pages index yields the
-        ``term`` column only); ``None`` when the index has no forward
+        forward store already is a doc-partitioned parquet table. On a
+        CoNLL-U root the string layers join the ``lexicon`` on
+        ``type_id`` (AQE broadcasts it when small); a pages index yields
+        the ``term`` column only. ``None`` when the index has no forward
         store or none of ``columns``.
 
-        ``columns`` restricts which layer arrays are zipped: the
-        ``arrays_zip`` consumes every requested array wholesale, so
-        Catalyst cannot column-prune through it — a 2-layer pattern
-        must not pay for scanning all 11 stored arrays. Callers pass
-        the layers their plan actually tests/captures."""
-        fw = self.forward_arrays(columns)
-        if fw is None or len(fw.columns) == 1:
+        ``columns`` restricts which arrays are zipped and which lexicon
+        columns are joined: the ``arrays_zip`` consumes every array it
+        is given, so Catalyst cannot column-prune through it. Callers
+        pass the layers their plan actually tests/captures."""
+        from ..index.build import STRUCTURAL_COLUMNS
+        from ..sources.conllu import FOLDED_LAYERS
+
+        fw = self._dataset("forward_layers", required=False)
+        if fw is None:
+            fw = self.forward_arrays(columns)
+            return (None if fw is None or len(fw.columns) == 1
+                    else _posexplode(fw, fw.columns[1:]))
+        lex = self._dataset("lexicon")
+        layers = {dst: F.lower(src) for dst, src in FOLDED_LAYERS.items()
+                  if src in lex.columns}
+        layers.update((c, F.col(c)) for c in lex.columns if c != "type_id")
+        layers.update((c, None) for c in STRUCTURAL_COLUMNS
+                      if c in fw.columns)
+        want = {c: e for c, e in layers.items()
+                if columns is None or c in columns}
+        if not want:
             return None
-        cols = fw.columns[1:]
-        return fw.select(
-            "doc_id",
-            F.posexplode(F.arrays_zip(*cols)).alias("pos", "z"),
-        ).select("doc_id", F.col("pos").cast("long").alias("pos"),
-                 *[F.col(f"z.{c}").alias(c) for c in cols])
+        typed = [c for c, e in want.items() if e is not None]
+        tokens = _posexplode(fw, (["type_id"] if typed else []) + [
+            c for c, e in want.items() if e is None])
+        if typed:
+            tokens = tokens.join(lex.select(
+                "type_id", *[want[c].alias(c) for c in typed]), "type_id")
+        return tokens.select("doc_id", "pos", *want)
 
     def _all_docs(self) -> tuple:
         """``(docs, dls)``: every doc id of the ``doc_lens`` store,
@@ -572,21 +654,28 @@ class IndexSearcher:
 
         return self._cache.get_or_put("all_docs", None, read)
 
-    def _forward_flat(self, docs, layer: str, dtype=int) -> tuple:
-        """``(values, offsets, lengths)``: one forward layer's arrays of
-        ``docs`` (sorted distinct) laid end to end in ``docs`` order —
-        what :func:`.positions.take` gathers from by flat offset. A doc
-        without a stored array has length 0. String layers read as
-        ``dtype=object`` (a fixed-width unicode copy costs ~10× more)."""
-        from itertools import chain
-
+    def _forward_flat(self, docs, column: str) -> tuple:
+        """``(values, offsets, lengths)``: one stored forward column's
+        arrays of ``docs`` (sorted distinct) laid end to end in ``docs``
+        order — what :func:`.positions.take` gathers from by flat
+        offset; a doc without an array has length 0. Each doc's array
+        is cached (:meth:`_read_forward`), and so is the flat form per
+        doc set (a sketch's relations share their head's candidate
+        docs): a warm forward check is one gather."""
         import numpy as np
 
-        arrays = list(self.forward_layer(docs.tolist(), layer).values())
-        lens = np.fromiter(map(len, arrays), np.int64, len(arrays))
-        values = np.fromiter(chain.from_iterable(arrays), dtype,
-                             int(lens.sum()))
-        return values, np.cumsum(lens) - lens, lens
+        def flat():
+            arrays = list(self._cache.get_many(
+                ("forward", column), docs.tolist(),
+                lambda missing: self._read_forward(missing, column)
+            ).values())
+            lens = np.fromiter(map(len, arrays), np.int64, len(arrays))
+            values = (np.concatenate(arrays) if arrays
+                      else np.empty(0, np.int32))
+            return values, np.cumsum(lens) - lens, lens
+
+        return self._cache.get_or_put(("fw_flat", column), docs.tobytes(),
+                                      flat)
 
     def phrase_hits(self, phrase: str | list[str]
                     ) -> list[tuple[int, list[int]]]:
@@ -743,12 +832,13 @@ class IndexSearcher:
         ban = None if slot.banned is None else keyed(slot.banned, docs)
         checks = []
         for layer, values, negated in slot.filters:
-            flat = self._forward_codes(docs, layer)
-            book = self._codebook
-            # the last entry answers code -1 (past the array's end)
-            lut = np.zeros(len(book) + 1, dtype=bool)
-            lut[[book[v] for v in values if v in book]] = True
-            checks.append((flat, lut, negated))
+            flat, table, vocab = self._forward(docs, layer)
+            # the values' codes, tested once per lexicon entry; the
+            # last entry answers id -1 (past the array's end)
+            hit = np.zeros(len(vocab) + 1, dtype=bool)
+            codes = vocab.get_indexer(list(values))
+            hit[codes[codes >= 0]] = True
+            checks.append((flat, hit[table], negated))
 
         def keep(keys):
             ok = (np.ones(keys.size, dtype=bool) if ban is None
@@ -880,8 +970,8 @@ class IndexSearcher:
         return docs[mat[:, 0] >> 32], mat & POS
 
     def _codes_at(self, docs, attr: str, keys):
-        """``attr``'s forward codes (:meth:`_forward_codes`) at ``keys``
-        (built over ``docs``), ``-1`` past a doc's array."""
+        """``attr``'s forward codes (:meth:`_forward`) at ``keys`` (built
+        over ``docs``), ``-1`` past a doc's array."""
         from ..plans.cql import DEFAULT_LAYERS
         from .positions import POS, gather
 
@@ -889,9 +979,9 @@ class IndexSearcher:
             raise NotImplementedError(
                 "the virtual `class` attribute has no forward layer — "
                 "use pattern_spans_df")
-        return gather(self._forward_codes(docs,
-                                          DEFAULT_LAYERS.get(attr, attr)),
-                      keys >> 32, keys & POS, -1)
+        flat, table, _ = self._forward(docs, DEFAULT_LAYERS.get(attr, attr))
+        ids = gather(flat, keys >> 32, keys & POS, -1)
+        return ids if table is None else table[ids]
 
     def pattern_matches(self, pattern: str | Query,
                         max_terms_per_slot: int = 256,

@@ -77,10 +77,10 @@ def collocate_counts(searcher, doc: np.ndarray, pos: np.ndarray,
     ``(doc[i], pos[i])``: one flat gather and one ``np.unique``.
     Positions outside their doc's array count nothing."""
     docs = np.unique(doc)
-    values, _ = take(searcher._forward_flat(docs, layer, object),
-                     np.searchsorted(docs, doc), pos)
-    values, counts = np.unique(values, return_counts=True)
-    return dict(zip(values.tolist(), counts.tolist()))
+    flat, table, vocab = searcher._forward(docs, layer)
+    ids, _ = take(flat, np.searchsorted(docs, doc), pos)
+    codes, counts = np.unique(table[ids], return_counts=True)
+    return dict(zip(vocab[codes].tolist(), counts.tolist()))
 
 
 def relation_collocates(
@@ -134,8 +134,9 @@ def relation_collocates(
             pairs = {rel.id: (doc, cp)}
         else:
             docs = np.unique(doc)
-            third, ok = take(searcher._forward_flat(docs, layer, object),
-                             np.searchsorted(docs, doc), tp[0])
+            flat, table, vocab = searcher._forward(docs, layer)
+            ids, ok = take(flat, np.searchsorted(docs, doc), tp[0])
+            third = vocab.to_numpy()[table[ids]]
             doc, hp, cp = doc[ok], hp[ok], cp[ok]
             pairs = {}
             for value in sorted(set(third.tolist())):

@@ -182,9 +182,11 @@ def to_wpl_text(ann: DataFrame, id_col: str = "doc_id",
 
 
 # case-folded layer → the case-preserved layer it lowers. Layer tokens
-# carry both; the forward store keeps only the ``*_cs`` arrays and its
-# reader derives the folded ones with the same ``lower``
-# (``IndexSearcher.forward_arrays``) — each datum stored once
+# carry both; the forward index keeps only the ``*_cs`` columns (in the
+# ``lexicon`` its ``type_id`` arrays point into) and its readers derive
+# the folded ones with the same ``lower`` (``IndexSearcher.
+# forward_token_table``, and once per lexicon entry in the driver) —
+# each datum stored once
 FOLDED_LAYERS = {"term": "word_cs", "lemma": "lemma_cs"}
 
 
